@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Confs
 
 /** 10×-corpus generator for the full-registry scale step: writes a
   * `factor`×-scaled copy of an sf directory, preserving each table's
@@ -31,14 +33,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     def src(t: String): DataFrame = spark.read.parquet(s"$sfDir/$t.parquet")
     def write(t: String, df: DataFrame): Unit = {
@@ -46,7 +41,7 @@ object ScaleGen {
       // input partitions; at factor>=100 that leaves a 100x-sized table
       // in single-digit partitions — rebalance so generation and every
       // later scan parallelize
-      val out = if (factor >= 20) df.repartition(cpus.toInt * 2) else df
+      val out = if (factor >= 20) df.repartition(LocalSession.cpus * 2) else df
       out.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
       println(s"[scalegen] $t: ${spark.read.parquet(s"$outDir/$t.parquet").count()} rows")
     }
@@ -73,13 +68,10 @@ object ScaleGen {
     // plain reader rejects — read it as a raw long (scoped legacy conf,
     // same discipline as Tables.events) and write it back as a plain
     // INT64, which Tables.events handles identically (`ts div 1000`)
-    val eventsRaw = {
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val prior = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try { val d = src("events"); d.schema; d }
-      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
+    val eventsRaw =
+      Confs.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true") {
+        val d = src("events"); d.schema; d
+      }
     write("events", replicate(eventsRaw, Seq("event_id", "user_id")))
     write("documents", replicate(src("documents"), Seq("doc_id"),
       (d, r) => d.withColumn("text",

@@ -1,11 +1,11 @@
-package graft.ops
+package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Scoped session-conf overrides for BOUNDED iterative loops whose
-  * actions (localCheckpoints) run inside the scope. Restores the prior
-  * value (or unsets) afterwards, so batch plans outside the loop are
-  * untouched.
+/** The one scoped session-conf helper: every temporary conf override
+  * in the program goes through [[withConf]], which restores the prior
+  * value (or unsets a key that had none) when the scope exits, so
+  * plans built outside the scope are untouched.
   */
 object Confs {
 
@@ -23,9 +23,9 @@ object Confs {
     * skew split, join conversion) never fire there, but its
     * stage-by-stage query stages each run as a separate job — and a
     * tiny per-round plan pays the ~70 ms per-job scheduling floor once
-    * per stage instead of once per action (measured via HnswProfile,
-    * rounds 9–10). Results are identical: AQE re-plans, never
-    * re-scores. */
+    * per stage instead of once per action (per-query job counts in
+    * OPTIMIZATION_r11.md and the plans in plans/r11/). Results are
+    * identical: AQE re-plans, never re-scores. */
   def withoutAqe[T](spark: SparkSession)(body: => T): T =
     withConf(spark, "spark.sql.adaptive.enabled", "false")(body)
 }

@@ -63,11 +63,9 @@ object Tables {
           // eager schema inference — leaving it set session-wide would
           // silently turn every LATER nanos-timestamped parquet read in
           // the session into LongType
-          val key = "spark.sql.legacy.parquet.nanosAsLong"
-          val prior = spark.conf.getOption(key)
-          spark.conf.set(key, "true")
-          try { val d = load(spark, dir, "events"); d.schema; d }
-          finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+          Confs.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true") {
+            val d = load(spark, dir, "events"); d.schema; d
+          }
       }
     df.schema("ts").dataType match {
       case LongType =>

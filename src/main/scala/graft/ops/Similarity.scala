@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import scala.util.Random
 
+import graft.core.Confs
 import graft.functions.GraftFunctions
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -575,19 +576,16 @@ object Similarity {
     * the un-checkpointed round's subtree is recomputed by its two
     * consumers, bounded to depth ckptEvery. Same results either way.
     */
-  /** See [[Confs.withoutAqe]] — the beam loop's shape is fully known
-    * at plan time (every join side an explicit broadcast of a
-    * queries×beam×degree frame, every aggregate tiny), so statically
-    * planned, each checkpoint action is ONE job instead of a job per
-    * AQE query stage. */
-  private def withoutAqe[T](spark: SparkSession)(body: => T): T =
-    Confs.withoutAqe(spark)(body)
-
+  /** AQE off for the loop ([[Confs.withoutAqe]]): the beam loop's
+    * shape is fully known at plan time (every join side an explicit
+    * broadcast of a queries×beam×degree frame, every aggregate tiny),
+    * so statically planned, each checkpoint action is ONE job instead
+    * of a job per AQE query stage. */
   private def nswBeam(q: DataFrame, nodes: DataFrame, edges: DataFrame,
                       seed: DataFrame, beamWidth: Int,
                       rounds: Int, ckptEvery: Int = 1, prune: Boolean = true,
                       preScored: Option[DataFrame] = None): DataFrame =
-    withoutAqe(nodes.sparkSession) {
+    Confs.withoutAqe(nodes.sparkSession) {
       nswBeamLoop(q, nodes, edges, seed, beamWidth, rounds, ckptEvery,
         prune, preScored)
     }
@@ -761,9 +759,9 @@ object Similarity {
     // top-B trim), so beam quality is ≥ at equal width — measured
     // bit-identical output on the test corpora. The per-round
     // scheduling floors the two-round loop paid (intermediate beam
-    // checkpoint + per-round broadcast collects, ~8 jobs/round at
-    // local[32] per HnswProfile) collapse into the single seed
-    // broadcast. Candidate volume is bounded: |entries|·m² rows on
+    // checkpoint + per-round broadcast collects, ~8 jobs/round; 56 → 45
+    // jobs per query in OPTIMIZATION_r11.md) collapse into the single
+    // seed broadcast. Candidate volume is bounded: |entries|·m² rows on
     // the corpus/layerMod upper sample — the same cells/beam bound
     // argument as the coarse assignment. Duplicate candidates are NOT
     // pre-deduped: topB's collect_set absorbs them (the beam-loop

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Confs
+
 /** Text-analysis operators for training-data curation — extension tier.
   * All row-local builtin-function compositions (no UDFs): they stay
   * inside whole-stage codegen and scale embarrassingly.
@@ -847,9 +849,9 @@ object TextOps {
     // per-round plan here is shape-known — vocab-bounded windows, one
     // tiny aggregate, an explicit 1-row broadcast — so AQE's levers
     // never fire, while its stage-by-stage query stages turn each
-    // round's checkpoint into several scheduler jobs. QueryJobProfile
-    // measured the 8-round train at 68 single-task jobs, 1.8 s CPU
-    // under a ~6 s wall: pure per-job floor.
+    // round's checkpoint into several scheduler jobs. The 8-round
+    // train measured 68 single-task jobs, 1.8 s CPU under a ~6 s wall:
+    // pure per-job floor (plans/r11/x_text_bpe_train_{before,after}.txt).
     Confs.withoutAqe(df.sparkSession) { bpeLoopBody(df, text, rounds) }
 
   private def bpeLoopBody(df: DataFrame, text: Column,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Cleanse
@@ -22,7 +22,10 @@ import graft.ops.Cleanse
   */
 object Ingest {
 
-  private def csv(spark: SparkSession, dir: String, glob: String): DataFrame =
+  /** The one raw CSV reader: [[csv]] and [[csvWithQuarantine]] both
+    * start here, so the quarantine path parses exactly like the main
+    * path. */
+  private def reader(spark: SparkSession, glob: String): DataFrameReader =
     spark.read
       .option("header", "true")
       .option("multiLine", "true")
@@ -30,7 +33,9 @@ object Ingest {
       .option("escape", "\"")
       .option("nullValue", "NULL")
       .option("pathGlobFilter", glob)
-      .csv(dir)
+
+  private def csv(spark: SparkSession, dir: String, glob: String): DataFrame =
+    reader(spark, glob).csv(dir)
 
   /** Raw listings scan (PATTERN '.*listings.*[.]csv', design.sql:101–104)
     * with the source filename attached. Header names are lower-cased
@@ -77,13 +82,7 @@ object Ingest {
       : (DataFrame, DataFrame) = {
     val corrupt = "_corrupt_record"
     val withCorrupt = schema.add(corrupt, "string")
-    val raw = spark.read
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("nullValue", "NULL")
-      .option("pathGlobFilter", glob)
+    val raw = reader(spark, glob)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corrupt)
       .schema(withCorrupt)

@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.core.Confs
+
 /** The reference's operational REFRESH loop (populate.py:65–68: the
   * Airflow DAG re-runs monthly as new scrape files land) as an
   * INCREMENTAL fact maintenance pass: each tick discovers unprocessed
@@ -185,11 +187,9 @@ object Refresh {
     val fact = Warehouse.factListing(staged, stagingLocation)
 
     // dynamic overwrite: replace exactly the increment's months
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try Warehouse.writeFact(fact, dataDir(factDir), filesPerMonth)
-    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    Confs.withConf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic") {
+      Warehouse.writeFact(fact, dataDir(factDir), filesPerMonth)
+    }
 
     // schema sidecar: lets [[Refresh.fact]] stay readable when a tick
     // commits ZERO rows (every row filtered) — parquet then has no

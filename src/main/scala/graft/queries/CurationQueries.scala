@@ -420,11 +420,7 @@ object CurationQueries {
           .coalesce(1).write.mode("append").parquet(t)
         t
       })
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      graft.streaming.EventStream.withRocksDbState(s) {
         val ev = s.readStream
           .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
           .option("maxFilesPerTrigger", "1") // force the cross-batch path
@@ -445,9 +441,6 @@ object CurationQueries {
           .select(col("user_id"), col("m.n_total").as("n_total"),
             col("m.n_types").as("n_types"), col("m.top_type").as("top_type"),
             col("m.top_cnt").as("top_cnt"))
-      } finally prev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None    => s.conf.unset(provKey)
       }
     },
     Some("""WITH ec AS (
@@ -487,11 +480,7 @@ object CurationQueries {
           .coalesce(1).write.mode("append").parquet(t)
         t
       })
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      graft.streaming.EventStream.withRocksDbState(s) {
         val ev = s.readStream
           .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
           .option("maxFilesPerTrigger", "1") // force the cross-batch path
@@ -510,9 +499,6 @@ object CurationQueries {
           .agg(max(struct(col("n_seen"), col("n_kept"), col("recent"))).as("m"))
           .select(col("user_id"), col("m.n_seen").as("n_seen"),
             col("m.n_kept").as("n_kept"), col("m.recent").as("recent"))
-      } finally prev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None    => s.conf.unset(provKey)
       }
     },
     Some("""WITH ev AS (
@@ -597,11 +583,7 @@ object CurationQueries {
           .write.mode("overwrite").parquet(t)
         t
       })
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      graft.streaming.EventStream.withRocksDbState(s) {
         val ev = s.readStream
           .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
           .parquet(tmp)
@@ -618,9 +600,6 @@ object CurationQueries {
         s.table(sink).select(col("user_id"), col("n_events"),
           timestamp_millis(col("start_ms")).as("session_start"),
           timestamp_millis(col("end_ms")).as("session_end"))
-      } finally prev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None    => s.conf.unset(provKey)
       }
     },
     Some("""WITH e AS (

@@ -3071,11 +3071,7 @@ object ExtensionQueries {
           .write.mode("overwrite").parquet(t)
         t
       })
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      EventStream.withRocksDbState(s) {
         val ev = s.readStream
           .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
           .parquet(tmp)
@@ -3091,9 +3087,6 @@ object ExtensionQueries {
         }
         s.table(sink).groupBy(col("user_id"))
           .agg(max(col("n_events")).as("n_events"))
-      } finally prev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None    => s.conf.unset(provKey)
       }
     },
     Some("""SELECT user_id, COUNT(*) AS n_events

@@ -167,8 +167,9 @@ object PipelineOracleQueries {
     * scale: a localCheckpoint scan is FULL-WIDTH (RDD rows — no column
     * pruning reaches it), so every view read of the 19-column fact
     * paid its filename/suburb strings for a 13-column aggregate.
-    * KpiProfile measures the wide-vs-narrow scan at 0.37 vs 0.25 s and
-    * the property-type view at 1.54 vs 1.17 s on the same rows. One
+    * The wide-vs-narrow scan measured 0.37 vs 0.25 s and the
+    * property-type view 1.54 vs 1.17 s on the same rows
+    * (OPTIMIZATION_r11.md item 4, plans/r11/q_pipeline_kpi_*). One
     * extra checkpoint job per (session, sf), amortized over the four
     * views — exactly the projection a 100 TB mart would store. */
   private def viewFact(s: SparkSession, d: String): DataFrame =

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.core.Confs
+
 /** Structured Streaming surface — the extension tier beyond the
   * reference's batch-only cadence (SURVEY §2.10: its "incremental" load
   * is ALTER EXTERNAL TABLE REFRESH + full recompute; populate.py:65–68).
@@ -38,12 +40,8 @@ object EventStream {
     * turns DOWN (32 partitions of a 60k-row fixture is pure floor —
     * measured 3x on the stream-stream join). Batch plans are
     * unaffected: the conf is restored before any sink read. */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
-  }
+  def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T =
+    Confs.withConf(spark, "spark.sql.shuffle.partitions", n.toString)(f)
 
   /** The measured sizing rule (README §streaming, round-9
     * `StreamLatency` sweep) as code: state partitions follow the
@@ -71,6 +69,14 @@ object EventStream {
   def withStatePartitionsForRate[T](spark: SparkSession, rowsPerSec: Long)(
       f: => T): T =
     withStatePartitions(spark, statePartitionsForRate(spark, rowsPerSec))(f)
+
+  /** Runs `f` (start a streaming query + await it) with the RocksDB
+    * state-store provider, which the transformWithState operators
+    * require; the session's provider is restored after, so other
+    * stateful queries keep their default. */
+  def withRocksDbState[T](spark: SparkSession)(f: => T): T =
+    Confs.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
 
   val eventSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -301,8 +307,8 @@ object EventStream {
     * arbitrary-state API (SPARK-48796, the successor to
     * flatMapGroupsWithState used by [[sessionize]]): typed `ValueState`
     * obtained from the processor handle, optional TTL, RocksDB-backed
-    * state store (the API requires the RocksDB provider — callers set
-    * `spark.sql.streaming.stateStore.providerClass`). Each batch emits
+    * state store (the API requires the RocksDB provider — callers
+    * start the query inside [[withRocksDbState]]). Each batch emits
     * the updated lifetime count per user seen in that batch
     * (update-mode semantics); state is keyed by user, so it partitions
     * across executors and the store scales with |users|, not |events|. */
