@@ -40,7 +40,9 @@ import graft.core.Confs
   * the same contract a streaming file source's checkpoint provides,
   * chosen over `readStream.text` because discovery must not re-READ
   * raw bytes, and over a fixed-schema csv stream because the monthly
-  * files are schema-heterogeneous and need per-file header reads).
+  * files are schema-heterogeneous: each tick reads its files' headers
+  * on the driver and scans each distinct header once, through
+  * [[Ingest.rawListingsByHeader]], as the batch build does).
   * Crash ordering per tick: data commit → schema sidecar → dim digest
   * → ledger. A crash between any two steps re-runs AT LEAST the
   * tick's files next time (ledger still stale), and the dynamic
@@ -157,10 +159,7 @@ object Refresh {
     * depend on the dims, and the dim joins are LEFT + sentinel). */
   def refreshFact(spark: SparkSession, rawDir: String, factDir: String,
                   filesPerMonth: Int = 1): Seq[String] = {
-    val raw = new Path(rawDir)
-    val f = fs(spark, raw)
-    val all = f.globStatus(new Path(rawDir, "*listings*.csv"))
-      .map(_.getPath.toString).sorted.toSeq
+    val all = Ingest.listFiles(spark, rawDir, "*listings*.csv")
     val digest = dimDigest(spark, rawDir)
     val priorLedger = processedFiles(spark, factDir)
     // A MISSING digest with a non-empty ledger is NOT "dims unchanged":
@@ -182,8 +181,7 @@ object Refresh {
 
     val stagingLocation = Staging.location(
       Ingest.rawSsc(spark, rawDir), Ingest.rawLga(spark, rawDir))
-    val staged = Staging.listing(
-      (fresh ++ reprocess).map(p => Ingest.rawListings(spark, p)))
+    val staged = Staging.listing(Ingest.rawListingsByHeader(spark, fresh ++ reprocess))
     val fact = Warehouse.factListing(staged, stagingLocation)
 
     // dynamic overwrite: replace exactly the increment's months

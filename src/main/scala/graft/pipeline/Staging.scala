@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 import graft.ops.{Cleanse, Qualify}
 
@@ -70,15 +70,12 @@ object Staging {
     * become NULL — preprocess.ipynb cell 17), cast per DDL, parse price,
     * normalize NULL spellings, and dedupe on (id, filename)
     * (design.sql:265–266; deterministic tiebreak by last_scraped DESC,
-    * name). Input: raw frames, one per monthly file OR one multi-file
-    * frame — both work since harmonization is per-column. */
+    * name). Input: raw frames, one per monthly file or one per header
+    * shape — both work since harmonization is per-column. */
   def listing(raws: Seq[DataFrame]): DataFrame = {
     require(raws.nonEmpty, "no listing inputs")
-    // P4: union by name across 74/102/106-column variants
-    val unioned = raws
-      .map(harmonizeColumns)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-      .select(("filename" +: ListingSchema.columns).map(col): _*)
+    // P4: every raw frame is harmonized to the same column order first
+    val unioned = raws.map(harmonizeColumns).reduce(_ union _)
     val nulled = Ingest.normalizeNulls(unioned)
     val casted = nulled.select(
       col("filename") +:
@@ -93,28 +90,26 @@ object Staging {
       orderCols = Seq(col("last_scraped").desc_nulls_last, col("name").asc_nulls_last))
   }
 
-  /** Add any missing canonical column as NULL string (pandas
-    * `df[i] = ''` + reorder, preprocess.ipynb cell 17); extra columns of
-    * the 102/106-col variants are simply not selected. */
+  /** `filename` + the canonical columns in order, any missing one as a
+    * NULL string (pandas `df[i] = ''` + reorder, preprocess.ipynb
+    * cell 17); extra columns of the 102/106-col variants are simply not
+    * selected. One projection, so the 74 columns are analyzed once. */
   private def harmonizeColumns(raw: DataFrame): DataFrame = {
     val present = raw.columns.toSet
-    val withMissing = ListingSchema.columns.filterNot(present.contains)
-      .foldLeft(raw)((df, c) => df.withColumn(c, lit(null).cast("string")))
-    withMissing.select(("filename" +: ListingSchema.columns).map(col): _*)
+    raw.select(("filename" +: ListingSchema.columns).map(c =>
+      if (present(c)) col(c) else lit(null).cast(StringType).as(c)): _*)
   }
 
   /** Full staging build from a raw directory. Monthly files have
-    * HETEROGENEOUS schemas (74/102/106 columns), and a multi-file CSV
-    * scan assumes one schema — so each file is read as its own frame
-    * (header-driven) and harmonized before the union, exactly the
-    * notebook's per-file loop. The file listing is driver-side but is
-    * one entry per monthly scrape, not per data split. */
+    * HETEROGENEOUS schemas (74/102/106 columns), and one CSV scan
+    * assumes one schema — so the files are grouped by header
+    * ([[Ingest.rawListingsByHeader]]: one driver-side first-record read
+    * per file, no schema job) and each distinct header is one multi-file
+    * scan, harmonized before the union. The notebook's per-file loop
+    * becomes one union branch per header shape, not per file. */
   def listingFromDir(spark: SparkSession, dir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.globStatus(new org.apache.hadoop.fs.Path(dir, "*listings*.csv"))
-      .map(_.getPath.toString).sorted
+    val files = Ingest.listFiles(spark, dir, "*listings*.csv")
     require(files.nonEmpty, s"no *listings*.csv under $dir")
-    listing(files.toSeq.map(f => Ingest.rawListings(spark, f)))
+    listing(Ingest.rawListingsByHeader(spark, files))
   }
 }

@@ -66,7 +66,7 @@ class PipelineSpec extends SparkSpec {
       (6L, Some("NULL"))   // literal "NULL" collapses to SQL NULL (documented)
     ).toDF("id", "text")
     Ingest.writeCsv(df, out)
-    // EXACTLY the Ingest.csv reader options — the symmetry writeCsv claims
+    // EXACTLY the Ingest reader options — the symmetry writeCsv claims
     val back = spark.read
       .option("header", "true").option("multiLine", "true")
       .option("quote", "\"").option("escape", "\"")
