@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Landing, Tables}
 import graft.ops.{Dedup, Graph, Multimodal, Quality, Sampling, Scale, Similarity, Sketches, TextOps, Urls}
 
 /** Round-5 curation/profiling additions: an exactly-replayable
@@ -392,8 +392,20 @@ object CurationQueries {
       SELECT exact_f2, cms_join_size, cms_join_size - exact_f2 AS overcount
       FROM est CROSS JOIN exact"""))
 
-  private val topTypeFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Typed events in two files split by event_id parity, read one
+    * file per trigger by the MapState and ListState queries. */
+  private def topTypeFixture(s: org.apache.spark.sql.SparkSession,
+                             d: String): String =
+    Landing.dir(s, d, "graft_stream_toptype") { t =>
+      val ev = Tables.events(s, d)
+        .filter(col("ts").isNotNull && col("event_type").isNotNull)
+        .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
+          col("user_id"), col("event_type"))
+      ev.filter(col("event_id") % 2 === 0)
+        .coalesce(1).write.mode("overwrite").parquet(t)
+      ev.filter(col("event_id") % 2 === 1)
+        .coalesce(1).write.mode("append").parquet(t)
+    }
 
   /** MapState `transformWithState` parity: per-user favorite event type
     * (EventStream.topTypePerUser) — composite per-key state (a
@@ -408,34 +420,16 @@ object CurationQueries {
     "x_stream_tws_toptype",
     (s, d) => {
       import s.implicits._
-      val tmp = topTypeFixtureDirs.getOrElseUpdate(d, {
-        val t = ExtensionQueries.fixtureTempDir("graft_stream_toptype")
-        val ev = Tables.events(s, d)
-          .filter(col("ts").isNotNull && col("event_type").isNotNull)
-          .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
-            col("user_id"), col("event_type"))
-        ev.filter(col("event_id") % 2 === 0)
-          .coalesce(1).write.mode("overwrite").parquet(t)
-        ev.filter(col("event_id") % 2 === 1)
-          .coalesce(1).write.mode("append").parquet(t)
-        t
-      })
+      val tmp = topTypeFixture(s, d)
       graft.streaming.EventStream.withRocksDbState(s) {
         val ev = s.readStream
           .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
           .option("maxFilesPerTrigger", "1") // force the cross-batch path
           .parquet(tmp)
           .as[graft.streaming.EventStream.TypedEvent]
-        val sink = "x_stream_tws_toptype_sink"
-        graft.streaming.EventStream.withStatePartitions(s, 4) {
-          val sq = graft.streaming.EventStream.topTypePerUser(s, ev)
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("update")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          sq.awaitTermination()
-        }
-        s.table(sink).groupBy(col("user_id"))
+        graft.streaming.EventStream.drain(s, "x_stream_tws_toptype", "update")(
+            graft.streaming.EventStream.topTypePerUser(s, ev))
+          .groupBy(col("user_id"))
           .agg(max(struct(col("n_total"), col("n_types"),
             col("top_type"), col("top_cnt"))).as("m"))
           .select(col("user_id"), col("m.n_total").as("n_total"),
@@ -468,34 +462,16 @@ object CurationQueries {
     "x_stream_tws_recent",
     (s, d) => {
       import s.implicits._
-      val tmp = topTypeFixtureDirs.getOrElseUpdate(d, {
-        val t = ExtensionQueries.fixtureTempDir("graft_stream_toptype")
-        val ev = Tables.events(s, d)
-          .filter(col("ts").isNotNull && col("event_type").isNotNull)
-          .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
-            col("user_id"), col("event_type"))
-        ev.filter(col("event_id") % 2 === 0)
-          .coalesce(1).write.mode("overwrite").parquet(t)
-        ev.filter(col("event_id") % 2 === 1)
-          .coalesce(1).write.mode("append").parquet(t)
-        t
-      })
+      val tmp = topTypeFixture(s, d)
       graft.streaming.EventStream.withRocksDbState(s) {
         val ev = s.readStream
           .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
           .option("maxFilesPerTrigger", "1") // force the cross-batch path
           .parquet(tmp)
           .as[graft.streaming.EventStream.TypedEvent]
-        val sink = "x_stream_tws_recent_sink"
-        graft.streaming.EventStream.withStatePartitions(s, 4) {
-          val sq = graft.streaming.EventStream.recentEventsPerUser(s, ev)
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("update")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          sq.awaitTermination()
-        }
-        s.table(sink).groupBy(col("user_id"))
+        graft.streaming.EventStream.drain(s, "x_stream_tws_recent", "update")(
+            graft.streaming.EventStream.recentEventsPerUser(s, ev))
+          .groupBy(col("user_id"))
           .agg(max(struct(col("n_seen"), col("n_kept"), col("recent"))).as("m"))
           .select(col("user_id"), col("m.n_seen").as("n_seen"),
             col("m.n_kept").as("n_kept"), col("m.recent").as("recent"))
@@ -536,8 +512,7 @@ object CurationQueries {
   private val x_layout_compaction = Q(
     "x_layout_compaction",
     (s, d) => {
-      val frag = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_compaction_frag").getPath
+      val frag = Landing.dir(s, d, "graft_compaction_frag")(_ => ())
       Tables.orders(s, d).repartition(64)
         .write.mode("overwrite").parquet(frag)
       Scale.compactParquet(s, frag)
@@ -559,9 +534,6 @@ object CurationQueries {
     FROM orders
     GROUP BY 1"""))
 
-  private val twsSessFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Timer-based sessionization parity: the fMGWS sessionizer's exact
     * semantics re-expressed on `transformWithState` with EXPLICIT
     * event-time timers (EventStream.sessionizeTws — delete-then-rearm
@@ -574,32 +546,23 @@ object CurationQueries {
     "x_stream_tws_sessionize",
     (s, d) => {
       import s.implicits._
-      val tmp = twsSessFixtureDirs.getOrElseUpdate(d, {
-        val t = ExtensionQueries.fixtureTempDir("graft_stream_twssess")
+      val tmp = Landing.dir(s, d, "graft_stream_twssess") { t =>
         Tables.events(s, d).filter(col("ts").isNotNull)
           .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
             col("user_id"))
           .coalesce(1)
           .write.mode("overwrite").parquet(t)
-        t
-      })
+      }
       graft.streaming.EventStream.withRocksDbState(s) {
         val ev = s.readStream
           .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
           .parquet(tmp)
           .as[graft.streaming.EventStream.Event]
-        val sink = "x_stream_tws_sessionize_sink"
-        graft.streaming.EventStream.withStatePartitions(s, 4) {
-          val sq = graft.streaming.EventStream.sessionizeTws(s, ev)
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          sq.awaitTermination()
-        }
-        s.table(sink).select(col("user_id"), col("n_events"),
-          timestamp_millis(col("start_ms")).as("session_start"),
-          timestamp_millis(col("end_ms")).as("session_end"))
+        graft.streaming.EventStream.drain(s, "x_stream_tws_sessionize", "append")(
+            graft.streaming.EventStream.sessionizeTws(s, ev))
+          .select(col("user_id"), col("n_events"),
+            timestamp_millis(col("start_ms")).as("session_start"),
+            timestamp_millis(col("end_ms")).as("session_end"))
       }
     },
     Some("""WITH e AS (
@@ -1407,21 +1370,17 @@ object CurationQueries {
     * the state store, and the final register file + estimate must
     * equal the batch sketch — the ORACLE IS SHARED with
     * `x_sketch_hll`. */
-  private val streamHllFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val x_stream_hll_parity = Q(
     "x_stream_hll_parity",
     (s, d) => {
       val ev = Tables.events(s, d).filter(col("event_type").isNotNull)
         .select(col("event_type"), col("user_id"))
-      val tmp = streamHllFixtureDirs.getOrElseUpdate(d, {
-        val t = ExtensionQueries.fixtureTempDir("graft_stream_hll")
+      val tmp = Landing.dir(s, d, "graft_stream_hll") { t =>
         ev.filter(col("user_id") % 2 === 0).coalesce(1)
           .write.mode("overwrite").parquet(t)
         ev.filter(col("user_id") % 2 =!= 0).coalesce(1)
           .write.mode("append").parquet(t)
-        t
-      })
+      }
       val src = s.readStream
         .schema("event_type STRING, user_id BIGINT")
         .option("maxFilesPerTrigger", "1") // registers must cross batches
@@ -1434,15 +1393,8 @@ object CurationQueries {
         .withColumn("rho", when(col("w") === 0, lit(51))
           .otherwise(lit(51) - length(bin(col("w")))))
         .groupBy(col("grp"), col("bucket")).agg(max(col("rho")).as("reg"))
-      val sink = "x_stream_hll_parity_sink"
-      graft.streaming.EventStream.withStatePartitions(s, 4) {
-        val sq = regs.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
-      }
-      val sk = Sketches.hllEstimate(s.table(sink).localCheckpoint(true))
+      val sk = Sketches.hllEstimate(graft.streaming.EventStream
+        .drain(s, "x_stream_hll_parity", "complete")(regs).localCheckpoint(true))
       val exact = ev.groupBy(col("event_type").as("grp"))
         .agg(countDistinct(col("user_id")).as("exact_distinct"))
       sk.join(exact, Seq("grp"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exact, Tables}
+import graft.core.{Exact, Landing, Tables}
 import graft.ops.{Features, Quality, Qualify, Snapshot, TextOps}
 import graft.streaming.EventStream
 
@@ -922,33 +922,21 @@ object EltQueries {
     * the batch path does, and the ORACLE IS SHARED with
     * `x_elt_cdc_apply` — streaming and batch must land the identical
     * final table. */
-  private val streamCdcFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val x_stream_cdc_parity = Q(
     "x_stream_cdc_parity",
     (s, d) => {
       val (base, upd, del, ins) = cdcFixture(s, d)
-      val tmp = streamCdcFixtureDirs.getOrElseUpdate(d, {
-        val t = ExtensionQueries.fixtureTempDir("graft_stream_cdc")
+      val tmp = Landing.dir(s, d, "graft_stream_cdc") { t =>
         upd.coalesce(1).write.mode("overwrite").parquet(t)
         del.coalesce(1).write.mode("append").parquet(t)
         ins.coalesce(1).write.mode("append").parquet(t)
-        t
-      })
+      }
       val src = s.readStream
         .schema("k BIGINT, name STRING, bal DOUBLE, seq BIGINT, op STRING")
         .option("maxFilesPerTrigger", "1") // force the cross-batch path
         .parquet(tmp)
-      val sink = "x_stream_cdc_parity_sink"
-      graft.streaming.EventStream.withStatePartitions(s, 4) {
-        val sq = EventStream.cdcLatest(src, Seq("k"), "seq", "op")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
-      }
-      val latest = s.table(sink).localCheckpoint(true)
+      val latest = EventStream.drain(s, "x_stream_cdc_parity", "complete")(
+        EventStream.cdcLatest(src, Seq("k"), "seq", "op")).localCheckpoint(true)
       val survivors = base.join(latest.select(col("k")), Seq("k"), "left_anti")
       survivors.unionByName(latest.filter(col("op").isin("I", "U"))
         .select(base.columns.map(col).toSeq: _*))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exact, Tables}
+import graft.core.{Exact, Landing, Tables}
 import graft.ops.{AsofJoin, Dedup, Graph, Multimodal, Packing, Phonetic, RangeJoin, Sampling, Scale, Similarity, TextOps}
 import graft.streaming.EventStream
 
@@ -2023,8 +2023,7 @@ object ExtensionQueries {
   private val x_source_jsonl = Q(
     "x_source_jsonl_roundtrip",
     (s, d) => {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_jsonl_roundtrip").getPath
+      val path = Landing.dir(s, d, "graft_jsonl_roundtrip")(_ => ())
       Tables.documents(s, d).filter(col("text").isNotNull)
         .select(col("doc_id"), col("lang"), col("text"))
         .write.mode("overwrite").json(path)
@@ -2131,8 +2130,7 @@ object ExtensionQueries {
   private val x_source_schema_merge = Q(
     "x_source_schema_merge",
     (s, d) => {
-      val base = schemaMergeFixtureDirs.getOrElseUpdate(d, {
-        val t = fixtureTempDir("graft_schema_merge")
+      val base = Landing.dir(s, d, "graft_schema_merge") { t =>
         val o = Tables.orders(s, d)
           .withColumn("yr", year(col("o_orderdate")))
         o.filter(col("yr") < 1997)
@@ -2141,8 +2139,7 @@ object ExtensionQueries {
         o.filter(col("yr") >= 1997)
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
           .write.mode("overwrite").parquet(t + "/v2")
-        t
-      })
+      }
       s.read.option("mergeSchema", "true").parquet(base + "/v1", base + "/v2")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -2157,9 +2154,6 @@ object ExtensionQueries {
       MIN(o_orderkey) AS min_key,
       MAX(o_orderkey) AS max_key
     FROM orders GROUP BY 1"""))
-
-  private val schemaMergeFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** k-anonymity GENERALIZATION ladder — the remediation step the
     * [[EltQueries]] k-anonymity audit feeds: quasi-identifier classes
@@ -2513,6 +2507,15 @@ object ExtensionQueries {
     LEFT JOIN (SELECT user_id, count(*) AS n_completed FROM v2c2p GROUP BY 1) c
       ON a.user_id = c.user_id"""))
 
+  /** The events with a timestamp, as a µs parquet stream source for the
+    * hourly and stream-static parity queries. */
+  private def streamEventsFixture(s: org.apache.spark.sql.SparkSession,
+                                  d: String): String =
+    Landing.dir(s, d, "graft_stream_events") { t =>
+      Tables.events(s, d).filter(col("ts").isNotNull)
+        .write.mode("overwrite").parquet(t)
+    }
+
   /** Batch–stream PARITY, oracle-checked: the hourly aggregation runs as
     * an actual Structured Streaming query — file source → windowed
     * aggregation → Trigger.AvailableNow to completion — and the driver
@@ -2522,22 +2525,15 @@ object ExtensionQueries {
     * watermark, parquet/Kafka sink — see EventStream.hourlyCounts).
     * countDistinct is excluded: distinct aggregation is unsupported in
     * streaming (approx_count_distinct is its streaming stand-in).
-    * The temp-dir copy only adapts the ns-timestamp fixture to a
-    * streamable µs file source (memoized per testdata dir — it is input
+    * The landed copy only adapts the ns-timestamp fixture to a
+    * streamable µs file source (landed once per dataset — it is input
     * PREP, and re-writing it per invocation would bill fixture IO to
     * the streaming query under measurement); real deployments stream
     * the landing directory itself. */
-  private val streamFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val x_stream_hourly_parity = Q(
     "x_stream_hourly_parity",
     (s, d) => {
-      val tmp = streamFixtureDirs.getOrElseUpdate(d, {
-        val t = fixtureTempDir("graft_stream_events")
-        Tables.events(s, d).filter(col("ts").isNotNull)
-          .write.mode("overwrite").parquet(t)
-        t
-      })
+      val tmp = streamEventsFixture(s, d)
       val agg = EventStream.readEvents(s, tmp, format = "parquet")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -2545,15 +2541,7 @@ object ExtensionQueries {
           max(col("value")).as("max_value"))
         .select(col("w.start").as("hour_start"), col("event_type"),
           col("n_events"), col("min_value"), col("max_value"))
-      val sink = "x_stream_hourly_parity_sink"
-      graft.streaming.EventStream.withStatePartitions(s, 4) {
-        val sq = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
-      }
-      s.table(sink)
+      EventStream.drain(s, "x_stream_hourly_parity", "complete")(agg)
     },
     Some("""SELECT date_trunc('hour', ts) AS hour_start, event_type,
       count(*) AS n_events,
@@ -2575,12 +2563,7 @@ object ExtensionQueries {
   private val x_stream_static_join = Q(
     "x_stream_static_join_parity",
     (s, d) => {
-      val tmp = streamFixtureDirs.getOrElseUpdate(d, {
-        val t = fixtureTempDir("graft_stream_events")
-        Tables.events(s, d).filter(col("ts").isNotNull)
-          .write.mode("overwrite").parquet(t)
-        t
-      })
+      val tmp = streamEventsFixture(s, d)
       val dim = Tables.events(s, d)
         .filter(col("user_id").isNotNull)
         .select(col("user_id")).distinct()
@@ -2591,15 +2574,7 @@ object ExtensionQueries {
         .agg(count(lit(1)).as("n_events"),
           min(col("event_id")).as("min_event"),
           max(col("event_id")).as("max_event"))
-      val sink = "x_stream_static_join_sink"
-      graft.streaming.EventStream.withStatePartitions(s, 4) {
-        val sq = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
-      }
-      s.table(sink)
+      EventStream.drain(s, "x_stream_static_join_parity", "complete")(agg)
     },
     Some("""SELECT CAST(user_id % 7 AS INTEGER) AS cohort, event_type,
       COUNT(*) AS n_events,
@@ -2961,6 +2936,19 @@ object ExtensionQueries {
     FROM sessions
     GROUP BY 1, 2"""))
 
+  /** Second-truncated events in one file, shared by the fMGWS
+    * sessionizer and the transformWithState counter. */
+  private def sessionParityFixture(s: org.apache.spark.sql.SparkSession,
+                                   d: String): String =
+    Landing.dir(s, d, "graft_stream_sess") { t =>
+      Tables.events(s, d).filter(col("ts").isNotNull)
+        // second-truncated on both sides, same as x_events_sessionize
+        .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
+          col("user_id"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(t)
+    }
+
   /** Streaming-vs-batch SESSIONIZE parity on the custom-state path: the
     * flatMapGroupsWithState sessionizer (EventStream.sessionize — one
     * open session per user in the state store, event-time timeouts) run
@@ -2974,54 +2962,20 @@ object ExtensionQueries {
     * emits iff its timeout timestamp passed the final watermark
     * strictly — end + gap < max(ts) over the whole input (Spark times
     * out state when timeoutTimestamp < watermark). */
-  /** Temp fixture dir registered for recursive deletion at JVM exit:
-    * a bench/verify run at large SF writes hundreds of MB of stream
-    * fixtures (the 100× corpus leaves ~400 MB), and without the hook
-    * they accumulate in java.io.tmpdir across runs on a shared host.
-    * (File.deleteOnExit only removes EMPTY dirs, hence the hook.) */
-  private[queries] def fixtureTempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
-    p.toString
-  }
-
-  private val sessionParityFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val x_stream_sessionize_parity = Q(
     "x_stream_sessionize_parity",
     (s, d) => {
       import s.implicits._
-      val tmp = sessionParityFixtureDirs.getOrElseUpdate(d, {
-        val t = fixtureTempDir("graft_stream_sess")
-        Tables.events(s, d).filter(col("ts").isNotNull)
-          // second-truncated on both sides, same as x_events_sessionize
-          .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
-            col("user_id"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(t)
-        t
-      })
+      val tmp = sessionParityFixture(s, d)
       val ev = s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
         .parquet(tmp)
         .as[EventStream.Event]
-      val sink = "x_stream_sessionize_parity_sink"
-      graft.streaming.EventStream.withStatePartitions(s, 4) {
-        val sq = EventStream.sessionize(s, ev)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
-      }
-      s.table(sink).select(col("user_id"), col("n_events"),
-        timestamp_millis(col("start_ms")).as("session_start"),
-        timestamp_millis(col("end_ms")).as("session_end"))
+      EventStream.drain(s, "x_stream_sessionize_parity", "append")(
+          EventStream.sessionize(s, ev))
+        .select(col("user_id"), col("n_events"),
+          timestamp_millis(col("start_ms")).as("session_start"),
+          timestamp_millis(col("end_ms")).as("session_end"))
     },
     Some("""WITH e AS (
       SELECT user_id, event_id, date_trunc('second', ts) AS ts_s
@@ -3062,30 +3016,15 @@ object ExtensionQueries {
     "x_stream_tws_counts",
     (s, d) => {
       import s.implicits._
-      val tmp = sessionParityFixtureDirs.getOrElseUpdate(d, {
-        val t = fixtureTempDir("graft_stream_sess")
-        Tables.events(s, d).filter(col("ts").isNotNull)
-          .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
-            col("user_id"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(t)
-        t
-      })
+      val tmp = sessionParityFixture(s, d)
       EventStream.withRocksDbState(s) {
         val ev = s.readStream
           .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
           .parquet(tmp)
           .as[EventStream.Event]
-        val sink = "x_stream_tws_counts_sink"
-        graft.streaming.EventStream.withStatePartitions(s, 4) {
-          val sq = EventStream.runningUserCounts(s, ev)
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("update")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          sq.awaitTermination()
-        }
-        s.table(sink).groupBy(col("user_id"))
+        EventStream.drain(s, "x_stream_tws_counts", "update")(
+            EventStream.runningUserCounts(s, ev))
+          .groupBy(col("user_id"))
           .agg(max(col("n_events")).as("n_events"))
       }
     },
@@ -3102,8 +3041,7 @@ object ExtensionQueries {
   private val x_source_orc = Q(
     "x_source_orc_roundtrip",
     (s, d) => {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_orc_roundtrip").getPath
+      val path = Landing.dir(s, d, "graft_orc_roundtrip")(_ => ())
       Tables.lineitem(s, d)
         .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"),
           col("l_extendedprice"), col("l_discount"), col("l_shipdate"))
@@ -3927,39 +3865,26 @@ object ExtensionQueries {
     * complete regardless of watermark timing — what the watermark
     * bounds is STATE, which is the 100 TB property this operator
     * exists for. */
-  private val streamJoinFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private val x_stream_join_parity = Q(
     "x_stream_join_parity",
     (s, d) => {
-      val (tc, tv) = streamJoinFixtureDirs.getOrElseUpdate(d, {
-        val base =
-          fixtureTempDir("graft_stream_join")
+      val base = Landing.dir(s, d, "graft_stream_join") { t =>
         val ev = Tables.events(s, d).filter(col("ts").isNotNull)
           .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
             col("user_id"), col("event_type"))
         ev.filter(col("event_type") === "click").drop("event_type")
-          .coalesce(1).write.mode("overwrite").parquet(base + "/clicks")
+          .coalesce(1).write.mode("overwrite").parquet(t + "/clicks")
         ev.filter(col("event_type") === "view").drop("event_type")
-          .coalesce(1).write.mode("overwrite").parquet(base + "/views")
-        (base + "/clicks", base + "/views")
-      })
+          .coalesce(1).write.mode("overwrite").parquet(t + "/views")
+      }
       def src(path: String) = s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
         .parquet(path)
-      val sink = "x_stream_join_parity_sink"
-      // state partitions sized to the single-file fixture (see
+      // 4 state partitions sized to the single-file fixture (see
       // EventStream.withStatePartitions — measured 3x on this query)
-      EventStream.withStatePartitions(s, 4) {
-        val sq = EventStream.clickViewJoin(src(tc), src(tv),
-            horizon = "24 hours", delay = "48 hours")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
-      }
-      s.table(sink)
+      EventStream.drain(s, "x_stream_join_parity", "append")(
+          EventStream.clickViewJoin(src(base + "/clicks"), src(base + "/views"),
+            horizon = "24 hours", delay = "48 hours"))
         .select(col("click_id"), col("user_id"), col("click_ts"),
           col("view_id"), col("view_ts"))
     },
@@ -4026,34 +3951,23 @@ object ExtensionQueries {
     * proves ran correctly. The watermark delay exceeds the corpus time
     * span, so no key is evicted before its duplicate arrives; at 100 TB
     * the delay is the knob that bounds state instead. */
-  private val streamDedupFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val x_stream_dedup_parity = Q(
     "x_stream_dedup_parity",
     (s, d) => {
-      val tmp = streamDedupFixtureDirs.getOrElseUpdate(d, {
-        val t = fixtureTempDir("graft_stream_dedup")
+      val tmp = Landing.dir(s, d, "graft_stream_dedup") { t =>
         val ev = Tables.events(s, d).filter(col("ts").isNotNull)
           .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
             col("user_id"))
         ev.coalesce(1).write.mode("overwrite").parquet(t)
         ev.coalesce(1).write.mode("append").parquet(t) // planted duplicates
-        t
-      })
+      }
       val src = s.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
         .option("maxFilesPerTrigger", "1") // force the cross-batch path
         .parquet(tmp)
-      val sink = "x_stream_dedup_parity_sink"
-      graft.streaming.EventStream.withStatePartitions(s, 4) {
-        val sq = EventStream.dedupEvents(src, delay = "60 days")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
-      }
-      s.table(sink).select(col("event_id"), col("ts"), col("user_id"))
+      EventStream.drain(s, "x_stream_dedup_parity", "append")(
+          EventStream.dedupEvents(src, delay = "60 days"))
+        .select(col("event_id"), col("ts"), col("user_id"))
     },
     Some("""SELECT event_id, date_trunc('second', ts) AS ts, user_id
       FROM events WHERE ts IS NOT NULL"""))

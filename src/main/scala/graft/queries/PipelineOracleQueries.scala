@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exact, Tables}
+import graft.core.{Exact, Landing, Tables}
 import graft.pipeline.{Datamart, Staging, Warehouse}
 
 /** End-to-end DuckDB oracle for the Airbnb pipeline itself (round-8
@@ -133,24 +133,15 @@ object PipelineOracleQueries {
     * computed rows in block storage and the four views start from
     * them — exactly how the reference runs, too: populate.py builds
     * fact_listing once and the views read the TABLE, not the raw
-    * files. Keyed by session so a restarted session (dead block
-    * manager) re-derives instead of reading freed blocks. */
-  private val factCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]
-
+    * files. Pinned through [[Landing.memo]], so a new session (whose
+    * block manager may not hold the old blocks) rebuilds and replaces
+    * the entry. */
   private[graft] def fact(s: SparkSession, d: String): DataFrame =
-    // keyed by dir with the OWNING session alongside: a new session
-    // REPLACES the stale entry (whose checkpoint blocks died with the
-    // old block manager) instead of accumulating one entry per
-    // (session, dir) forever — entry count is bounded by #sf dirs, and
-    // a cycled session's DataFrame is dropped, not retained.
-    factCache.compute(d, (dir, prev) =>
-      if (prev != null && (prev._1 eq s)) prev
-      else {
-        val (raw, locdim) = corpus(s, dir)
-        (s, Warehouse.factListing(Staging.listing(Seq(raw)), locdim)
-          .localCheckpoint(true))
-      })._2
+    Landing.memo(s, s"pipeline_fact:$d") {
+      val (raw, locdim) = corpus(s, d)
+      Warehouse.factListing(Staging.listing(Seq(raw)), locdim)
+        .localCheckpoint(true)
+    }
 
   /** The columns the four KPI views actually read. */
   private val viewCols = Seq(
@@ -158,9 +149,6 @@ object PipelineOracleQueries {
     "property_type", "room_type", "accommodates", "file_year",
     "file_month", "host_id", "host_is_superhost", "has_availability",
     "availability_30", "price")
-
-  private val viewFactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]
 
   /** The fact NARROWED to [[viewCols]] and pinned separately — the
     * materialized-projection discipline a datamart layer applies at
@@ -173,10 +161,9 @@ object PipelineOracleQueries {
     * extra checkpoint job per (session, sf), amortized over the four
     * views — exactly the projection a 100 TB mart would store. */
   private def viewFact(s: SparkSession, d: String): DataFrame =
-    viewFactCache.compute(d, (dir, prev) =>
-      if (prev != null && (prev._1 eq s)) prev
-      else (s, fact(s, dir).select(viewCols.map(col): _*)
-        .localCheckpoint(true)))._2
+    Landing.memo(s, s"pipeline_view_fact:$d") {
+      fact(s, d).select(viewCols.map(col): _*).localCheckpoint(true)
+    }
 
   private val factCols = Seq(
     "id", "filename", "file_year", "file_month", "neighbourhood_suburb",

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Landing, Tables}
 import graft.functions.GraftFunctions
 import graft.ops.{Graph, Sampling, Scale, Similarity}
 
@@ -2805,9 +2805,6 @@ object TrainingQueries {
   // x_stream_chained_windows
   // ---------------------------------------------------------------
 
-  private val chainedFixtureDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Batch–stream parity for CHAINED stateful window aggregations
     * ([[graft.streaming.EventStream.chainedDailyRollup]]): hourly
     * counts re-windowed into a daily rollup inside one streaming
@@ -2821,24 +2818,14 @@ object TrainingQueries {
   private val x_stream_chained_windows = Q(
     "x_stream_chained_windows",
     (s, d) => {
-      val tmp = chainedFixtureDirs.getOrElseUpdate(d, {
-        val t = ExtensionQueries.fixtureTempDir("graft_stream_chain")
+      val tmp = Landing.dir(s, d, "graft_stream_chain") { t =>
         Tables.events(s, d).filter(col("ts").isNotNull)
           .write.mode("overwrite").parquet(t)
-        t
-      })
-      import graft.streaming.EventStream
-      val agg = EventStream.chainedDailyRollup(
-        EventStream.readEvents(s, tmp, format = "parquet"))
-      val sink = "x_stream_chained_windows_sink"
-      graft.streaming.EventStream.withStatePartitions(s, 4) {
-        val sq = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
       }
-      s.table(sink)
+      import graft.streaming.EventStream
+      EventStream.drain(s, "x_stream_chained_windows", "append")(
+        EventStream.chainedDailyRollup(
+          EventStream.readEvents(s, tmp, format = "parquet")))
     },
     Some("""WITH mx AS (
         SELECT MAX(ts) - INTERVAL 10 MINUTE AS wm FROM events

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.core.Confs
@@ -77,6 +77,27 @@ object EventStream {
   def withRocksDbState[T](spark: SparkSession)(f: => T): T =
     Confs.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
+
+  /** The one bounded run of a streaming frame: every file already in
+    * the source goes through `df` under `Trigger.AvailableNow` into a
+    * memory sink, with 4 state partitions (the parity fixtures' size,
+    * see [[withStatePartitions]]), and the sink's rows come back as a
+    * batch frame. The sink's temp view is dropped once that frame is
+    * analysed — the frame keeps the rows, the session does not. */
+  def drain(spark: SparkSession, name: String, outputMode: String)(
+      df: Dataset[_]): DataFrame = {
+    val sink = s"${name}_sink"
+    withStatePartitions(spark, 4) {
+      df.writeStream.format("memory").queryName(sink)
+        .outputMode(outputMode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    val out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    out
+  }
 
   val eventSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),

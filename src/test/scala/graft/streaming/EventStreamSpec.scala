@@ -386,4 +386,63 @@ class EventStreamSpec extends SparkSpec {
     assert(progress.last.stateOperators.head.numShufflePartitions == 32L,
       "high-rate state layout must take the session's full parallelism")
   }
+
+  test("drain runs a bounded stream in each output mode and leaves no sink view") {
+    val dir = Files.createTempDirectory("drain_stream")
+    Seq(
+      """{"event_id":1,"ts":"2024-01-01T00:10:00.000Z","user_id":1,"event_type":"click","value":1.0,"props":"{}"}""",
+      """{"event_id":2,"ts":"2024-01-01T00:20:00.000Z","user_id":2,"event_type":"click","value":1.0,"props":"{}"}""",
+      """{"event_id":2,"ts":"2024-01-01T00:20:00.000Z","user_id":2,"event_type":"click","value":1.0,"props":"{}"}""",
+      """{"event_id":3,"ts":"2024-01-01T01:05:00.000Z","user_id":1,"event_type":"view","value":1.0,"props":"{}"}"""
+    ).zipWithIndex.foreach { case (line, i) =>
+      Files.write(dir.resolve(s"drop$i.json"), line.getBytes("UTF-8"))
+    }
+    val statePartitions = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        statePartitions.synchronized {
+          statePartitions ++= e.progress.stateOperators.map(_.numShufflePartitions)
+        }
+    }
+    def events = EventStream.readEvents(spark, dir.toString)
+    def byType = events.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+    spark.streams.addListener(listener)
+    try {
+      // a session default of 8, so the 4 below can only come from drain
+      val (appended, completed, updated) =
+        EventStream.withStatePartitions(spark, 8) {
+          val out = (
+            EventStream.drain(spark, "drain_append", "append")(
+              EventStream.dedupEvents(events)),
+            EventStream.drain(spark, "drain_complete", "complete")(byType),
+            EventStream.drain(spark, "drain_update", "update")(byType))
+          assert(spark.conf.get("spark.sql.shuffle.partitions") == "8")
+          out
+        }
+      assert(appended.select("event_id").as[Long].collect().sorted.toSeq ==
+        Seq(1L, 2L, 3L))
+      // the aggregations see the redelivered event 2 as well
+      val counts = Set(("click", 3L), ("view", 1L))
+      assert(completed.as[(String, Long)].collect().toSet == counts)
+      // update mode emits each key once here: one batch holds all files
+      assert(updated.as[(String, Long)].collect().toSet == counts)
+      // frames derived after the view is gone still read the sink's rows
+      assert(completed.filter(col("event_type") === "view").count() == 1L)
+
+      assert(spark.catalog.listTables().collect()
+        .forall(t => !t.name.endsWith("_sink")))
+      assert(!spark.catalog.tableExists("drain_complete_sink"))
+      assert(spark.streams.active.isEmpty)
+      org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
+      assert(statePartitions.nonEmpty && statePartitions.forall(_ == 4L),
+        statePartitions.toString)
+    } finally {
+      spark.streams.removeListener(listener)
+      dir.toFile.listFiles().foreach(_.delete())
+      Files.delete(dir)
+    }
+  }
 }
