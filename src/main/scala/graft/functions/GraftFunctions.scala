@@ -19,56 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * function formulations, which Spark evaluates interpreted.
   */
 
-/** minhash signature of a token array: array<long> of length numHashes. */
-case class MinHashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-  require(numHashes > 0, "numHashes must be positive")
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftFunctions.requireStringArray(child, prettyName)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_sig"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.minhashSig(input.asInstanceOf[ArrayData], numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.minhashSig($c, $numHashes)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** 64-bit simhash of a token array. */
-case class SimHash64(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftFunctions.requireStringArray(child, prettyName)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** Winnowing fingerprints of a string (byte k-grams, window w). */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  require(k > 0 && w > 0, "k and w must be positive")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_winnow"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.winnow(input.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.winnow($c, $k, $w)")
-  override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
-    copy(child = newChild)
-}
-
 /** md5-family minhash signature (cross-engine-checkable; see Kernels). */
 case class Md5MinHashSig(child: Expression, numHashes: Int)
     extends UnaryExpression {
@@ -551,15 +501,6 @@ object GraftFunctions {
         s"$name expects array<double>, got ${other.catalogString}")
     }
 
-  def minhashSig(toks: Column, numHashes: Int): Column =
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(toks), numHashes))
-
-  def simhash64(toks: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(toks)))
-
-  def winnowFingerprints(text: Column, k: Int = 8, w: Int = 4): Column =
-    ColumnBridge.column(WinnowFingerprints(ColumnBridge.expression(text), k, w))
-
   def md5MinhashSig(toks: Column, numHashes: Int): Column =
     ColumnBridge.column(Md5MinHashSig(ColumnBridge.expression(toks), numHashes))
 
@@ -638,17 +579,9 @@ object GraftFunctions {
         throw new IllegalArgumentException(
           s"$name expects $signature, got ${bad.size} argument(s)"))
     Seq(
-      (FunctionIdentifier("graft_minhash_sig"), info("graft_minhash_sig"),
-        builder("graft_minhash_sig", "(arr, numHashes)") { case Seq(e, n) =>
-          MinHashSig(e, intLit(n, "numHashes")) }),
-      (FunctionIdentifier("graft_simhash64"), info("graft_simhash64"),
-        builder("graft_simhash64", "(arr)") { case Seq(e) => SimHash64(e) }),
       (FunctionIdentifier("graft_topk_by"), info("graft_topk_by"),
         builder("graft_topk_by", "(score, key, k)") { case Seq(s, key, k) =>
           TopKByScore(s, key, intLit(k, "k")).toAggregateExpression() }),
-      (FunctionIdentifier("graft_winnow"), info("graft_winnow"),
-        builder("graft_winnow", "(text, k, w)") { case Seq(e, k, w) =>
-          WinnowFingerprints(e, intLit(k, "k"), intLit(w, "w")) }),
       (FunctionIdentifier("graft_word_shingles"), info("graft_word_shingles"),
         builder("graft_word_shingles", "(arr, n)") { case Seq(e, n) =>
           WordShingles(e, intLit(n, "n")) }),
@@ -682,9 +615,9 @@ object GraftFunctions {
   }
 
   /** Register `graft_*` as session SQL functions so `spark.sql` users get
-    * the same operators: graft_minhash_sig(arr, n), graft_simhash64(arr),
-    * graft_winnow(text, k, w), graft_word_shingles(arr, n),
-    * graft_sorted_intersect_count(a, b). */
+    * the same operators, e.g. graft_md5_minhash_sig(arr, n),
+    * graft_md5_simhash60(arr), graft_winnow_roll(text, k, w),
+    * graft_word_shingles(arr, n), graft_sorted_intersect_count(a, b). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     registrations.foreach { case (id, inf, builder) =>

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -8,110 +7,21 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Rationale: Spark evaluates higher-order-function lambdas interpreted
   * (no whole-stage codegen inside `transform`/`aggregate`), so hash-heavy
-  * per-row loops (64-seed minhash, 64-bit simhash tallies, rolling-hash
+  * per-row loops (64-seed minhash, 60-bit simhash tallies, rolling-hash
   * winnowing) cost 10-50x their compiled equivalent. Each kernel is one
   * static call from generated code — the loop itself runs as ordinary
   * JVM bytecode operating directly on Spark's unsafe representations
   * (UTF8String bytes, ArrayData), no row conversion, no allocation
   * beyond the output.
   *
+  * Near-duplicate detection has ONE hash family: md5-derived MinHash and
+  * SimHash plus Karp–Rabin rolling winnowing (see the md5-derived family
+  * section), every value of which the DuckDB oracle recomputes.
+  *
   * Methods are called from Janino-generated Java via the Scala static
   * forwarders on this object's companion class.
   */
 object Kernels {
-
-  /** MinHash signature: out[i] = min over tokens of h_i(token), where
-    * h_i = XXH64(XXH64(tokenBytes, 0), seed=i) — one strong byte-hash per
-    * token, then a cheap long-rehash per seed (standard one-permutation
-    * family derivation; seeds are statistically independent enough for
-    * LSH banding). Null tokens are skipped. */
-  def minhashSig(tokens: ArrayData, numHashes: Int): ArrayData = {
-    val n = tokens.numElements()
-    val out = new Array[Long](numHashes)
-    java.util.Arrays.fill(out, Long.MaxValue)
-    var t = 0
-    while (t < n) {
-      if (!tokens.isNullAt(t)) {
-        val s = tokens.getUTF8String(t)
-        val base = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 0L)
-        var i = 0
-        while (i < numHashes) {
-          val h = XXH64.hashLong(base, i.toLong)
-          if (h < out(i)) out(i) = h
-          i += 1
-        }
-      }
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** 64-bit SimHash: bit i set iff Σ_tokens (2·bit_i(XXH64(token)) − 1)
-    * is positive. Null tokens skipped. */
-  def simhash64(tokens: ArrayData): Long = {
-    val counts = new Array[Int](64)
-    val n = tokens.numElements()
-    var t = 0
-    while (t < n) {
-      if (!tokens.isNullAt(t)) {
-        val s = tokens.getUTF8String(t)
-        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 0L)
-        var i = 0
-        while (i < 64) {
-          counts(i) += (((h >>> i) & 1L).toInt << 1) - 1
-          i += 1
-        }
-      }
-      t += 1
-    }
-    var sim = 0L
-    var i = 0
-    while (i < 64) {
-      if (counts(i) > 0) sim |= 1L << i
-      i += 1
-    }
-    sim
-  }
-
-  /** Winnowing fingerprints (Schleimer et al., SIGMOD'03) over the
-    * UTF-8 BYTE stream: hash every k-byte gram, keep the min hash of
-    * each w-length sliding window, de-duplicated in first-seen order.
-    * Degenerate short inputs fingerprint the whole text. */
-  def winnow(text: UTF8String, k: Int, w: Int): ArrayData = {
-    val n = text.numBytes
-    val base = text.getBaseObject
-    val off = text.getBaseOffset
-    if (n < k) {
-      return new GenericArrayData(Array(XXH64.hashUnsafeBytes(base, off, n, 0L)))
-    }
-    val m = n - k + 1
-    val grams = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      grams(i) = XXH64.hashUnsafeBytes(base, off + i, k, 0L)
-      i += 1
-    }
-    val windows = if (m >= w) m - w + 1 else 1
-    val effW = math.min(w, m)
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    var j = 0
-    while (j < windows) {
-      var mn = Long.MaxValue
-      var x = 0
-      while (x < effW) {
-        val g = grams(j + x)
-        if (g < mn) mn = g
-        x += 1
-      }
-      seen.add(mn)
-      j += 1
-    }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var o = 0
-    while (it.hasNext) { out(o) = it.next(); o += 1 }
-    new GenericArrayData(out)
-  }
 
   /** SORTED-distinct word n-gram shingle set of a token array: shingle i
     * = tokens[i..i+n) joined by a single space. Output order is
@@ -196,13 +106,12 @@ object Kernels {
 
   // ------------------------------------------------- md5-derived family
   //
-  // Cross-engine-checkable variants of the hash family: every value is
-  // derived from the first 60 bits of an md5 digest (= the first 15 hex
-  // chars of the standard lowercase digest string), which any SQL engine
-  // can recompute — DuckDB's oracle does, nibble by nibble. The xxhash64
-  // kernels above remain the throughput path; these trade ~2× hash cost
-  // for end-to-end engine-vs-engine verifiability of the FULL pipeline
-  // (signatures, banding, candidate sets), not just spec-level claims.
+  // The near-duplicate hash family: every value is derived from the
+  // first 60 bits of an md5 digest (= the first 15 hex chars of the
+  // standard lowercase digest string), which any SQL engine can
+  // recompute — DuckDB's oracle does, nibble by nibble — so the FULL
+  // pipeline (signatures, banding, candidate sets) is engine-vs-engine
+  // verifiable, not just spec-level claims.
 
   private val md5Tl = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =

@@ -12,8 +12,8 @@ import graft.functions.{GraftFunctions, Kernels}
   * needs).
   *
   * Scale posture (100 TB): every operator here is either row-local
-  * (minhash/simhash signatures are computed per row with higher-order
-  * array expressions — zero shuffle, no explode of the token stream) or
+  * (minhash/simhash signatures are computed per row by native kernels
+  * — zero shuffle, no explode of the token stream) or
   * an equi-join on a bounded blocking/bucket key (LSH band join). There
   * are no cross joins and no driver-side collects; candidate volume is
   * controlled by the band/blocking parameters, not the corpus size.
@@ -101,7 +101,7 @@ object Dedup {
     * [[graft.ops.Sampling.splitLabel]] for the split itself — its
     * same-key-same-split guarantee handles exact-duplicate KEYS, this
     * handles duplicate CONTENT across keys. Near-dup-level
-    * decontamination = run [[minhashLshPairs]] between the sets
+    * decontamination = run [[minhashLshPairsMd5]] between the sets
     * instead. */
   def decontaminate(train: DataFrame, trainText: Column,
                     eval: DataFrame, evalText: Column): DataFrame = {
@@ -319,102 +319,42 @@ object Dedup {
       .filter(col("containment") >= minC)
   }
 
-  // ------------------------------------------------------------ MinHash
-
-  /** Per-row MinHash signature: for seed i, min over tokens of h_i(token)
-    * (native codegen'd kernel — see graft.functions.MinHashSig; the
-    * higher-order-function formulation evaluates interpreted and is an
-    * order of magnitude slower). Row-local, no shuffle. Returns
-    * array<long> of length `numHashes`. */
-  def minhashSignature(toks: Column, numHashes: Int): Column =
-    GraftFunctions.minhashSig(toks, numHashes)
-
-  /** LSH banding of a materialized signature attribute: `bands` keys,
-    * each hashing `rowsPerBand` consecutive signature components (plus
-    * the band index, so buckets never collide across bands). Returns
-    * array<struct<band:int, key:long>> for exploding into the band join. */
-  def lshBands(sigAttr: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => element_at(sigAttr, b * rowsPerBand + r + 1))
-      struct(lit(b).as("band"), xxhash64(parts :+ lit(b): _*).as("key"))
-    }: _*)
-
-  /** MinHash+LSH near-duplicate candidate pairs over a (doc_id, toks)
-    * table, verified.
-    *
-    * Pipeline: per-row signature → band keys → explode bands →
-    * self-equi-join on (band, key) → distinct candidate pairs → estimate
-    * similarity as the fraction of matching signature components, and
-    * verify with exact Jaccard (two hash joins back to the token sets).
-    * The only shuffles are the band join and the two verify joins, all
-    * on keys — the classic shape that survives 1000 executors.
-    *
-    * Defaults 16 bands × 4 rows ≈ s-curve threshold (1/16)^(1/4) ≈ 0.5.
-    */
-  def minhashLshPairs(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
-                      minJaccard: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-    val sigs = docs.filter(size(col("toks")) > 0)
-      .select(col("doc_id"), col("toks"),
-        minhashSignature(col("toks"), numHashes).as("sig"))
-    val banded = sigs.select(col("doc_id"),
-        explode(lshBands(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val cands = banded.as("x").join(banded.as("y"), Seq("band", "key"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .distinct()
-    val withSig = cands
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
-        col("toks").as("toks_a")), "doc_a")
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
-        col("toks").as("toks_b")), "doc_b")
-    val matching = size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-      b => b))
-    withSig.select(
-        col("doc_a"), col("doc_b"),
-        round(matching.cast("double") / numHashes, 6).as("est_jaccard"),
-        size(array_intersect(col("toks_a"), col("toks_b"))).as("__i"),
-        (size(col("toks_a")) + size(col("toks_b"))).as("__t"))
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"),
-        round(col("__i").cast("double") / (col("__t") - col("__i")).cast("double"), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
-  }
-
   // ------------------------------------- md5-family (oracle-checkable)
 
-  /** md5-family MinHash+LSH near-dup pairs: the same pipeline as
-    * [[minhashLshPairs]] — row-local signatures, one band equi-join,
-    * id-keyed verify joins — but every hash derives from md5
-    * (graft.functions.Kernels.md5MinhashSig) and band keys are the RAW
-    * r-tuples of signature components rather than a hash of them. Both
-    * choices exist so a second engine can REPLAY the whole pipeline:
-    * signatures, banding, the exact candidate set and the verified pair
-    * list are all recomputable in portable SQL ([[minhashLshPairsMd5Sql]]
-    * emits the DuckDB form the driver oracle runs). The xxhash64 variant
-    * stays the throughput path; scale shape is identical. */
-  def minhashLshPairsMd5(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
-                         minJaccard: Double = 0.5): DataFrame = {
+  /** (doc_id, toks, keep…, sig) for every non-empty token set: the
+    * row-local md5 MinHash signature (graft.functions.Kernels.md5MinhashSig). */
+  private def md5Signatures(docs: DataFrame, numHashes: Int, keep: Column*): DataFrame =
+    docs.filter(size(col("toks")) > 0)
+      .select((col("doc_id") +: col("toks") +: keep) :+
+        GraftFunctions.md5MinhashSig(col("toks"), numHashes).as("sig"): _*)
+
+  /** Band-join key columns: the band index and the band's r raw
+    * signature components. */
+  private def bandKeys(rowsPerBand: Int): Seq[String] =
+    "band" +: (0 until rowsPerBand).map(r => s"k$r")
+
+  /** One row per (doc, band) of [[md5Signatures]] output:
+    * (doc_id, keep…, band, k0..k{r-1}) — the band key is the RAW r-tuple
+    * of signature components, not a hash of it, so the oracle can
+    * rebuild it. */
+  private def md5Banded(sigs: DataFrame, numHashes: Int, bands: Int,
+                        keep: String*): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rowsPerBand = numHashes / bands
-    val sigs = docs.filter(size(col("toks")) > 0)
-      .select(col("doc_id"), col("toks"),
-        GraftFunctions.md5MinhashSig(col("toks"), numHashes).as("sig"))
-    val keyCols = (0 until rowsPerBand).map(r => s"k$r")
-    val banded = sigs.select(col("doc_id"),
-        explode(array((0 until bands).map { b =>
+    val ids = col("doc_id") +: keep.map(col)
+    sigs.select(ids :+ explode(array((0 until bands).map { b =>
           struct(lit(b).as("band") +:
             (0 until rowsPerBand).map(r =>
               element_at(col("sig"), b * rowsPerBand + r + 1).as(s"k$r")): _*)
-        }: _*)).as("bk"))
-      .select(col("doc_id") +: col("bk.band").as("band") +:
-        keyCols.map(k => col(s"bk.$k").as(k)): _*)
-    val cands = banded.as("x").join(banded.as("y"), "band" +: keyCols)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .distinct()
+        }: _*)).as("bk"): _*)
+      .select(ids ++ bandKeys(rowsPerBand).map(k => col(s"bk.$k").as(k)): _*)
+  }
+
+  /** Verifies candidate (doc_a, doc_b) pairs: two id-keyed joins back to
+    * the signatures and token sets, the signature-agreement estimate and
+    * the exact Jaccard, kept when the exact Jaccard is ≥ `minJaccard`. */
+  private def md5Verified(cands: DataFrame, sigs: DataFrame, numHashes: Int,
+                          minJaccard: Double): DataFrame = {
     val withSig = cands
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
         col("toks").as("toks_a")), "doc_a")
@@ -431,6 +371,36 @@ object Dedup {
         round(col("__i").cast("double") / (col("__t") - col("__i")).cast("double"), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
+  }
+
+  /** md5-family MinHash+LSH near-duplicate candidate pairs over a
+    * (doc_id, toks) table (toks sorted-distinct), verified.
+    *
+    * Pipeline: per-row signature → band keys → explode bands →
+    * self-equi-join on (band, key) → distinct candidate pairs → estimate
+    * similarity as the fraction of matching signature components, and
+    * verify with exact Jaccard (two hash joins back to the token sets).
+    * The only shuffles are the band join and the two verify joins, all
+    * on keys — the classic shape that survives 1000 executors.
+    *
+    * Every hash derives from md5 (graft.functions.Kernels.md5MinhashSig)
+    * and band keys are the RAW r-tuples of signature components, so a
+    * second engine can REPLAY the whole pipeline: signatures, banding,
+    * the exact candidate set and the verified pair list are all
+    * recomputable in portable SQL ([[minhashLshPairsMd5Sql]] emits the
+    * DuckDB form the driver oracle runs).
+    *
+    * Defaults 16 bands × 4 rows ≈ s-curve threshold (1/16)^(1/4) ≈ 0.5.
+    */
+  def minhashLshPairsMd5(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
+                         minJaccard: Double = 0.5): DataFrame = {
+    val sigs = md5Signatures(docs, numHashes)
+    val banded = md5Banded(sigs, numHashes, bands)
+    val cands = banded.as("x").join(banded.as("y"), bandKeys(numHashes / bands))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .filter(col("doc_a") < col("doc_b"))
+      .distinct()
+    md5Verified(cands, sigs, numHashes, minJaccard)
   }
 
   /** INCREMENTAL (append-batch) minhash-LSH dedup — the daily-crawl
@@ -446,51 +416,26 @@ object Dedup {
   def minhashLshIncrementalMd5(allDocs: DataFrame, isNew: Column,
                                numHashes: Int = 64, bands: Int = 16,
                                minJaccard: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-    val sigs = allDocs.filter(size(col("toks")) > 0)
-      .select(col("doc_id"), col("toks"), isNew.as("__new"),
-        GraftFunctions.md5MinhashSig(col("toks"), numHashes).as("sig"))
-    val keyCols = (0 until rowsPerBand).map(r => s"k$r")
-    val banded = sigs.select(col("doc_id"), col("__new"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band") +:
-            (0 until rowsPerBand).map(r =>
-              element_at(col("sig"), b * rowsPerBand + r + 1).as(s"k$r")): _*)
-        }: _*)).as("bk"))
-      .select(col("doc_id") +: col("__new") +: col("bk.band").as("band") +:
-        keyCols.map(k => col(s"bk.$k").as(k)): _*)
+    val sigs = md5Signatures(allDocs, numHashes, isNew.as("__new"))
+    val banded = md5Banded(sigs, numHashes, bands, "__new")
     val probe = banded.filter(col("__new")).drop("__new")
     val cands = probe.as("x")
-      .join(banded.drop("__new").as("y"), "band" +: keyCols)
+      .join(banded.drop("__new").as("y"), bandKeys(numHashes / bands))
       .filter(col("x.doc_id") =!= col("y.doc_id"))
       .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
       .distinct()
-    val withSig = cands
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
-        col("toks").as("toks_a")), "doc_a")
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
-        col("toks").as("toks_b")), "doc_b")
-    val matching = size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-      b => b))
-    withSig.select(
-        col("doc_a"), col("doc_b"),
-        round(matching.cast("double") / numHashes, 6).as("est_jaccard"),
-        GraftFunctions.sortedIntersectCount(col("toks_a"), col("toks_b")).as("__i"),
-        (size(col("toks_a")) + size(col("toks_b"))).as("__t"))
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"),
-        round(col("__i").cast("double") / (col("__t") - col("__i")).cast("double"), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    md5Verified(cands, sigs, numHashes, minJaccard)
   }
 
-  /** md5-family SimHash near-dup pairs over 60-bit signatures
-    * (graft.functions.Kernels.md5Simhash60): blocking on 15-bit chunks —
-    * pigeonhole-lossless for maxHamming ≤ 3 over 4 chunks, same as the
-    * 64-bit variant's 16-bit chunks. Because the blocking is lossless,
-    * the oracle does not need to replay it: the output set equals the
-    * brute-force Hamming filter [[simhashPairsMd5Sql]] computes. */
+  /** md5-family SimHash near-dup pairs within Hamming distance
+    * `maxHamming` over 60-bit signatures (graft.functions.Kernels.md5Simhash60).
+    * Candidates block on 15-bit chunks: any pair within Hamming distance
+    * ≤ 3 agrees on at least one of the 4 chunks (pigeonhole), so the
+    * chunk equi-join has perfect recall — joins on bounded keys, no
+    * cross join. Because the blocking is lossless, the oracle does not
+    * need to replay it: the output set equals the brute-force Hamming
+    * filter [[simhashPairsMd5Sql]] computes. */
   def simhashPairsMd5(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "15-bit chunk blocking is lossless only for maxHamming <= 3")
     val sims = docs.filter(size(col("toks")) > 0)
@@ -735,37 +680,6 @@ object Dedup {
       val ks = parent.keys.toArray
       ks.iterator.map(k => (k, find(k)))
     }.toDF("node", "cluster_id")
-  }
-
-  // ------------------------------------------------------------ SimHash
-
-  /** 64-bit SimHash over a (doc_id, toks) table: bit i of the signature
-    * is the sign of Σ_tokens (2·bit_i(hash(token)) − 1). Native codegen'd
-    * kernel (graft.functions.SimHash64) — one pass over the tokens per
-    * row, zero shuffle. Returns (doc_id, sim). */
-  def simhashed(docs: DataFrame): DataFrame =
-    docs.filter(size(col("toks")) > 0)
-      .select(col("doc_id"), GraftFunctions.simhash64(col("toks")).as("sim"))
-
-  /** SimHash near-duplicate pairs within Hamming distance `maxHamming`.
-    *
-    * Candidate generation blocks on 16-bit chunks of the signature: any
-    * pair within Hamming distance ≤ 3 must agree on at least one of the
-    * 4 chunks (pigeonhole), so a 4-way chunk equi-join has perfect recall
-    * for maxHamming ≤ 3 — again joins on bounded keys, no cross join. */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sims = simhashed(docs)
-    val chunked = sims.select(col("doc_id"), col("sim"),
-        explode(array((0 until 4).map(c =>
-          struct(lit(c).as("chunk"),
-            shiftright(col("sim"), c * 16).bitwiseAND(lit(0xffffL)).as("key"))): _*)).as("ck"))
-      .select(col("doc_id"), col("sim"), col("ck.chunk").as("chunk"), col("ck.key").as("key"))
-    chunked.as("x").join(chunked.as("y"), Seq("chunk", "key"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.sim").bitwiseXOR(col("y.sim"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
   }
 
   // -------------------------------------------- duplicated passages

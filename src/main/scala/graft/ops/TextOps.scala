@@ -183,25 +183,18 @@ object TextOps {
       s"array_to_string(list_slice($toksExpr, chunk_id * $step + 1, chunk_id * $step + $chunkTokens), ' ')")
   }
 
-  /** Winnowing document fingerprints (rolling-hash): hash every k-byte
-    * gram of the text, then keep the minimum hash of each sliding window
-    * of `w` consecutive gram hashes (Schleimer et al., SIGMOD'03
-    * winnowing scheme), de-duplicated. Adds column `out: array<long>`.
-    * Near-identical documents share most fingerprints, so a later explode
-    * + groupBy on the fingerprint finds overlap clusters with one
-    * shuffle. Native codegen'd kernel (graft.functions.WinnowFingerprints). */
-  def withFingerprints(df: org.apache.spark.sql.DataFrame, text: Column,
-                       out: String, k: Int = 8, w: Int = 4): org.apache.spark.sql.DataFrame =
-    df.withColumn(out, graft.functions.GraftFunctions.winnowFingerprints(text, k, w))
-
-  /** Karp–Rabin rolling-hash winnowing over CHARACTER k-grams — same
-    * window/dedup semantics as [[withFingerprints]], but the gram hash
-    * is the classic polynomial roll (Schleimer et al.'s own family):
-    * O(1) per gram — cheaper than any per-gram strong hash — AND exactly
-    * recomputable by a SQL engine ([[rollingWinnowSqlCtes]] replays the
-    * Horner fold per gram in DuckDB), so the whole fingerprint selection
-    * is oracle-checkable. Prefer this form; the xxhash64 byte-gram
-    * kernel remains for byte-stream inputs. */
+  /** Winnowing document fingerprints (Schleimer et al., SIGMOD'03):
+    * hash every CHARACTER k-gram of the text, then keep the minimum hash
+    * of each sliding window of `w` consecutive gram hashes,
+    * de-duplicated. Adds column `out: array<long>`. Near-identical
+    * documents share most fingerprints, so a later explode + groupBy on
+    * the fingerprint finds overlap clusters with one shuffle. The gram
+    * hash is the classic Karp–Rabin polynomial roll (the paper's own
+    * family): O(1) per gram — cheaper than any per-gram strong hash —
+    * AND exactly recomputable by a SQL engine ([[rollingWinnowSqlCtes]]
+    * replays the Horner fold per gram in DuckDB), so the whole
+    * fingerprint selection is oracle-checkable. Native codegen'd kernel
+    * (graft.functions.WinnowRoll). */
   def withFingerprintsRolling(df: org.apache.spark.sql.DataFrame, text: Column,
                               out: String, k: Int = 8, w: Int = 4): org.apache.spark.sql.DataFrame =
     df.withColumn(out, graft.functions.GraftFunctions.winnowRoll(text, k, w))

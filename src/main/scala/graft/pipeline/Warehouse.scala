@@ -40,9 +40,6 @@ object Warehouse {
       .parquet(path)
   }
 
-  def readFact(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** The reference's suburb→LGA manual fixup tables
     * (design.sql:473–529 neighbourhood map, 530–541 host map), applied
     * AFTER the suburb join: NULL suburb → sentinel; known-problem

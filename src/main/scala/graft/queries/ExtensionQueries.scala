@@ -283,9 +283,7 @@ object ExtensionQueries {
     * md5-family variant, so the ORACLE REPLAYS THE WHOLE PIPELINE:
     * DuckDB rebuilds every 64-component signature from the same
     * rotate-xor seed family, re-bands, re-derives the exact candidate
-    * set and re-verifies each emitted pair's Jaccard. The xxhash64
-    * variant (Dedup.minhashLshPairs) is the throughput path, spec-pinned
-    * for recall in DedupSpec — same plan shape, cheaper hash. */
+    * set and re-verifies each emitted pair's Jaccard. */
   private val x_dedup_minhash_lsh = Q(
     "x_dedup_minhash_lsh",
     (s, d) => Dedup.minhashLshPairsMd5(
@@ -316,9 +314,7 @@ object ExtensionQueries {
   /** SimHash near-dup pairs within Hamming distance 3 — md5-family
     * 60-bit variant (15-bit chunk blocking, pigeonhole-lossless), so the
     * oracle brute-forces the same pair set: DuckDB rebuilds every
-    * signature bit-by-bit and filters on recomputed Hamming distance.
-    * The xxhash64 64-bit variant (Dedup.simhashPairs) stays the
-    * throughput path. */
+    * signature bit-by-bit and filters on recomputed Hamming distance. */
   private val x_dedup_simhash = Q(
     "x_dedup_simhash",
     (s, d) => Dedup.simhashPairsMd5(
@@ -1408,14 +1404,12 @@ object ExtensionQueries {
     FROM scored
     QUALIFY rank <= 3"""))
 
-  /** Winnowing rolling-hash fingerprints (xxhash64 — no oracle; scheme
-    * checked in TextOpsSpec). Output: per-doc fingerprint count. */
   /** Winnowing document fingerprints — Karp–Rabin rolling-hash char-gram
     * variant (Schleimer et al.'s own hash family): O(1) per gram in the
     * kernel, and the ORACLE REPLAYS THE SELECTION: DuckDB rebuilds the
     * gram grid via the same Horner fold, every window minimum and the
-    * distinct-fingerprint count per doc. The xxhash64 byte-gram kernel
-    * (TextOps.withFingerprints) remains for byte-stream inputs. */
+    * distinct-fingerprint count per doc. Output: per-doc fingerprint
+    * count. */
   private val x_text_fingerprint = Q(
     "x_text_fingerprint",
     (s, d) => TextOps.withFingerprintsRolling(

@@ -63,13 +63,6 @@ object EventStream {
     math.max(4, math.min(sessionParts.toLong, pow2)).toInt
   }
 
-  /** [[withStatePartitions]] sized by [[statePartitionsForRate]] —
-    * the one-call production entry point: start the stateful query
-    * inside `f` and its state layout is rate-appropriate. */
-  def withStatePartitionsForRate[T](spark: SparkSession, rowsPerSec: Long)(
-      f: => T): T =
-    withStatePartitions(spark, statePartitionsForRate(spark, rowsPerSec))(f)
-
   /** Runs `f` (start a streaming query + await it) with the RocksDB
     * state-store provider, which the transformWithState operators
     * require; the session's provider is restored after, so other

@@ -13,9 +13,9 @@ class GraftFunctionsSpec extends SparkSpec {
       .toDF("id", "text").createOrReplaceTempView("fn_docs")
     val row = spark.sql(
       """SELECT
-           size(graft_minhash_sig(split(text, ' '), 16)) AS sig_len,
-           graft_simhash64(split(text, ' ')) AS sim,
-           size(graft_winnow(text, 8, 4)) AS n_fp,
+           size(graft_md5_minhash_sig(split(text, ' '), 16)) AS sig_len,
+           graft_md5_simhash60(split(text, ' ')) AS sim,
+           size(graft_winnow_roll(text, 8, 4)) AS n_fp,
            graft_word_shingles(split(text, ' '), 3) AS sh,
            graft_sorted_intersect_count(sort_array(array('a','b')), sort_array(array('b','c'))) AS ic,
            graft_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS dp
@@ -50,11 +50,11 @@ class GraftFunctionsSpec extends SparkSpec {
 
   test("wrong arity on a graft_* SQL function names the expected signature, not a MatchError") {
     val ex = intercept[Exception] {
-      spark.sql("SELECT graft_minhash_sig(array('a'))").collect()
+      spark.sql("SELECT graft_md5_minhash_sig(array('a'))").collect()
     }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(ex).exists(_.contains("graft_minhash_sig expects (arr, numHashes)")),
+    assert(messages(ex).exists(_.contains("graft_md5_minhash_sig expects (arr, numHashes)")),
       s"wrong error: ${messages(ex).mkString(" | ")}")
   }
 
@@ -62,14 +62,14 @@ class GraftFunctionsSpec extends SparkSpec {
     val df = Seq((1L, "alpha beta gamma delta epsilon")).toDF("id", "text")
     val toks = split(col("text"), " ")
     val viaExpr = df.select(
-      GraftFunctions.minhashSig(toks, 8).as("sig"),
-      GraftFunctions.simhash64(toks).as("sim")).head()
+      GraftFunctions.md5MinhashSig(toks, 8).as("sig"),
+      GraftFunctions.md5Simhash60(toks).as("sim")).head()
     // same kernel, forced interpreted (no codegen)
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     val interp = try {
       df.select(
-        GraftFunctions.minhashSig(toks, 8).as("sig"),
-        GraftFunctions.simhash64(toks).as("sim")).head()
+        GraftFunctions.md5MinhashSig(toks, 8).as("sig"),
+        GraftFunctions.md5Simhash60(toks).as("sim")).head()
     } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     assert(viaExpr.getAs[scala.collection.Seq[Long]]("sig") == interp.getAs[scala.collection.Seq[Long]]("sig"))
     assert(viaExpr.getAs[Long]("sim") == interp.getAs[Long]("sim"))
@@ -78,7 +78,7 @@ class GraftFunctionsSpec extends SparkSpec {
   test("type checking rejects wrong inputs") {
     val df = Seq((1L, "x")).toDF("id", "text")
     val ex = intercept[Exception] {
-      df.select(GraftFunctions.simhash64(col("id"))).head()
+      df.select(GraftFunctions.md5Simhash60(col("id"))).head()
     }
     assert(ex.getMessage.toLowerCase.contains("array") ||
       ex.getMessage.contains("DATATYPE_MISMATCH"))

@@ -24,6 +24,9 @@ class Md5FamilySpec extends SparkSpec {
     (3L, distinct1.trim), (4L, distinct2.trim)
   ).toDF("doc_id", "text")
 
+  /** `docs` plus doc 1, an exact copy of doc 0. */
+  private def docsWithCopy = docs.union(Seq((1L, base.trim)).toDF("doc_id", "text"))
+
   test("md5Hash60 equals the base-16 parse of the first 15 hex chars") {
     // md5("hello") = 5d41402abc4b2a76b9719d911017c592
     assert(Kernels.md5Hash60("hello".getBytes("UTF-8"))
@@ -49,29 +52,51 @@ class Md5FamilySpec extends SparkSpec {
   }
 
   test("minhashLshPairsMd5 is sound (every pair passes exact Jaccard) and finds the planted pair") {
-    val shingles = Dedup.shingled(docs, col("doc_id"), col("text"))
-    val out = Dedup.minhashLshPairsMd5(shingles)
-      .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect()
-    assert(out.forall(_._3 >= 0.5))
-    assert(out.map(p => (p._1, p._2)).contains((0L, 2L))) // base vs nearDup
-    // exact ground truth: blocked-free jaccardPairs over one block
-    val exact = Dedup.jaccardPairs(shingles, block = lit(1), minJaccard = 0.5)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(out.map(p => (p._1, p._2)).toSet.subsetOf(exact))
+    def lshPairs(input: org.apache.spark.sql.DataFrame) = {
+      val shingles = Dedup.shingled(input, col("doc_id"), col("text"))
+      val out = Dedup.minhashLshPairsMd5(shingles)
+        .select("doc_a", "doc_b", "est_jaccard", "jaccard")
+        .as[(Long, Long, Double, Double)].collect()
+      assert(out.forall(_._4 >= 0.5))
+      assert(out.map(p => (p._1, p._2)).contains((0L, 2L))) // base vs nearDup
+      // exact ground truth: blocked-free jaccardPairs over one block
+      val exact = Dedup.jaccardPairs(shingles, block = lit(1), minJaccard = 0.5)
+        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+      assert(out.map(p => (p._1, p._2)).toSet.subsetOf(exact))
+      out.foreach { case (_, _, est, j) =>
+        assert(math.abs(est - j) < 0.35, s"estimate $est too far from exact $j")
+      }
+      out
+    }
+    lshPairs(docs)
+    // with an exact copy: every exact-Jaccard pair is recovered, and the
+    // copy pair estimates and verifies at exactly 1.0
+    val withCopy = lshPairs(docsWithCopy)
+    assert(withCopy.map(r => (r._1, r._2)).toSet == Set((0L, 1L), (0L, 2L), (1L, 2L)))
+    val identical = withCopy.find(r => (r._1, r._2) == (0L, 1L)).get
+    assert(identical._3 == 1.0 && identical._4 == 1.0)
   }
 
   test("simhashPairsMd5 equals the brute-force Hamming filter (blocking is lossless)") {
-    val shingles = Dedup.shingled(docs, col("doc_id"), col("text"))
-    val out = Dedup.simhashPairsMd5(shingles)
-      .select("doc_a", "doc_b", "hamming").as[(Long, Long, Int)].collect().toSet
-    val sims = shingles.filter(size(col("toks")) > 0)
-      .select(col("doc_id"), GraftFunctions.md5Simhash60(col("toks")).as("sim"))
-      .as[(Long, Long)].collect()
-    val brute = (for {
-      (ida, sa) <- sims; (idb, sb) <- sims if ida < idb
-      h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
-    } yield (ida, idb, h)).toSet
-    assert(out == brute)
+    def check(input: org.apache.spark.sql.DataFrame) = {
+      val shingles = Dedup.shingled(input, col("doc_id"), col("text"))
+      val out = Dedup.simhashPairsMd5(shingles)
+        .select("doc_a", "doc_b", "hamming").as[(Long, Long, Int)].collect().toSet
+      val sims = shingles.filter(size(col("toks")) > 0)
+        .select(col("doc_id"), GraftFunctions.md5Simhash60(col("toks")).as("sim"))
+        .as[(Long, Long)].collect()
+      val brute = (for {
+        (ida, sa) <- sims; (idb, sb) <- sims if ida < idb
+        h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
+      } yield (ida, idb, h)).toSet
+      assert(out == brute)
+      out
+    }
+    check(docs)
+    // the exact copy pairs at Hamming 0; unrelated docs never pair
+    val withCopy = check(docsWithCopy).map(r => (r._1, r._2) -> r._3).toMap
+    assert(withCopy((0L, 1L)) == 0)
+    assert(!withCopy.contains((3L, 4L)))
   }
 
   test("winnowRoll: rolling gram hashes equal the direct Horner fold") {

@@ -36,16 +36,16 @@ class PropertiesSpec extends SparkSpec {
 
   test("minhash signature: permutation-invariant, self-similarity 1, length n") {
     check(forAll(tokenGen, Gen.choose(1, 64)) { (toks, n) =>
-      val s1 = Kernels.minhashSig(arr(toks), n).toLongArray()
-      val s2 = Kernels.minhashSig(arr(scala.util.Random.shuffle(toks)), n).toLongArray()
+      val s1 = Kernels.md5MinhashSig(arr(toks), n).toLongArray()
+      val s2 = Kernels.md5MinhashSig(arr(scala.util.Random.shuffle(toks)), n).toLongArray()
       s1.length == n && s1.sameElements(s2)
     })
   }
 
   test("simhash: permutation-invariant; equal multisets collide") {
     check(forAll(tokenGen) { toks =>
-      Kernels.simhash64(arr(toks)) ==
-        Kernels.simhash64(arr(scala.util.Random.shuffle(toks)))
+      Kernels.md5Simhash60(arr(toks)) ==
+        Kernels.md5Simhash60(arr(scala.util.Random.shuffle(toks)))
     })
   }
 
@@ -53,8 +53,8 @@ class PropertiesSpec extends SparkSpec {
     val textGen = Gen.alphaLowerStr.suchThat(_.nonEmpty)
     check(forAll(textGen) { t =>
       val u = UTF8String.fromString(t)
-      val f1 = Kernels.winnow(u, 4, 3).toLongArray()
-      val f2 = Kernels.winnow(u, 4, 3).toLongArray()
+      val f1 = Kernels.winnowRoll(u, 4, 3).toLongArray()
+      val f2 = Kernels.winnowRoll(u, 4, 3).toLongArray()
       f1.sameElements(f2) && f1.nonEmpty && f1.length == f1.distinct.length
     })
   }

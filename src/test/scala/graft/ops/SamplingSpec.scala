@@ -215,7 +215,7 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("writeShards: shard directories hold exactly the plan's rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val dir = tempDir("graft_shards").toString
     val docs = (1L to 300L).toDF("k")
     Sampling.writeShards(docs, $"k", 4, dir)
     val back = spark.read.parquet(dir)

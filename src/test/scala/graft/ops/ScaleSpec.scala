@@ -59,7 +59,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("compactParquet merges small files, preserves rows, and is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = tempDir("graft_compact").toString + "/t"
     // 16 tiny files
     spark.range(0, 1600).withColumn("v", col("id") * 2)
       .repartition(16).write.parquet(dir)
@@ -75,7 +75,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("compactParquet refuses partition subdirs, even alongside flat files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_part").toString + "/t"
+    val dir = tempDir("graft_compact_part").toString + "/t"
     spark.range(0, 100).withColumn("k", col("id") % 2)
       .write.partitionBy("k").parquet(dir)
     // a stray flat file next to the partition dirs must not unlock the

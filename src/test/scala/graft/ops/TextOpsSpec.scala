@@ -37,7 +37,7 @@ class TextOpsSpec extends SparkSpec {
     val b = a + " with an extra tail appended here"
     val c = "completely unrelated content with different characters entirely"
     val df = Seq((1L, a), (2L, a), (3L, b), (4L, c)).toDF("id", "text")
-    val fp = TextOps.withFingerprints(df, col("text"), "fp")
+    val fp = TextOps.withFingerprintsRolling(df, col("text"), "fp")
       .select("id", "fp").as[(Long, Seq[Long])].collect().toMap
     assert(fp(1L) == fp(2L))
     val overlapNear = (fp(1L).toSet & fp(3L).toSet).size.toDouble / fp(1L).size
@@ -47,7 +47,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("fingerprints handle degenerate short text") {
-    val fp = TextOps.withFingerprints(Seq((1L, "hi")).toDF("id", "text"), col("text"), "fp")
+    val fp = TextOps.withFingerprintsRolling(Seq((1L, "hi")).toDF("id", "text"), col("text"), "fp")
       .select("fp").as[Seq[Long]].head()
     assert(fp.nonEmpty)
   }

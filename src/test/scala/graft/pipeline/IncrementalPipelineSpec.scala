@@ -19,9 +19,9 @@ class IncrementalPipelineSpec extends SparkSpec {
   /** Stage all fixtures in a side dir; the watched rawDir starts with
     * only the static census/geography side files. */
   private def stage(): (Path, Path) = {
-    val all = Files.createTempDirectory("refresh_all")
+    val all = tempDir("refresh_all")
     Fixtures.writeAll(all)
-    val raw = Files.createTempDirectory("refresh_raw")
+    val raw = tempDir("refresh_raw")
     Files.list(all).filter(p => !p.getFileName.toString.contains("listings"))
       .forEach(p => Files.copy(p, raw.resolve(p.getFileName)))
     (all, raw)
@@ -45,7 +45,7 @@ class IncrementalPipelineSpec extends SparkSpec {
 
   test("monthly increments equal the batch rebuild after every tick") {
     val (all, raw) = stage()
-    val factDir = Files.createTempDirectory("refresh_fact").toString
+    val factDir = tempDir("refresh_fact").toString
     // chronological delivery order, as the scrapes arrive
     val months = Seq("listings_05_2020.csv", "listings_07_2020.csv",
       "listings_01_2021.csv")
@@ -70,7 +70,7 @@ class IncrementalPipelineSpec extends SparkSpec {
 
   test("late out-of-order month delivery still equals the batch rebuild") {
     val (all, raw) = stage()
-    val factDir = Files.createTempDirectory("refresh_fact_ooo").toString
+    val factDir = tempDir("refresh_fact_ooo").toString
     // newest month first, then the stragglers — arrival order must not
     // matter because each file owns its month partition outright
     Seq("listings_01_2021.csv", "listings_07_2020.csv", "listings_05_2020.csv")
@@ -89,7 +89,7 @@ class IncrementalPipelineSpec extends SparkSpec {
     // tick 1's file or it silently drops those rows (the fact PK is
     // (id, filename), so a multi-file month is legal state)
     val (all, raw) = stage()
-    val factDir = Files.createTempDirectory("refresh_fact_mfm").toString
+    val factDir = tempDir("refresh_fact_mfm").toString
     deliver(all, raw, "listings_05_2020.csv")
     Refresh.refreshFact(spark, raw.toString, factDir)
     // same content under a second glob-matching name for the same month
@@ -103,7 +103,7 @@ class IncrementalPipelineSpec extends SparkSpec {
 
   test("a tick with no new files is a no-op") {
     val (all, raw) = stage()
-    val factDir = Files.createTempDirectory("refresh_fact_noop").toString
+    val factDir = tempDir("refresh_fact_noop").toString
     deliver(all, raw, "listings_05_2020.csv")
     assert(Refresh.refreshFact(spark, raw.toString, factDir).nonEmpty)
     val before = canon(Refresh.fact(spark, factDir))
@@ -113,7 +113,7 @@ class IncrementalPipelineSpec extends SparkSpec {
 
   test("padded and unpadded month spellings share one month partition") {
     val (all, raw) = stage()
-    val factDir = Files.createTempDirectory("refresh_fact_pad").toString
+    val factDir = tempDir("refresh_fact_pad").toString
     deliver(all, raw, "listings_05_2020.csv")
     Refresh.refreshFact(spark, raw.toString, factDir)
     // same content under an UNPADDED spelling of the same month: both
@@ -131,7 +131,7 @@ class IncrementalPipelineSpec extends SparkSpec {
 
   test("a dim side-file change invalidates already-built months") {
     val (all, raw) = stage()
-    val factDir = Files.createTempDirectory("refresh_fact_dim").toString
+    val factDir = tempDir("refresh_fact_dim").toString
     deliver(all, raw, "listings_05_2020.csv")
     deliver(all, raw, "listings_01_2021.csv")
     Refresh.refreshFact(spark, raw.toString, factDir)
@@ -161,7 +161,7 @@ class IncrementalPipelineSpec extends SparkSpec {
     // be masked forever once the next new-file tick stores the NEW
     // digest. The recovery mode is over-processing: rebuild.
     val (all, raw) = stage()
-    val factDir = Files.createTempDirectory("refresh_fact_gap").toString
+    val factDir = tempDir("refresh_fact_gap").toString
     deliver(all, raw, "listings_05_2020.csv")
     deliver(all, raw, "listings_01_2021.csv")
     Refresh.refreshFact(spark, raw.toString, factDir)
@@ -179,7 +179,7 @@ class IncrementalPipelineSpec extends SparkSpec {
 
   test("a first tick whose rows are all filtered leaves a readable empty fact") {
     val (all, raw) = stage()
-    val factDir = Files.createTempDirectory("refresh_fact_empty").toString
+    val factDir = tempDir("refresh_fact_empty").toString
     Fixtures.writeAllFiltered(raw, "listings_09_2020.csv")
     assert(Refresh.refreshFact(spark, raw.toString, factDir).size == 1)
     // zero committed rows: parquet has nothing to infer a schema from;
@@ -197,7 +197,7 @@ class IncrementalPipelineSpec extends SparkSpec {
 
   test("reprocessing a file is idempotent (dynamic month overwrite)") {
     val (all, raw) = stage()
-    val factDir = Files.createTempDirectory("refresh_fact_idem").toString
+    val factDir = tempDir("refresh_fact_idem").toString
     deliver(all, raw, "listings_05_2020.csv")
     deliver(all, raw, "listings_01_2021.csv")
     Refresh.refreshFact(spark, raw.toString, factDir)

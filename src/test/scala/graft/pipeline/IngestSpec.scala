@@ -18,7 +18,7 @@ class IngestSpec extends SparkSpec {
   /** The three Fixtures headers (74, 106 mixed-case, 102 columns), each
     * written under three month names: nine files, three header shapes. */
   private lazy val nineFiles: Path = {
-    val dir = Files.createTempDirectory("ingest_fixtures")
+    val dir = tempDir("ingest_fixtures")
     Fixtures.writeAll(dir)
     for ((f, copies) <- Seq(
            "listings_01_2021.csv" -> Seq("02_2021", "03_2021"),
@@ -70,7 +70,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("quoted header names match Spark's inference: comma, doubled quote, empty, duplicate, NULL") {
-    val dir = Files.createTempDirectory("ingest_quoted")
+    val dir = tempDir("ingest_quoted")
     val f = write(dir, "listings_01_2021.csv",
       "\"a,b\",\"say \"\"hi\"\"\",,Dup,dup,NULL,id\n" +
         "1,\"x, \"\"y\"\"\",2,3,4,5,6\n" +
@@ -83,7 +83,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("zero-byte and header-only files contribute no rows") {
-    val dir = Files.createTempDirectory("ingest_empty")
+    val dir = tempDir("ingest_empty")
     Fixtures.writeAll(dir)
     write(dir, "listings_02_2021.csv", "")
     write(dir, "listings_03_2021.csv", Files.readAllLines(
@@ -97,7 +97,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("a directory of zero-byte listings files stages to an empty frame") {
-    val dir = Files.createTempDirectory("ingest_all_empty")
+    val dir = tempDir("ingest_all_empty")
     write(dir, "listings_01_2021.csv", "")
     write(dir, "listings_02_2021.csv", "")
     val st = Staging.listingFromDir(spark, dir.toString)
@@ -106,7 +106,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("a file whose header changed after grouping fails the scan") {
-    val dir = Files.createTempDirectory("ingest_guard")
+    val dir = tempDir("ingest_guard")
     val a = write(dir, "listings_01_2021.csv", "id,name\n1,a\n")
     val b = write(dir, "listings_02_2021.csv", "id,name\n2,b\n")
     val Seq(df) = Ingest.rawListingsByHeader(spark, Seq(a, b))

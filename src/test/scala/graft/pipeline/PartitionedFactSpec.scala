@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,14 +12,14 @@ import graft.SparkSpec
 class PartitionedFactSpec extends SparkSpec {
 
   test("partitioned fact write prunes month-scoped scans") {
-    val fixtures = Files.createTempDirectory("pf_fixtures")
+    val fixtures = tempDir("pf_fixtures")
     Fixtures.writeAll(fixtures)
     val t = AirbnbPipeline.run(spark, fixtures.toString)
 
-    val out = Files.createTempDirectory("pf_fact").toString + "/fact"
+    val out = tempDir("pf_fact").toString + "/fact"
     Warehouse.writeFact(t.factListing, out)
 
-    val all = Warehouse.readFact(spark, out)
+    val all = spark.read.parquet(out)
     assert(all.count() == t.factListing.count())
 
     val oneMonth = all.filter(col("file_year") === 2021 && col("file_month") === 1)
@@ -39,13 +37,13 @@ class PartitionedFactSpec extends SparkSpec {
   }
 
   test("writeFact bounds output files per month partition (no small-files explosion)") {
-    val fixtures = Files.createTempDirectory("pf_fixtures2")
+    val fixtures = tempDir("pf_fixtures2")
     Fixtures.writeAll(fixtures)
     val t = AirbnbPipeline.run(spark, fixtures.toString)
 
     // write from a deliberately over-parallel upstream (32 tasks would
     // naively emit up to 32 files per month dir); clustering must cap it
-    val out = Files.createTempDirectory("pf_files").toString + "/fact"
+    val out = tempDir("pf_files").toString + "/fact"
     Warehouse.writeFact(t.factListing.repartition(32), out, filesPerMonth = 2)
 
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
@@ -55,6 +53,6 @@ class PartitionedFactSpec extends SparkSpec {
       assert(files.length <= 2, s"${m.getPath}: ${files.length} files")
     }
     // and the write is lossless
-    assert(Warehouse.readFact(spark, out).count() == t.factListing.count())
+    assert(spark.read.parquet(out).count() == t.factListing.count())
   }
 }

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -29,7 +27,7 @@ class PipelineScaleSpec extends SparkSpec {
   private def N(m: Int): Long = ScaleFixtures.rowsPerSuburb(m).toLong
 
   private lazy val (tables: AirbnbPipeline.Tables, wallSec: Double) = {
-    val dir = Files.createTempDirectory("airbnb_ref_scale")
+    val dir = tempDir("airbnb_ref_scale")
     val raw = ScaleFixtures.writeAll(dir)
     assert(raw == 414480L, s"generator drifted: $raw raw rows")
     val t0 = System.nanoTime()

@@ -14,7 +14,7 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val tables: AirbnbPipeline.Tables = {
-    val dir = Files.createTempDirectory("airbnb_fixtures")
+    val dir = tempDir("airbnb_fixtures")
     Fixtures.writeAll(dir)
     AirbnbPipeline.run(spark, dir.toString)
   }
@@ -56,7 +56,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("writeCsv roundtrip through the Ingest reader options (S11)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/export"
+    val out = tempDir("graft_csv").toString + "/export"
     val df = Seq(
       (1L, Some("plain")),
       (2L, Some("has \"quotes\" and, commas")),
@@ -81,7 +81,7 @@ class PipelineSpec extends SparkSpec {
 
   test("csvWithQuarantine: malformed rows land in quarantine with filename, clean rows parse") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_quarantine")
+    val dir = tempDir("graft_quarantine")
     java.nio.file.Files.write(dir.resolve("feed_listings.csv"),
       ("id,name,price\n" +
         "1,alpha,10.5\n" +
@@ -197,7 +197,7 @@ class PipelineSpec extends SparkSpec {
 
   test("fact plan shape: dim joins broadcast; one wide shuffle for the dedup window") {
     // rebuild without cache so the full lineage is visible in the plan
-    val dir = Files.createTempDirectory("airbnb_fixtures_plan")
+    val dir = tempDir("airbnb_fixtures_plan")
     Fixtures.writeAll(dir)
     val staging = Staging.listingFromDir(spark, dir.toString)
     val loc = Staging.location(
@@ -243,7 +243,7 @@ class PipelineSpec extends SparkSpec {
     // replicas, a window mixing series, double-counted dims) breaks
     // an equality here, not a tolerance. (Last in the file: re-running
     // the pipeline re-registers the serving views.)
-    val dir = Files.createTempDirectory("airbnb_fixtures_x10")
+    val dir = tempDir("airbnb_fixtures_x10")
     Fixtures.writeAll(dir, factor = 10)
     val t10 = AirbnbPipeline.run(spark, dir.toString)
     assert(t10.stagingListing.count() == 120) // 13 raw - 1 dup, x10
@@ -271,7 +271,7 @@ class PipelineSpec extends SparkSpec {
     // (shift stride 1000 > any base id), so every count/revenue KPI
     // must be EXACTLY 100x and every rate/percent-change invariant —
     // equality assertions, no tolerance, same as the 10x test.
-    val dir = Files.createTempDirectory("airbnb_fixtures_x100")
+    val dir = tempDir("airbnb_fixtures_x100")
     Fixtures.writeAll(dir, factor = 100)
     val t100 = AirbnbPipeline.run(spark, dir.toString)
     assert(t100.stagingListing.count() == 1200) // 13 raw - 1 dup, x100

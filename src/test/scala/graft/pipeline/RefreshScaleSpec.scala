@@ -22,12 +22,12 @@ class RefreshScaleSpec extends SparkSpec {
   private def N(m: Int): Long = ScaleFixtures.rowsPerSuburb(m).toLong
 
   test("12 monthly ticks: per-tick month counts and final closed-form goldens") {
-    val all = Files.createTempDirectory("refresh_scale_all")
+    val all = tempDir("refresh_scale_all")
     ScaleFixtures.writeAll(all)
-    val raw = Files.createTempDirectory("refresh_scale_raw")
+    val raw = tempDir("refresh_scale_raw")
     Files.list(all).filter(p => !p.getFileName.toString.contains("listings"))
       .forEach(p => Files.copy(p, raw.resolve(p.getFileName)))
-    val factDir = Files.createTempDirectory("refresh_scale_fact").toString
+    val factDir = tempDir("refresh_scale_fact").toString
 
     ScaleFixtures.months.zipWithIndex.foreach { case ((month, year), i) =>
       val name = f"listings_$month%02d_$year%d.csv"

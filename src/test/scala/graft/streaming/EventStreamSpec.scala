@@ -12,7 +12,7 @@ class EventStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("file-source stream with AvailableNow: windowed counts match batch") {
-    val dir = Files.createTempDirectory("events_stream")
+    val dir = tempDir("events_stream")
     // two "monthly drops" of event files — the REFRESH analog
     Seq(
       """{"event_id":1,"ts":"2024-01-01T00:10:00.000Z","user_id":1,"event_type":"click","value":1.0,"props":"{}"}""",
@@ -235,7 +235,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("scd2MaintainStream folds micro-batches into a versioned Type-2 ledger") {
     implicit val sqlCtx = spark.sqlContext
-    val ledgerDir = Files.createTempDirectory("scd2_ledger").toString
+    val ledgerDir = tempDir("scd2_ledger").toString
     val input = MemoryStream[(Long, String, java.sql.Timestamp)]
     val updates = input.toDF().toDF("user_id", "plan", "ts")
     val q = EventStream.scd2MaintainStream(updates, ledgerDir,
@@ -341,7 +341,8 @@ class EventStreamSpec extends SparkSpec {
     val clickIn = MemoryStream[(Long, java.sql.Timestamp, Long)]
     val viewIn = MemoryStream[(Long, java.sql.Timestamp, Long)]
     val q = EventStream.withStatePartitions(spark, sessionParts) {
-      EventStream.withStatePartitionsForRate(spark, rowsPerSec) {
+      EventStream.withStatePartitions(spark,
+          EventStream.statePartitionsForRate(spark, rowsPerSec)) {
         EventStream.clickViewJoin(
             clickIn.toDF().toDF("event_id", "ts", "user_id"),
             viewIn.toDF().toDF("event_id", "ts", "user_id"),
@@ -364,7 +365,7 @@ class EventStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("withStatePartitionsForRate shards a 10k rows/s join state 8 ways") {
+  test("statePartitionsForRate shards a 10k rows/s join state 8 ways") {
     // the outer 32 is the session default the rate sizing overrides;
     // 10k rows/s sizes the join's state layout down to 8
     val progress = sizedJoinProgress(32, 10000, batches = 2, rows = 500)
@@ -388,7 +389,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("drain runs a bounded stream in each output mode and leaves no sink view") {
-    val dir = Files.createTempDirectory("drain_stream")
+    val dir = tempDir("drain_stream")
     Seq(
       """{"event_id":1,"ts":"2024-01-01T00:10:00.000Z","user_id":1,"event_type":"click","value":1.0,"props":"{}"}""",
       """{"event_id":2,"ts":"2024-01-01T00:20:00.000Z","user_id":2,"event_type":"click","value":1.0,"props":"{}"}""",
@@ -439,10 +440,6 @@ class EventStreamSpec extends SparkSpec {
       org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
       assert(statePartitions.nonEmpty && statePartitions.forall(_ == 4L),
         statePartitions.toString)
-    } finally {
-      spark.streams.removeListener(listener)
-      dir.toFile.listFiles().foreach(_.delete())
-      Files.delete(dir)
-    }
+    } finally spark.streams.removeListener(listener)
   }
 }
