@@ -45,9 +45,8 @@ object Cleanse {
     coalesce(c, lit(sentinel))
 
   /** F8 large literal mapping tables (suburb->LGA fixups,
-    * workfile_design_data_warehouse.sql:477–529): for a ~25-branch map a
-    * chained CASE WHEN stays codegen'd; at scale prefer a broadcast-joined
-    * lookup DataFrame (see Lookup). */
+    * workfile_design_data_warehouse.sql:477–529) as one chained CASE
+    * WHEN, which stays codegen'd for a ~25-branch map. */
   def literalMap(c: Column, mapping: Seq[(String, String)], default: Column): Column =
     mapping.foldRight(default) { case ((k, v), acc) => when(c === k, lit(v)).otherwise(acc) }
 

@@ -191,19 +191,6 @@ object Dedup {
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit_grams"))
   }
 
-  /** Drop from `train` every doc sharing at least one word n-gram with
-    * the eval corpus (see [[contaminationNgramReport]]); docs too short
-    * to have an n-gram are never contaminated. Anti-join on the doc id
-    * against the (small) contaminated-id set. */
-  def decontaminateNgram(train: DataFrame, trainId: Column, trainText: Column,
-                         eval: DataFrame, evalText: Column,
-                         n: Int = 13): DataFrame = {
-    val k = Names.fresh("contam_id", train.columns)
-    val contaminated = contaminationNgramReport(train, trainId, trainText, eval, evalText, n)
-      .select(col("doc_id").as(k))
-    train.join(contaminated, trainId === col(k), "left_anti")
-  }
-
   // ---------------------------------------------------- n-gram Jaccard
 
   /** Exact within-block Jaccard near-duplicate pairs over a

@@ -75,9 +75,9 @@ object Features {
     * `percentile` per BOUNDED group (the stats side stays
     * |groups|-sized and broadcasts back; the row pass is map-side).
     * Exact percentile materializes each group's values on its reducer —
-    * for high-cardinality values within a group at 100 TB, swap in the
-    * KLL sketch ([[graft.ops.Scale.approxMedian]] family); the exact
-    * form is what the oracle can replay. */
+    * for high-cardinality values within a group at 100 TB, swap in
+    * Spark's `percentile_approx` sketch; the exact form is what the
+    * oracle can replay. */
   def quantileBin(df: DataFrame, group: String, value: Column, nBins: Int,
                   binOut: String = "bin"): DataFrame = {
     require(nBins >= 2, s"need nBins >= 2, got $nBins")

@@ -6,13 +6,11 @@ import org.apache.spark.sql.functions._
 /** Multimodal-column plumbing — extension tier.
   *
   * Media (image/audio/video) is carried through the pipeline as an opaque
-  * `binary` payload column plus a typed metadata struct; decode/feature
-  * extraction runs per-partition over iterators so a real decoder slots
-  * in without touching the plumbing. The decode step itself is a STUB
-  * (this environment ships no image/audio libraries): a deterministic
-  * fake that derives features from the bytes. Everything around it —
-  * schema, encoders, partition-iterator batching, column pruning — is
-  * real and tested.
+  * `binary` payload column; decode/feature extraction runs per-partition
+  * over iterators, so codec init happens once per partition. Every codec
+  * below is a real JDK one (ImageIO PNG, the javax.sound WAV SPI, a
+  * pure-JDK AVI/RIFF container), and each decoded statistic is
+  * replayable by integer SQL from the generator formulas.
   *
   * Scale posture: payloads stay distributed (never collected); decode is
   * `mapPartitions` so per-record library-init cost amortizes across a
@@ -20,75 +18,6 @@ import org.apache.spark.sql.functions._
   * feature output is narrow so downstream shuffles don't carry bytes.
   */
 object Multimodal {
-
-  case class MediaRecord(doc_id: Long, payload: Array[Byte],
-                         width: Int, height: Int, format: String)
-
-  case class MediaFeatures(doc_id: Long, n_bytes: Int, checksum: Long,
-                           width: Int, height: Int, format: String,
-                           frames_sampled: Int)
-
-  /** Wrap a text table as fake media rows: payload = UTF-8 bytes of the
-    * text (stands in for encoded image bytes), metadata derived
-    * deterministically from the id. */
-  def asMediaTable(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      encode(col("text"), "UTF-8").as("payload"),
-      (col("doc_id") % 640 + 64).cast("int").as("width"),
-      (col("doc_id") % 480 + 48).cast("int").as("height"),
-      element_at(typedlit(Seq("jpeg", "png", "webp")),
-        (col("doc_id") % 3 + 1).cast("int")).as("format"))
-
-  /** STUB decoder: a real implementation would decode `payload` with an
-    * imaging library here (one library init per partition, then stream
-    * the iterator). The fake derives deterministic features: byte count,
-    * additive checksum, and a frame-sample count = one "frame" per 64
-    * payload bytes, capped at 8 — exercising exactly the batch shape and
-    * signature a real decoder needs. */
-  def decodeFeatures(spark: SparkSession, media: DataFrame): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      // (real pipeline: init decoder once per partition here)
-      it.map { r =>
-        var sum = 0L
-        var i = 0
-        while (i < r.payload.length) { sum += (r.payload(i) & 0xff); i += 1 }
-        MediaFeatures(r.doc_id, r.payload.length, sum, r.width, r.height,
-          r.format, math.min(8, r.payload.length / 64))
-      }
-    }
-  }
-
-  /** End-to-end fake-media feature table (plumbing demo used by the
-    * x_multimodal_features query and MultimodalSpec). */
-  def features(spark: SparkSession, docs: DataFrame): DataFrame =
-    decodeFeatures(spark, asMediaTable(docs)).toDF()
-
-  /** STUB resize: a real implementation decodes `payload`, resamples to
-    * (targetW, targetH) and re-encodes (library init once per partition,
-    * stream the iterator). The fake preserves the real contract — output
-    * metadata carries the target dims and payload size scales with the
-    * pixel-count ratio (bytes cycled deterministically) — so swapping in
-    * a real codec changes no schema, partitioning, or downstream code. */
-  def resize(spark: SparkSession, media: DataFrame,
-             targetW: Int, targetH: Int): DataFrame = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      // (real pipeline: init codec once per partition here)
-      it.map { r =>
-        if (r.payload.isEmpty) r.copy(width = targetW, height = targetH)
-        else {
-          val ratio = (targetW.toLong * targetH).toDouble / (r.width.toLong * r.height)
-          val tlen = math.max(1, math.ceil(r.payload.length * ratio).toInt)
-          val out = new Array[Byte](tlen)
-          var i = 0
-          while (i < tlen) { out(i) = r.payload(i % r.payload.length); i += 1 }
-          MediaRecord(r.doc_id, out, targetW, targetH, r.format)
-        }
-      }
-    }.toDF()
-  }
 
   // ------------------------------------------------------------------
   // REAL image path: javax.imageio (ships in the JDK, zero external
@@ -159,7 +88,7 @@ object Multimodal {
 
   /** REAL decoder: `ImageIO.read` over the PNG payload, per-channel
     * pixel sums. One `setUseCache(false)` init per partition, then the
-    * iterator streams — the exact batch shape the stub documented. */
+    * iterator streams. */
   def decodePng(spark: SparkSession, media: DataFrame): Dataset[ImageStats] = {
     import spark.implicits._
     media.as[ImageRow].mapPartitions { it =>
@@ -526,33 +455,6 @@ object Multimodal {
             prev = cur; j += 1
           }
           AudioFrame(r.doc_id, fi, energy, zcr)
-        }
-      }
-    }
-  }
-
-  case class Frame(doc_id: Long, frame_idx: Int, frame_checksum: Long)
-
-  /** Generic byte-frame sampler for OPAQUE payloads (format unknown):
-    * emit every `everyK`-th fixed-size slice of the payload as its own
-    * row. Retained for payloads the pipeline cannot parse; the REAL
-    * video-container path — deterministic AVI/RIFF encode, generic RIFF
-    * parse, per-frame pixel decode — is [[aviMediaTable]] /
-    * [[sampleAviFrames]] below. Trailing partial frames are dropped, as
-    * a real sampler drops undecodable tails. */
-  def frameSample(spark: SparkSession, media: DataFrame,
-                  frameBytes: Int = 64, everyK: Int = 2): Dataset[Frame] = {
-    require(frameBytes > 0 && everyK > 0, "frameBytes and everyK must be positive")
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.flatMap { r =>
-        val nFrames = r.payload.length / frameBytes
-        (0 until nFrames by everyK).iterator.map { f =>
-          var sum = 0L
-          var i = f * frameBytes
-          val end = i + frameBytes
-          while (i < end) { sum += (r.payload(i) & 0xff); i += 1 }
-          Frame(r.doc_id, f, sum)
         }
       }
     }

@@ -282,9 +282,9 @@ object Sampling {
     * pipeline's invariant); ties on the theoretical hash collision are
     * broken by the key itself.
     *
-    * Scale shape: ONE shuffle on `shard` (the write's repartition) and a
-    * within-partition sort — `pos` plans as a per-shard window, and with
-    * shards ≈ executor parallelism each window partition is one task.
+    * Scale shape: ONE shuffle on `shard` and a within-partition sort —
+    * `pos` plans as a per-shard window, and with shards ≈ executor
+    * parallelism each window partition is one task.
     * 100 TB / 10k shards = 10 GB sorted per task: size `shards` so a
     * shard's rows fit a task's spill budget. */
   def withShardPlan(df: org.apache.spark.sql.DataFrame, key: Column,
@@ -306,18 +306,6 @@ object Sampling {
       s"ORDER BY ${hashValueSql(keyExpr)}, $keyExpr) AS INTEGER)"
     (shard, pos)
   }
-
-  /** Materialize [[withShardPlan]] as `shard=N/` parquet directories,
-    * rows within each shard stored in `pos` order: one shuffle, one
-    * write. `df.repartition(shards, $"shard")` routes whole shards to
-    * tasks (several shards may share a task; no shard is split), and the
-    * within-partition sort makes file contents deterministic. */
-  def writeShards(df: org.apache.spark.sql.DataFrame, key: Column,
-                  shards: Int, path: String): Unit =
-    withShardPlan(df, key, shards)
-      .repartition(shards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
 
   /** Deterministic weighted sampling WITHOUT replacement via priority
     * sampling (Duffield-Lund-Thorup, JACM 2007): each row gets priority

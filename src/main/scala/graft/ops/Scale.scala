@@ -66,31 +66,6 @@ object Scale {
     salted.join(replicated, keys :+ "__salt", joinType).drop("__salt")
   }
 
-  /** Broadcast-lookup form of a literal mapping table — the scale-robust
-    * alternative to a ~25-branch CASE chain (design.sql:477–529): the
-    * map becomes a broadcast hash join, so adding the 26th entry doesn't
-    * grow generated code, and the map can come from data instead of
-    * source. NULL and unmatched keys fall back to `default`. */
-  def broadcastLookup(df: DataFrame, keyCol: String, mapping: Seq[(String, String)],
-                      as: String, default: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val lookup = mapping.toDF("__lk_key", "__lk_val")
-    df.join(broadcast(lookup), df(keyCol) === col("__lk_key"), "left")
-      .withColumn(as, coalesce(col("__lk_val"), default))
-      .drop("__lk_key", "__lk_val")
-  }
-
-  /** Sketch-tier aggregate columns — the swap-ins for exact distinct /
-    * exact percentile once groups stop fitting a partition:
-    * HyperLogLog++ cardinality and a fixed-error percentile sketch.
-    * Bounded error, constant memory, mergeable across partitions. */
-  def approxDistinct(c: Column, rsd: Double = 0.02): Column =
-    approx_count_distinct(c, rsd)
-
-  def approxMedian(c: Column, accuracy: Int = 10000): Column =
-    percentile_approx(c, lit(0.5), lit(accuracy))
-
   /** Contiguous global row numbering (1..n in `key` order) WITHOUT the
     * single-task shuffle that `row_number() OVER (ORDER BY key)`
     * plans: an empty window partition spec sends every row to ONE

@@ -388,11 +388,10 @@ object Similarity {
     val q = broadcast(withVecNorm(
       queries.select(col("vec_id").as("query_id"), col("embedding")),
       col("embedding"), "qv", "qn").drop("embedding"))
-    val (ckptEvery, prune) = beamKnobs(nodes)
     val beam = nswBeam(q, nodes, edges,
       q.select(col("query_id"))
         .crossJoin(cent.select(col("cell_id").as("cand"))),
-      beamWidth, rounds, ckptEvery, prune)
+      beamWidth, rounds)
     val wBeam = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("cand"))
@@ -533,67 +532,32 @@ object Similarity {
     * hierarchical variant can run one beam per layer. `q` is the
     * broadcast query frame (query_id, qv, qn); `seed` the initial
     * (query_id, cand) candidates. Returns the final beam
-    * (query_id, cand, cosine), beamWidth rows per query. */
-  /** Size gate for the beam's plan shape (the Dedup size-gate
-    * pattern; results identical on both paths). Below the threshold
-    * the per-job scheduling floor dominates ANY recompute or rescore,
-    * so: checkpoint the beam every 2nd round only (recompute depth
-    * bounded at 2 over broadcast joins of a cached corpus), and skip
-    * the visited-set bookkeeping (whose per-round materialization is
-    * itself a job). Above it both flip: checkpoint every round (a
-    * skipped checkpoint is a real second corpus pass) and prune
-    * re-scores via the visited set (re-scoring a seen candidate is a
-    * corpus-join probe wasted). `nodes` is already localCheckpointed
-    * by every caller — the count scans cached blocks, one near-free
-    * job. The session conf `graft.sim.beamThreshold` overrides the
-    * default so specs can exercise the big-corpus path (per-round
-    * checkpoints + visited-set prune) on small data — without it the
-    * prune branch would ship tested only at ≥4M-row corpora. */
-  private def beamKnobs(nodes: DataFrame): (Int, Boolean) = {
-    val threshold = nodes.sparkSession.conf
-      .getOption("graft.sim.beamThreshold").map(_.toLong)
-      .getOrElse(4L * 1000 * 1000)
-    if (nodes.count() < threshold) (2, false) else (1, true)
-  }
-
-  /** Beam search over a bounded-degree graph with a VISITED-SET prune
-    * (round-8 verdict ask): a candidate's cosine is static, and the
-    * beam only ever improves (next beam = top-B of beam ∪ new scores),
-    * so a candidate scored once and dropped can never re-enter —
-    * re-scoring it is pure waste. Each round therefore anti-joins the
-    * expansion against everything scored so far and scores only the
-    * NEVER-SEEN candidates, merging them with the carried beam scores.
-    * Output-identical to the naive rescore-everything form (the DuckDB
-    * oracles still replay that form); at scale the per-round score
-    * join shrinks from beam×degree to the genuinely-new frontier.
+    * (query_id, cand, cosine), beamWidth rows per query.
     *
     * `preScored` seeds the beam with rows whose cosines are ALREADY
     * known (the HNSW upper-layer beam feeding layer 0) — they join the
-    * initial beam without a rescore. `ckptEvery` size-gates the
-    * per-round materialization (the Dedup size-gate pattern): every
-    * round for a big corpus (recompute is a real second pass), every
-    * 2nd round for a small one where the per-job floor dominates —
-    * the un-checkpointed round's subtree is recomputed by its two
-    * consumers, bounded to depth ckptEvery. Same results either way.
-    */
-  /** AQE off for the loop ([[Confs.withoutAqe]]): the beam loop's
+    * initial beam without a rescore. Each round rescores the whole
+    * frontier (beam ∪ expansion); the beam is checkpointed every 2nd
+    * round, so an un-checkpointed round's subtree is recomputed by its
+    * two consumers, bounded to depth 2 over broadcast joins of the
+    * checkpointed corpus — at these sizes the per-job scheduling floor
+    * costs more than that recompute.
+    *
+    * AQE off for the loop ([[Confs.withoutAqe]]): the beam loop's
     * shape is fully known at plan time (every join side an explicit
     * broadcast of a queries×beam×degree frame, every aggregate tiny),
     * so statically planned, each checkpoint action is ONE job instead
     * of a job per AQE query stage. */
   private def nswBeam(q: DataFrame, nodes: DataFrame, edges: DataFrame,
-                      seed: DataFrame, beamWidth: Int,
-                      rounds: Int, ckptEvery: Int = 1, prune: Boolean = true,
+                      seed: DataFrame, beamWidth: Int, rounds: Int,
                       preScored: Option[DataFrame] = None): DataFrame =
     Confs.withoutAqe(nodes.sparkSession) {
-      nswBeamLoop(q, nodes, edges, seed, beamWidth, rounds, ckptEvery,
-        prune, preScored)
+      nswBeamLoop(q, nodes, edges, seed, beamWidth, rounds, preScored)
     }
 
   private def nswBeamLoop(q: DataFrame, nodes: DataFrame, edges: DataFrame,
-                      seed: DataFrame, beamWidth: Int,
-                      rounds: Int, ckptEvery: Int = 1, prune: Boolean = true,
-                      preScored: Option[DataFrame] = None): DataFrame = {
+                          seed: DataFrame, beamWidth: Int, rounds: Int,
+                          preScored: Option[DataFrame]): DataFrame = {
     // candidate lists are tiny (queries x beam x degree) -> broadcast
     // into the corpus-sized nodes frame
     def score(cands: DataFrame): DataFrame =
@@ -621,14 +585,6 @@ object Similarity {
         .select(col("query_id"), (-col("t.nc")).as("cand"),
           col("t.cosine").as("cosine"))
     val seed0 = seed.select(col("query_id"), col("cand"))
-    // visited = every (query, cand) ever handed to score(); carried as
-    // a lazy union chain of small frames (each anchored on a
-    // checkpointed beam), never itself materialized
-    var visited = preScored match {
-      case Some(ps) =>
-        seed0.unionByName(ps.select(col("query_id"), col("cand"))).distinct()
-      case None => seed0
-    }
     val fresh0 = preScored match {
       case Some(ps) => seed0.join(
         broadcast(ps.select(col("query_id"), col("cand"))),
@@ -646,33 +602,15 @@ object Similarity {
       // with AQE the runtime conversion costs a stage-job per round)
       val expanded = broadcast(beam).join(edges, col("cand") === col("src"))
         .select(col("query_id"), col("dst").as("cand"))
-      if (prune) {
-        // distinct BEFORE the anti-join: visited membership rows stay
-        // unique, bounding the anti-join build side
-        // the prune: beam ⊆ visited, so surviving rows are genuinely
-        // new. fresh is checkpointed (queries×beam×degree rows at
-        // most): it has two consumers (score + the visited union), and
-        // leaving it lazy would make the visited chain RECURSIVE —
-        // round r's anti-join re-evaluating every earlier round's
-        // distinct+anti — turning the prune into quadratic plan growth.
-        val fresh = expanded.distinct()
-          // visited is bounded (queries×beam×degree×rounds) — explicit
-          // broadcast builds the anti-join's hash side without a shuffle
-          .join(broadcast(visited), Seq("query_id", "cand"), "left_anti")
-          .localCheckpoint(true)
-        beam = topB(beam.unionByName(score(fresh)))
-        visited = visited.unionByName(fresh)
-      } else {
-        // small corpus: rescore the whole frontier with NO distinct —
-        // topB's set aggregate absorbs duplicate candidates, so the
-        // round is one broadcast-join pass + one aggregate exchange
-        val cands = beam.select(col("query_id"), col("cand"))
-          .union(expanded)
-        beam = topB(score(cands))
-      }
+      // rescore the whole frontier with NO distinct — topB's set
+      // aggregate absorbs duplicate candidates, so the round is one
+      // broadcast-join pass + one aggregate exchange
+      val cands = beam.select(col("query_id"), col("cand"))
+        .union(expanded)
+      beam = topB(score(cands))
       // the final round's beam has ONE consumer (the caller's top-k
       // window) — never worth a checkpoint
-      if (r % ckptEvery == 0 && r < rounds) beam = beam.localCheckpoint(true)
+      if (r % 2 == 0 && r < rounds) beam = beam.localCheckpoint(true)
     }
     beam
   }
@@ -747,7 +685,6 @@ object Similarity {
       .unionByName(cent.select(col("cell_id").as("cand")))
       .distinct()
     val seed0 = q.select(col("query_id")).crossJoin(broadcast(entries))
-    val (ckptEvery, prune) = beamKnobs(nodes)
     // The DEFAULT two-round upper descent collapses into ONE SHOT
     // (round-11, the verdict's named lever): instead of
     // topB(score(entries)) → expand → topB → expand → topB, the whole
@@ -786,8 +723,8 @@ object Similarity {
         (seedExp, 0)
       } else (seed0, upperRounds)
     val upperBeam = nswBeam(q, nodes, upperEdges, upperSeed,
-      beamWidth, upperEff, ckptEvery, prune)
-      .localCheckpoint(true) // multi-consumer: lower-layer seed + visited
+      beamWidth, upperEff)
+      .localCheckpoint(true) // multi-consumer: preScored union + anti-join
     // layer-0 seeds = the upper beam's refined neighborhood UNION the
     // centroid ids: the descent keeps the hierarchy's better entries
     // while never seeding WORSE than the flat NSW search (whose seed
@@ -798,7 +735,7 @@ object Similarity {
     val lowerSeed = q.select(col("query_id"))
       .crossJoin(cent.select(col("cell_id").as("cand")))
     val lowerBeam = nswBeam(q, nodes, lowerEdges, lowerSeed,
-      beamWidth, lowerRounds, ckptEvery, prune,
+      beamWidth, lowerRounds,
       preScored = Some(upperBeam.select(col("query_id"), col("cand"), col("cosine"))))
     val wBeam = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))

@@ -34,64 +34,33 @@ import org.apache.spark.sql.functions._
 object Snapshot {
 
   /** Column layout of the ledger: entity key cols + tracked attribute
-    * cols + (valid_from: DATE, valid_to: DATE nullable, is_current). */
+    * cols + (valid_from: DATE, valid_to: DATE nullable, is_current).
+    *
+    * Closed rows pass through a filter; the CURRENT slice is joined
+    * against the snapshot and each joined row emits its output role(s).
+    * Two plan-shape decisions, both load-bearing at scale:
+    *   - Sides are prefix-RENAMED before the join (never resolved via
+    *     DataFrame-object attributes): ledger and snapshot frequently
+    *     share lineage (a ledger re-merged with the snapshot that built
+    *     it), and self-join attribute ambiguity then binds both "sides"
+    *     to one relation, silently corrupting output.
+    *   - Roles are emitted via ONE exploded struct array — a
+    *     filter-per-role union makes Catalyst specialize the join per
+    *     branch (observed: inner + left-outer + right-outer), tripling
+    *     the snapshot computation.
+    */
   def scd2Merge(
       ledger: DataFrame,
       snapshot: DataFrame,
       keyCols: Seq[String],
       attrCols: Seq[String],
       asOf: Column): DataFrame = {
-    val closed = ledger.filter(!col("is_current"))
-    val merged = mergeCurrent(ledger, snapshot, keyCols, attrCols, asOf,
-      softDelete = true)
-    closed.unionByName(merged)
-  }
-
-  /** CDC-style variant of [[scd2Merge]] for PARTIAL snapshots (a
-    * changed-entities delta, e.g. one streaming micro-batch): an entity
-    * absent from `updates` stays current — no soft delete. Same
-    * single-join single-generate plan shape. */
-  def scd2Upsert(
-      ledger: DataFrame,
-      updates: DataFrame,
-      keyCols: Seq[String],
-      attrCols: Seq[String],
-      asOf: Column): DataFrame = {
-    val closed = ledger.filter(!col("is_current"))
-    val merged = mergeCurrent(ledger, updates, keyCols, attrCols, asOf,
-      softDelete = false)
-    closed.unionByName(merged)
-  }
-
-  /** Shared core of [[scd2Merge]]/[[scd2Upsert]]: join the CURRENT
-    * ledger slice against the incoming rows and emit each joined row's
-    * output role(s).
-    *
-    * Two plan-shape decisions, both load-bearing at scale:
-    *   - Sides are prefix-RENAMED before the join (never resolved via
-    *     DataFrame-object attributes): ledger and snapshot frequently
-    *     share lineage (a ledger re-merged with the snapshot that built
-    *     it, a micro-batch vs. a frame derived from it), and self-join
-    *     attribute ambiguity then binds both "sides" to one relation,
-    *     silently corrupting output.
-    *   - Roles are emitted via ONE exploded struct array — a
-    *     filter-per-role union makes Catalyst specialize the join per
-    *     branch (observed: inner + left-outer + right-outer), tripling
-    *     the snapshot computation.
-    */
-  private def mergeCurrent(
-      ledger: DataFrame,
-      incoming: DataFrame,
-      keyCols: Seq[String],
-      attrCols: Seq[String],
-      asOf: Column,
-      softDelete: Boolean): DataFrame = {
     def l(c: String) = col("__l_" + c)
     def r(c: String) = col("__r_" + c)
     val cur = ledger.filter(col("is_current"))
       .select((keyCols ++ attrCols :+ "valid_from")
         .map(c => col(c).as("__l_" + c)) :+ lit(true).as("__l_present"): _*)
-    val inc = incoming
+    val inc = snapshot
       .select((keyCols ++ attrCols)
         .map(c => col(c).as("__r_" + c)) :+ lit(true).as("__r_present"): _*)
     val joined = cur.join(inc,
@@ -115,14 +84,13 @@ object Snapshot {
     val keepRow = row(l, l("valid_from"), nullDate, lit(true))
     val closeRow = row(l, l("valid_from"), asOf, lit(false))
     val openRow = row(r, asOf, nullDate, lit(true))
-    val absent = // entity in ledger but not in the incoming rows
-      if (softDelete) array(closeRow) else array(keepRow)
     val emitted =
       when(inCur && inInc && same, array(keepRow))
         .when(inCur && inInc && !same, array(closeRow, openRow))
-        .when(inCur && !inInc, absent)
+        .when(inCur && !inInc, array(closeRow)) // soft delete
         .otherwise(array(openRow)) // brand new
-    joined.select(explode(emitted).as("r")).select(col("r.*"))
+    ledger.filter(!col("is_current"))
+      .unionByName(joined.select(explode(emitted).as("r")).select(col("r.*")))
   }
 
   /** Bootstrap a ledger from the first snapshot. */

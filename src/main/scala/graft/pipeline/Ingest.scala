@@ -43,9 +43,7 @@ object Ingest {
     "escape" -> "\"",
     "nullValue" -> "NULL")
 
-  /** The one raw CSV reader: every scan here and [[csvWithQuarantine]]
-    * start from it, so the quarantine path parses exactly like the main
-    * path. */
+  /** The one raw CSV reader: every scan here starts from it. */
   private def reader(spark: SparkSession): DataFrameReader =
     spark.read.options(options)
 
@@ -147,42 +145,6 @@ object Ingest {
 
   def rawSsc(spark: SparkSession, dir: String): DataFrame =
     sideFiles(spark, dir, "*SSC*.csv")
-
-  /** Schema-enforced CSV scan that QUARANTINES malformed rows instead
-    * of silently dropping (DROPMALFORMED) or null-flooding (plain
-    * PERMISSIVE) them — the ingest posture a 100 TB load needs, where
-    * "0.001% of rows vanished" is invisible until the audit.
-    *
-    * PERMISSIVE parsing captures each unparseable line in
-    * `_corrupt_record`; the result splits into (clean rows with the
-    * declared schema, quarantined raw lines + filename for the audit
-    * trail). One scan feeds both sides — the caller writes the
-    * quarantine alongside the layer output. The reference's external
-    * tables had Snowflake's loose VARIANT parsing and no such audit;
-    * this is the missing operational half of S2. */
-  def csvWithQuarantine(spark: SparkSession, dir: String, glob: String,
-                        schema: org.apache.spark.sql.types.StructType)
-      : (DataFrame, DataFrame) = {
-    val corrupt = "_corrupt_record"
-    val withCorrupt = schema.add(corrupt, "string")
-    val raw = reader(spark)
-      .option("pathGlobFilter", glob)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corrupt)
-      .schema(withCorrupt)
-      .csv(dir)
-      // filename must be captured HERE: input_file_name() is only
-      // defined during the file scan, not above the cache boundary
-      .withColumn("__src_file", element_at(split(input_file_name(), "/"), -1))
-      // cache: (a) the clean/bad split reads the parse ONCE, (b) Spark
-      // forbids queries referencing ONLY the corrupt column over a raw
-      // file scan — the cache materializes it first
-      .cache()
-    val clean = raw.filter(col(corrupt).isNull).drop(corrupt, "__src_file")
-    val bad = raw.filter(col(corrupt).isNotNull)
-      .select(col(corrupt).as("raw_line"), col("__src_file").as("filename"))
-    (clean, bad)
-  }
 
   /** Multi-valued NULL normalization applied to every string column
     * (design.sql:42 NULL_IF ('\\N','NULL','NUL','')). */

@@ -217,103 +217,6 @@ object EventStream {
         col("view_id"), col("view_ts"))
   }
 
-  /** Incremental SCD2 warehouse maintenance: a stream of entity-
-    * attribute updates folds into a versioned Type-2 ledger, one
-    * [[graft.ops.Snapshot.scd2Upsert]] per micro-batch inside
-    * foreachBatch. This is the true-incremental form of the reference's
-    * REFRESH-then-recompute-everything loop (populate.py:65–68 + CTAS):
-    * each batch touches |changed entities|, not |history|.
-    *
-    * The ledger is versioned (`<dir>/v=<n>` + a `_LATEST` pointer
-    * written AFTER the version commits) because overwriting a parquet
-    * dir that the same job is reading is undefined; versioning also
-    * gives time travel over ledger states for free. Within a batch,
-    * multiple updates to one key collapse to the latest by `tsCol`
-    * (deterministic tiebreak on all attr columns).
-    *
-    * Scale: per batch, one full-outer join of current-slice × delta —
-    * both sides bounded (entities, changed keys) — plus the history
-    * append; no state store is involved, so ledger size is bounded by
-    * storage, not executor memory. */
-  def scd2MaintainStream(updates: DataFrame, ledgerDir: String,
-                         keyCols: Seq[String], attrCols: Seq[String],
-                         tsCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    updates.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        // all ledger IO goes through the Hadoop FS of ledgerDir — a
-        // java.io/java.nio path would silently diverge from the
-        // filesystem Spark writes the parquet to (hdfs://, s3a://)
-        val dirPath = new org.apache.hadoop.fs.Path(ledgerDir)
-        val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.mkdirs(dirPath)
-        // resolve via the pointer, not a directory listing: a version
-        // dir from a crashed half-written batch must never be read
-        val pointer = new org.apache.hadoop.fs.Path(dirPath, "_LATEST")
-        val latest =
-          if (fs.exists(pointer)) {
-            val in = fs.open(pointer)
-            val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-            Some(s.trim.toInt)
-          } else {
-            // no pointer but version dirs present = a crash in the
-            // delete-then-rename pointer commit window. A v=N dir with a
-            // _SUCCESS marker is a fully-committed parquet write, so the
-            // highest such version IS the last committed ledger state —
-            // auto-recover to it instead of demanding pointer surgery;
-            // refuse only when no version is provably complete.
-            val versions =
-              if (fs.exists(dirPath))
-                fs.listStatus(dirPath).toSeq
-                  .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-              else Seq.empty
-            val complete = versions
-              .filter(s => fs.exists(
-                new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-              .map(_.getPath.getName.stripPrefix("v=").toInt)
-            if (complete.nonEmpty) Some(complete.max)
-            else if (versions.nonEmpty) throw new IllegalStateException(
-              s"scd2MaintainStream: $ledgerDir has version dirs but no " +
-                "_LATEST pointer and none is _SUCCESS-complete — restore " +
-                "the pointer to the last good version before resuming")
-            else None
-          }
-        val ledger = latest match {
-          case Some(v) => spark.read.parquet(s"$ledgerDir/v=$v")
-          case None =>
-            graft.ops.Snapshot.scd2Init(
-              batch.select((keyCols ++ attrCols).map(col): _*).limit(0),
-              lit(null).cast("date"))
-        }
-        // collapse intra-batch updates to the latest per key
-        val delta = graft.ops.Qualify.dedup(
-          batch.select((keyCols ++ attrCols :+ tsCol).map(col): _*),
-          keys = keyCols.map(col),
-          orderCols = col(tsCol).desc +: attrCols.map(col))
-          .drop(tsCol)
-        val asOf = batch.agg(max(col(tsCol)).cast("date")).head().getDate(0)
-        val next = graft.ops.Snapshot.scd2Upsert(
-          ledger, delta, keyCols, attrCols, lit(asOf))
-        val v = latest.map(_ + 1).getOrElse(0)
-        next.write.mode("overwrite").parquet(s"$ledgerDir/v=$v")
-        // pointer write is the commit: readers pick a version only
-        // after its parquet is fully on disk. Written to a temp name
-        // and renamed so a crash mid-write can never leave a
-        // truncated pointer (rename is atomic on local/HDFS)
-        val tmpPtr = new org.apache.hadoop.fs.Path(dirPath, s"._LATEST.$v.tmp")
-        val out = fs.create(tmpPtr, true)
-        try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-        fs.delete(pointer, false)
-        if (!fs.rename(tmpPtr, pointer))
-          throw new java.io.IOException(
-            s"scd2MaintainStream: could not commit ledger pointer for v=$v")
-      }
-      ()
-    }
-  }
-
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long)
   final case class UserCount(user_id: Long, n_events: Long)
 

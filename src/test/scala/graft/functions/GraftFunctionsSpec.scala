@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.Confs
 
 class GraftFunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -65,12 +66,11 @@ class GraftFunctionsSpec extends SparkSpec {
       GraftFunctions.md5MinhashSig(toks, 8).as("sig"),
       GraftFunctions.md5Simhash60(toks).as("sim")).head()
     // same kernel, forced interpreted (no codegen)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    val interp = try {
+    val interp = Confs.withConf(spark, "spark.sql.codegen.wholeStage", "false") {
       df.select(
         GraftFunctions.md5MinhashSig(toks, 8).as("sig"),
         GraftFunctions.md5Simhash60(toks).as("sim")).head()
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    }
     assert(viaExpr.getAs[scala.collection.Seq[Long]]("sig") == interp.getAs[scala.collection.Seq[Long]]("sig"))
     assert(viaExpr.getAs[Long]("sim") == interp.getAs[Long]("sim"))
   }

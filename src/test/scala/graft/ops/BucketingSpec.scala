@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.core.Tables
+import graft.core.{Confs, Tables}
 
 /** Bucketing: the co-located-join seam for repeated large joins
   * (SURVEY §4 / the 100 TB posture). Two tables bucketed+sorted on the
@@ -21,9 +21,7 @@ class BucketingSpec extends SparkSpec {
       .mode("overwrite").saveAsTable("bkt_customer")
 
     // disable broadcast so the join would otherwise need a shuffle
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Confs.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
       val joined = spark.table("bkt_orders")
         .join(spark.table("bkt_customer"),
           col("o_custkey") === col("c_custkey"))
@@ -32,6 +30,6 @@ class BucketingSpec extends SparkSpec {
       // and it computes the same rows as the unbucketed join
       val expected = o.join(c, col("o_custkey") === col("c_custkey")).count()
       assert(joined.count() == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 }

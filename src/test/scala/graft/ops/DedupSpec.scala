@@ -177,7 +177,7 @@ class DedupSpec extends SparkSpec {
     assert(noop.count() == train.count())
   }
 
-  test("decontaminateNgram catches eval text QUOTED inside a page; digest method does not") {
+  test("contaminationNgramReport catches eval text QUOTED inside a page; digest method does not") {
     val eval = Seq("what is the capital of france paris").toDF("text")
     val train = Seq(
       (1L, "some page asking what is the capital of france paris and more prose here"),
@@ -185,10 +185,7 @@ class DedupSpec extends SparkSpec {
       (3L, "too short to gram")).toDF("id", "text")
     // whole-text digest decontamination keeps all 3 (no verbatim copy)
     assert(Dedup.decontaminate(train, col("text"), eval, col("text")).count() == 3)
-    // 7-gram overlap drops the quoting page, keeps the other two
-    val clean = Dedup.decontaminateNgram(
-      train, col("id"), col("text"), eval, col("text"), n = 7)
-    assert(clean.select("id").as[Long].collect().toSet == Set(2L, 3L))
+    // 7-gram overlap flags only the quoting page
     val report = Dedup.contaminationNgramReport(
       train, col("id"), col("text"), eval, col("text"), n = 7)
       .as[(Long, Long)].collect().toMap

@@ -7,49 +7,6 @@ import graft.SparkSpec
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  test("media plumbing: payload bytes survive, features deterministic") {
-    val docs = Seq((0L, "abc"), (1L, "a longer payload " * 10)).toDF("doc_id", "text")
-    val media = Multimodal.asMediaTable(docs)
-    assert(media.schema("payload").dataType.typeName == "binary")
-    val expectedChecksum = "abc".getBytes("UTF-8").map(_ & 0xff).sum.toLong
-    val f0 = Multimodal.features(spark, docs).filter($"doc_id" === 0)
-      .as[Multimodal.MediaFeatures].head()
-    assert(f0.n_bytes == 3)
-    assert(f0.checksum == expectedChecksum)
-    assert(f0.frames_sampled == 0)
-    val f1 = Multimodal.features(spark, docs).filter($"doc_id" === 1)
-      .as[Multimodal.MediaFeatures].head()
-    assert(f1.n_bytes == "a longer payload ".length * 10)
-    assert(f1.frames_sampled == math.min(8, f1.n_bytes / 64))
-  }
-
-  test("resize scales payload by pixel ratio and rewrites dims; empty payload survives") {
-    val docs = Seq((0L, "x" * 200), (1L, "")).toDF("doc_id", "text")
-    val media = Multimodal.asMediaTable(docs)
-    val out = Multimodal.resize(spark, media, 320, 240)
-    assert(out.columns.toSeq == media.columns.toSeq)
-    val r0 = out.filter($"doc_id" === 0).as[Multimodal.MediaRecord].head()
-    val orig = media.filter($"doc_id" === 0).as[Multimodal.MediaRecord].head()
-    val ratio = (320L * 240).toDouble / (orig.width.toLong * orig.height)
-    assert(r0.width == 320 && r0.height == 240 && r0.format == orig.format)
-    assert(r0.payload.length == math.max(1, math.ceil(200 * ratio).toInt))
-    assert(r0.payload(0) == 'x'.toByte) // cycled from source bytes
-    val r1 = out.filter($"doc_id" === 1).as[Multimodal.MediaRecord].head()
-    assert(r1.payload.isEmpty && r1.width == 320 && r1.height == 240)
-  }
-
-  test("frameSample emits every k-th frame with per-frame checksums, drops partial tail") {
-    // 130 bytes of 'a' (97): frames of 64 bytes -> 2 whole frames, 2-byte tail dropped
-    val docs = Seq((0L, "a" * 130)).toDF("doc_id", "text")
-    val frames = Multimodal.frameSample(spark, Multimodal.asMediaTable(docs),
-      frameBytes = 64, everyK = 1).collect().sortBy(_.frame_idx)
-    assert(frames.map(_.frame_idx).toSeq == Seq(0, 1))
-    assert(frames.forall(_.frame_checksum == 64L * 97))
-    val sampled = Multimodal.frameSample(spark, Multimodal.asMediaTable(docs),
-      frameBytes = 64, everyK = 2).collect()
-    assert(sampled.map(_.frame_idx).toSeq == Seq(0))
-  }
-
   test("real PNG roundtrip: ImageIO decode returns exactly the generated pixels") {
     val docs = Seq(0L, 7L, 123L).toDF("doc_id")
     val media = Multimodal.pngMediaTable(spark, docs)
@@ -244,14 +201,6 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.pngMediaTable(spark, neg).collect())
     intercept[org.apache.spark.SparkException](
       Multimodal.wavMediaTable(spark, neg).collect())
-  }
-
-  test("metadata derivation is stable per doc_id") {
-    val docs = Seq((7L, "x")).toDF("doc_id", "text")
-    val row = Multimodal.asMediaTable(docs).head()
-    assert(row.getAs[Int]("width") == (7 % 640 + 64))
-    assert(row.getAs[Int]("height") == (7 % 480 + 48))
-    assert(Set("jpeg", "png", "webp").contains(row.getAs[String]("format")))
   }
 
   test("sobelPng: hand-computed energy on the generated image; interior count exact") {

@@ -214,18 +214,6 @@ class SamplingSpec extends SparkSpec {
     assert(plan.exceptAll(again).isEmpty && again.exceptAll(plan).isEmpty)
   }
 
-  test("writeShards: shard directories hold exactly the plan's rows") {
-    val dir = tempDir("graft_shards").toString
-    val docs = (1L to 300L).toDF("k")
-    Sampling.writeShards(docs, $"k", 4, dir)
-    val back = spark.read.parquet(dir)
-      .select($"k", $"shard".cast("int").as("shard"), $"pos")
-    val plan = Sampling.withShardPlan(docs, $"k", 4)
-      .select($"k", $"shard".cast("int").as("shard"), $"pos")
-    assert(back.count() == 300)
-    assert(back.exceptAll(plan).isEmpty && plan.exceptAll(back).isEmpty)
-  }
-
   test("prioritySample: k rows, contiguous rank, no replacement, deterministic") {
     val docs = (1L to 500L).map(i => (i, (i % 13) + 1)).toDF("k", "w")
     val s1 = Sampling.prioritySample(docs, $"k", $"w", k = 50)

@@ -562,34 +562,4 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Long, Int)].collect().toSet
     assert(run(emb) == run(emb.repartition(7)))
   }
-
-  test("beam search: big-corpus knobs (visited prune + per-round ckpt) " +
-      "are output-identical to the small-corpus path") {
-    // graft.sim.beamThreshold=0 forces the >=4M-row plan shape —
-    // per-round checkpoints and the visited-set anti-join prune — on
-    // the small corpus; the prune is provably output-identical (a
-    // dropped candidate can never re-enter a monotone top-B beam),
-    // and this pins it for both the flat and hierarchical searches.
-    val emb = Tables.embeddings(spark, sf001)
-    val q = emb.filter($"vec_id" < 10)
-    def both(run: => Set[(Long, Long, Int, Double)]) = {
-      val small = run
-      spark.conf.set("graft.sim.beamThreshold", "0")
-      try { val big = run; (small, big) }
-      finally spark.conf.unset("graft.sim.beamThreshold")
-    }
-    val (nswS, nswB) = both(
-      Similarity.nswTopK(q, emb, k = 5, centroids = nswCents(emb),
-          m = 12, beamWidth = 24, rounds = 4, cellsPerNode = 2)
-        .as[(Long, Long, Double, Int)].collect()
-        .map(r => (r._1, r._2, r._4, r._3)).toSet)
-    assert(nswS == nswB, "flat NSW diverges under the big-corpus knobs")
-    val (hS, hB) = both(
-      Similarity.hnswTopK(q, emb, k = 5, centroids = nswCents(emb),
-          m = 12, beamWidth = 24, upperRounds = 2, lowerRounds = 3,
-          cellsPerNode = 2, layerMod = 16, entryFactor = 8)
-        .as[(Long, Long, Double, Int)].collect()
-        .map(r => (r._1, r._2, r._4, r._3)).toSet)
-    assert(hS == hB, "HNSW diverges under the big-corpus knobs")
-  }
 }

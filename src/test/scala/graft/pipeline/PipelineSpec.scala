@@ -79,31 +79,6 @@ class PipelineSpec extends SparkSpec {
     assert(back.exceptAll(expected).isEmpty && expected.exceptAll(back).isEmpty)
   }
 
-  test("csvWithQuarantine: malformed rows land in quarantine with filename, clean rows parse") {
-    import org.apache.spark.sql.types._
-    val dir = tempDir("graft_quarantine")
-    java.nio.file.Files.write(dir.resolve("feed_listings.csv"),
-      ("id,name,price\n" +
-        "1,alpha,10.5\n" +
-        "notanint,beta,2.0\n" +      // type failure -> quarantined
-        "2,gamma,3.25\n" +
-        "3,delta,xx\n"               // double failure -> quarantined
-        ).getBytes("UTF-8"))
-    val schema = StructType(Seq(
-      StructField("id", IntegerType),
-      StructField("name", StringType),
-      StructField("price", DoubleType)))
-    val (clean, bad) = Ingest.csvWithQuarantine(
-      spark, dir.toString, "*listings*.csv", schema)
-    assert(clean.columns.toSeq == Seq("id", "name", "price"))
-    assert(clean.orderBy("id").as[(Int, String, Double)].collect().toSeq
-      == Seq((1, "alpha", 10.5), (2, "gamma", 3.25)))
-    val quarantined = bad.collect()
-    assert(quarantined.length == 2)
-    assert(quarantined.forall(_.getAs[String]("filename") == "feed_listings.csv"))
-    assert(quarantined.map(_.getAs[String]("raw_line")).exists(_.contains("notanint")))
-  }
-
   test("KPI rate guard: all-NULL host_id group yields NULL superhost_rate, no ANSI 0/0") {
     val fact = Seq(
       // one (area, month) group: rows exist, every host_id NULL ->

@@ -233,57 +233,6 @@ class EventStreamSpec extends SparkSpec {
     }
   }
 
-  test("scd2MaintainStream folds micro-batches into a versioned Type-2 ledger") {
-    implicit val sqlCtx = spark.sqlContext
-    val ledgerDir = tempDir("scd2_ledger").toString
-    val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val updates = input.toDF().toDF("user_id", "plan", "ts")
-    val q = EventStream.scd2MaintainStream(updates, ledgerDir,
-      keyCols = Seq("user_id"), attrCols = Seq("plan"), tsCol = "ts")
-      .outputMode("update").start()
-    def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-01-$day%02d 12:00:00")
-
-    // batch 0: two users sign up; user 1 flips plans WITHIN the batch —
-    // only the latest-by-ts update may land
-    input.addData((1L, "free", ts(1)), (1L, "pro", ts(2)), (2L, "free", ts(2)))
-    q.processAllAvailable()
-    val v0 = spark.read.parquet(s"$ledgerDir/v=0")
-    assert(v0.count() == 2)
-    assert(v0.filter($"user_id" === 1 && $"plan" === "pro" && $"is_current").count() == 1)
-
-    // batch 1: user 2 upgrades, user 1 untouched (partial delta: NO soft delete)
-    input.addData((2L, "team", ts(10)))
-    q.processAllAvailable()
-    q.stop()
-    assert(Files.readString(java.nio.file.Paths.get(s"$ledgerDir/_LATEST")) == "1")
-    val v1 = spark.read.parquet(s"$ledgerDir/v=1")
-    val rows = v1.select($"user_id", $"plan", $"valid_to".cast("string"), $"is_current")
-      .as[(Long, String, Option[String], Boolean)].collect().toSet
-    assert(rows == Set(
-      (1L, "pro", None, true),                   // untouched by the delta
-      (2L, "free", Some("2024-01-10"), false),   // closed old version
-      (2L, "team", None, true)))                 // opened new version
-
-    // simulate a crash inside the pointer commit window (after the
-    // delete, before the rename): the next start must auto-recover to
-    // the highest _SUCCESS-complete version and keep appending history
-    Files.delete(java.nio.file.Paths.get(s"$ledgerDir/_LATEST"))
-    val input2 = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q2 = EventStream.scd2MaintainStream(
-      input2.toDF().toDF("user_id", "plan", "ts"), ledgerDir,
-      keyCols = Seq("user_id"), attrCols = Seq("plan"), tsCol = "ts")
-      .outputMode("update").start()
-    input2.addData((1L, "enterprise", ts(20)))
-    q2.processAllAvailable()
-    q2.stop()
-    assert(Files.readString(java.nio.file.Paths.get(s"$ledgerDir/_LATEST")) == "2")
-    val v2 = spark.read.parquet(s"$ledgerDir/v=2")
-    // history from the recovered v=1 preserved, new version appended
-    assert(v2.filter($"user_id" === 1).count() == 2)
-    assert(v2.filter($"user_id" === 1 && $"plan" === "enterprise" && $"is_current")
-      .count() == 1)
-  }
-
   test("cdcLatest picks the batch-order-independent winner across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     // (k, name, bal, seq, op)
