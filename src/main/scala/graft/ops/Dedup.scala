@@ -29,12 +29,6 @@ import graft.functions.{GraftFunctions, Kernels}
   */
 object Dedup {
 
-  /** (doc_id, toks) table of de-duplicated whitespace word tokens.
-    * `toks` is SORTED-distinct — the invariant the merge-intersect kernel
-    * relies on (see [[jaccardPairs]]). */
-  def tokenized(df: DataFrame, id: Column, text: Column): DataFrame =
-    df.select(id.as("doc_id"), array_sort(array_distinct(split(lower(text), " "))).as("toks"))
-
   /** (doc_id, toks) table of word n-gram shingle sets (sorted-distinct).
     * Shingles (not unigram tokens) are what near-dup detection must hash:
     * unigram sets from a bounded vocabulary make almost every document
@@ -131,7 +125,7 @@ object Dedup {
     * built filter is one bounded binary scalar — ~1.2 bytes/item at
     * the default 3% fpp — collected to the driver and inlined as a
     * literal, the same discipline runtime filters use via scalar
-    * subquery and [[Similarity.kmeansFit]] uses for centroids;
+    * subquery;
     * benchmark suites are eval-sized, not corpus-sized, so this
     * never collects unbounded data. */
   def decontaminateBloom(train: DataFrame, trainText: Column,
@@ -194,7 +188,7 @@ object Dedup {
   // ---------------------------------------------------- n-gram Jaccard
 
   /** Exact within-block Jaccard near-duplicate pairs over a
-    * (doc_id, toks) table (see [[tokenized]]/[[shingled]]) — result =
+    * (doc_id, toks) table (see [[shingled]]) — result =
     * ALL pairs with J ≥ minJaccard inside a block; candidate generation
     * uses PPJoin-style prefix filtering, which is lossless.
     *

@@ -71,6 +71,31 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
+  /** DuckDB query replaying [[bruteForceTopK]] over the `embeddings`
+    * table: every non-self pair of a query (selected by `queryPred`,
+    * e.g. "vec_id < 10") and a corpus vector is scored, and the top k
+    * per query are kept as (query_id, neighbor_id, cosine, rank). */
+  def bruteForceTopKSql(queryPred: String, k: Int): String =
+    s"""WITH q AS (
+      SELECT vec_id AS query_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
+      FROM embeddings WHERE $queryPred),
+    c AS (
+      SELECT vec_id AS neighbor_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
+      FROM embeddings),
+    scored AS (
+      SELECT query_id, neighbor_id,
+        ROUND(list_inner_product(qv, cv)
+          / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(cv, cv))),
+          6) AS cosine
+      FROM c, q WHERE query_id <> neighbor_id)
+    SELECT query_id, neighbor_id, cosine,
+      CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id)
+        AS INTEGER) AS rank
+    FROM scored
+    QUALIFY rank <= $k"""
+
   /** Embedding-cosine near-duplicate pairs: all (a, b) with
     * cosine ≥ minCosine, a.vec_id < b.vec_id. Candidates come from a
     * bucket equi-join on hyperplane sign-signatures of `tables`
@@ -271,8 +296,7 @@ object Similarity {
     * only its `nprobe` closest cells.
     *
     * `centroids` is any bounded deterministic subset of the corpus (the
-    * caller picks, e.g. `vec_id % stride = 0`; a k-means refit would
-    * slot in unchanged — assignment is the same argmax). All steps are
+    * caller picks, e.g. `vec_id % stride = 0`). All steps are
     * DataFrame ops with no driver collect:
     *   - assignment: corpus × broadcast(centroids) nested-loop product,
     *     reduced to one row per vector by a map-side-combinable `max_by`
@@ -374,24 +398,37 @@ object Similarity {
       s"nsw wants m>0, beam>0, 1<=rounds<=8; got m=$m beam=$beamWidth rounds=$rounds")
     require(cellsPerNode >= 1 && cellsPerNode <= 4,
       s"cellsPerNode bounds the edge-join fanout; 1..4, got $cellsPerNode")
+    val (cent, nodes, q) = graphInputs(queries, corpus, centroids)
+    val edges = nswEdgeList(nodes, cent, m, cellsPerNode)
+    rankBeam(nswBeam(q, nodes, edges,
+      q.select(col("query_id"))
+        .crossJoin(cent.select(col("cell_id").as("cand"))),
+      beamWidth, rounds), k)
+  }
+
+  /** The inputs both graph searches share: the broadcast centroid frame
+    * (cell_id, ev, en), the corpus nodes (nid, cv, cn) and the broadcast
+    * query frame (query_id, qv, qn). The nodes feed the cell scorer,
+    * both edge-join vector lookups and the per-round candidate rescore,
+    * so they are checkpointed once. */
+  private def graphInputs(queries: DataFrame, corpus: DataFrame,
+                          centroids: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val cent = broadcast(
       withVecNorm(centroids.select(col("vec_id").as("cell_id"), col("embedding")),
         col("embedding"), "ev", "en").drop("embedding"))
-    // corpus nodes (id, vec, norm): consumed by the cell scorer, both
-    // edge-join vector lookups, and the per-round candidate rescore ->
-    // checkpoint once
     val nodes = withVecNorm(
         corpus.select(col("vec_id").as("nid"), col("embedding")),
         col("embedding"), "cv", "cn").drop("embedding")
       .localCheckpoint(true)
-    val edges = nswEdgeList(nodes, cent, m, cellsPerNode)
     val q = broadcast(withVecNorm(
       queries.select(col("vec_id").as("query_id"), col("embedding")),
       col("embedding"), "qv", "qn").drop("embedding"))
-    val beam = nswBeam(q, nodes, edges,
-      q.select(col("query_id"))
-        .crossJoin(cent.select(col("cell_id").as("cand"))),
-      beamWidth, rounds)
+    (cent, nodes, q)
+  }
+
+  /** Final beam (query_id, cand, cosine) → top-k rows in the
+    * [[bruteForceTopK]] schema (query_id, neighbor_id, cosine, rank). */
+  private def rankBeam(beam: DataFrame, k: Int): DataFrame = {
     val wBeam = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("cand"))
@@ -403,17 +440,12 @@ object Similarity {
 
   /** Bounded-degree NSW edge list over `nodes` (nid, cv, cn) given the
     * broadcast centroid frame (cell_id, ev, en) — the graph-build
-    * phase of [[nswTopK]]/[[hnswTopK]], factored so the hierarchical
-    * variant can build one graph per layer. `pivotSalt` decorrelates
-    * the fine-pivot sample from any OUTER modulus sample of the node
-    * set (an upper HNSW layer selected by hash(nid) % 2^j would
-    * otherwise make EVERY member a pivot); salt 0 keeps the original
-    * hash stream, bit-compatible with the pre-refactor build. */
+    * phase of [[nswTopK]]: one unsalted layer of
+    * [[nswEdgeListLayered]]. */
   private def nswEdgeList(nodes: DataFrame, cent: DataFrame, m: Int,
-                          cellsPerNode: Int,
-                          pivotSalt: Long = 0L): DataFrame =
+                          cellsPerNode: Int): DataFrame =
     nswEdgeListLayered(nodes.withColumn("layer", lit(0L)), cent, m,
-      cellsPerNode, saltCol = lit(pivotSalt))
+      cellsPerNode, saltCol = lit(0L))
       .drop("layer")
 
   /** [[nswEdgeList]] over a LAYER-TAGGED node frame (nid, cv, cn,
@@ -619,10 +651,11 @@ object Similarity {
     * SPARSE UPPER LAYER of modulus-sampled nodes (hash(nid) %
     * `layerMod` = 0 — the engine-portable md5-56 sample, expected
     * corpus/layerMod members) with its own bounded-degree graph, plus
-    * the full layer-0 graph. Search descends: a short beam over the
-    * upper layer finds a good NEIGHBORHOOD from coarse entry points,
-    * then the layer-0 beam refines from there — better entries than
-    * [[nswTopK]]'s fixed centroid seeds at the same beam width.
+    * the full layer-0 graph. Search descends: one two-hop pass over
+    * the upper layer finds a good NEIGHBORHOOD from coarse entry
+    * points, then `lowerRounds` layer-0 beam rounds refine from there
+    * — better entries than [[nswTopK]]'s fixed centroid seeds at the
+    * same beam width.
     *
     * Entry points are the classic "top layer" analog, a sparser
     * modulus sample of the upper sample (hash % layerMod·entryFactor
@@ -638,28 +671,20 @@ object Similarity {
     * the whole two-layer index in DuckDB. Scale shape: both graph
     * builds are the scan-linear cell pipeline (the upper one over
     * corpus/layerMod rows); search is queries×beam×degree per round
-    * with every non-corpus side broadcast — the upper rounds touch
+    * with every non-corpus side broadcast — the upper pass touches
     * the small layer first, exactly the HNSW cost argument. */
   def hnswTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                centroids: DataFrame, m: Int = 6, beamWidth: Int = 8,
-               upperRounds: Int = 2, lowerRounds: Int = 3,
-               cellsPerNode: Int = 2, layerMod: Int = 16,
-               entryFactor: Int = 8): DataFrame = {
-    require(m > 0 && beamWidth > 0 && upperRounds >= 1 && lowerRounds >= 1
-        && upperRounds + lowerRounds <= 8,
-      s"hnsw wants m>0, beam>0, rounds>=1 per layer (<=8 total); " +
-        s"got m=$m beam=$beamWidth up=$upperRounds low=$lowerRounds")
+               lowerRounds: Int = 3, cellsPerNode: Int = 2,
+               layerMod: Int = 16, entryFactor: Int = 8): DataFrame = {
+    require(m > 0 && beamWidth > 0 && lowerRounds >= 1 && lowerRounds <= 6,
+      s"hnsw wants m>0, beam>0, 1<=lowerRounds<=6; " +
+        s"got m=$m beam=$beamWidth low=$lowerRounds")
     require(cellsPerNode >= 1 && cellsPerNode <= 4,
       s"cellsPerNode bounds the edge-join fanout; 1..4, got $cellsPerNode")
     require(layerMod >= 2 && entryFactor >= 2,
       s"layerMod/entryFactor must thin each layer; got $layerMod/$entryFactor")
-    val cent = broadcast(
-      withVecNorm(centroids.select(col("vec_id").as("cell_id"), col("embedding")),
-        col("embedding"), "ev", "en").drop("embedding"))
-    val nodes = withVecNorm(
-        corpus.select(col("vec_id").as("nid"), col("embedding")),
-        col("embedding"), "cv", "cn").drop("embedding")
-      .localCheckpoint(true)
+    val (cent, nodes, q) = graphInputs(queries, corpus, centroids)
     // cheap filter over the checkpointed nodes cache — no checkpoint
     // of its own (its consumers re-scan the cache, not the corpus)
     val upperNodes = nodes
@@ -675,9 +700,6 @@ object Similarity {
       saltCol = when(col("layer") === 1L, lit(7919L)).otherwise(lit(0L)))
     val upperEdges = edgesAll.filter(col("layer") === 1L).drop("layer")
     val lowerEdges = edgesAll.filter(col("layer") === 0L).drop("layer")
-    val q = broadcast(withVecNorm(
-      queries.select(col("vec_id").as("query_id"), col("embedding")),
-      col("embedding"), "qv", "qn").drop("embedding"))
     val entries = nodes
       .filter(graft.ops.Sampling.hashValue(col("nid"))
         % (layerMod.toLong * entryFactor) === 0)
@@ -685,45 +707,34 @@ object Similarity {
       .unionByName(cent.select(col("cell_id").as("cand")))
       .distinct()
     val seed0 = q.select(col("query_id")).crossJoin(broadcast(entries))
-    // The DEFAULT two-round upper descent collapses into ONE SHOT
-    // (round-11, the verdict's named lever): instead of
-    // topB(score(entries)) → expand → topB → expand → topB, the whole
-    // upper layer is topB(score(entries ∪ N≤2(entries))) — the 1∪2-hop
-    // neighborhood of every entry scored in a single combinable
-    // aggregate. Exploration radius is identical (2 hops from the
-    // entry set) and the candidate set is a SUPERSET of what the
-    // two-round form could reach (it expanded only the intermediate
-    // top-B trim), so beam quality is ≥ at equal width — measured
-    // bit-identical output on the test corpora. The per-round
-    // scheduling floors the two-round loop paid (intermediate beam
-    // checkpoint + per-round broadcast collects, ~8 jobs/round; 56 → 45
-    // jobs per query in OPTIMIZATION_r11.md) collapse into the single
-    // seed broadcast. Candidate volume is bounded: |entries|·m² rows on
-    // the corpus/layerMod upper sample — the same cells/beam bound
-    // argument as the coarse assignment. Duplicate candidates are NOT
-    // pre-deduped: topB's collect_set absorbs them (the beam-loop
-    // convention), saving the distinct's shuffle.
-    // [[hnswTopKSql]] replays the identical one-shot form.
-    val (upperSeed, upperEff) =
-      if (upperRounds == 2) {
-        // self-join of a shared-lineage frame: rename BOTH sides first
-        // (DataFrame-object resolution is ambiguous under self-joins)
-        val hop2 = upperEdges
-          .select(col("src").as("a_src"), col("dst").as("a_mid"))
-          .join(upperEdges
-              .select(col("src").as("b_mid"), col("dst").as("b_dst")),
-            col("a_mid") === col("b_mid"))
-          .select(col("a_src").as("src"), col("b_dst").as("dst"))
-        val reach = upperEdges.select(col("src"), col("dst"))
-          .unionByName(hop2)
-          .filter(col("src") =!= col("dst"))
-        val seedExp = seed0.unionByName(
-          seed0.join(reach, col("cand") === reach("src"))
-            .select(col("query_id"), reach("dst").as("cand")))
-        (seedExp, 0)
-      } else (seed0, upperRounds)
-    val upperBeam = nswBeam(q, nodes, upperEdges, upperSeed,
-      beamWidth, upperEff)
+    // The upper descent is ONE SHOT: the whole upper layer is
+    // topB(score(entries ∪ N≤2(entries))) — the 1∪2-hop neighborhood
+    // of every entry scored in a single combinable aggregate. That is
+    // the exploration radius of a two-round beam (2 hops from the
+    // entry set) over a candidate SUPERSET of what the two-round form
+    // reaches (it expanded only the intermediate top-B trim), so beam
+    // quality is ≥ at equal width, without the per-round scheduling
+    // floor (intermediate beam checkpoint + per-round broadcast
+    // collects, ~8 jobs/round). Candidate volume is bounded:
+    // |entries|·m² rows on the corpus/layerMod upper sample.
+    // Duplicate candidates are NOT pre-deduped: topB's collect_set
+    // absorbs them (the beam-loop convention), saving the distinct's
+    // shuffle. [[hnswTopKSql]] replays the identical one-shot form.
+    // Self-join of a shared-lineage frame: rename BOTH sides first
+    // (DataFrame-object resolution is ambiguous under self-joins).
+    val hop2 = upperEdges
+      .select(col("src").as("a_src"), col("dst").as("a_mid"))
+      .join(upperEdges
+          .select(col("src").as("b_mid"), col("dst").as("b_dst")),
+        col("a_mid") === col("b_mid"))
+      .select(col("a_src").as("src"), col("b_dst").as("dst"))
+    val reach = upperEdges.select(col("src"), col("dst"))
+      .unionByName(hop2)
+      .filter(col("src") =!= col("dst"))
+    val upperSeed = seed0.unionByName(
+      seed0.join(reach, col("cand") === reach("src"))
+        .select(col("query_id"), reach("dst").as("cand")))
+    val upperBeam = nswBeam(q, nodes, upperEdges, upperSeed, beamWidth, 0)
       .localCheckpoint(true) // multi-consumer: preScored union + anti-join
     // layer-0 seeds = the upper beam's refined neighborhood UNION the
     // centroid ids: the descent keeps the hierarchy's better entries
@@ -734,16 +745,9 @@ object Similarity {
     // centroid seeds it hasn't already seen.
     val lowerSeed = q.select(col("query_id"))
       .crossJoin(cent.select(col("cell_id").as("cand")))
-    val lowerBeam = nswBeam(q, nodes, lowerEdges, lowerSeed,
+    rankBeam(nswBeam(q, nodes, lowerEdges, lowerSeed,
       beamWidth, lowerRounds,
-      preScored = Some(upperBeam.select(col("query_id"), col("cand"), col("cosine"))))
-    val wBeam = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand"))
-    lowerBeam.withColumn("rank", row_number().over(wBeam).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("cand").as("neighbor_id"),
-        col("cosine"), col("rank"))
+      preScored = Some(upperBeam.select(col("query_id"), col("cand"), col("cosine")))), k)
   }
 
   /** ANSI-SQL replay of [[nswTopK]] over the `embeddings` table —
@@ -756,29 +760,22 @@ object Similarity {
   def nswTopKSql(queryPred: String, k: Int, m: Int = 6, beamWidth: Int = 8,
                  rounds: Int = 3, cellsPerNode: Int = 2,
                  centroidPred: String = "vec_id % 97 = 0",
-                 nlist: Int = 128): String = {
-    def beamCte(i: Int, candSrc: String) =
-      s"""beam$i AS (
-      SELECT query_id, cand, cosine FROM (
-        SELECT c.query_id, c.cand,
-          ROUND(list_inner_product(q.qv, nd.cv) / (q.qn * nd.cn), 6) AS cosine,
-          ROW_NUMBER() OVER (PARTITION BY c.query_id
-            ORDER BY ROUND(list_inner_product(q.qv, nd.cv) / (q.qn * nd.cn), 6)
-              DESC, c.cand) AS rn
-        FROM $candSrc c
-        JOIN cells nd ON c.cand = nd.nid
-        JOIN q ON c.query_id = q.query_id
-        WHERE c.cand <> c.query_id) WHERE rn <= $beamWidth)"""
-    val roundCtes = (1 to rounds).map { i =>
-      s"""cand$i AS (
-      SELECT DISTINCT query_id, cand FROM (
-        SELECT query_id, cand FROM beam${i - 1}
-        UNION ALL
-        SELECT b.query_id, e.dst AS cand
-        FROM beam${i - 1} b JOIN edges e ON b.cand = e.src)),
-    ${beamCte(i, s"cand$i")}"""
-    }.mkString(",\n    ")
-    s"""WITH v AS (
+                 nlist: Int = 128): String =
+    s"""WITH ${graphPreludeSql(queryPred, centroidPred, nlist)},
+    ${nswEdgesSqlCtes("", "cells", m, cellsPerNode, "cc.nid")},
+    cand0 AS (
+      SELECT query_id, cell_id AS cand FROM q CROSS JOIN cent),
+    ${beamCteSql("", 0, "cand0", beamWidth)},
+    ${beamRoundsSql("", rounds, "edges", beamWidth)}
+    ${rankBeamSql(s"beam$rounds", k)}"""
+
+  /** The CTE prelude both graph-search replays open with: double-cast
+    * vectors `v`, nonzero-norm rows `n`, the capped centroid set `cent`
+    * (cell_id, ev, en), the node table `cells` (nid, cv, cn) and the
+    * query batch `q` (query_id, qv, qn) — [[graphInputs]] in SQL. */
+  private def graphPreludeSql(queryPred: String, centroidPred: String,
+                              nlist: Int): String =
+    s"""v AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
       FROM embeddings WHERE embedding IS NOT NULL),
     n AS (
@@ -790,82 +787,23 @@ object Similarity {
         SELECT vec_id AS cell_id, v AS ev, sqrt(list_inner_product(v, v)) AS en
         FROM v WHERE $centroidPred ORDER BY vec_id LIMIT $nlist)
       WHERE en > 0),
-    coarse_cells AS (
-      -- top-$cellsPerNode COARSE cells per corpus vector; ties ->
-      -- larger cell id. Multi-cell membership puts cross-cell bridge
-      -- edges in the graph (boundary nodes belong to both neighboring
-      -- cells).
-      SELECT nid, cell_id FROM (
-        SELECT a.vec_id AS nid, ct.cell_id,
-          ROW_NUMBER() OVER (PARTITION BY a.vec_id
-            ORDER BY ROUND(list_inner_product(a.v, ct.ev) / (a.nrm * ct.en), 6)
-              DESC, ct.cell_id DESC) AS rn
-        FROM n a CROSS JOIN cent ct) WHERE rn <= $cellsPerNode),
     cells AS (
       SELECT vec_id AS nid, v AS cv, nrm AS cn FROM n),
-    pivots AS (
-      -- hierarchical fine split: hash-sampled member pivots, expected
-      -- 1 per 16 members (md5-56 modulus, engine-portable)
-      SELECT cc.cell_id AS coarse_id, cc.nid AS fine_id,
-        c.cv AS fv, c.cn AS fn
-      FROM coarse_cells cc JOIN cells c ON cc.nid = c.nid
-      WHERE ${graft.ops.Sampling.hashValueSql("cc.nid")} % 16 = 0),
-    fine_assign AS (
-      -- each coarse membership re-assigns to its top-2 fine pivots
-      -- (6dp cosine desc, larger fine id on ties)
-      SELECT nid, fine_id AS cell_id FROM (
-        SELECT cc.nid, p.fine_id,
-          ROW_NUMBER() OVER (PARTITION BY cc.nid, cc.cell_id
-            ORDER BY ROUND(list_inner_product(c.cv, p.fv) / (c.cn * p.fn), 6)
-              DESC, p.fine_id DESC) AS rn
-        FROM coarse_cells cc
-        JOIN cells c ON cc.nid = c.nid
-        JOIN pivots p ON cc.cell_id = p.coarse_id) WHERE rn <= 2),
-    orphan AS (
-      -- coarse cells too small to yield a pivot keep the coarse id as
-      -- their single fine cell
-      SELECT cc.nid, cc.cell_id
-      FROM coarse_cells cc
-      WHERE NOT EXISTS (SELECT 1 FROM pivots p
-        WHERE p.coarse_id = cc.cell_id)),
-    node_cells AS (
-      SELECT DISTINCT nid, cell_id FROM (
-        SELECT nid, cell_id FROM fine_assign
-        UNION ALL SELECT nid, cell_id FROM orphan)),
-    pairs AS (
-      -- distinct shared-cell id pairs (a pair sharing two cells must
-      -- score once)
-      SELECT DISTINCT a.nid AS src, b.nid AS dst
-      FROM node_cells a JOIN node_cells b USING (cell_id)
-      WHERE a.nid <> b.nid),
-    edges AS (
-      -- m nearest shared-cell neighbors each (6dp cosine desc, id asc)
-      SELECT src, dst FROM (
-        SELECT p.src, p.dst,
-          ROW_NUMBER() OVER (PARTITION BY p.src
-            ORDER BY ROUND(list_inner_product(a.cv, b.cv) / (a.cn * b.cn), 6)
-              DESC, p.dst) AS rn
-        FROM pairs p
-        JOIN cells a ON p.src = a.nid
-        JOIN cells b ON p.dst = b.nid) WHERE rn <= $m),
     q AS (
       SELECT vec_id AS query_id, v AS qv, nrm AS qn
-      FROM n WHERE $queryPred),
-    cand0 AS (
-      SELECT query_id, cell_id AS cand FROM q CROSS JOIN cent),
-    ${beamCte(0, "cand0")},
-    $roundCtes
-    SELECT query_id, cand AS neighbor_id, cosine,
-      CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, cand) AS INTEGER) AS rank
-    FROM beam$rounds
-    QUALIFY rank <= $k"""
-  }
+      FROM n WHERE $queryPred)"""
 
   /** The NSW edge-build CTE chain with a name prefix — the SQL mirror
-    * of [[nswEdgeList]], emitted once per HNSW layer. `memberSrc` is a
-    * CTE with (nid, cv, cn); `pivotKeySql` the (possibly salted)
-    * pivot-sample key expression over alias cc. */
+    * of [[nswEdgeListLayered]], emitted once per graph layer.
+    * `memberSrc` is a CTE with (nid, cv, cn); `pivotKeySql` the
+    * (possibly salted) pivot-sample key expression over alias cc.
+    * Coarse cells: top-`cellsPerNode` per node, ties → larger cell id
+    * (multi-cell membership puts cross-cell bridge edges in the graph).
+    * Fine split: hash-sampled member pivots (expected 1 per 16), each
+    * coarse membership re-assigned to its top-2 pivots; a coarse cell
+    * too small to yield a pivot keeps its id as its single fine cell.
+    * Edges: the `m` nearest distinct shared-cell neighbors (6dp cosine
+    * desc, id asc). */
   private def nswEdgesSqlCtes(p: String, memberSrc: String, m: Int,
                               cellsPerNode: Int,
                               pivotKeySql: String): String =
@@ -913,17 +851,12 @@ object Similarity {
         JOIN cells a ON pr.src = a.nid
         JOIN cells b ON pr.dst = b.nid) WHERE rn <= $m)"""
 
-  /** ANSI-SQL replay of [[hnswTopK]] — both layer graphs, the entry
-    * sample, and both unrolled beam descents, rebuilt independently in
-    * DuckDB (same 6dp rounding, id tiebreaks, modulus samples). */
-  def hnswTopKSql(queryPred: String, k: Int, m: Int = 6,
-                  beamWidth: Int = 8, upperRounds: Int = 2,
-                  lowerRounds: Int = 3, cellsPerNode: Int = 2,
-                  layerMod: Int = 16, entryFactor: Int = 8,
-                  centroidPred: String = "vec_id % 97 = 0",
-                  nlist: Int = 128): String = {
-    def beamCte(p: String, i: Int, candSrc: String) =
-      s"""${p}beam$i AS (
+  /** Beam CTE number `i` under prefix `p`: the `beamWidth` best (6dp
+    * cosine desc, id asc) non-self candidates of CTE `candSrc`
+    * (query_id, cand) per query. */
+  private def beamCteSql(p: String, i: Int, candSrc: String,
+                         beamWidth: Int): String =
+    s"""${p}beam$i AS (
       SELECT query_id, cand, cosine FROM (
         SELECT c.query_id, c.cand,
           ROUND(list_inner_product(q.qv, nd.cv) / (q.qn * nd.cn), 6) AS cosine,
@@ -934,30 +867,42 @@ object Similarity {
         JOIN cells nd ON c.cand = nd.nid
         JOIN q ON c.query_id = q.query_id
         WHERE c.cand <> c.query_id) WHERE rn <= $beamWidth)"""
-    def roundCtes(p: String, rounds: Int, edgesCte: String) =
-      (1 to rounds).map { i =>
-        s"""${p}cand$i AS (
+
+  /** `rounds` unrolled beam rounds from beam CTE 0: each expands the
+    * previous beam through `edgesCte`, unions it with the beam and
+    * keeps the best `beamWidth` — the [[nswBeam]] loop in SQL. */
+  private def beamRoundsSql(p: String, rounds: Int, edgesCte: String,
+                            beamWidth: Int): String =
+    (1 to rounds).map { i =>
+      s"""${p}cand$i AS (
       SELECT DISTINCT query_id, cand FROM (
         SELECT query_id, cand FROM ${p}beam${i - 1}
         UNION ALL
         SELECT b.query_id, e.dst AS cand
         FROM ${p}beam${i - 1} b JOIN $edgesCte e ON b.cand = e.src)),
-    ${beamCte(p, i, s"${p}cand$i")}"""
-      }.mkString(",\n    ")
-    s"""WITH v AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
-    n AS (
-      SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nrm
-      FROM v WHERE sqrt(list_inner_product(v, v)) > 0),
-    cent AS (
-      -- centroid cap BEFORE the zero-norm drop (the ivfTopK convention)
-      SELECT cell_id, ev, en FROM (
-        SELECT vec_id AS cell_id, v AS ev, sqrt(list_inner_product(v, v)) AS en
-        FROM v WHERE $centroidPred ORDER BY vec_id LIMIT $nlist)
-      WHERE en > 0),
-    cells AS (
-      SELECT vec_id AS nid, v AS cv, nrm AS cn FROM n),
+    ${beamCteSql(p, i, s"${p}cand$i", beamWidth)}"""
+    }.mkString(",\n    ")
+
+  /** Final SELECT ranking beam CTE `beam` to top-k — [[rankBeam]] in
+    * SQL. */
+  private def rankBeamSql(beam: String, k: Int): String =
+    s"""SELECT query_id, cand AS neighbor_id, cosine,
+      CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+        ORDER BY cosine DESC, cand) AS INTEGER) AS rank
+    FROM $beam
+    QUALIFY rank <= $k"""
+
+  /** ANSI-SQL replay of [[hnswTopK]] — both layer graphs, the entry
+    * sample, the one-shot two-hop upper pass and the unrolled layer-0
+    * beam rounds, rebuilt independently in DuckDB (same 6dp rounding,
+    * id tiebreaks, modulus samples). */
+  def hnswTopKSql(queryPred: String, k: Int, m: Int = 6,
+                  beamWidth: Int = 8, lowerRounds: Int = 3,
+                  cellsPerNode: Int = 2, layerMod: Int = 16,
+                  entryFactor: Int = 8,
+                  centroidPred: String = "vec_id % 97 = 0",
+                  nlist: Int = 128): String =
+    s"""WITH ${graphPreludeSql(queryPred, centroidPred, nlist)},
     u_members AS (
       -- sparse upper layer: md5-56 modulus sample of the corpus
       SELECT nid, cv, cn FROM cells
@@ -965,9 +910,6 @@ object Similarity {
     ${nswEdgesSqlCtes("u_", "u_members", m, cellsPerNode,
       "cc.nid + 7919")},
     ${nswEdgesSqlCtes("", "cells", m, cellsPerNode, "cc.nid")},
-    q AS (
-      SELECT vec_id AS query_id, v AS qv, nrm AS qn
-      FROM n WHERE $queryPred),
     entries AS (
       -- top-layer entry points: a sparser modulus sample of the upper
       -- sample, unioned with the centroid ids (graceful fallback)
@@ -978,12 +920,8 @@ object Similarity {
         UNION ALL SELECT cell_id AS cand FROM cent)),
     u_cand0 AS (
       SELECT query_id, cand FROM q CROSS JOIN entries),
-    ${
-      // the default two-round upper descent runs as ONE SHOT over the
-      // 1-or-2-hop reach of the entry set (the hnswTopK collapse,
-      // replayed verbatim); other round counts unroll classically
-      if (upperRounds == 2)
-        s"""u_reach AS (
+    u_reach AS (
+      -- the one-shot upper pass: the 1-or-2-hop reach of the entry set
       SELECT DISTINCT src, dst FROM (
         SELECT src, dst FROM u_edges
         UNION ALL
@@ -996,25 +934,15 @@ object Similarity {
         UNION ALL
         SELECT c.query_id, e.dst AS cand
         FROM u_cand0 c JOIN u_reach e ON c.cand = e.src)),
-    ${beamCte("u_", 1, "u_cand1")}"""
-      else
-        s"""${beamCte("u_", 0, "u_cand0")},
-    ${roundCtes("u_", upperRounds, "u_edges")}"""
-    },
+    ${beamCteSql("u_", 1, "u_cand1", beamWidth)},
     cand0 AS (
       SELECT DISTINCT query_id, cand FROM (
-        SELECT query_id, cand FROM u_beam${
-          if (upperRounds == 2) 1 else upperRounds}
+        SELECT query_id, cand FROM u_beam1
         UNION ALL
         SELECT query_id, cell_id AS cand FROM q CROSS JOIN cent)),
-    ${beamCte("", 0, "cand0")},
-    ${roundCtes("", lowerRounds, "edges")}
-    SELECT query_id, cand AS neighbor_id, cosine,
-      CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, cand) AS INTEGER) AS rank
-    FROM beam$lowerRounds
-    QUALIFY rank <= $k"""
-  }
+    ${beamCteSql("", 0, "cand0", beamWidth)},
+    ${beamRoundsSql("", lowerRounds, "edges", beamWidth)}
+    ${rankBeamSql(s"beam$lowerRounds", k)}"""
 
   /** One Lloyd ASSIGNMENT step: each corpus vector to its nearest
     * centroid by squared L2 (|v|² + |c|² − 2·v·c — three reuses of the
@@ -1044,14 +972,6 @@ object Similarity {
       .select(col(id), col("__best.__cid").as(cid), col("__best.__d2").as("d2"))
   }
 
-  /** Deterministic farthest-point seeding (the greedy half of
-    * k-means++): start from the lowest id, then repeatedly take the
-    * point with the largest distance to its nearest chosen seed.
-    * Immune to the all-seeds-in-one-cluster failure of random/hash
-    * sampling (which demonstrably collapses Lloyd into a tie-broken
-    * local optimum on well-separated clusters). Costs k-1 assignment
-    * passes — intended for small k; capped so nobody schedules 10k
-    * passes by accident. */
   /** k-center coreset summary: greedy farthest-point seeds
     * ([[farthestSeeds]] — the 2-approximation of the k-center
     * objective) plus the assignment of every vector to its nearest
@@ -1075,9 +995,17 @@ object Similarity {
       .agg(count(lit(1)).as("n_members"), max(col("d2")).as("radius_d2"))
   }
 
+  /** Deterministic farthest-point seeding (the greedy half of
+    * k-means++): start from the lowest id, then repeatedly take the
+    * point with the largest distance to its nearest chosen seed.
+    * Immune to the all-seeds-in-one-cluster failure of random/hash
+    * sampling (which demonstrably collapses Lloyd into a tie-broken
+    * local optimum on well-separated clusters). Costs k-1 assignment
+    * passes — intended for small k; capped so nobody schedules 10k
+    * passes by accident. */
   private def farthestSeeds(base: DataFrame, id: String, k: Int): DataFrame = {
-    require(k <= 64, s"farthest-point init runs k-1 corpus passes; k=$k " +
-      "is past sensible — use spread init for large nlist")
+    require(k <= 64, s"farthest-point seeding runs k-1 corpus passes; " +
+      s"k=$k is past sensible")
     var seeds = base.orderBy(col(id)).limit(1)
       .select(col(id).as("cid"), col("__bv").as("cvec"))
     for (i <- 1 until k) {
@@ -1094,57 +1022,6 @@ object Similarity {
       if (i % 8 == 0) seeds = seeds.localCheckpoint()
     }
     seeds
-  }
-
-  /** Distributed Lloyd k-means over an embedding column — the IVF
-    * index trainer ([[ivfTopK]] takes the fitted centroids unchanged).
-    *
-    * Init: `"spread"` (default) takes k vectors by xxhash64 order —
-    * one cheap pass, arbitrary-but-stable, the right choice for large
-    * nlist; `"farthest"` is greedy farthest-point ([[farthestSeeds]])
-    * — k-1 passes, use when cluster recovery matters more than init
-    * cost. Each iteration: one assignment pass + one mean recompute
-    * (posexplode → per-(cell, dim) avg → re-assembled array; per-group
-    * state is bounded by dim, never by corpus size). Cells that lose
-    * all members drop out (standard Lloyd shrinkage). Nothing collects
-    * to the driver; the returned frame is (cid, cvec: array<double>,
-    * n_members). */
-  def kmeansFit(corpus: DataFrame, id: String, vec: String,
-                k: Int, iters: Int, init: String = "spread"): DataFrame = {
-    require(k > 0 && iters >= 0, "k and iters must be positive")
-    val base = corpus.filter(col(vec).isNotNull)
-      .select(col(id), transform(col(vec), x => x.cast("double")).as("__bv"))
-      .cache()
-    var cents = (init match {
-      case "spread" => base.orderBy(xxhash64(col(id)), col(id)).limit(k)
-        .select(col(id).as("cid"), col("__bv").as("cvec"))
-      case "farthest" => farthestSeeds(base, id, k)
-      case other => throw new IllegalArgumentException(
-        s"unknown init '$other' (spread | farthest)")
-    }).withColumn("n_members", lit(1L))
-    for (_ <- 0 until iters) {
-      val assigned = kmeansAssign(base, cents, id, "__bv")
-        .select(col(id), col("cid"))
-      cents = assigned.join(base, id)
-        .select(col("cid"), posexplode(col("__bv")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(avg(col("col")).as("__m"), count(lit(1)).as("__n"))
-        .groupBy(col("cid"))
-        .agg(
-          transform(array_sort(collect_list(struct(col("pos"), col("__m")))),
-            s => s.getField("__m")).as("cvec"),
-          first(col("__n")).as("n_members"))
-    }
-    // centroids are k rows by definition (MLlib's KMeans likewise holds
-    // centers driver-side each iteration): materialize them so the
-    // corpus cache can be RELEASED instead of leaking per training run,
-    // and so the returned frame doesn't re-run every Lloyd iteration
-    // per downstream action
-    val spark = corpus.sparkSession
-    val out = spark.createDataFrame(
-      java.util.Arrays.asList(cents.collect(): _*), cents.schema)
-    base.unpersist()
-    out
   }
 
   /** Johnson-Lindenstrauss random projection to `outDim` dimensions with
@@ -1206,8 +1083,7 @@ object Similarity {
     * Deterministic, oracle-replayable codebook: the `codebookSize`
     * source vectors are a fixed-size hash-rank pick (md5 order →
     * TakeOrderedAndProject, scan-linear — the [[ivfTopK]] nlist
-    * discipline; a trained codebook drops in via [[kmeansFit]]), sliced
-    * into per-subspace centroids. Codes are argmin squared-L2 per
+    * discipline), sliced into per-subspace centroids. Codes are argmin squared-L2 per
     * subspace, ties to the smaller code.
     *
     * Scale shape: encoding is one corpus scan against a BROADCAST
@@ -1235,20 +1111,33 @@ object Similarity {
         transform(col("embedding"), x => x.cast("double")).as("cv"))
       .withColumn("code", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(pickKey: _*)) - 1)
-    val js = explode(sequence(lit(0), lit(m - 1)))
-    val centSub = cents.select(col("code"), js.as("j"), col("cv"))
+    val centSub = cents.select(col("code"), pqSubspaces(m).as("j"), col("cv"))
       .withColumn("csub", slice(col("cv"), col("j") * sub + 1, lit(sub)))
       .withColumn("cn", dot(col("csub"), col("csub")))
-      .select(col("code"), col("j"), col("csub"), col("cn"))
+      .select(col("j"), col("code"), col("csub"), col("cn"))
+    pqSearch(queries, corpus, k, centSub, m, sub)
+  }
+
+  /** One row per subspace index 0..m-1 (a generator column). */
+  private def pqSubspaces(m: Int): Column = explode(sequence(lit(0), lit(m - 1)))
+
+  /** The PQ encode + ADC search stage of [[pqTopK]] and
+    * [[pqTopKSubspace]] over a codebook frame (j, code, csub, cn) of
+    * m·codebookSize rows, broadcast into both the encode join and the
+    * LUT join so the corpus never shuffles for either. Encode: per
+    * (vector, subspace) argmin of the 6dp-rounded squared L2, ties to
+    * the smaller code. Search: a per-query integer micro-distance LUT,
+    * combinable ADC sums, per-query ranking on (adc_micro, id). */
+  private def pqSearch(queries: DataFrame, corpus: DataFrame, k: Int,
+                       centSub: DataFrame, m: Int, sub: Int): DataFrame = {
     def subspaced(df: DataFrame, idAs: String) =
       df.filter(col("embedding").isNotNull)
         .select(col("vec_id").as(idAs),
           transform(col("embedding"), x => x.cast("double")).as("__v"))
-        .select(col(idAs), js.as("j"), col("__v"))
+        .select(col(idAs), pqSubspaces(m).as("j"), col("__v"))
         .withColumn("vsub", slice(col("__v"), col("j") * sub + 1, lit(sub)))
         .withColumn("vn", dot(col("vsub"), col("vsub")))
         .drop("__v")
-    // encode: per-(vector, subspace) argmin over the broadcast codebook
     val codes = subspaced(corpus, "neighbor_id")
       .join(broadcast(centSub), Seq("j"))
       .withColumn("d2", round(
@@ -1258,7 +1147,7 @@ object Similarity {
       .select(col("neighbor_id"), col("j"), col("b.code").as("code"))
     // per-query LUT: query × subspace × code → micro distance
     val lut = subspaced(queries, "query_id")
-      .join(centSub, Seq("j"))
+      .join(broadcast(centSub), Seq("j"))
       .withColumn("d2m", round(
         (col("vn") + col("cn") - lit(2.0) * dot(col("vsub"), col("csub")))
           * lit(1e6)).cast("long"))
@@ -1294,23 +1183,21 @@ object Similarity {
     * LUT join, and without the materialization each consumer re-runs
     * the corpus-wide pick (the multi-consumer rule).
     *
-    * Encode/search are identical to [[pqTopK]]: broadcast-codebook
-    * argmin per (vector, subspace), per-query integer LUT, combinable
-    * ADC sums, per-query WindowGroupLimit ranking. Returns (query_id,
-    * neighbor_id, adc_micro, rank ≤ k); self-matches excluded. */
+    * Encode/search are [[pqTopK]]'s stage ([[pqSearch]]). Returns
+    * (query_id, neighbor_id, adc_micro, rank ≤ k); self-matches
+    * excluded. */
   def pqTopKSubspace(queries: DataFrame, corpus: DataFrame, k: Int,
                      m: Int = 8, codebookSize: Int = 16,
                      dim: Int = 64): DataFrame = {
     require(m > 0 && dim % m == 0, s"dim=$dim must split into m=$m subspaces")
     require(codebookSize > 0 && k > 0, "codebookSize and k must be positive")
     val sub = dim / m
-    val js = explode(sequence(lit(0), lit(m - 1)))
     val pickKey = md5(concat(col("vec_id").cast("string"), lit(":"),
       col("j").cast("string")))
     val wj = org.apache.spark.sql.expressions.Window
       .partitionBy(col("j")).orderBy(pickKey, col("vec_id"))
     val centSub = corpus.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), js.as("j"),
+      .select(col("vec_id"), pqSubspaces(m).as("j"),
         transform(col("embedding"), x => x.cast("double")).as("cv"))
       .withColumn("rk", row_number().over(wj))
       .filter(col("rk") <= codebookSize)
@@ -1319,36 +1206,7 @@ object Similarity {
       .withColumn("cn", dot(col("csub"), col("csub")))
       .select(col("j"), col("code"), col("csub"), col("cn"))
       .localCheckpoint(true)
-    def subspaced(df: DataFrame, idAs: String) =
-      df.filter(col("embedding").isNotNull)
-        .select(col("vec_id").as(idAs),
-          transform(col("embedding"), x => x.cast("double")).as("__v"))
-        .select(col(idAs), js.as("j"), col("__v"))
-        .withColumn("vsub", slice(col("__v"), col("j") * sub + 1, lit(sub)))
-        .withColumn("vn", dot(col("vsub"), col("vsub")))
-        .drop("__v")
-    val codes = subspaced(corpus, "neighbor_id")
-      .join(broadcast(centSub), Seq("j"))
-      .withColumn("d2", round(
-        col("vn") + col("cn") - lit(2.0) * dot(col("vsub"), col("csub")), 6))
-      .groupBy(col("neighbor_id"), col("j"))
-      .agg(min(struct(col("d2"), col("code"))).as("b"))
-      .select(col("neighbor_id"), col("j"), col("b.code").as("code"))
-    val lut = subspaced(queries, "query_id")
-      .join(broadcast(centSub), Seq("j"))
-      .withColumn("d2m", round(
-        (col("vn") + col("cn") - lit(2.0) * dot(col("vsub"), col("csub")))
-          * lit(1e6)).cast("long"))
-      .select(col("query_id"), col("j"), col("code"), col("d2m"))
-    val scored = codes.join(broadcast(lut), Seq("j", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("d2m")).as("adc_micro"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adc_micro"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
+    pqSearch(queries, corpus, k, centSub, m, sub)
   }
 
   /** IVF-PQ with RESIDUAL encoding — the composition serving stacks

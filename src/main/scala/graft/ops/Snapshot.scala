@@ -100,18 +100,6 @@ object Snapshot {
       .withColumn("valid_to", lit(null).cast("date"))
       .withColumn("is_current", lit(true))
 
-  /** Content diff of two corpus snapshots — the dataset-versioning
-    * audit run between releases (what changed since the run the model
-    * was trained on?): one row per id present in either snapshot whose
-    * content differs — `status ∈ {added, removed, changed}` — with the
-    * md5 content digests of both sides (NULL on the absent side).
-    * Unchanged entities are filtered out IN the join projection, so the
-    * output is bounded by the churn, not the corpus.
-    *
-    * Scale shape: digests are computed per row pre-shuffle, so the
-    * full-outer equi-join on `id` carries (id, 32-byte digest) — never
-    * the payloads; no window, no collect. At 100 TB, both sides prune
-    * to two thin columns at the scan. */
   /** CDC merge-apply — the lakehouse `MERGE INTO` / Debezium-sink
     * semantics: apply a change log of (key, seq, op ∈ I|U|D, payload)
     * rows to a snapshot, keeping only each key's LATEST change
@@ -140,6 +128,18 @@ object Snapshot {
     survivors.unionByName(upserts)
   }
 
+  /** Content diff of two corpus snapshots — the dataset-versioning
+    * audit run between releases (what changed since the run the model
+    * was trained on?): one row per id present in either snapshot whose
+    * content differs — `status ∈ {added, removed, changed}` — with the
+    * md5 content digests of both sides (NULL on the absent side).
+    * Unchanged entities are filtered out IN the join projection, so the
+    * output is bounded by the churn, not the corpus.
+    *
+    * Scale shape: digests are computed per row pre-shuffle, so the
+    * full-outer equi-join on `id` carries (id, 32-byte digest) — never
+    * the payloads; no window, no collect. At 100 TB, both sides prune
+    * to two thin columns at the scan. */
   def contentDiff(oldSnap: DataFrame, newSnap: DataFrame,
                   id: Column, payload: Column): DataFrame = {
     val o = oldSnap.select(id.as("id"), md5(payload).as("old_digest"))

@@ -6,8 +6,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.core.Confs
-
 /** The reference's operational REFRESH loop (populate.py:65–68: the
   * Airflow DAG re-runs monthly as new scrape files land) as an
   * INCREMENTAL fact maintenance pass: each tick discovers unprocessed
@@ -185,9 +183,7 @@ object Refresh {
     val fact = Warehouse.factListing(staged, stagingLocation)
 
     // dynamic overwrite: replace exactly the increment's months
-    Confs.withConf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic") {
-      Warehouse.writeFact(fact, dataDir(factDir), filesPerMonth)
-    }
+    Warehouse.writeFact(fact, dataDir(factDir), filesPerMonth)
 
     // schema sidecar: lets [[Refresh.fact]] stay readable when a tick
     // commits ZERO rows (every row filtered) — parquet then has no

@@ -29,13 +29,19 @@ object Warehouse {
     * bounds output at `filesPerMonth` files per partition directory
     * (each salt tuple lands in exactly one shuffle task); salt by the
     * listing id's hash so files stay balanced within a month. Size
-    * filesPerMonth ≈ month bytes / target file size (~128–512 MB). */
+    * filesPerMonth ≈ month bytes / target file size (~128–512 MB).
+    *
+    * The overwrite is DYNAMIC, set on this write alone (no session
+    * conf): it replaces exactly the months present in `fact` and
+    * leaves every other month directory under `path` in place — the
+    * commit unit of an incremental [[Refresh]] tick. */
   def writeFact(fact: DataFrame, path: String, filesPerMonth: Int = 1): Unit = {
     require(filesPerMonth > 0, "filesPerMonth must be positive")
     fact
       .repartition(col("file_year"), col("file_month"),
         pmod(hash(col("id")), lit(filesPerMonth)))
       .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("file_year", "file_month")
       .parquet(path)
   }

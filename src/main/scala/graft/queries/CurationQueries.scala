@@ -201,23 +201,8 @@ object CurationQueries {
       }
     },
     Some(s"""WITH exact AS (
-      WITH q AS (
-        SELECT vec_id AS query_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-        FROM embeddings WHERE vec_id < 10),
-      c AS (
-        SELECT vec_id AS neighbor_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        FROM embeddings),
-      scored AS (
-        SELECT query_id, neighbor_id,
-          ROUND(list_inner_product(qv, cv)
-            / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(cv, cv))),
-            6) AS cosine
-        FROM c, q WHERE query_id <> neighbor_id)
-      SELECT query_id, neighbor_id FROM scored
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) <= 5),
+      SELECT query_id, neighbor_id
+      FROM (${graft.ops.Similarity.bruteForceTopKSql("vec_id < 10", k = 5)})),
     approx AS (
       SELECT query_id AS aq, neighbor_id AS an
       FROM (${graft.ops.Similarity.lshTopKSql("vec_id < 10", k = 5)}))
@@ -1723,24 +1708,7 @@ object CurationQueries {
           Seq("spark", "window", "scan"), 20)})),
     dense AS (
       SELECT neighbor_id AS doc_id, rank AS rank_dense FROM (
-        WITH q AS (
-          SELECT vec_id AS query_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-          FROM embeddings WHERE vec_id = 0),
-        c AS (
-          SELECT vec_id AS neighbor_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-          FROM embeddings),
-        scored AS (
-          SELECT query_id, neighbor_id,
-            ROUND(list_inner_product(qv, cv)
-              / (sqrt(list_inner_product(qv, qv))
-                 * sqrt(list_inner_product(cv, cv))), 6) AS cosine
-          FROM c, q WHERE query_id <> neighbor_id)
-        SELECT neighbor_id,
-          CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-        FROM scored QUALIFY rank <= 20)),
+        ${Similarity.bruteForceTopKSql("vec_id = 0", k = 20)})),
     f AS (
       SELECT COALESCE(l.doc_id, de.doc_id) AS doc_id, rank_lex, rank_dense,
         ROUND(COALESCE(CAST(1 AS DOUBLE) / (60 + rank_lex), 0)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{Exact, Landing, Tables}
@@ -336,25 +337,7 @@ object ExtensionQueries {
       val emb = Tables.embeddings(s, d)
       Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
     },
-    Some("""WITH q AS (
-      SELECT vec_id AS query_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-      FROM embeddings WHERE vec_id < 10),
-    c AS (
-      SELECT vec_id AS neighbor_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-      FROM embeddings),
-    scored AS (
-      SELECT query_id, neighbor_id,
-        ROUND(list_inner_product(qv, cv)
-          / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(cv, cv))),
-          6) AS cosine
-      FROM c, q WHERE query_id <> neighbor_id)
-    SELECT query_id, neighbor_id, cosine,
-      CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id)
-        AS INTEGER) AS rank
-    FROM scored
-    QUALIFY rank <= 5"""))
+    Some(Similarity.bruteForceTopKSql("vec_id < 10", k = 5)))
 
   /** Hyperplane-LSH bucketed ANN top-5 — the scale path (equi-join on
     * the sign-signature bucket instead of a full scan per query). The
@@ -387,9 +370,7 @@ object ExtensionQueries {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb, k = 5,
-        centroids = emb.filter(col("vec_id") % 97 === 0)
-          .orderBy(col("vec_id")).limit(128),
-        nprobe = 4)
+        centroids = annCentroids(emb), nprobe = 4)
     },
     Some("""WITH v AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -434,6 +415,55 @@ object ExtensionQueries {
     FROM scored
     QUALIFY rank <= 5"""))
 
+  /** The IVF and graph-search rows' centroids: the modulus sample
+    * capped at nlist = 128 (`centroidPred`/`nlist` in the SQL replays). */
+  private def annCentroids(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") % 97 === 0).orderBy(col("vec_id")).limit(128)
+
+  /** The graph-search rows' top-5 over the vec_id < 10 batch at the
+    * swept parameters (m=12, beam 24), each with its DuckDB replay. */
+  private def nswTop5(emb: DataFrame): DataFrame =
+    Similarity.nswTopK(emb.filter(col("vec_id") < 10), emb, k = 5,
+      centroids = annCentroids(emb),
+      m = 12, beamWidth = 24, rounds = 4, cellsPerNode = 2)
+
+  private def nswTop5Sql: String = Similarity.nswTopKSql("vec_id < 10", k = 5,
+    m = 12, beamWidth = 24, rounds = 4, cellsPerNode = 2)
+
+  private def hnswTop5(emb: DataFrame): DataFrame =
+    Similarity.hnswTopK(emb.filter(col("vec_id") < 10), emb, k = 5,
+      centroids = annCentroids(emb),
+      m = 12, beamWidth = 24, lowerRounds = 3,
+      cellsPerNode = 2, layerMod = 16, entryFactor = 8)
+
+  private def hnswTop5Sql: String = Similarity.hnswTopKSql("vec_id < 10", k = 5,
+    m = 12, beamWidth = 24, lowerRounds = 3,
+    cellsPerNode = 2, layerMod = 16, entryFactor = 8)
+
+  /** Recall@5 of an ANN top-5 `got` over the vec_id < 10 batch against
+    * the exact brute-force top-5: one row (n_truth, n_hits,
+    * recall_at_5). */
+  private def recallAt5(emb: DataFrame, got: DataFrame): DataFrame =
+    Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
+      .select(col("query_id"), col("neighbor_id"))
+      .join(got.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
+        Seq("query_id", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_hits"))
+      .select(col("n_truth"), col("n_hits"),
+        round(col("n_hits").cast("double")
+          / col("n_truth").cast("double"), 6).as("recall_at_5"))
+
+  /** [[recallAt5]] in DuckDB over the ANN replay `gotSql`. */
+  private def recallAt5Sql(gotSql: String): String =
+    s"""WITH truth AS (${Similarity.bruteForceTopKSql("vec_id < 10", k = 5)}),
+    got AS ($gotSql)
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
+      CAST(COUNT(g.neighbor_id) AS BIGINT) AS n_hits,
+      ROUND(CAST(COUNT(g.neighbor_id) AS DOUBLE)
+        / CAST(COUNT(*) AS DOUBLE), 6) AS recall_at_5
+    FROM truth t LEFT JOIN got g
+      ON t.query_id = g.query_id AND t.neighbor_id = g.neighbor_id"""
+
   /** Graph-based ANN top-5 — fixed-round beam search over a bounded-
     * degree (m=12) neighbor graph with cross-cell bridge edges
     * (each node joins its top-2 cells during graph build), beam 24,
@@ -449,15 +479,8 @@ object ExtensionQueries {
     * `x_sim_nsw_recall` row (and SimilaritySpec). */
   private val x_sim_nsw_topk = Q(
     "x_sim_nsw_topk",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.nswTopK(emb.filter(col("vec_id") < 10), emb, k = 5,
-        centroids = emb.filter(col("vec_id") % 97 === 0)
-          .orderBy(col("vec_id")).limit(128),
-        m = 12, beamWidth = 24, rounds = 4, cellsPerNode = 2)
-    },
-    Some(Similarity.nswTopKSql("vec_id < 10", k = 5,
-      m = 12, beamWidth = 24, rounds = 4, cellsPerNode = 2)))
+    (s, d) => nswTop5(Tables.embeddings(s, d)),
+    Some(nswTop5Sql))
 
   /** Recall@5 of the NSW beam search against the exact brute-force
     * top-5 — ONE summary row (n_truth, n_hits, recall_at_5), the
@@ -469,72 +492,24 @@ object ExtensionQueries {
     "x_sim_nsw_recall",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val truth = Similarity
-        .bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val got = Similarity.nswTopK(emb.filter(col("vec_id") < 10), emb,
-          k = 5, centroids = emb.filter(col("vec_id") % 97 === 0)
-            .orderBy(col("vec_id")).limit(128),
-          m = 12, beamWidth = 24, rounds = 4, cellsPerNode = 2)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      truth.join(got, Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_hits"))
-        .select(col("n_truth"), col("n_hits"),
-          round(col("n_hits").cast("double")
-            / col("n_truth").cast("double"), 6).as("recall_at_5"))
+      recallAt5(emb, nswTop5(emb))
     },
-    Some(s"""WITH truth AS (
-      WITH q AS (
-        SELECT vec_id AS query_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-        FROM embeddings WHERE vec_id < 10),
-      c AS (
-        SELECT vec_id AS neighbor_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        FROM embeddings),
-      scored AS (
-        SELECT query_id, neighbor_id,
-          ROUND(list_inner_product(qv, cv)
-            / (sqrt(list_inner_product(qv, qv))
-              * sqrt(list_inner_product(cv, cv))), 6) AS cosine
-        FROM c, q WHERE query_id <> neighbor_id)
-      SELECT query_id, neighbor_id,
-        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-          ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-      FROM scored
-      QUALIFY rank <= 5),
-    got AS (${Similarity.nswTopKSql("vec_id < 10", k = 5,
-      m = 12, beamWidth = 24, rounds = 4, cellsPerNode = 2)})
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-      CAST(COUNT(g.neighbor_id) AS BIGINT) AS n_hits,
-      ROUND(CAST(COUNT(g.neighbor_id) AS DOUBLE)
-        / CAST(COUNT(*) AS DOUBLE), 6) AS recall_at_5
-    FROM truth t LEFT JOIN got g
-      ON t.query_id = g.query_id AND t.neighbor_id = g.neighbor_id"""))
+    Some(recallAt5Sql(nswTop5Sql)))
 
   /** Hierarchical NSW top-5 (the HNSW shape — round-7 verdict ask #5):
     * one sparse upper layer (md5-56 modulus sample, 1/16 of the
-    * corpus) with its own bounded-degree graph; search beams 2 rounds
-    * over the upper layer from the sparser entry sample (∪ centroids),
-    * then descends — the upper beam seeds 3 layer-0 rounds. Same edge
-    * budget (m=12) and beam width (24) as `x_sim_nsw_topk`; the win is
-    * better ENTRY points than fixed centroid seeds. Every phase is
-    * deterministic, so Similarity.hnswTopKSql replays both layer
-    * graphs and both beam descents in DuckDB. Recall companion:
-    * `x_sim_hnsw_recall`. */
+    * corpus) with its own bounded-degree graph; search takes one
+    * two-hop pass over the upper layer from the sparser entry sample
+    * (∪ centroids), then descends — the upper beam seeds 3 layer-0
+    * rounds. Same edge budget (m=12) and beam width (24) as
+    * `x_sim_nsw_topk`; the win is better ENTRY points than fixed
+    * centroid seeds. Every phase is deterministic, so
+    * Similarity.hnswTopKSql replays both layer graphs and both
+    * descents in DuckDB. Recall companion: `x_sim_hnsw_recall`. */
   private val x_sim_hnsw_topk = Q(
     "x_sim_hnsw_topk",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.hnswTopK(emb.filter(col("vec_id") < 10), emb, k = 5,
-        centroids = emb.filter(col("vec_id") % 97 === 0)
-          .orderBy(col("vec_id")).limit(128),
-        m = 12, beamWidth = 24, upperRounds = 2, lowerRounds = 3,
-        cellsPerNode = 2, layerMod = 16, entryFactor = 8)
-    },
-    Some(Similarity.hnswTopKSql("vec_id < 10", k = 5,
-      m = 12, beamWidth = 24, upperRounds = 2, lowerRounds = 3,
-      cellsPerNode = 2, layerMod = 16, entryFactor = 8)))
+    (s, d) => hnswTop5(Tables.embeddings(s, d)),
+    Some(hnswTop5Sql))
 
   /** Recall@5 of the hierarchical beam search against exact brute
     * force — one summary row, fully SQL-replayed on both sides (the
@@ -544,50 +519,9 @@ object ExtensionQueries {
     "x_sim_hnsw_recall",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val truth = Similarity
-        .bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val got = Similarity.hnswTopK(emb.filter(col("vec_id") < 10), emb,
-          k = 5, centroids = emb.filter(col("vec_id") % 97 === 0)
-            .orderBy(col("vec_id")).limit(128),
-          m = 12, beamWidth = 24, upperRounds = 2, lowerRounds = 3,
-          cellsPerNode = 2, layerMod = 16, entryFactor = 8)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-      truth.join(got, Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_hits"))
-        .select(col("n_truth"), col("n_hits"),
-          round(col("n_hits").cast("double")
-            / col("n_truth").cast("double"), 6).as("recall_at_5"))
+      recallAt5(emb, hnswTop5(emb))
     },
-    Some(s"""WITH truth AS (
-      WITH q AS (
-        SELECT vec_id AS query_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-        FROM embeddings WHERE vec_id < 10),
-      c AS (
-        SELECT vec_id AS neighbor_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-        FROM embeddings),
-      scored AS (
-        SELECT query_id, neighbor_id,
-          ROUND(list_inner_product(qv, cv)
-            / (sqrt(list_inner_product(qv, qv))
-              * sqrt(list_inner_product(cv, cv))), 6) AS cosine
-        FROM c, q WHERE query_id <> neighbor_id)
-      SELECT query_id, neighbor_id,
-        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-          ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-      FROM scored
-      QUALIFY rank <= 5),
-    got AS (${Similarity.hnswTopKSql("vec_id < 10", k = 5,
-      m = 12, beamWidth = 24, upperRounds = 2, lowerRounds = 3,
-      cellsPerNode = 2, layerMod = 16, entryFactor = 8)})
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-      CAST(COUNT(g.neighbor_id) AS BIGINT) AS n_hits,
-      ROUND(CAST(COUNT(g.neighbor_id) AS DOUBLE)
-        / CAST(COUNT(*) AS DOUBLE), 6) AS recall_at_5
-    FROM truth t LEFT JOIN got g
-      ON t.query_id = g.query_id AND t.neighbor_id = g.neighbor_id"""))
+    Some(recallAt5Sql(hnswTop5Sql)))
 
   /** One Lloyd k-means assignment step over the embeddings — the IVF
     * index trainer's inner loop (Similarity.kmeansAssign), oracle-
@@ -600,11 +534,7 @@ object ExtensionQueries {
     * with the corpus, making this O(corpus²/97) — the 100× scale step
     * measured 56×. With k pinned at 128 the step is O(corpus × 128),
     * the same nlist discipline as [[Similarity.ivfTopK]]. Both engines
-    * emit identical lowercase md5 hex, so DuckDB replays the pick. The
-    * full iterative trainer (Similarity.kmeansFit) is proven in
-    * SimilaritySpec (monotone within-cluster-variance descent + exact
-    * recovery of planted clusters), since iteration count isn't
-    * SQL-expressible. */
+    * emit identical lowercase md5 hex, so DuckDB replays the pick. */
   private val x_kmeans_step = Q(
     "x_kmeans_step",
     (s, d) => {

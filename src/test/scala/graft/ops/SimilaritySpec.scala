@@ -108,54 +108,17 @@ class SimilaritySpec extends SparkSpec {
     assert(approx.forall { case (a, b) => a != b })
   }
 
-  test("kmeansFit recovers planted clusters exactly") {
-    // three tight clusters far apart; any sane Lloyd run must separate
-    // them perfectly within 3 iterations from any 3 distinct seeds
-    val pts = (0 until 30).map { i =>
-      val center = i % 3 * 100.0
-      (i.toLong, Seq(center + (i / 3) * 0.1, center - (i / 3) * 0.1))
-    }
-    val df = pts.toDF("vec_id", "embedding")
-    val cents = Similarity.kmeansFit(df, "vec_id", "embedding", k = 3, iters = 3,
-      init = "farthest")
-    val assigned = Similarity.kmeansAssign(df, cents, "vec_id", "embedding")
-    // each planted cluster maps to exactly one fitted cell
-    val purity = assigned
-      .withColumn("planted", $"vec_id" % 3)
-      .groupBy($"planted").agg(countDistinct($"cid").as("cells"))
-      .select("cells").as[Long].collect()
-    assert(purity.forall(_ == 1L), s"clusters split across cells: ${purity.toSeq}")
-    assert(cents.count() == 3)
-    assert(cents.select(sum($"n_members")).as[Long].head() == 30L)
-  }
-
   test("farthest init past the checkpoint threshold: k=12 seeds are 12 distinct points") {
     // 12 well-separated points on a line; greedy farthest-point with
     // k = n must select every point exactly once, and the k > 8 path
     // crosses the periodic localCheckpoint lineage truncation
     val pts = (0 until 12).map(i => (i.toLong, Seq(i * 1000.0, 0.0)))
     val df = pts.toDF("vec_id", "embedding")
-    val cents = Similarity.kmeansFit(df, "vec_id", "embedding", k = 12, iters = 0,
-      init = "farthest")
-    assert(cents.select("cid").as[Long].collect().toSet == (0L until 12L).toSet)
-  }
-
-  test("ivfTopK composes with kmeansFit: trained cells match or beat sampled cells") {
-    val emb = Tables.embeddings(spark, sf001)
-    val q = emb.filter($"vec_id" < 20)
-    val exact = Similarity.bruteForceTopK(q, emb, k = 5)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    def recall(cents: org.apache.spark.sql.DataFrame): Double = {
-      val got = Similarity.ivfTopK(q, emb, k = 5,
-        centroids = cents, nprobe = 3)
-        .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-      (exact & got).size.toDouble / exact.size
-    }
-    val sampled = emb.filter($"vec_id" % 37 === 0).orderBy($"vec_id").limit(12)
-    val trained = Similarity.kmeansFit(emb, "vec_id", "embedding", k = 12, iters = 3)
-      .select($"cid".as("vec_id"), $"cvec".as("embedding"))
-    val (rs, rt) = (recall(sampled), recall(trained))
-    assert(rt >= rs - 0.05, f"trained centroids regressed recall: $rt%.2f vs $rs%.2f")
+    val out = Similarity.kCenterCoreset(df, "vec_id", "embedding", k = 12)
+      .select("cid", "n_members").as[(Long, Long)].collect()
+    assert(out.length == 12, s"expected 12 seeds, got ${out.toSeq}")
+    assert(out.map(_._1).toSet == (0L until 12L).toSet)
+    assert(out.forall(_._2 == 1L), s"a seed covers more than itself: ${out.toSeq}")
   }
 
   test("semanticDedup: planted clusters — reps, flags, tie and zero-norm rules") {
@@ -177,18 +140,6 @@ class SimilaritySpec extends SparkSpec {
       (2L, 100L, 1L, true),
       (6L, 100L, 1L, false),
       (5L, 200L, 4L, true)))
-  }
-
-  test("kmeansFit: within-cluster variance descends monotonically (real embeddings)") {
-    val emb = Tables.embeddings(spark, sf001)
-    def wcss(iters: Int): Double = {
-      val cents = Similarity.kmeansFit(emb, "vec_id", "embedding", k = 8, iters = iters)
-      Similarity.kmeansAssign(emb, cents, "vec_id", "embedding")
-        .agg(sum($"d2")).as[Double].head()
-    }
-    val costs = Seq(wcss(0), wcss(1), wcss(3))
-    assert(costs.sliding(2).forall { case Seq(a, b) => b <= a + 1e-6 },
-      s"WCSS not monotone: $costs")
   }
 
   test("randomProject: one-hot input reads out one ±1e6 sign per output dim") {
@@ -519,7 +470,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf001)
     val q = emb.filter($"vec_id" < 10)
     val out = Similarity.hnswTopK(q, emb, k = 5, centroids = nswCents(emb),
-        m = 12, beamWidth = 24, upperRounds = 2, lowerRounds = 4,
+        m = 12, beamWidth = 24, lowerRounds = 4,
         cellsPerNode = 2, layerMod = 16, entryFactor = 8)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect()
@@ -540,7 +491,7 @@ class SimilaritySpec extends SparkSpec {
         m = 12, beamWidth = 24, rounds = 4, cellsPerNode = 2)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val hier = Similarity.hnswTopK(q, emb, k = 5, centroids = nswCents(emb),
-        m = 12, beamWidth = 24, upperRounds = 2, lowerRounds = 4,
+        m = 12, beamWidth = 24, lowerRounds = 4,
         cellsPerNode = 2, layerMod = 16, entryFactor = 8)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val rFlat = (exact & flat).size.toDouble / exact.size
@@ -556,7 +507,7 @@ class SimilaritySpec extends SparkSpec {
     val q = emb.filter($"vec_id" < 10)
     def run(c: org.apache.spark.sql.DataFrame) =
       Similarity.hnswTopK(q, c, k = 5, centroids = nswCents(emb),
-          m = 12, beamWidth = 24, upperRounds = 2, lowerRounds = 3,
+          m = 12, beamWidth = 24, lowerRounds = 3,
           cellsPerNode = 2, layerMod = 16, entryFactor = 8)
         .select("query_id", "neighbor_id", "rank")
         .as[(Long, Long, Int)].collect().toSet

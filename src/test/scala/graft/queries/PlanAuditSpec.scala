@@ -418,6 +418,27 @@ class PlanAuditSpec extends SparkSpec {
       s"no aggregate under the candidate stage:\n$p")
   }
 
+  test("x_sim_pq_adc / x_sim_pq_subspace: every codebook and LUT join is a broadcast hash join") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val helper = new AdaptiveSparkPlanHelper {}
+    Seq("x_sim_pq_adc", "x_sim_pq_subspace").foreach { n =>
+      val df = Registry.queries(n)(spark, sf001)
+      df.collect() // read the final adaptive plan
+      val p = df.queryExecution.executedPlan
+      val exchanges = helper.collectWithSubqueries(p) { case e: ShuffleExchangeLike => e }.size
+      val broadcasts = helper.collectWithSubqueries(p) { case e: BroadcastExchangeLike => e }.size
+      info(s"$n: $exchanges exchanges, $broadcasts broadcasts")
+      // encode (corpus ⋈ codebook), LUT (queries ⋈ codebook) and ADC
+      // (codes ⋈ LUT): the bounded side builds, the corpus streams
+      val joins = helper.collectWithSubqueries(p) { case j: BaseJoinExec => j }
+      assert(joins.size == 3, s"$n: expected 3 joins, got ${joins.size}:\n$p")
+      assert(joins.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+        s"$n: a codebook or LUT join is not a broadcast hash join:\n$p")
+    }
+  }
+
   test("single-partition-window detector positive control") {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
