@@ -392,9 +392,10 @@ object Kernels {
   }
 
   /** Poisson(1) inverse-CDF thresholds on the 56-bit hash scale,
-    * truncated at k = 6 — the same derivation as
-    * `Sampling.PoissonThresholds` (SamplingSpec pins the two equal). */
-  private val poissonThresholds56: Array[Long] = {
+    * truncated at k = 6: a uniform 56-bit draw u has weight k for the
+    * first k with u < thresholds(k), else 6. The one table both
+    * [[bootstrapRow]] and `Sampling.bootstrapMeanCiSql` draw from. */
+  private[graft] val poissonThresholds56: Array[Long] = {
     val eInv = math.exp(-1.0)
     val fact = Array(1L, 1L, 2L, 6L, 24L, 120L)
     val two56 = math.pow(2, 56)

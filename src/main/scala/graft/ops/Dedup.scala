@@ -632,6 +632,24 @@ object Dedup {
     labels
   }
 
+  /** DuckDB CTE chain computing [[connectedComponents]] of the pairs in
+    * `pairsCte` (columns `a`, `b`) independently, as a transitive
+    * closure — not a replay of either Spark path. The caller opens its
+    * `WITH RECURSIVE`; the final CTE `__cc_out (node, cluster_id)` has
+    * one row per node appearing in the pairs, labelled with its
+    * component's minimum node id. */
+  def connectedComponentsSql(pairsCte: String, a: String, b: String): String =
+    s"""__cc_edges AS (
+      SELECT $a AS src, $b AS dst FROM $pairsCte
+      UNION SELECT $b, $a FROM $pairsCte),
+    __cc_reach AS (
+      SELECT src, dst FROM __cc_edges
+      UNION
+      SELECT r.src, e.dst FROM __cc_reach r JOIN __cc_edges e ON r.dst = e.src),
+    __cc_out AS (
+      SELECT src AS node, least(src, min(dst)) AS cluster_id
+      FROM __cc_reach GROUP BY src)"""
+
   /** Single-task exact union-find over a bounded (src, dst) long edge
     * list. Union by min root, so every root is its component's minimum
     * id — the same canonical representative the iterative path yields

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * Web-scale corpus curation weights pages by link importance before
   * sampling (the original PageRank use case: rank CommonCrawl hosts,
   * keep the head); this is the batch-iterative companion to the
-  * connected-components machinery in [[Dedup.clusters]].
+  * connected-components machinery in [[Dedup.connectedComponents]].
   */
 object Graph {
 
@@ -20,9 +20,9 @@ object Graph {
     * divisions `r div deg`, and the damping blend is `(s*85) div 100`.
     * Every operation is order-independent integer math, so the result
     * is bit-exact across engines and partitionings — a SQL engine can
-    * replay the whole iteration unrolled (no float-summation drift),
-    * which makes an approximate-looking iterative algorithm fully
-    * oracle-checkable.
+    * replay the whole iteration unrolled ([[pageRankFixedPointSql]]; no
+    * float-summation drift), which makes an approximate-looking
+    * iterative algorithm fully oracle-checkable.
     *
     * `edges` is a DIRECTED (src, dst) list; callers wanting undirected
     * semantics union both directions first. Nodes are the distinct
@@ -30,17 +30,60 @@ object Graph {
     * redistribution pass; symmetrized graphs satisfy this by
     * construction).
     *
+    * Uniform PageRank is [[pageRankPersonalized]] with every node a
+    * seed: the teleport vector is p = FP div n_nodes everywhere, so
+    * (p·(100−d)) div 100 is the uniform teleport term in the same
+    * integer arithmetic, and both run one loop ([[pageRankLoop]]).
+    *
     * Scale shape: degrees and the node count are computed once; each
     * iteration is one equi-join of edges to the current ranks (hashed
     * on the SAME node key the previous iteration's aggregate produced,
     * so the exchange is reusable) plus one map-side-combinable sum by
-    * dst. The static degree frame re-enters every iteration through an
-    * identical shuffle subtree, which Spark collapses to a single
-    * ReusedExchange; nothing is collected to the driver and no
+    * dst. The static (node, deg, p) frame re-enters every iteration
+    * through an identical shuffle subtree, which Spark collapses to a
+    * single ReusedExchange; nothing is collected to the driver and no
     * iteration sees more than |edges| rows.
     */
   def pageRankFixedPoint(edgesIn: DataFrame, iters: Int,
-                         damping: Int = 85): DataFrame = {
+                         damping: Int = 85): DataFrame =
+    pageRankLoop(edgesIn, iters, damping) { deg =>
+      deg.crossJoin(broadcast(deg.agg(count(lit(1)).as("n_nodes"))))
+        .withColumn("p", expr(s"$RankFp div n_nodes"))
+        .drop("n_nodes")
+    }
+
+  /** Personalized (topic-sensitive) PageRank: the teleport mass lands
+    * on a SEED set instead of uniformly — ranks then measure proximity
+    * to the seeds (trust propagation from vetted domains, "more like
+    * these" corpus expansion), not global importance. Same integer
+    * fixed-point arithmetic as [[pageRankFixedPoint]] (bit-exact,
+    * unrolled-SQL replayable by [[pageRankPersonalizedSql]]):
+    * r₀ = p = FP div |seeds| on seeds else 0, and each round
+    * r' = (p·(100−d)) div 100 + (Σ contribs · d) div 100. Seeds outside
+    * the node domain are dropped (inner join); node domain is distinct
+    * `src`, so every node has out-degree ≥ 1 (symmetrize first, as with
+    * the uniform variant). Scale shape identical to
+    * [[pageRankFixedPoint]]. */
+  def pageRankPersonalized(edgesIn: DataFrame, seedsIn: DataFrame,
+                           iters: Int, damping: Int = 85): DataFrame =
+    pageRankLoop(edgesIn, iters, damping) { deg =>
+      val seeds = seedsIn.select(col("node")).distinct()
+        .join(deg.select(col("node")), Seq("node"))
+        .withColumn("is_seed", lit(1))
+      deg.join(seeds, Seq("node"), "left")
+        .crossJoin(broadcast(seeds.agg(count(lit(1)).as("n_seeds"))))
+        .withColumn("p", when(col("is_seed") === 1,
+          expr(s"$RankFp div n_seeds")).otherwise(lit(0L)))
+        .drop("is_seed", "n_seeds")
+    }
+
+  /** The fixed-point loop both [[pageRankFixedPoint]] and
+    * [[pageRankPersonalized]] run: `teleport` turns the (node, deg)
+    * out-degree frame into the (node, deg, p) teleport vector; ranks
+    * start at p and each round is r' = (p·(100−d)) div 100 +
+    * (Σ contribs · d) div 100. */
+  private def pageRankLoop(edgesIn: DataFrame, iters: Int, damping: Int)(
+      teleport: DataFrame => DataFrame): DataFrame = {
     require(iters >= 1, s"need iters >= 1, got $iters")
     require(damping > 0 && damping < 100, s"need 0 < damping < 100, got $damping")
     // Co-partitioned iteration (round 10): the edge list is hash-
@@ -60,85 +103,79 @@ object Graph {
     val edges = edgesIn.repartition(col("src")).localCheckpoint(true)
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
-    val n = deg.agg(count(lit(1)).as("n_nodes"))
-    // (node, deg, n_nodes): the loop-invariant frame, consumed by every
-    // round's rank rebuild — checkpointed so the degree aggregate runs
-    // once, not once per consumer
-    val base = deg.crossJoin(broadcast(n)).localCheckpoint(true)
-    val teleport = expr(s"(($RankFp div n_nodes) * ${100 - damping}) div 100")
-    var ranks = base.withColumn("r", expr(s"$RankFp div n_nodes"))
-    for (_ <- 1 to iters) {
-      // shuffle_hash: co-partitioned sides -> exchange-free AND
-      // sort-free (SMJ would re-sort the static edge list per round)
-      val contribs = edges
-        .join(ranks.select(col("node"), col("deg"), col("r"))
-            .hint("shuffle_hash"),
-          edges("src") === col("node"))
-        .select(col("dst").as("node"), expr("r div deg").as("contrib"))
-      val sums = contribs.groupBy(col("node"))
-        .agg(sum(col("contrib")).as("s"))
-      ranks = base.join(sums.hint("shuffle_hash"), Seq("node"), "left")
-        .withColumn("r",
-          teleport + expr(s"(coalesce(s, 0L) * $damping) div 100"))
-        .drop("s")
-    }
-    ranks.select(col("node"), col("deg"), col("r").as("rank_fp"))
-  }
-
-  /** Personalized (topic-sensitive) PageRank: the teleport mass lands
-    * on a SEED set instead of uniformly — ranks then measure proximity
-    * to the seeds (trust propagation from vetted domains, "more like
-    * these" corpus expansion), not global importance. Same integer
-    * fixed-point arithmetic as [[pageRankFixedPoint]] (bit-exact,
-    * unrolled-SQL replayable): r₀ = FP div |seeds| on seeds else 0, and
-    * each round r' = (p·(100−d)) div 100 + (Σ contribs · d) div 100
-    * with p the personalization vector. Seeds outside the node domain
-    * are dropped (inner join); node domain is distinct `src`, so every
-    * node has out-degree ≥ 1 (symmetrize first, as with the uniform
-    * variant). Scale shape identical to [[pageRankFixedPoint]]: the
-    * loop-invariant (node, deg, p) frame re-enters each round through
-    * one reusable exchange; per-round work is one equi-join + one
-    * combinable sum. */
-  def pageRankPersonalized(edgesIn: DataFrame, seedsIn: DataFrame,
-                           iters: Int, damping: Int = 85): DataFrame = {
-    require(iters >= 1, s"need iters >= 1, got $iters")
-    require(damping > 0 && damping < 100, s"need 0 < damping < 100, got $damping")
-    // co-partitioned AQE-planned iteration — see
-    // [[pageRankFixedPoint]]'s note
-    val edges = edgesIn.repartition(col("src")).localCheckpoint(true)
-    val deg = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    val seeds = seedsIn.select(col("node")).distinct()
-      .join(deg.select(col("node")), Seq("node"))
-      .withColumn("is_seed", lit(1))
-    val ns = seeds.agg(count(lit(1)).as("n_seeds"))
-    // node-sized loop invariant, consumed by every round's join AND the
-    // rank init — materialize ONCE or the seed derivation (often a
-    // table scan upstream) re-executes per iteration (measured
-    // 112.7 s → 73.0 s at the 100× step for 3 rounds)
-    val base = deg
-      .join(seeds.select(col("node"), col("is_seed")), Seq("node"), "left")
-      .crossJoin(broadcast(ns))
-      .withColumn("p", when(col("is_seed") === 1,
-        expr(s"$RankFp div n_seeds")).otherwise(lit(0L)))
-      .drop("is_seed")
-      .localCheckpoint(true)
+    // (node, deg, p): the node-sized loop invariant, consumed by every
+    // round's rank rebuild AND the rank init — materialize ONCE or the
+    // degree aggregate and the seed derivation (often a table scan
+    // upstream) re-execute per iteration (measured 112.7 s → 73.0 s at
+    // the 100× step for 3 rounds)
+    val base = teleport(deg).localCheckpoint(true)
     var ranks = base.withColumn("r", col("p"))
     for (_ <- 1 to iters) {
-      val contribs = edges
-        .join(ranks.select(col("node"), col("deg"), col("r"))
-            .hint("shuffle_hash"),
-          edges("src") === col("node"))
-        .select(col("dst").as("node"), expr("r div deg").as("contrib"))
-      val sums = contribs.groupBy(col("node"))
-        .agg(sum(col("contrib")).as("s"))
-      ranks = base.join(sums.hint("shuffle_hash"), Seq("node"), "left")
+      ranks = base.join(rankMessages(edges, ranks).hint("shuffle_hash"),
+          Seq("node"), "left")
         .withColumn("r",
           expr(s"(p * ${100 - damping}) div 100") +
             expr(s"(coalesce(s, 0L) * $damping) div 100"))
         .drop("s")
     }
     ranks.select(col("node"), col("deg"), col("r").as("rank_fp"))
+  }
+
+  /** One PageRank round's messages: each node's rank split over its
+    * out-edges (`r div deg`), summed by dst — (node, s). A node with
+    * out-degree 0 has no edge to join, so it sends nothing. */
+  private def rankMessages(edges: DataFrame, ranks: DataFrame): DataFrame =
+    // shuffle_hash: co-partitioned sides -> exchange-free AND sort-free
+    // (SMJ would re-sort the static edge list per round)
+    edges
+      .join(ranks.select(col("node"), col("deg"), col("r")).hint("shuffle_hash"),
+        edges("src") === col("node"))
+      .select(col("dst").as("node"), expr("r div deg").as("contrib"))
+      .groupBy(col("node")).agg(sum(col("contrib")).as("s"))
+
+  /** DuckDB replay of [[pageRankFixedPoint]] over the caller's
+    * `edgesCte` (src, dst): `__pr_*` CTEs ending in
+    * `__pr_out (node, deg, rank_fp)`. */
+  def pageRankFixedPointSql(edgesCte: String, iters: Int,
+                            damping: Int = 85): String =
+    pageRankLoopSql(edgesCte, iters, damping,
+      s"""__pr_base AS (
+      SELECT node, deg, $RankFp // n_nodes AS p
+      FROM __pr_deg CROSS JOIN (SELECT COUNT(*) AS n_nodes FROM __pr_deg))""")
+
+  /** DuckDB replay of [[pageRankPersonalized]] over the caller's
+    * `edgesCte` (src, dst) and `seedsCte` (node): `__pr_*` CTEs ending
+    * in `__pr_out (node, deg, rank_fp)`. */
+  def pageRankPersonalizedSql(edgesCte: String, seedsCte: String, iters: Int,
+                              damping: Int = 85): String =
+    pageRankLoopSql(edgesCte, iters, damping,
+      s"""__pr_seeds AS (
+      SELECT DISTINCT s.node FROM $seedsCte s JOIN __pr_deg d ON s.node = d.node),
+    __pr_base AS (
+      SELECT d.node, d.deg,
+        CASE WHEN s.node IS NOT NULL THEN $RankFp // n_seeds ELSE 0 END AS p
+      FROM __pr_deg d LEFT JOIN __pr_seeds s ON d.node = s.node
+      CROSS JOIN (SELECT COUNT(*) AS n_seeds FROM __pr_seeds))""")
+
+  /** [[pageRankLoop]] unrolled: `teleportCtes` read `__pr_deg`
+    * (node, deg) and define `__pr_base` (node, deg, p). */
+  private def pageRankLoopSql(edgesCte: String, iters: Int, damping: Int,
+                              teleportCtes: String): String = {
+    val rounds = (1 to iters).map { i =>
+      s"""__pr_c$i AS (
+      SELECT e.dst AS node, CAST(SUM(r.r // r.deg) AS BIGINT) AS s
+      FROM $edgesCte e JOIN __pr_r${i - 1} r ON e.src = r.node GROUP BY 1),
+    __pr_r$i AS (
+      SELECT b.node, b.deg, b.p,
+        (b.p * ${100 - damping}) // 100 + (COALESCE(c.s, 0) * $damping) // 100 AS r
+      FROM __pr_base b LEFT JOIN __pr_c$i c ON c.node = b.node)"""
+    }
+    (Seq(
+      s"__pr_deg AS (SELECT src AS node, COUNT(*) AS deg FROM $edgesCte GROUP BY 1)",
+      teleportCtes,
+      "__pr_r0 AS (SELECT node, deg, p, p AS r FROM __pr_base)") ++ rounds :+
+      s"__pr_out AS (SELECT node, deg, r AS rank_fp FROM __pr_r$iters)")
+      .mkString(",\n    ")
   }
 
   /** General PageRank for DIRECTED graphs: node domain is src ∪ dst,
@@ -174,7 +211,7 @@ object Graph {
     require(maxIters >= 1, s"need maxIters >= 1, got $maxIters")
     require(damping > 0 && damping < 100, s"need 0 < damping < 100, got $damping")
     // co-partitioned AQE-planned iteration — see
-    // [[pageRankFixedPoint]]'s note. The rank frame is node-keyed and
+    // [[pageRankLoop]]'s note. The rank frame is node-keyed and
     // checkpointed per round (partitioning preserved), so the
     // contribution join exchanges nothing beyond what AQE coalesces.
     val edges = edgesIn.repartition(col("src")).localCheckpoint(true)
@@ -193,17 +230,11 @@ object Graph {
     var converged = false
     while (used < maxIters && !converged) {
       val cur = ranks
-      val contribs = edges
-        .join(cur.filter(col("deg") > 0)
-            .select(col("node"), col("deg"), col("r")).hint("shuffle_hash"),
-          edges("src") === col("node"))
-        .select(col("dst").as("node"), expr("r div deg").as("contrib"))
-      val sums = contribs.groupBy(col("node")).agg(sum(col("contrib")).as("s"))
       // dangling mass: a 1-row aggregate, broadcast back in (never collected)
       val dang = cur.filter(col("deg") === 0)
         .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
       val next = cur.withColumnRenamed("r", "r_prev")
-        .join(sums.hint("shuffle_hash"), Seq("node"), "left")
+        .join(rankMessages(edges, cur).hint("shuffle_hash"), Seq("node"), "left")
         .crossJoin(broadcast(dang))
         .withColumn("r", teleport +
           expr(s"((coalesce(s, 0L) + (dang div n_nodes)) * $damping) div 100"))

@@ -404,20 +404,6 @@ object Sampling {
     * never does. The quantile runs over the `replicas`-row frame.
     * Returns one row: n, point, ci_lo, ci_hi (value units, 6 dp),
     * n_replicas. */
-  val PoissonThresholds: Seq[(Long, Int)] = {
-    val eInv = math.exp(-1.0)
-    val fact = Seq(1L, 1L, 2L, 6L, 24L, 120L)
-    val cdf = fact.indices.map(k =>
-      (0 to k).map(j => eInv / fact(j)).sum)
-    val two56 = math.pow(2, 56)
-    cdf.zipWithIndex.map { case (c, k) => (math.floor(c * two56).toLong, k) }
-  }
-
-  def poissonWeight(u: Column): Column =
-    PoissonThresholds.foldRight(lit(6)) {
-      case ((t, k), acc) => when(u < t, lit(k)).otherwise(acc)
-    }
-
   def bootstrapMeanCi(df: org.apache.spark.sql.DataFrame, id: Column,
                       value: Column, replicas: Int = 32)
       : org.apache.spark.sql.DataFrame = {
@@ -457,7 +443,7 @@ object Sampling {
   /** DuckDB replay of [[bootstrapMeanCi]] over `srcCte` (columns id0,
     * v0); final CTE `__boot_out`. */
   def bootstrapMeanCiSql(srcCte: String, replicas: Int = 32): String = {
-    val cases = PoissonThresholds
+    val cases = graft.functions.Kernels.poissonThresholds56.zipWithIndex
       .map { case (t, k) => s"WHEN u < $t THEN $k" }.mkString(" ")
     s"""__boot_rows AS (
       SELECT CAST(id0 AS VARCHAR) AS id, CAST(v0 AS BIGINT) AS v

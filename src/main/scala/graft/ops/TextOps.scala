@@ -30,41 +30,31 @@ object TextOps {
     "es" -> Seq("el", "los", "y", "es", "una"),
     "fr" -> Seq("le", "la", "et", "les", "est"))
 
-  /** The language-ID decision expression over an ALREADY-AVAILABLE
-    * distinct-token expression — the single source of truth both public
-    * forms build on, so they cannot drift apart. Ties resolve to the
-    * FIRST language in [[langMarkers]] order (alphabetical, the
-    * foldRight when-chain), matching the oracle's CASE order. */
-  private def langIdFromToks(toks: Column, text: Column): Column = {
+  /** N-gram/stopword language-ID heuristic, written to column `out`:
+    * score = marker-token hits per language; CJK characters
+    * short-circuit to "zh"; argmax with ties resolved to the FIRST
+    * language in [[langMarkers]] order (the foldRight when-chain,
+    * matching the oracle's CASE order); "und" (undetermined) when
+    * nothing scores. Deterministic and SQL-mirrorable (greatest + CASE
+    * in the oracle).
+    *
+    * The distinct-token array is STAGED as a column first: inlined
+    * into every marker score, Catalyst's subexpression elimination
+    * does not reach through the conditional when-chain and the
+    * split/distinct gets re-evaluated per language. Staging measured
+    * 2.2× faster at sf0.1. */
+  def withLangId(df: DataFrame, text: Column, out: String): DataFrame = {
+    val toks = "__langid_toks"
     val scores = langMarkers.map { case (lang, markers) =>
-      lang -> size(array_intersect(toks, typedlit(markers)))
+      lang -> size(array_intersect(col(toks), typedlit(markers)))
     }
     val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
     val pick = scores.foldRight(lit("und")) { case ((lang, s), acc) =>
       when(s === best && best > 0, lit(lang)).otherwise(acc)
     }
-    when(text.rlike("[\\u4e00-\\u9fff]"), lit("zh")).otherwise(pick)
-  }
-
-  /** N-gram/stopword language-ID heuristic: score = marker-token hits per
-    * language; CJK characters short-circuit to "zh"; argmax with a fixed
-    * alphabetical tiebreak; "und" (undetermined) when nothing scores.
-    * Deterministic and SQL-mirrorable (greatest + CASE in the oracle). */
-  def langId(text: Column): Column =
-    langIdFromToks(array_distinct(tokens(text)), text)
-
-  /** [[langId]] with the distinct-token array STAGED as a column first.
-    * The Column-only form inlines token derivation into every marker
-    * score, and Catalyst's subexpression elimination does not reach
-    * through the conditional when-chain — the split/distinct gets
-    * re-evaluated per language. Staging measured 2.2× faster at sf0.1;
-    * identical output by construction (both forms expand
-    * [[langIdFromToks]]; TextOpsSpec also proves it). Prefer this form
-    * in pipelines. */
-  def withLangId(df: DataFrame, text: Column, out: String): DataFrame = {
-    val toks = "__langid_toks"
     df.withColumn(toks, array_distinct(tokens(text)))
-      .withColumn(out, langIdFromToks(col(toks), text))
+      .withColumn(out,
+        when(text.rlike("[\\u4e00-\\u9fff]"), lit("zh")).otherwise(pick))
       .drop(toks)
   }
 

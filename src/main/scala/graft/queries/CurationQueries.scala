@@ -642,20 +642,8 @@ object CurationQueries {
     * and the surviving core's degrees are re-reported on the residual
     * edges, bit-exact against the unrolled replay. */
   private val x_graph_kcore = Q(
-    "x_graph_kcore", {
-      (s, d) => {
-        val eraw = Tables.orders(s, d)
-          .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey") * 2).as("a"),
-            (col("l_suppkey") * 2 + 1).as("b"))
-          .distinct()
-        // even/odd id spaces are disjoint: the symmetrized union is
-        // already distinct (same construction as x_graph_pagerank)
-        val edges = eraw.select(col("a").as("src"), col("b").as("dst"))
-          .unionByName(eraw.select(col("b").as("src"), col("a").as("dst")))
-        Graph.kcorePeel(edges, k = 35, maxRounds = 4)
-      }
-    },
+    "x_graph_kcore",
+    (s, d) => Graph.kcorePeel(GraphFixtures.tradeSym(s, d), k = 35, maxRounds = 4),
     Some {
       // the same delta recursion kcorePeel runs: dead_i = alive nodes
       // below k; survivors' degrees drop by their edges into dead_i
@@ -665,16 +653,11 @@ object CurationQueries {
           SELECT a.node, a.deg - COALESCE(c.c, 0) AS deg
           FROM a${i - 1} a LEFT JOIN (
             SELECT e.src AS node, COUNT(*) AS c
-            FROM e0 e JOIN dead$i d ON d.node = e.dst
+            FROM trade_sym e JOIN dead$i d ON d.node = e.dst
             GROUP BY 1) c ON c.node = a.node
           WHERE a.deg >= 35)"""
-      s"""WITH eraw AS (
-        SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      e0 AS (
-        SELECT a AS src, b AS dst FROM eraw
-        UNION ALL SELECT b AS src, a AS dst FROM eraw),
-      a0 AS (SELECT src AS node, COUNT(*) AS deg FROM e0 GROUP BY 1),
+      s"""WITH ${GraphFixtures.tradeSymSql},
+      a0 AS (SELECT src AS node, COUNT(*) AS deg FROM trade_sym GROUP BY 1),
       ${peel(1)},
       ${peel(2)},
       ${peel(3)},
@@ -2004,32 +1987,20 @@ object CurationQueries {
     * heuristic-looking algorithm hash-checkable. */
   private val x_graph_labelprop = Q(
     "x_graph_labelprop",
-    (s, d) => {
-      val edges = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      Graph.labelPropagation(edges, rounds = 3)
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_members"), min(col("node")).as("min_node"))
-    }, {
+    (s, d) => Graph.labelPropagation(GraphFixtures.trade(s, d), rounds = 3)
+      .groupBy(col("label"))
+      .agg(count(lit(1)).as("n_members"), min(col("node")).as("min_node")), {
       val round = (prev: String, cur: String) =>
         s"""$cur AS (
           SELECT node, label FROM (
             SELECT e.dst AS node, l.label, COUNT(*) AS c,
               ROW_NUMBER() OVER (PARTITION BY e.dst
                 ORDER BY COUNT(*) DESC, l.label) AS rn
-            FROM sym e JOIN $prev l ON e.src = l.node
+            FROM trade_sym e JOIN $prev l ON e.src = l.node
             GROUP BY e.dst, l.label)
           WHERE rn = 1)"""
-      Some(s"""WITH raw AS (
-          SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        sym AS (
-          SELECT src, dst FROM raw
-          UNION SELECT dst AS src, src AS dst FROM raw),
-        l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
+      Some(s"""WITH ${GraphFixtures.tradeSymSql},
+        l0 AS (SELECT DISTINCT src AS node, src AS label FROM trade_sym),
         ${round("l0", "l1")},
         ${round("l1", "l2")},
         ${round("l2", "l3")}

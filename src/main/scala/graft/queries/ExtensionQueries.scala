@@ -163,15 +163,8 @@ object ExtensionQueries {
     (s, d) => Dedup.connectedComponents(jaccardPairsDf(s, d), "doc_a", "doc_b")
       .select(col("node").as("doc_id"), col("cluster_id")),
     Some(s"""WITH RECURSIVE $jaccardPairsSqlCtes,
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs),
-    reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-    SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-    FROM reach GROUP BY src"""))
+    ${Dedup.connectedComponentsSql("pairs", "doc_a", "doc_b")}
+    SELECT node AS doc_id, cluster_id FROM __cc_out"""))
 
   /** Cluster-size distribution over the near-dup components — the
     * dedup-QA histogram (a fat tail means a boilerplate family or a
@@ -201,22 +194,14 @@ object ExtensionQueries {
         .agg(sum(col("n_clusters")).cast("long").as("n_clusters"))
     },
     Some(s"""WITH RECURSIVE $jaccardPairsSqlCtes,
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs),
-    reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    cc AS (SELECT src AS node, least(src, min(dst)) AS cluster_id
-           FROM reach GROUP BY src),
+    ${Dedup.connectedComponentsSql("pairs", "doc_a", "doc_b")},
     sized AS (
       SELECT sz AS cluster_size, COUNT(*) AS n_clusters FROM (
-        SELECT cluster_id, COUNT(*) AS sz FROM cc GROUP BY 1)
+        SELECT cluster_id, COUNT(*) AS sz FROM __cc_out GROUP BY 1)
       GROUP BY 1),
     singles AS (
       SELECT CAST(1 AS BIGINT) AS cluster_size,
-        (SELECT COUNT(*) FROM docs) - (SELECT COUNT(*) FROM cc) AS n_clusters)
+        (SELECT COUNT(*) FROM docs) - (SELECT COUNT(*) FROM __cc_out) AS n_clusters)
     SELECT cluster_size, CAST(SUM(n_clusters) AS BIGINT) AS n_clusters
     FROM (SELECT * FROM sized
           UNION ALL SELECT * FROM singles WHERE n_clusters > 0)
@@ -254,16 +239,7 @@ object ExtensionQueries {
           col("q").as("keep_quality"), col("n_members"))
     },
     Some(s"""WITH RECURSIVE $jaccardPairsSqlCtes,
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs),
-    reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    clusters AS (
-      SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-      FROM reach GROUP BY src),
+    ${Dedup.connectedComponentsSql("pairs", "doc_a", "doc_b")},
     member AS (
       SELECT b.doc_id, COALESCE(c.cluster_id, b.doc_id) AS cluster_id,
         ${TextOps.qualityScoreSql("text")} AS q
@@ -271,7 +247,7 @@ object ExtensionQueries {
             WHERE text IS NOT NULL AND lang IS NOT NULL
               AND n_chars IS NOT NULL
               AND len(string_split(lower(text), ' ')) >= 3) b
-      LEFT JOIN clusters c USING (doc_id))
+      LEFT JOIN __cc_out c ON c.node = b.doc_id)
     SELECT cluster_id, doc_id AS keep_doc_id, q AS keep_quality, n_members
     FROM (SELECT *,
         COUNT(*) OVER (PARTITION BY cluster_id) AS n_members,
@@ -1428,42 +1404,10 @@ object ExtensionQueries {
     * hash-match across engines. */
   private val x_graph_pagerank = Q(
     "x_graph_pagerank",
-    (s, d) => {
-      val eraw = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("a"),
-          (col("l_suppkey") * 2 + 1).as("b"))
-        .distinct()
-      // even/odd id spaces are disjoint, so the two directions cannot
-      // collide: the union is already distinct
-      val edges = eraw.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(eraw.select(col("b").as("src"), col("a").as("dst")))
-      Graph.pageRankFixedPoint(edges, iters = 3)
-    },
-    Some {
-      val fp = Graph.RankFp
-      def step(i: Int) =
-        s"""c$i AS (
-          SELECT e.dst AS node, CAST(SUM(r.r // r.deg) AS BIGINT) AS s
-          FROM edges e JOIN r${i - 1} r ON e.src = r.node GROUP BY 1),
-        r$i AS (
-          SELECT d.node, d.deg,
-            (($fp // n_nodes) * 15) // 100 + (COALESCE(c.s, 0) * 85) // 100 AS r
-          FROM deg d CROSS JOIN n LEFT JOIN c$i c ON c.node = d.node)"""
-      s"""WITH eraw AS (
-        SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      edges AS (
-        SELECT a AS src, b AS dst FROM eraw
-        UNION ALL SELECT b AS src, a AS dst FROM eraw),
-      deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY 1),
-      n AS (SELECT COUNT(*) AS n_nodes FROM deg),
-      r0 AS (SELECT node, deg, $fp // n_nodes AS r FROM deg CROSS JOIN n),
-      ${step(1)},
-      ${step(2)},
-      ${step(3)}
-      SELECT node, deg, r AS rank_fp FROM r3"""
-    })
+    (s, d) => Graph.pageRankFixedPoint(GraphFixtures.tradeSym(s, d), iters = 3),
+    Some(s"""WITH ${GraphFixtures.tradeSymSql},
+    ${Graph.pageRankFixedPointSql("trade_sym", iters = 3)}
+    SELECT node, deg, rank_fp FROM __pr_out"""))
 
   /** One GraphSAGE mean-aggregation round ([[Graph.sageMeanStep]]) over
     * the symmetric customer–supplier graph — the GNN feature-pipeline
@@ -1477,28 +1421,14 @@ object ExtensionQueries {
     * sum, and division. */
   private val x_graph_sage = Q(
     "x_graph_sage_step",
-    (s, d) => {
-      val eraw = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("a"),
-          (col("l_suppkey") * 2 + 1).as("b"))
-        .distinct()
-      val edges = eraw.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(eraw.select(col("b").as("src"), col("a").as("dst")))
-      Graph.sageMeanStep(edges, dims = 4)
-    },
-    Some(s"""WITH eraw AS (
-      SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-      FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-    edges AS (
-      SELECT a AS src, b AS dst FROM eraw
-      UNION ALL SELECT b, a FROM eraw),
+    (s, d) => Graph.sageMeanStep(GraphFixtures.tradeSym(s, d), dims = 4),
+    Some(s"""WITH ${GraphFixtures.tradeSymSql},
     msgs AS (
       SELECT src, dd.d,
         ${Sampling.hashValueSql(
           "'sage:' || CAST(dd.d AS VARCHAR) || ':' || CAST(dst AS VARCHAR)")}
           % 2001 - 1000 AS f
-      FROM edges CROSS JOIN (SELECT unnest(range(4)) AS d) dd)
+      FROM trade_sym CROSS JOIN (SELECT unnest(range(4)) AS d) dd)
     SELECT src AS node, CAST(d AS INTEGER) AS d, COUNT(*) AS n_neighbors,
       ${Sampling.hashValueSql(
         "'sage:' || CAST(d AS VARCHAR) || ':' || CAST(src AS VARCHAR)")}
@@ -1516,30 +1446,21 @@ object ExtensionQueries {
     * (the pagerank/gram-power fixed-point discipline). */
   private val x_graph_hits = Q(
     "x_graph_hits",
-    (s, d) => {
-      val edges = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      Graph.hitsFixedPoint(edges, rounds = 2)
-    },
+    (s, d) => Graph.hitsFixedPoint(GraphFixtures.trade(s, d), rounds = 2),
     Some {
       def half(inRel: String, inCol: String, joinOn: String, outCol: String,
                grpCol: String, rawRel: String, outRel: String) =
         s"""$rawRel AS (
           SELECT $grpCol AS node, CAST(SUM($inCol) AS BIGINT) AS r
-          FROM e JOIN $inRel x ON x.node = e.$joinOn GROUP BY 1),
+          FROM trade e JOIN $inRel x ON x.node = e.$joinOn GROUP BY 1),
         $outRel AS (
           SELECT node, CAST(ROUND(CAST(r AS DOUBLE)
             / CAST((SELECT MAX(r) FROM $rawRel) AS DOUBLE) * 1e6) AS BIGINT)
             AS $outCol
           FROM $rawRel)"""
-      s"""WITH e AS (
-        SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+      s"""WITH ${GraphFixtures.tradeSql},
       a0 AS (
-        SELECT DISTINCT dst AS node, CAST(1000000 AS BIGINT) AS a FROM e),
+        SELECT DISTINCT dst AS node, CAST(1000000 AS BIGINT) AS a FROM trade),
       ${half("a0", "a", "dst", "h", "e.src", "h1r", "h1")},
       ${half("h1", "h", "src", "a", "e.dst", "a1r", "a1")},
       ${half("a1", "a", "dst", "h", "e.src", "h2r", "h2")},
@@ -1560,21 +1481,13 @@ object ExtensionQueries {
     * identity). */
   private val x_graph_pagerank_directed = Q(
     "x_graph_pagerank_directed",
-    (s, d) => {
-      val edges = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      Graph.pageRankConverged(edges, maxIters = 3)._1
-    },
+    (s, d) => Graph.pageRankConverged(GraphFixtures.trade(s, d), maxIters = 3)._1,
     Some {
       val fp = Graph.RankFp
       def step(i: Int) =
         s"""c$i AS (
           SELECT e.dst AS node, CAST(SUM(r.r // r.deg) AS BIGINT) AS s
-          FROM edges e JOIN r${i - 1} r ON e.src = r.node AND r.deg > 0
-          GROUP BY 1),
+          FROM trade e JOIN r${i - 1} r ON e.src = r.node GROUP BY 1),
         dg$i AS (
           SELECT CAST(COALESCE(SUM(r), 0) AS BIGINT) AS dang
           FROM r${i - 1} WHERE deg = 0),
@@ -1584,11 +1497,9 @@ object ExtensionQueries {
               + ((COALESCE(c.s, 0) + dang // n_nodes) * 85) // 100 AS r
           FROM deg d CROSS JOIN n CROSS JOIN dg$i
           LEFT JOIN c$i c ON c.node = d.node)"""
-      s"""WITH edges AS (
-        SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-      odeg AS (SELECT src AS node, COUNT(*) AS odeg FROM edges GROUP BY 1),
+      s"""WITH ${GraphFixtures.tradeSql},
+      nodes AS (SELECT src AS node FROM trade UNION SELECT dst FROM trade),
+      odeg AS (SELECT src AS node, COUNT(*) AS odeg FROM trade GROUP BY 1),
       deg AS (
         SELECT nodes.node, COALESCE(o.odeg, 0) AS deg
         FROM nodes LEFT JOIN odeg o ON o.node = nodes.node),
@@ -1607,51 +1518,14 @@ object ExtensionQueries {
     * unrolling all 3 rounds bit-exactly. */
   private val x_graph_ppr = Q(
     "x_graph_ppr",
-    (s, d) => {
-      val eraw = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("a"),
-          (col("l_suppkey") * 2 + 1).as("b"))
-        .distinct()
-      val edges = eraw.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(eraw.select(col("b").as("src"), col("a").as("dst")))
-      val seeds = Tables.orders(s, d).filter(col("o_custkey") <= 5)
-        .select((col("o_custkey") * 2).as("node"))
-      Graph.pageRankPersonalized(edges, seeds, iters = 3)
-    },
-    Some {
-      val fp = Graph.RankFp
-      def step(i: Int) =
-        s"""c$i AS (
-          SELECT e.dst AS node, CAST(SUM(r.r // r.deg) AS BIGINT) AS s
-          FROM edges e JOIN r${i - 1} r ON e.src = r.node GROUP BY 1),
-        r$i AS (
-          SELECT b.node, b.deg, b.p,
-            (b.p * 15) // 100 + (COALESCE(c.s, 0) * 85) // 100 AS r
-          FROM base b LEFT JOIN c$i c ON c.node = b.node)"""
-      s"""WITH eraw AS (
-        SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      edges AS (
-        SELECT a AS src, b AS dst FROM eraw
-        UNION ALL SELECT b AS src, a AS dst FROM eraw),
-      deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY 1),
-      seeds AS (
-        SELECT DISTINCT s.node FROM
-          (SELECT DISTINCT o_custkey * 2 AS node FROM orders
-           WHERE o_custkey <= 5) s
-        JOIN deg d ON s.node = d.node),
-      ns AS (SELECT COUNT(*) AS n_seeds FROM seeds),
-      base AS (
-        SELECT d.node, d.deg,
-          CASE WHEN s.node IS NOT NULL THEN $fp // n_seeds ELSE 0 END AS p
-        FROM deg d LEFT JOIN seeds s ON d.node = s.node CROSS JOIN ns),
-      r0 AS (SELECT node, deg, p, p AS r FROM base),
-      ${step(1)},
-      ${step(2)},
-      ${step(3)}
-      SELECT node, deg, r AS rank_fp FROM r3"""
-    })
+    (s, d) => Graph.pageRankPersonalized(GraphFixtures.tradeSym(s, d),
+      Tables.orders(s, d).filter(col("o_custkey") <= 5)
+        .select((col("o_custkey") * 2).as("node")),
+      iters = 3),
+    Some(s"""WITH ${GraphFixtures.tradeSymSql},
+    seeds AS (SELECT o_custkey * 2 AS node FROM orders WHERE o_custkey <= 5),
+    ${Graph.pageRankPersonalizedSql("trade_sym", "seeds", iters = 3)}
+    SELECT node, deg, rank_fp FROM __pr_out"""))
 
   /** Multi-source BFS ([[Graph.bfsHops]]) over the undirected
     * customer↔supplier trade graph: minimum hop distance from the seed
@@ -1664,30 +1538,17 @@ object ExtensionQueries {
     * shortest-path = shortest-walk. */
   private val x_graph_bfs = Q(
     "x_graph_bfs",
-    (s, d) => {
-      val eraw = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("a"),
-          (col("l_suppkey") * 2 + 1).as("b"))
-        .distinct()
-      val edges = eraw.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(eraw.select(col("b").as("src"), col("a").as("dst")))
-      val seeds = Tables.orders(s, d).filter(col("o_custkey") <= 3)
-        .select((col("o_custkey") * 2).as("node"))
-      Graph.bfsHops(edges, seeds, maxHops = 3)
-    },
-    Some("""WITH RECURSIVE eraw AS (
-      SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-    edges AS (
-      SELECT a AS src, b AS dst FROM eraw
-      UNION ALL SELECT b AS src, a AS dst FROM eraw),
+    (s, d) => Graph.bfsHops(GraphFixtures.tradeSym(s, d),
+      Tables.orders(s, d).filter(col("o_custkey") <= 3)
+        .select((col("o_custkey") * 2).as("node")),
+      maxHops = 3),
+    Some(s"""WITH RECURSIVE ${GraphFixtures.tradeSymSql},
     walk AS (
       SELECT DISTINCT o_custkey * 2 AS node, 0 AS dist
       FROM orders WHERE o_custkey <= 3
       UNION
       SELECT e.dst AS node, w.dist + 1 AS dist
-      FROM walk w JOIN edges e ON e.src = w.node
+      FROM walk w JOIN trade_sym e ON e.src = w.node
       WHERE w.dist < 3)
     SELECT node, CAST(MIN(dist) AS INTEGER) AS dist
     FROM walk GROUP BY node"""))
@@ -1799,25 +1660,20 @@ object ExtensionQueries {
         .withColumn("node_type",
           when(col("node") % 2 === 0, "customer").otherwise("supplier"))
     },
-    Some("""WITH eraw AS (
-      SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-    edges AS (
-      SELECT a AS src, b AS dst FROM eraw
-      UNION ALL SELECT b AS src, a AS dst FROM eraw),
+    Some(s"""WITH ${GraphFixtures.tradeSymSql},
     v0 AS (
       SELECT c_custkey * 2 AS seed, c_custkey * 2 AS node,
         CAST(1 AS BIGINT) AS sigma
       FROM customer WHERE c_custkey <= 4),
     v1 AS (
       SELECT v.seed, e.dst AS node, CAST(SUM(v.sigma) AS BIGINT) AS sigma
-      FROM v0 v JOIN edges e ON v.node = e.src
+      FROM v0 v JOIN trade_sym e ON v.node = e.src
       WHERE NOT EXISTS (SELECT 1 FROM v0 p
         WHERE p.seed = v.seed AND p.node = e.dst)
       GROUP BY 1, 2),
     v2 AS (
       SELECT v.seed, e.dst AS node, CAST(SUM(v.sigma) AS BIGINT) AS sigma
-      FROM v1 v JOIN edges e ON v.node = e.src
+      FROM v1 v JOIN trade_sym e ON v.node = e.src
       WHERE NOT EXISTS (SELECT 1 FROM v0 p
           WHERE p.seed = v.seed AND p.node = e.dst)
         AND NOT EXISTS (SELECT 1 FROM v1 p
@@ -1825,7 +1681,7 @@ object ExtensionQueries {
       GROUP BY 1, 2),
     v3 AS (
       SELECT v.seed, e.dst AS node, CAST(SUM(v.sigma) AS BIGINT) AS sigma
-      FROM v2 v JOIN edges e ON v.node = e.src
+      FROM v2 v JOIN trade_sym e ON v.node = e.src
       WHERE NOT EXISTS (SELECT 1 FROM v0 p
           WHERE p.seed = v.seed AND p.node = e.dst)
         AND NOT EXISTS (SELECT 1 FROM v1 p
@@ -1840,7 +1696,7 @@ object ExtensionQueries {
         CAST(SUM(v.sigma * (1000000 + dw.delta_micro) // w.sigma)
           AS BIGINT) AS delta_sum
       FROM v2 v
-      JOIN edges e ON v.node = e.src
+      JOIN trade_sym e ON v.node = e.src
       JOIN v3 w ON w.seed = v.seed AND w.node = e.dst
       JOIN d3 dw ON dw.seed = w.seed AND dw.node = w.node
       GROUP BY 1, 2),
@@ -1854,7 +1710,7 @@ object ExtensionQueries {
         CAST(SUM(v.sigma * (1000000 + dw.delta_micro) // w.sigma)
           AS BIGINT) AS delta_sum
       FROM v1 v
-      JOIN edges e ON v.node = e.src
+      JOIN trade_sym e ON v.node = e.src
       JOIN v2 w ON w.seed = v.seed AND w.node = e.dst
       JOIN d2 dw ON dw.seed = w.seed AND dw.node = w.node
       GROUP BY 1, 2),
@@ -2445,8 +2301,9 @@ object ExtensionQueries {
     * aggregation → Trigger.AvailableNow to completion — and the driver
     * hash-compares the STREAMING result against DuckDB's batch SQL.
     * Complete mode + memory sink materialize the full aggregate for the
-    * compare (harness-only: a production run is append mode with the
-    * watermark, parquet/Kafka sink — see EventStream.hourlyCounts).
+    * compare (harness-only: a production run is append mode with a
+    * watermark and a parquet/Kafka sink, as in
+    * [[EventStream.chainedDailyRollup]]).
     * countDistinct is excluded: distinct aggregation is unsupported in
     * streaming (approx_count_distinct is its streaming stand-in).
     * The landed copy only adapts the ns-timestamp fixture to a
@@ -3413,7 +3270,7 @@ object ExtensionQueries {
             .getField("name").as("golden_name"),
           max(col("p_retailprice")).as("price_max"))
     },
-    Some("""WITH RECURSIVE p AS (
+    Some(s"""WITH RECURSIVE p AS (
       SELECT p_partkey, p_name, p_brand, p_size,
              split_part(p_name, ' ', 1) AS w1 FROM part),
     prs AS (
@@ -3422,18 +3279,11 @@ object ExtensionQueries {
         ON a.p_brand = b.p_brand AND a.p_size = b.p_size AND a.w1 = b.w1
           AND a.p_partkey < b.p_partkey
       WHERE ROUND(jaro_winkler_similarity(a.p_name, b.p_name), 6) >= 0.88),
-    edges AS (SELECT ea AS src, eb AS dst FROM prs
-              UNION SELECT eb, ea FROM prs),
-    reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    cc AS (SELECT src AS node, least(src, min(dst)) AS cluster_id
-           FROM reach GROUP BY src),
+    ${Dedup.connectedComponentsSql("prs", "ea", "eb")},
     labeled AS (
       SELECT pt.p_partkey, pt.p_name, pt.p_retailprice,
         COALESCE(cc.cluster_id, pt.p_partkey) AS cluster_id
-      FROM part pt LEFT JOIN cc ON pt.p_partkey = cc.node),
+      FROM part pt LEFT JOIN __cc_out cc ON pt.p_partkey = cc.node),
     g AS (
       SELECT cluster_id, p_name,
         ROW_NUMBER() OVER (PARTITION BY cluster_id
@@ -3530,30 +3380,18 @@ object ExtensionQueries {
     * generation and closure with row-value comparisons. */
   private val x_graph_triangles = Q(
     "x_graph_triangles",
-    (s, d) => {
-      val li = Tables.lineitem(s, d).filter(col("l_quantity") >= 45)
-      val l1 = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pa"))
-      val l2 = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pb"))
-      val edges = l1.join(l2, Seq("ok")).filter(col("pa") < col("pb"))
-        .select(col("pa").as("a"), col("pb").as("b")).distinct()
-      Graph.triangleCounts(edges)
-    },
-    Some("""WITH qi AS (
-      SELECT l_orderkey AS ok, l_partkey AS pk
-      FROM lineitem WHERE l_quantity >= 45),
-    edges AS (
-      SELECT DISTINCT x.pk AS a, y.pk AS b
-      FROM qi x JOIN qi y ON x.ok = y.ok AND x.pk < y.pk),
+    (s, d) => Graph.triangleCounts(GraphFixtures.coPurchase(s, d)),
+    Some(s"""WITH ${GraphFixtures.coPurchaseSql},
     deg AS (
       SELECT node, COUNT(*) AS deg FROM (
-        SELECT a AS node FROM edges UNION ALL SELECT b FROM edges)
+        SELECT a AS node FROM co_purchase UNION ALL SELECT b FROM co_purchase)
       GROUP BY 1),
     o AS (
       SELECT
         CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.a ELSE e.b END AS src,
         CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.b ELSE e.a END AS dst,
         CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN db.deg ELSE da.deg END AS dd
-      FROM edges e
+      FROM co_purchase e
       JOIN deg da ON da.node = e.a
       JOIN deg db ON db.node = e.b),
     wg AS (
@@ -3579,12 +3417,7 @@ object ExtensionQueries {
   private val x_graph_lcc = Q(
     "x_graph_lcc",
     (s, d) => {
-      val li = Tables.lineitem(s, d).filter(col("l_quantity") >= 45)
-      val l1 = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pa"))
-      val l2 = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pb"))
-      val edges = l1.join(l2, Seq("ok")).filter(col("pa") < col("pb"))
-        .select(col("pa").as("a"), col("pb").as("b")).distinct()
-      val tri = Graph.triangleCounts(edges)
+      val tri = Graph.triangleCounts(GraphFixtures.coPurchase(s, d))
         .withColumn("lcc_micro", when(col("deg") >= 2, round(
           col("n_tri").cast("double") * lit(2e6)
             / (col("deg") * (col("deg") - 1)).cast("double")).cast("long")))
@@ -3594,22 +3427,17 @@ object ExtensionQueries {
           / count(lit(1)).cast("double")).cast("long").as("global_cc_micro"))
       tri.crossJoin(broadcast(avg))
     },
-    Some("""WITH qi AS (
-      SELECT l_orderkey AS ok, l_partkey AS pk
-      FROM lineitem WHERE l_quantity >= 45),
-    edges AS (
-      SELECT DISTINCT x.pk AS a, y.pk AS b
-      FROM qi x JOIN qi y ON x.ok = y.ok AND x.pk < y.pk),
+    Some(s"""WITH ${GraphFixtures.coPurchaseSql},
     deg AS (
       SELECT node, COUNT(*) AS deg FROM (
-        SELECT a AS node FROM edges UNION ALL SELECT b FROM edges)
+        SELECT a AS node FROM co_purchase UNION ALL SELECT b FROM co_purchase)
       GROUP BY 1),
     o AS (
       SELECT
         CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.a ELSE e.b END AS src,
         CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.b ELSE e.a END AS dst,
         CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN db.deg ELSE da.deg END AS dd
-      FROM edges e
+      FROM co_purchase e
       JOIN deg da ON da.node = e.a
       JOIN deg db ON db.node = e.b),
     wg AS (
@@ -3641,30 +3469,18 @@ object ExtensionQueries {
     * one division, no sqrt. */
   private val x_graph_assort = Q(
     "x_graph_assortativity",
-    (s, d) => {
-      val li = Tables.lineitem(s, d).filter(col("l_quantity") >= 45)
-      val l1 = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pa"))
-      val l2 = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pb"))
-      val edges = l1.join(l2, Seq("ok")).filter(col("pa") < col("pb"))
-        .select(col("pa").as("a"), col("pb").as("b")).distinct()
-      Graph.degreeAssortativity(edges)
-    },
-    Some("""WITH qi AS (
-      SELECT l_orderkey AS ok, l_partkey AS pk
-      FROM lineitem WHERE l_quantity >= 45),
-    edges AS (
-      SELECT DISTINCT x.pk AS a, y.pk AS b
-      FROM qi x JOIN qi y ON x.ok = y.ok AND x.pk < y.pk),
+    (s, d) => Graph.degreeAssortativity(GraphFixtures.coPurchase(s, d)),
+    Some(s"""WITH ${GraphFixtures.coPurchaseSql},
     deg AS (
       SELECT node, COUNT(*) AS deg FROM (
-        SELECT a AS node FROM edges UNION ALL SELECT b FROM edges)
+        SELECT a AS node FROM co_purchase UNION ALL SELECT b FROM co_purchase)
       GROUP BY 1),
     pairs AS (
       SELECT da.deg AS x, db.deg AS y
-      FROM edges e JOIN deg da ON da.node = e.a JOIN deg db ON db.node = e.b
+      FROM co_purchase e JOIN deg da ON da.node = e.a JOIN deg db ON db.node = e.b
       UNION ALL
       SELECT db.deg, da.deg
-      FROM edges e JOIN deg da ON da.node = e.a JOIN deg db ON db.node = e.b)
+      FROM co_purchase e JOIN deg da ON da.node = e.a JOIN deg db ON db.node = e.b)
     SELECT CAST(COUNT(*) / 2 AS BIGINT) AS m_edges,
       CASE WHEN COUNT(*) * SUM(x * x) - SUM(x) * SUM(x) > 0 THEN
         ROUND(CAST(COUNT(*) * SUM(x * y) - SUM(x) * SUM(x) AS DOUBLE)
@@ -3681,23 +3497,12 @@ object ExtensionQueries {
     * from exact integer degree/common counts. */
   private val x_graph_linkpred = Q(
     "x_graph_linkpred",
-    (s, d) => {
-      val li = Tables.lineitem(s, d).filter(col("l_quantity") >= 45)
-      val l1 = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pa"))
-      val l2 = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pb"))
-      val edges = l1.join(l2, Seq("ok")).filter(col("pa") < col("pb"))
-        .select(col("pa").as("a"), col("pb").as("b")).distinct()
-      Graph.commonNeighborTopK(edges, minCommon = 2, topK = 3)
-    },
-    Some("""WITH qi AS (
-      SELECT l_orderkey AS ok, l_partkey AS pk
-      FROM lineitem WHERE l_quantity >= 45),
-    edges AS (
-      SELECT DISTINCT x.pk AS a, y.pk AS b
-      FROM qi x JOIN qi y ON x.ok = y.ok AND x.pk < y.pk),
+    (s, d) => Graph.commonNeighborTopK(GraphFixtures.coPurchase(s, d),
+      minCommon = 2, topK = 3),
+    Some(s"""WITH ${GraphFixtures.coPurchaseSql},
     adj AS (
-      SELECT a AS node, b AS nbr FROM edges
-      UNION ALL SELECT b, a FROM edges),
+      SELECT a AS node, b AS nbr FROM co_purchase
+      UNION ALL SELECT b, a FROM co_purchase),
     deg AS (SELECT node, count(*) AS deg FROM adj GROUP BY 1),
     common AS (
       SELECT p.node AS x, q.node AS y, count(*) AS common
@@ -3705,7 +3510,7 @@ object ExtensionQueries {
       GROUP BY 1, 2 HAVING count(*) >= 2),
     cand AS (
       SELECT c.* FROM common c
-      ANTI JOIN edges e ON c.x = e.a AND c.y = e.b),
+      ANTI JOIN co_purchase e ON c.x = e.a AND c.y = e.b),
     scored AS (
       SELECT x, y, common,
         ROUND(CAST(common AS DOUBLE)
@@ -4309,21 +4114,13 @@ object ExtensionQueries {
         .unionByName(crossing("naive", "b_nv"))
     },
     Some(s"""WITH RECURSIVE $jaccardPairsSqlCtes,
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs),
-    reach AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-    cc AS (SELECT src AS node, least(src, min(dst)) AS cluster_id
-           FROM reach GROUP BY src),
+    ${Dedup.connectedComponentsSql("pairs", "doc_a", "doc_b")},
     labeled AS (
       SELECT d.doc_id, COALESCE(cc.cluster_id, d.doc_id) AS cluster_id,
         ${Sampling.hashValueSql("COALESCE(cc.cluster_id, d.doc_id)")} % 10
           AS b_ca,
         ${Sampling.hashValueSql("d.doc_id")} % 10 AS b_nv
-      FROM docs d LEFT JOIN cc ON d.doc_id = cc.node),
+      FROM docs d LEFT JOIN __cc_out cc ON d.doc_id = cc.node),
     named AS (
       SELECT doc_id,
         CASE WHEN b_ca = 8 THEN 'val' WHEN b_ca = 9 THEN 'test'

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Landing, Tables}
 import graft.functions.GraftFunctions
-import graft.ops.{Graph, Sampling, Scale, Similarity}
+import graft.ops.{Dedup, Graph, Sampling, Scale, Similarity}
 
 /** Round-6 training-data-pipeline registry entries: duplicated-span
   * detection (the suffix-dedup output shape of Lee et al. 2021,
@@ -154,13 +154,7 @@ object TrainingQueries {
   private val x_graph_louvain_move = Q(
     "x_graph_louvain_move",
     (s, d) => {
-      val dir = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val sym = dir.unionByName(
-          dir.select(col("dst").as("src"), col("src").as("dst")))
+      val sym = GraphFixtures.tradeSym(s, d)
         .localCheckpoint(true) // degree pass + neighbor-community pass
       val labels = Tables.customer(s, d)
         .select((col("c_custkey") * 2).as("node"),
@@ -219,12 +213,7 @@ object TrainingQueries {
         .agg(count(lit(1)).as("n"), sum(col("delta")).as("delta_sum"))
         .crossJoin(broadcast(tot))
     },
-    Some("""WITH raw AS (
-        SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      sym AS (
-        SELECT src, dst FROM raw
-        UNION ALL SELECT dst AS src, src AS dst FROM raw),
+    Some(s"""WITH ${GraphFixtures.tradeSymSql},
       labels AS (
         SELECT c_custkey * 2 AS node, CAST(c_nationkey AS BIGINT) AS label
         FROM customer
@@ -233,14 +222,14 @@ object TrainingQueries {
         FROM supplier),
       deg AS (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS k
-        FROM sym GROUP BY 1),
+        FROM trade_sym GROUP BY 1),
       sigma AS (
         SELECT label, CAST(SUM(k) AS BIGINT) AS tot
         FROM deg JOIN labels USING (node) GROUP BY 1),
-      st AS (SELECT CAST(COUNT(*) AS BIGINT) AS s FROM sym),
+      st AS (SELECT CAST(COUNT(*) AS BIGINT) AS s FROM trade_sym),
       kin AS (
         SELECT e.src AS node, l.label AS c, CAST(COUNT(*) AS BIGINT) AS kin
-        FROM sym e JOIN labels l ON e.dst = l.node
+        FROM trade_sym e JOIN labels l ON e.dst = l.node
         GROUP BY 1, 2),
       base AS (
         SELECT d.node, d.k, lb.label AS from_label, sg.tot AS tot_d, st.s
@@ -887,17 +876,7 @@ object TrainingQueries {
         .select(col("node").as("word"), col("deg"), col("rank_fp"),
           col("rank"))
     },
-    Some {
-      val fp = graft.ops.Graph.RankFp
-      def step(i: Int) =
-        s"""c$i AS (
-          SELECT e.dst AS node, CAST(SUM(r.r // r.deg) AS BIGINT) AS s
-          FROM edges e JOIN r${i - 1} r ON e.src = r.node GROUP BY 1),
-        r$i AS (
-          SELECT d.node, d.deg,
-            (($fp // n_nodes) * 15) // 100 + (COALESCE(c.s, 0) * 85) // 100 AS r
-          FROM deg d CROSS JOIN n LEFT JOIN c$i c ON c.node = d.node)"""
-      s"""WITH toks AS (
+    Some(s"""WITH toks AS (
         SELECT doc_id, string_split(lower(text), ' ') AS t
         FROM documents
         WHERE text IS NOT NULL AND len(string_split(lower(text), ' ')) >= 2),
@@ -908,18 +887,12 @@ object TrainingQueries {
       edges AS (
         SELECT a AS src, b AS dst FROM pairs
         UNION SELECT b, a FROM pairs),
-      deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY 1),
-      n AS (SELECT COUNT(*) AS n_nodes FROM deg),
-      r0 AS (SELECT node, deg, $fp // n_nodes AS r FROM deg CROSS JOIN n),
-      ${step(1)},
-      ${step(2)},
-      ${step(3)}
+      ${Graph.pageRankFixedPointSql("edges", iters = 3)}
       SELECT node AS word, CAST(deg AS BIGINT) AS deg,
-        CAST(r AS BIGINT) AS rank_fp,
-        CAST(ROW_NUMBER() OVER (ORDER BY r DESC, node) AS INTEGER) AS rank
-      FROM r3
-      QUALIFY rank <= 20"""
-    })
+        CAST(rank_fp AS BIGINT) AS rank_fp,
+        CAST(ROW_NUMBER() OVER (ORDER BY rank_fp DESC, node) AS INTEGER) AS rank
+      FROM __pr_out
+      QUALIFY rank <= 20"""))
 
   // ---------------------------------------------------------------
   // x_graph_boruvka_step
@@ -946,21 +919,16 @@ object TrainingQueries {
   private val x_graph_boruvka = Q(
     "x_graph_boruvka_step",
     (s, d) => {
-      import graft.ops.Dedup
-      val eraw = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("a"),
-          (col("l_suppkey") * 2 + 1).as("b"))
-        .distinct()
+      val eraw = GraphFixtures.trade(s, d)
         .withColumn("wgt", Sampling.hashValue(
-          concat(col("a").cast("string"), lit(":"), col("b").cast("string"))))
+          concat(col("src").cast("string"), lit(":"), col("dst").cast("string"))))
       // symmetrize via ONE explode pass (connectedComponents precedent):
       // the union-of-two-selects form planted the orders⋈lineitem
       // pipeline twice in the plan and hashed each edge once per branch
       val sym = eraw
         .select(explode(array(
-          struct(col("a").as("node"), col("b").as("other"), col("wgt")),
-          struct(col("b").as("node"), col("a").as("other"), col("wgt"))))
+          struct(col("src").as("node"), col("dst").as("other"), col("wgt")),
+          struct(col("dst").as("node"), col("src").as("other"), col("wgt"))))
           .as("__e"))
         .select(col("__e.node").as("node"), col("__e.other").as("other"),
           col("__e.wgt").as("wgt"))
@@ -986,14 +954,14 @@ object TrainingQueries {
         .agg(count(lit(1)).as("n_members"))
       sizes.join(perComp, "component")
     },
-    Some(s"""WITH RECURSIVE eraw AS (
-        SELECT a, b, ${Sampling.hashValueSql(
-          "CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)")} AS wgt
-        FROM (SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-              FROM orders JOIN lineitem ON o_orderkey = l_orderkey)),
+    Some(s"""WITH RECURSIVE ${GraphFixtures.tradeSql},
+      eraw AS (
+        SELECT src, dst, ${Sampling.hashValueSql(
+          "CAST(src AS VARCHAR) || ':' || CAST(dst AS VARCHAR)")} AS wgt
+        FROM trade),
       sym AS (
-        SELECT a AS node, b AS other, wgt FROM eraw
-        UNION ALL SELECT b, a, wgt FROM eraw),
+        SELECT src AS node, dst AS other, wgt FROM eraw
+        UNION ALL SELECT dst, src, wgt FROM eraw),
       pick AS (
         SELECT node, other, wgt FROM (
           SELECT node, other, wgt,
@@ -1003,26 +971,17 @@ object TrainingQueries {
         SELECT DISTINCT least(node, other) AS pa,
           greatest(node, other) AS pb, wgt
         FROM pick),
-      edges AS (
-        SELECT pa AS src, pb AS dst FROM picked
-        UNION SELECT pb, pa FROM picked),
-      reach AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      comp AS (
-        SELECT src AS node, least(src, MIN(dst)) AS cluster_id
-        FROM reach GROUP BY src),
+      ${Dedup.connectedComponentsSql("picked", "pa", "pb")},
       per AS (
         SELECT c.cluster_id AS component,
           CAST(COUNT(*) AS BIGINT) AS n_edges_picked,
           CAST(SUM(p.wgt) AS BIGINT) AS weight_sum
-        FROM picked p JOIN comp c ON c.node = p.pa
+        FROM picked p JOIN __cc_out c ON c.node = p.pa
         GROUP BY 1),
       sz AS (
         SELECT cluster_id AS component,
           CAST(COUNT(*) AS BIGINT) AS n_members
-        FROM comp GROUP BY 1)
+        FROM __cc_out GROUP BY 1)
       SELECT component, n_members, n_edges_picked, weight_sum
       FROM sz JOIN per USING (component)"""))
 
@@ -1484,13 +1443,7 @@ object TrainingQueries {
   private val x_graph_random_walk = Q(
     "x_graph_random_walk",
     (s, d) => {
-      val base = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("a"),
-          (col("l_suppkey") * 2 + 1).as("b"))
-        .distinct()
-      val edges = base.select(col("a").as("e_src"), col("b").as("e_dst"))
-        .unionAll(base.select(col("b").as("e_src"), col("a").as("e_dst")))
+      val edges = GraphFixtures.tradeSym(s, d).toDF("e_src", "e_dst")
         .localCheckpoint(true) // streamed once per step, never shuffled
       val w0 = edges.filter(col("e_src") <= 40 && col("e_src") % 2 === 0)
         .select(col("e_src")).distinct()
@@ -1522,22 +1475,17 @@ object TrainingQueries {
           JOIN ranked r ON r.src = w${i - 1}.node
             AND r.rn = ${Sampling.hashValueSql(
               s"CAST(walk_id AS VARCHAR) || '|$i'")} % deg)"""
-      s"""WITH base AS (
-        SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      edges AS (
-        SELECT a AS src, b AS dst FROM base
-        UNION ALL SELECT b AS src, a AS dst FROM base),
+      s"""WITH ${GraphFixtures.tradeSymSql},
       ranked AS (
         SELECT src, dst,
           CAST(ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) - 1
             AS BIGINT) AS rn
-        FROM edges),
+        FROM trade_sym),
       deg AS (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
-        FROM edges GROUP BY 1),
+        FROM trade_sym GROUP BY 1),
       w0 AS (
-        SELECT DISTINCT a AS walk_id, a AS node FROM base WHERE a <= 40),
+        SELECT DISTINCT src AS walk_id, src AS node FROM trade WHERE src <= 40),
       ${hop(1)}, ${hop(2)}, ${hop(3)}, ${hop(4)}
       SELECT walk_id, 0 AS step, node FROM w0
       UNION ALL SELECT walk_id, 1 AS step, node FROM w1
@@ -2104,11 +2052,7 @@ object TrainingQueries {
   private val x_graph_modularity = Q(
     "x_graph_modularity",
     (s, d) => {
-      val edges = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
+      val edges = GraphFixtures.trade(s, d)
         .localCheckpoint(true) // pair matrix + member count both read it
       val labels = Tables.customer(s, d)
         .select((col("c_custkey") * 2).as("node"),
@@ -2154,12 +2098,7 @@ object TrainingQueries {
           |  * 1000000) AS BIGINT)""".stripMargin).as("q_micro"))
       terms.crossJoin(broadcast(q))
     },
-      Some(s"""WITH raw AS (
-          SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        sym AS (
-          SELECT src, dst FROM raw
-          UNION SELECT dst AS src, src AS dst FROM raw),
+      Some(s"""WITH ${GraphFixtures.tradeSymSql},
         labels AS (
           SELECT c_custkey * 2 AS node, CAST(c_nationkey AS BIGINT) AS label
           FROM customer
@@ -2168,7 +2107,7 @@ object TrainingQueries {
           FROM supplier),
         joined AS (
           SELECT ls.label AS lsrc, ld.label AS ldst
-          FROM sym e
+          FROM trade_sym e
           JOIN labels ls ON e.src = ls.node
           JOIN labels ld ON e.dst = ld.node),
         comm AS (
@@ -2178,9 +2117,9 @@ object TrainingQueries {
           FROM joined GROUP BY 1),
         members AS (
           SELECT label, CAST(COUNT(*) AS BIGINT) AS n_members
-          FROM (SELECT DISTINCT src AS node FROM sym) n
+          FROM (SELECT DISTINCT src AS node FROM trade_sym) n
           JOIN labels USING (node) GROUP BY 1),
-        st AS (SELECT CAST(COUNT(*) AS BIGINT) AS s_tot FROM sym),
+        st AS (SELECT CAST(COUNT(*) AS BIGINT) AS s_tot FROM trade_sym),
         terms AS (
           SELECT label, n_members, intra_sym, d_sym, s_tot
           FROM comm JOIN members USING (label) CROSS JOIN st),
@@ -3087,12 +3026,8 @@ object TrainingQueries {
   private val x_graph_powerlaw_alpha = Q(
     "x_graph_powerlaw_alpha",
     (s, d) => {
-      val base = Tables.orders(s, d)
-        .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("a"),
-          (col("l_suppkey") * 2 + 1).as("b"))
-        .distinct()
-      val deg = base.select(explode(array(col("a"), col("b"))).as("node"))
+      val deg = GraphFixtures.trade(s, d)
+        .select(explode(array(col("src"), col("dst"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       val tail = deg.filter(col("deg") >= 5)
         .select(expr("""CAST(ROUND(LN(CAST(deg AS DOUBLE) / 4.5)
@@ -3110,12 +3045,10 @@ object TrainingQueries {
             | / CAST(s_ln AS DOUBLE)) * 1000000) AS BIGINT)"""
             .stripMargin).as("alpha_micro"))
     },
-    Some("""WITH base AS (
-        SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+    Some(s"""WITH ${GraphFixtures.tradeSql},
       deg AS (
         SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-          SELECT a AS node FROM base UNION ALL SELECT b FROM base)
+          SELECT src AS node FROM trade UNION ALL SELECT dst FROM trade)
         GROUP BY 1),
       ds AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes,

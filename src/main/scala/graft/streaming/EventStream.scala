@@ -12,9 +12,9 @@ import graft.core.Confs
   * is ALTER EXTERNAL TABLE REFRESH + full recompute; populate.py:65–68).
   *
   * Two streaming restatements of the events workload:
-  *  - [[hourlyCounts]]: watermarked tumbling-window aggregation — the
-  *    streaming twin of the batch x_events_hourly query; late data
-  *    beyond the watermark is dropped instead of recomputing the layer.
+  *  - [[chainedDailyRollup]]: watermarked tumbling-window aggregation
+  *    (hourly windows re-windowed into days) — late data beyond the
+  *    watermark is dropped instead of recomputing the layer.
   *  - [[sessionize]]: explicit session state via flatMapGroupsWithState
   *    with processing-time timeouts — the streaming twin of the batch
   *    window-function sessionization.
@@ -108,18 +108,6 @@ object EventStream {
       .format(format)
       .option("maxFilesPerTrigger", "16") // bounded micro-batches on backfill
       .load(dir)
-
-  /** Watermarked 1-hour tumbling counts per event type. Update-mode
-    * compatible; with watermark + append mode, a window finalizes once
-    * the watermark passes its end. */
-  def hourlyCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        approx_count_distinct(col("user_id")).as("approx_users"))
-      .select(col("w.start").as("hour_start"), col("event_type"),
-        col("n_events"), col("approx_users"))
 
   /** CHAINED stateful window aggregations — two windowed aggs in ONE
     * streaming query (hourly counts re-windowed into a daily rollup),

@@ -267,13 +267,16 @@ class SamplingSpec extends SparkSpec {
     assert(hi - lo > 50 && hi - lo < 600, s"CI width ${hi - lo} implausible")
   }
 
-  test("poissonWeight matches Poisson(1) masses on a fine uniform grid") {
+  test("poissonThresholds56 matches Poisson(1) masses on a fine uniform grid") {
     val n = 200000
-    val us = spark.range(n)
-      .select((col("id") * lit(72057594037927936L / n)).as("u"))
-    val counts = us.select(Sampling.poissonWeight($"u").as("w"))
-      .groupBy($"w").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val thresholds = graft.functions.Kernels.poissonThresholds56
+    val counts = (0L until n)
+      .map { i =>
+        val u = i * (72057594037927936L / n)
+        val k = thresholds.indexWhere(u < _)
+        if (k < 0) 6 else k
+      }
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
     val eInv = math.exp(-1.0)
     val expect = Seq(1.0, 1.0, 0.5, 1.0 / 6, 1.0 / 24).map(_ * eInv)
     expect.zipWithIndex.foreach { case (p, k) =>

@@ -106,18 +106,21 @@ class PlanAuditSpec extends SparkSpec {
     // between O(E) and O(iters * E) input work at scale.
     // AQE applies stage reuse at RUNTIME — execute first, then read the
     // final adaptive plan (pre-execution it prints isFinalPlan=false
-    // with no reuse nodes yet).
-    val df = Registry.queries("x_graph_pagerank")(spark, sf001)
-    // execute through THIS QueryExecution (a .write would plan a fresh
-    // one and leave df's adaptive plan unfinalized)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("isFinalPlan=true"), s"plan not executed adaptively:\n${p.take(500)}")
-    // NOTE the plan STRING still re-prints reused subtrees (so naive
-    // scan-counting over the text overcounts); the ReusedExchange nodes
-    // are what the runtime actually wires in.
-    val reuses = "ReusedExchange".r.findAllIn(p).size
-    assert(reuses >= 3, s"expected >=3 reused exchanges, got $reuses in:\n$p")
+    // with no reuse nodes yet). x_graph_ppr runs the same loop with a
+    // seeded teleport vector.
+    for (q <- Seq("x_graph_pagerank", "x_graph_ppr")) {
+      val df = Registry.queries(q)(spark, sf001)
+      // execute through THIS QueryExecution (a .write would plan a fresh
+      // one and leave df's adaptive plan unfinalized)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("isFinalPlan=true"), s"$q: plan not executed adaptively:\n${p.take(500)}")
+      // NOTE the plan STRING still re-prints reused subtrees (so naive
+      // scan-counting over the text overcounts); the ReusedExchange nodes
+      // are what the runtime actually wires in.
+      val reuses = "ReusedExchange".r.findAllIn(p).size
+      assert(reuses >= 3, s"$q: expected >=3 reused exchanges, got $reuses in:\n$p")
+    }
   }
 
   test("x_scale_zorder: the interleave is pure per-row codegen — no join, no row expansion") {

@@ -4,36 +4,11 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 
 class EventStreamSpec extends SparkSpec {
   import spark.implicits._
-
-  test("file-source stream with AvailableNow: windowed counts match batch") {
-    val dir = tempDir("events_stream")
-    // two "monthly drops" of event files — the REFRESH analog
-    Seq(
-      """{"event_id":1,"ts":"2024-01-01T00:10:00.000Z","user_id":1,"event_type":"click","value":1.0,"props":"{}"}""",
-      """{"event_id":2,"ts":"2024-01-01T00:20:00.000Z","user_id":2,"event_type":"click","value":1.0,"props":"{}"}""",
-      """{"event_id":3,"ts":"2024-01-01T01:05:00.000Z","user_id":1,"event_type":"view","value":1.0,"props":"{}"}"""
-    ).zipWithIndex.foreach { case (line, i) =>
-      Files.write(dir.resolve(s"drop$i.json"), line.getBytes("UTF-8"))
-    }
-    val counts = EventStream.hourlyCounts(EventStream.readEvents(spark, dir.toString))
-    val q = counts.writeStream
-      .format("memory")
-      .queryName("hourly_counts_test")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val got = spark.table("hourly_counts_test")
-      .select(date_format(col("hour_start"), "HH").as("h"), col("event_type"), col("n_events"))
-      .as[(String, String, Long)].collect().toSet
-    assert(got == Set(("00", "click", 2L), ("01", "view", 1L)))
-  }
 
   test("streaming dedup suppresses redelivered events across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
