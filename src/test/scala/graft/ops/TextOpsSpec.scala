@@ -16,7 +16,7 @@ class TextOpsSpec extends SparkSpec {
     assert(one[Int](TextOps.subwordCount(col("s")), "v2.1-beta") == 6)
   }
 
-  test("withLangId picks marker language, CJK short-circuits, und when nothing matches") {
+  test("withLangId picks marker language, CJK short-circuits, und if nothing matches") {
     def lang(input: String): String = TextOps.withLangId(Seq(input).toDF("s"), col("s"), "r")
       .select(col("r")).as[String].head()
     assert(lang("der hund und die katze ist da") == "de")
