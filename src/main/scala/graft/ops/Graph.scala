@@ -15,6 +15,11 @@ object Graph {
   /** Fixed-point scale: ranks live in integer units of 1e-12. */
   val RankFp: Long = 1000000000000L
 
+  /** Damping percentage every registry PageRank runs with; the SQL
+    * replays ([[pageRankFixedPointSql]], [[pageRankPersonalizedSql]])
+    * bake it in. */
+  private val Damping = 85
+
   /** PageRank in FIXED-POINT integer arithmetic: ranks are BIGINT
     * multiples of 1/[[RankFp]], per-edge contributions are integer
     * divisions `r div deg`, and the damping blend is `(s*85) div 100`.
@@ -45,7 +50,7 @@ object Graph {
     * iteration sees more than |edges| rows.
     */
   def pageRankFixedPoint(edgesIn: DataFrame, iters: Int,
-                         damping: Int = 85): DataFrame =
+                         damping: Int = Damping): DataFrame =
     pageRankLoop(edgesIn, iters, damping) { deg =>
       deg.crossJoin(broadcast(deg.agg(count(lit(1)).as("n_nodes"))))
         .withColumn("p", expr(s"$RankFp div n_nodes"))
@@ -65,7 +70,7 @@ object Graph {
     * the uniform variant). Scale shape identical to
     * [[pageRankFixedPoint]]. */
   def pageRankPersonalized(edgesIn: DataFrame, seedsIn: DataFrame,
-                           iters: Int, damping: Int = 85): DataFrame =
+                           iters: Int, damping: Int = Damping): DataFrame =
     pageRankLoop(edgesIn, iters, damping) { deg =>
       val seeds = seedsIn.select(col("node")).distinct()
         .join(deg.select(col("node")), Seq("node"))
@@ -122,8 +127,7 @@ object Graph {
   }
 
   /** One PageRank round's messages: each node's rank split over its
-    * out-edges (`r div deg`), summed by dst — (node, s). A node with
-    * out-degree 0 has no edge to join, so it sends nothing. */
+    * out-edges (`r div deg`), summed by dst — (node, s). */
   private def rankMessages(edges: DataFrame, ranks: DataFrame): DataFrame =
     // shuffle_hash: co-partitioned sides -> exchange-free AND sort-free
     // (SMJ would re-sort the static edge list per round)
@@ -136,9 +140,8 @@ object Graph {
   /** DuckDB replay of [[pageRankFixedPoint]] over the caller's
     * `edgesCte` (src, dst): `__pr_*` CTEs ending in
     * `__pr_out (node, deg, rank_fp)`. */
-  def pageRankFixedPointSql(edgesCte: String, iters: Int,
-                            damping: Int = 85): String =
-    pageRankLoopSql(edgesCte, iters, damping,
+  def pageRankFixedPointSql(edgesCte: String, iters: Int): String =
+    pageRankLoopSql(edgesCte, iters,
       s"""__pr_base AS (
       SELECT node, deg, $RankFp // n_nodes AS p
       FROM __pr_deg CROSS JOIN (SELECT COUNT(*) AS n_nodes FROM __pr_deg))""")
@@ -146,9 +149,9 @@ object Graph {
   /** DuckDB replay of [[pageRankPersonalized]] over the caller's
     * `edgesCte` (src, dst) and `seedsCte` (node): `__pr_*` CTEs ending
     * in `__pr_out (node, deg, rank_fp)`. */
-  def pageRankPersonalizedSql(edgesCte: String, seedsCte: String, iters: Int,
-                              damping: Int = 85): String =
-    pageRankLoopSql(edgesCte, iters, damping,
+  def pageRankPersonalizedSql(edgesCte: String, seedsCte: String,
+                              iters: Int): String =
+    pageRankLoopSql(edgesCte, iters,
       s"""__pr_seeds AS (
       SELECT DISTINCT s.node FROM $seedsCte s JOIN __pr_deg d ON s.node = d.node),
     __pr_base AS (
@@ -157,9 +160,9 @@ object Graph {
       FROM __pr_deg d LEFT JOIN __pr_seeds s ON d.node = s.node
       CROSS JOIN (SELECT COUNT(*) AS n_seeds FROM __pr_seeds))""")
 
-  /** [[pageRankLoop]] unrolled: `teleportCtes` read `__pr_deg`
-    * (node, deg) and define `__pr_base` (node, deg, p). */
-  private def pageRankLoopSql(edgesCte: String, iters: Int, damping: Int,
+  /** [[pageRankLoop]] unrolled at damping [[Damping]]: `teleportCtes`
+    * read `__pr_deg` (node, deg) and define `__pr_base` (node, deg, p). */
+  private def pageRankLoopSql(edgesCte: String, iters: Int,
                               teleportCtes: String): String = {
     val rounds = (1 to iters).map { i =>
       s"""__pr_c$i AS (
@@ -167,7 +170,7 @@ object Graph {
       FROM $edgesCte e JOIN __pr_r${i - 1} r ON e.src = r.node GROUP BY 1),
     __pr_r$i AS (
       SELECT b.node, b.deg, b.p,
-        (b.p * ${100 - damping}) // 100 + (COALESCE(c.s, 0) * $damping) // 100 AS r
+        (b.p * ${100 - Damping}) // 100 + (COALESCE(c.s, 0) * $Damping) // 100 AS r
       FROM __pr_base b LEFT JOIN __pr_c$i c ON c.node = b.node)"""
     }
     (Seq(
@@ -207,7 +210,7 @@ object Graph {
     *
     * Returns (ranks, iterationsRun). */
   def pageRankConverged(edgesIn: DataFrame, maxIters: Int,
-                        damping: Int = 85): (DataFrame, Int) = {
+                        damping: Int = Damping): (DataFrame, Int) = {
     require(maxIters >= 1, s"need maxIters >= 1, got $maxIters")
     require(damping > 0 && damping < 100, s"need 0 < damping < 100, got $damping")
     // co-partitioned AQE-planned iteration — see
@@ -234,7 +237,8 @@ object Graph {
       val dang = cur.filter(col("deg") === 0)
         .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
       val next = cur.withColumnRenamed("r", "r_prev")
-        .join(rankMessages(edges, cur).hint("shuffle_hash"), Seq("node"), "left")
+        .join(rankMessages(edges, cur.filter(col("deg") > 0)).hint("shuffle_hash"),
+          Seq("node"), "left")
         .crossJoin(broadcast(dang))
         .withColumn("r", teleport +
           expr(s"((coalesce(s, 0L) + (dang div n_nodes)) * $damping) div 100"))

@@ -1487,7 +1487,8 @@ object ExtensionQueries {
       def step(i: Int) =
         s"""c$i AS (
           SELECT e.dst AS node, CAST(SUM(r.r // r.deg) AS BIGINT) AS s
-          FROM trade e JOIN r${i - 1} r ON e.src = r.node GROUP BY 1),
+          FROM trade e JOIN r${i - 1} r ON e.src = r.node AND r.deg > 0
+          GROUP BY 1),
         dg$i AS (
           SELECT CAST(COALESCE(SUM(r), 0) AS BIGINT) AS dang
           FROM r${i - 1} WHERE deg = 0),
