@@ -458,6 +458,30 @@ case class CanonicalUrl(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** The reference's multi-valued NULL_IF ('\\N','NULL','NUL','') as ONE
+  * kernel call ([[Kernels.nullIfSpelling]]) instead of a `CASE WHEN c
+  * IN (...)` per column: null for an exact spelling match, the input
+  * itself otherwise. NULLABLE even for non-null input, so codegen
+  * re-checks the kernel's result. */
+case class NullIfSpelling(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects string, got ${other.catalogString}")
+  }
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_null_if_spelling"
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.nullIfSpelling(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = graft.functions.Kernels.nullIfSpelling($c);
+      ${ev.isNull} = (${ev.value} == null);""")
+  override protected def withNewChildInternal(newChild: Expression): NullIfSpelling =
+    copy(child = newChild)
+}
+
 /** Per-document character-entropy sufficient statistics in one pass —
   * struct(n_chars, n_distinct_chars, entropy_micro), null when the text
   * has no `.`-matching characters (see Kernels.charEntropyStats for the

@@ -147,6 +147,18 @@ object Kernels {
     v
   }
 
+  private val NullSpellings: Array[UTF8String] =
+    Array("\\N", "NULL", "NUL").map(UTF8String.fromString)
+
+  /** NULL_IF('\\N','NULL','NUL','') of
+    * workfile_design_data_warehouse.sql:38–44: null for an exact match
+    * of one of the reference's NULL spellings (byte equality, so
+    * ' NULL' or 'null' stay values), the input itself otherwise. Every
+    * spelling is at most 4 bytes, so longer values return after one
+    * length check. */
+  def nullIfSpelling(s: UTF8String): UTF8String =
+    if (s.numBytes == 0 || (s.numBytes <= 4 && NullSpellings.contains(s))) null else s
+
   /** Seed-i member of the rotate-xor family over a 60-bit base hash:
     * rotate right by `rot(i)` within 60 bits, then xor a 60-bit constant
     * derived from md5("graft-minhash-seed-i"). A bijection per seed —

@@ -316,6 +316,40 @@ object Graph {
         coalesce(col("n_tri"), lit(0L)).as("n_tri"))
   }
 
+  /** DuckDB replay of [[triangleCounts]] over the caller's `edgesCte`
+    * (canonical `(a, b)`, `a < b`, distinct): the same degree-ordered
+    * orientation, wedge generation and closure, with row-value
+    * comparisons for the (deg, id) rank. `__tri_*` CTEs ending in
+    * `__tri_out (node, deg, n_tri)`, one row per node. */
+  def triangleCountsSql(edgesCte: String): String =
+    s"""__tri_deg AS (
+      SELECT node, COUNT(*) AS deg FROM (
+        SELECT a AS node FROM $edgesCte UNION ALL SELECT b FROM $edgesCte)
+      GROUP BY 1),
+    __tri_o AS (
+      SELECT
+        CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.a ELSE e.b END AS src,
+        CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.b ELSE e.a END AS dst,
+        CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN db.deg ELSE da.deg END AS dd
+      FROM $edgesCte e
+      JOIN __tri_deg da ON da.node = e.a
+      JOIN __tri_deg db ON db.node = e.b),
+    __tri_wg AS (
+      SELECT o1.src AS u, o1.dst AS v, o2.dst AS w
+      FROM __tri_o o1 JOIN __tri_o o2 ON o1.src = o2.src
+      WHERE (o1.dd, o1.dst) < (o2.dd, o2.dst)),
+    __tri_tri AS (
+      SELECT u, v, w FROM __tri_wg wg
+      JOIN __tri_o o ON o.src = wg.v AND o.dst = wg.w),
+    __tri_corners AS (
+      SELECT u AS node FROM __tri_tri
+      UNION ALL SELECT v FROM __tri_tri
+      UNION ALL SELECT w FROM __tri_tri),
+    __tri_cnt AS (SELECT node, COUNT(*) AS n_tri FROM __tri_corners GROUP BY 1),
+    __tri_out AS (
+      SELECT d.node, d.deg, CAST(COALESCE(c.n_tri, 0) AS BIGINT) AS n_tri
+      FROM __tri_deg d LEFT JOIN __tri_cnt c ON c.node = d.node)"""
+
   /** Link prediction by common-neighbor Jaccard — for every
     * NON-adjacent node pair sharing at least `minCommon` neighbors,
     * score |N(a)∩N(b)| / |N(a)∪N(b)| (Liben-Nowell & Kleinberg's
@@ -359,42 +393,6 @@ object Graph {
       .filter(col("rank") <= topK)
   }
 
-  /** k-core decomposition by iterative peeling — the dense-cluster
-    * extractor corpus curation uses to find link farms / spam rings
-    * (and, symmetrically, high-trust cores) before weighting a crawl:
-    * repeatedly delete every node of degree < k until the residual
-    * graph is stable; what's left is the k-core.
-    *
-    * `edgesIn` is an undirected graph given as a SYMMETRIC (src, dst)
-    * list (both directions present), so `COUNT(*) GROUP BY src` is the
-    * full degree.
-    *
-    * The edge list is materialized ONCE and stays STATIC; per-node
-    * degrees are maintained INCREMENTALLY — each round joins the edge
-    * list against only the NEWLY-dead node set (usually tiny →
-    * broadcast, so the dominant frame is scanned but never reshuffled)
-    * and decrements the survivors' degrees by their edges into it.
-    * This is the delta formulation of peeling: every edge is processed
-    * at most twice across ALL rounds (once per endpoint death), where
-    * the naive recount-and-filter form reshuffles and rewrites the full
-    * edge list three times per round — measured 2.97 s → timeout(>10 m)
-    * vs 2.97 s → linear at the 100× step (117 M symmetric edges). Only
-    * the node-sized degree frame is `localCheckpoint`ed per round
-    * (lineage truncation, [[pageRankConverged]] posture); the
-    * convergence probe is the dead-set count the round needs anyway.
-    *
-    * Peeling is monotone (the alive set only shrinks), so a round with
-    * an empty dead set is the identity and a data-dependent early exit
-    * at round j < maxRounds returns bit-identical results to running
-    * all maxRounds — which is exactly what the unrolled-SQL oracle
-    * replays, the same early-stop / fixed-unroll equivalence
-    * [[pageRankConverged]] relies on.
-    *
-    * Returns one row per ALIVE node after peeling: (node, deg, in_core)
-    * with deg on the residual graph and `in_core = deg >= k` (all TRUE
-    * iff converged within maxRounds — surfacing the flag rather than
-    * filtering on it keeps a truncated run auditable instead of
-    * silently wrong). */
   /** Multi-source BFS: minimum hop distance from any seed node, the
     * frontier-expansion primitive under reachability audits (how much
     * of the corpus graph is within k links of a trusted seed set),
@@ -449,6 +447,42 @@ object Graph {
     visited
   }
 
+  /** k-core decomposition by iterative peeling — the dense-cluster
+    * extractor corpus curation uses to find link farms / spam rings
+    * (and, symmetrically, high-trust cores) before weighting a crawl:
+    * repeatedly delete every node of degree < k until the residual
+    * graph is stable; what's left is the k-core.
+    *
+    * `edgesIn` is an undirected graph given as a SYMMETRIC (src, dst)
+    * list (both directions present), so `COUNT(*) GROUP BY src` is the
+    * full degree.
+    *
+    * The edge list is materialized ONCE and stays STATIC; per-node
+    * degrees are maintained INCREMENTALLY — each round joins the edge
+    * list against only the NEWLY-dead node set (usually tiny →
+    * broadcast, so the dominant frame is scanned but never reshuffled)
+    * and decrements the survivors' degrees by their edges into it.
+    * This is the delta formulation of peeling: every edge is processed
+    * at most twice across ALL rounds (once per endpoint death), where
+    * the naive recount-and-filter form reshuffles and rewrites the full
+    * edge list three times per round — measured 2.97 s → timeout(>10 m)
+    * vs 2.97 s → linear at the 100× step (117 M symmetric edges). Only
+    * the node-sized degree frame is `localCheckpoint`ed per round
+    * (lineage truncation, [[pageRankConverged]] posture); the
+    * convergence probe is the dead-set count the round needs anyway.
+    *
+    * Peeling is monotone (the alive set only shrinks), so a round with
+    * an empty dead set is the identity and a data-dependent early exit
+    * at round j < maxRounds returns bit-identical results to running
+    * all maxRounds — which is exactly what the unrolled-SQL oracle
+    * replays, the same early-stop / fixed-unroll equivalence
+    * [[pageRankConverged]] relies on.
+    *
+    * Returns one row per ALIVE node after peeling: (node, deg, in_core)
+    * with deg on the residual graph and `in_core = deg >= k` (all TRUE
+    * iff converged within maxRounds — surfacing the flag rather than
+    * filtering on it keeps a truncated run auditable instead of
+    * silently wrong). */
   def kcorePeel(edgesIn: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     require(maxRounds >= 1, s"need maxRounds >= 1, got $maxRounds")

@@ -80,7 +80,7 @@ object Kpis {
   /** Generalized arm for [[fullOuterOfAggsOnePassArms]]: `build` receives
     * a `masked` function that nulls its argument outside the arm's rows
     * and returns the arm's named aggregates. Aggregates that yield 0
-    * (not null) over an empty arm — count, count_distinct — must be
+    * (not null) over an empty arm — count, `Exact.countDistinct` — must be
     * listed in `zeroWhenEmpty` so they null out exactly where the join
     * form's unmatched side would. Null-ignoring aggregates (min / max /
     * median / sum / avg) need no declaration: all-null input already
@@ -90,7 +90,7 @@ object Kpis {
                        zeroWhenEmpty: Set[String] = Set.empty)
 
   /** [[fullOuterOfAggsOnePass]] for ARBITRARY aggregates per arm (the
-    * KPI views need median / count_distinct / exact avg, not just count
+    * KPI views need median / exact distinct count / exact avg, not just count
     * + sum). Same output as [[fullOuterOfAggs]] over the same arms —
     * for ANY keys, nullable included; one scan + one map-side-
     * combinable shuffle instead of N scans + N−1 full-outer joins.

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.FileLocalDedup
+
 /** Snowflake `QUALIFY` surface, which OSS Spark SQL lacks.
   *
   * Reference sites: workfile_design_data_warehouse.sql:181,265 (keep-one-
@@ -12,8 +14,9 @@ import org.apache.spark.sql.functions._
   * rewrite Snowflake's own planner performs; the transient rank column is
   * dropped so downstream schemas match the reference.
   *
-  * Scale: one hash-partition shuffle on `partCols`; no driver collect.
-  * Skewed keys are handled by AQE (enabled session-wide).
+  * Scale: one hash-partition shuffle on `partCols`, none for a
+  * file-local [[dedup]]; no driver collect. Skewed keys are handled by
+  * AQE (enabled session-wide).
   */
 object Qualify {
 
@@ -46,9 +49,15 @@ object Qualify {
   /** Keep one row per key set — the staging-layer dedup of
     * workfile_design_data_warehouse.sql:265–266. Order by `orderCols`
     * for determinism (the reference orders by the key itself, which is
-    * arbitrary among true duplicates — see SURVEY §7.5.5). */
+    * arbitrary among true duplicates — see SURVEY §7.5.5).
+    *
+    * Runs as the row_number window, except where the plan proves that
+    * no key group spans two partitions (unsplittable file scans and a
+    * key taken from the file name, see [[graft.plans.FileLocalDedup]]):
+    * there it keeps the first row per key inside each partition, with
+    * no exchange. Both forms keep the same row. */
   def dedup(df: DataFrame, keys: Seq[Column], orderCols: Seq[Column]): DataFrame =
-    rowNumber(df, keys, orderCols, 1)
+    FileLocalDedup.of(df, keys, orderCols).getOrElse(rowNumber(df, keys, orderCols, 1))
 
   /** Keep-one-per-key as a hash AGGREGATE instead of a window:
     * `min_by(struct(<all cols>), struct(orderCols))` per key group.

@@ -21,7 +21,10 @@ import graft.ops.Kpis
   * by exploding them after aggregation (see the NULL-key notes on
   * Kpis.fullOuterOfAggsOnePassArms; KpisSpec + the PipelineSpec
   * goldens pin the equivalence, null-armed and null-keyed groups
-  * included).
+  * included). The exact distinct host counts go through
+  * Exact.countDistinct (the size of a collect_set), which runs in the
+  * same object-hash aggregate as the median, so a view plans no
+  * `Expand` and no second aggregation shuffle.
   *
   * Views are lazy DataFrames (CREATE OR REPLACE VIEW ≙
   * createOrReplaceTempView at the orchestrator).
@@ -48,7 +51,7 @@ object Datamart {
       Seq(
         Kpis.Arm(None, m => Seq(
           "n_listings" -> count(m(lit(1))),
-          "n_hosts" -> countDistinct(m(col("host_id"))),
+          "n_hosts" -> Exact.countDistinct(m(col("host_id"))),
           "min_price" -> min(m(col("price"))).cast("double"),
           "max_price" -> max(m(col("price"))).cast("double"),
           "median_price" -> median(m(col("price"))),
@@ -59,7 +62,7 @@ object Datamart {
           "est_revenue_active" -> Exact.sumMoney(m(estRevenue))),
           zeroWhenEmpty = Set("n_active")),
         Kpis.Arm(Some(col("host_is_superhost") === "t"), m => Seq(
-          "n_superhosts" -> countDistinct(m(col("host_id")))),
+          "n_superhosts" -> Exact.countDistinct(m(col("host_id")))),
           zeroWhenEmpty = Set("n_superhosts")),
         Kpis.Arm(Some(col("has_availability") === "f"), m => Seq(
           "n_inactive" -> count(m(lit(1)))),
@@ -93,7 +96,7 @@ object Datamart {
       Seq(
         Kpis.Arm(None, m => Seq(
           "n_listings" -> count(m(lit(1))),
-          "n_hosts" -> countDistinct(m(col("host_id"))),
+          "n_hosts" -> Exact.countDistinct(m(col("host_id"))),
           "median_price" -> median(m(col("price"))),
           "avg_price" -> Exact.avgMoney(m(col("price")))),
           zeroWhenEmpty = Set("n_listings", "n_hosts")),
@@ -117,7 +120,7 @@ object Datamart {
       Seq(col("host_lga"), col("file_year"), col("file_month")),
       Seq(
         Kpis.Arm(None, m => Seq(
-          "n_hosts" -> countDistinct(m(col("host_id"))),
+          "n_hosts" -> Exact.countDistinct(m(col("host_id"))),
           "n_listings" -> count(m(lit(1))),
           "avg_price" -> Exact.avgMoney(m(col("price")))),
           zeroWhenEmpty = Set("n_hosts", "n_listings")),

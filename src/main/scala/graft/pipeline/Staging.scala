@@ -71,7 +71,10 @@ object Staging {
     * normalize NULL spellings, and dedupe on (id, filename)
     * (design.sql:265–266; deterministic tiebreak by last_scraped DESC,
     * name). Input: raw frames, one per monthly file or one per header
-    * shape — both work since harmonization is per-column. */
+    * shape — both work since harmonization is per-column. Over raw CSV
+    * scans the dedup runs inside each file's partition, with no
+    * exchange: a multiLine file is one task and `filename` is part of
+    * the key ([[Qualify.dedup]]). */
   def listing(raws: Seq[DataFrame]): DataFrame = {
     require(raws.nonEmpty, "no listing inputs")
     // P4: every raw frame is harmonized to the same column order first

@@ -65,8 +65,10 @@ object Warehouse {
   /** fact_listing (design.sql:419–549), the E2 trace:
     * filter → derive suburbs + file/listing dates → LEFT JOIN location
     * dim twice (broadcast: bounded dimension) → snapshot-validity filter
-    * → name→code resolution joins. One wide shuffle total (the staging
-    * dedup window upstream); everything here is broadcast.
+    * → name→code resolution joins. Everything here is broadcast, and
+    * over raw CSV scans the staging dedup upstream is file-local
+    * (Qualify.dedup), so the lineage from raw files has no wide
+    * shuffle.
     */
   def factListing(stagingListing: DataFrame, stagingLocation: DataFrame): DataFrame = {
     val loc = stagingLocation.select(col("suburb_name"), col("lga_name"))

@@ -3378,35 +3378,14 @@ object ExtensionQueries {
     * degree-ordered orientation caps wedge work at O(m^1.5) however
     * skewed the degrees run — the property that makes triangle counting
     * feasible on web-scale graphs. Oracle replays orientation, wedge
-    * generation and closure with row-value comparisons. */
+    * generation and closure with row-value comparisons
+    * ([[Graph.triangleCountsSql]]). */
   private val x_graph_triangles = Q(
     "x_graph_triangles",
     (s, d) => Graph.triangleCounts(GraphFixtures.coPurchase(s, d)),
     Some(s"""WITH ${GraphFixtures.coPurchaseSql},
-    deg AS (
-      SELECT node, COUNT(*) AS deg FROM (
-        SELECT a AS node FROM co_purchase UNION ALL SELECT b FROM co_purchase)
-      GROUP BY 1),
-    o AS (
-      SELECT
-        CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.a ELSE e.b END AS src,
-        CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.b ELSE e.a END AS dst,
-        CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN db.deg ELSE da.deg END AS dd
-      FROM co_purchase e
-      JOIN deg da ON da.node = e.a
-      JOIN deg db ON db.node = e.b),
-    wg AS (
-      SELECT o1.src AS u, o1.dst AS v, o2.dst AS w
-      FROM o o1 JOIN o o2 ON o1.src = o2.src
-      WHERE (o1.dd, o1.dst) < (o2.dd, o2.dst)),
-    tri AS (SELECT u, v, w FROM wg JOIN o ON o.src = wg.v AND o.dst = wg.w),
-    corners AS (
-      SELECT u AS node FROM tri
-      UNION ALL SELECT v FROM tri
-      UNION ALL SELECT w FROM tri),
-    cnt AS (SELECT node, COUNT(*) AS n_tri FROM corners GROUP BY 1)
-    SELECT d.node, d.deg, CAST(COALESCE(c.n_tri, 0) AS BIGINT) AS n_tri
-    FROM deg d LEFT JOIN cnt c ON c.node = d.node"""))
+    ${Graph.triangleCountsSql("co_purchase")}
+    SELECT node, deg, n_tri FROM __tri_out"""))
 
   /** Local clustering coefficient over the co-purchase graph —
     * Watts–Strogatz per-node cohesion: lcc = 2·triangles/(deg·(deg−1)),
@@ -3429,34 +3408,13 @@ object ExtensionQueries {
       tri.crossJoin(broadcast(avg))
     },
     Some(s"""WITH ${GraphFixtures.coPurchaseSql},
-    deg AS (
-      SELECT node, COUNT(*) AS deg FROM (
-        SELECT a AS node FROM co_purchase UNION ALL SELECT b FROM co_purchase)
-      GROUP BY 1),
-    o AS (
-      SELECT
-        CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.a ELSE e.b END AS src,
-        CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.b ELSE e.a END AS dst,
-        CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN db.deg ELSE da.deg END AS dd
-      FROM co_purchase e
-      JOIN deg da ON da.node = e.a
-      JOIN deg db ON db.node = e.b),
-    wg AS (
-      SELECT o1.src AS u, o1.dst AS v, o2.dst AS w
-      FROM o o1 JOIN o o2 ON o1.src = o2.src
-      WHERE (o1.dd, o1.dst) < (o2.dd, o2.dst)),
-    tri AS (SELECT u, v, w FROM wg JOIN o ON o.src = wg.v AND o.dst = wg.w),
-    corners AS (
-      SELECT u AS node FROM tri
-      UNION ALL SELECT v FROM tri
-      UNION ALL SELECT w FROM tri),
-    cnt AS (SELECT node, COUNT(*) AS n_tri FROM corners GROUP BY 1),
+    ${Graph.triangleCountsSql("co_purchase")},
     pernode AS (
-      SELECT d.node, d.deg, CAST(COALESCE(c.n_tri, 0) AS BIGINT) AS n_tri,
-        CASE WHEN d.deg >= 2 THEN CAST(ROUND(
-          CAST(COALESCE(c.n_tri, 0) AS DOUBLE) * 2000000
-            / CAST(d.deg * (d.deg - 1) AS DOUBLE)) AS BIGINT) END AS lcc_micro
-      FROM deg d LEFT JOIN cnt c ON c.node = d.node)
+      SELECT node, deg, n_tri,
+        CASE WHEN deg >= 2 THEN CAST(ROUND(
+          CAST(n_tri AS DOUBLE) * 2000000
+            / CAST(deg * (deg - 1) AS DOUBLE)) AS BIGINT) END AS lcc_micro
+      FROM __tri_out)
     SELECT node, deg, n_tri, lcc_micro,
       (SELECT CAST(ROUND(CAST(SUM(lcc_micro) AS DOUBLE) / COUNT(*)) AS BIGINT)
        FROM pernode WHERE deg >= 2) AS global_cc_micro

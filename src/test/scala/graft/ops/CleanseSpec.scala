@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.Confs
 
 class CleanseSpec extends SparkSpec {
   import spark.implicits._
@@ -32,6 +33,27 @@ class CleanseSpec extends SparkSpec {
       assert(one(Cleanse.normNulls(col("s")), v).isEmpty, s"expected null for '$v'")
     }
     assert(one(Cleanse.normNulls(col("s")), "x").contains("x"))
+  }
+
+  test("normNulls kernel equals the CASE ... IN form, compiled and interpreted") {
+    val inputs = Seq("\\N", "NULL", "NUL", "", null,
+      "null", " NULL", "\n", "NULLS", "NU", "\\", "\\NULL", "x", "Sydney 悉尼")
+    // repartition: keep the projection out of the optimizer's local
+    // evaluation, so it runs in the mode under test
+    val df = inputs.toDF("s").repartition(1)
+    val caseIn = when(col("s").isin("\\N", "NULL", "NUL", ""), lit(null))
+      .otherwise(col("s"))
+    def both(): Seq[(String, String)] =
+      df.select(Cleanse.normNulls(col("s")), caseIn).as[(String, String)].collect().toSeq
+    val compiled = Confs.withConf(spark, "spark.sql.codegen.factoryMode", "CODEGEN_ONLY")(both())
+    val interpreted = Confs.withConf(spark, "spark.sql.codegen.factoryMode", "NO_CODEGEN") {
+      Confs.withConf(spark, "spark.sql.codegen.wholeStage", "false")(both())
+    }
+    for (rows <- Seq(compiled, interpreted)) {
+      assert(rows.length == inputs.length)
+      rows.foreach { case (kernel, reference) => assert(kernel == reference) }
+      assert(rows.count(_._1 == null) == 5) // the four spellings and null
+    }
   }
 
   test("literalMap applies first matching key, default otherwise") {

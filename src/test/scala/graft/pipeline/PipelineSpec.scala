@@ -82,7 +82,7 @@ class PipelineSpec extends SparkSpec {
   test("KPI rate guard: all-NULL host_id group yields NULL superhost_rate, no ANSI 0/0") {
     val fact = Seq(
       // one (area, month) group: rows exist, every host_id NULL ->
-      // n_hosts = countDistinct = 0 while n_superhosts arm matches
+      // n_hosts = 0 distinct non-null ids while n_superhosts arm matches
       ("SYDNEY", 2020, 6, Option.empty[Long], 100.0, "t", "t", 10),
       ("SYDNEY", 2020, 6, Option.empty[Long], 120.0, "t", "f", 10))
       .toDF("neighbourhood_lga", "file_year", "file_month", "host_id",
@@ -170,7 +170,7 @@ class PipelineSpec extends SparkSpec {
     assert(m21.getAs[Double]("active_rate") == 100.0)
   }
 
-  test("fact plan shape: dim joins broadcast; one wide shuffle for the dedup window") {
+  test("fact plan shape: dim joins broadcast; the fact lineage has no shuffle") {
     // rebuild without cache so the full lineage is visible in the plan
     val dir = tempDir("airbnb_fixtures_plan")
     Fixtures.writeAll(dir)
@@ -183,9 +183,22 @@ class PipelineSpec extends SparkSpec {
     val nBroadcast = "BroadcastHashJoin".r.findAllIn(plan).length
     assert(nBroadcast >= 4, s"expected >=4 broadcast joins, got $nBroadcast")
     assert(!plan.contains("SortMergeJoin"), "a dim join fell back to SMJ")
-    // the fact-side stream shuffles once: the (id, filename) dedup window
+    // the fact-side stream never shuffles: the (id, filename) dedup
+    // runs inside each raw file's partition
     val factShuffles = "hashpartitioning\\(id#".r.findAllIn(plan).length
-    assert(factShuffles == 1, s"expected the single dedup-window shuffle, got $factShuffles")
+    assert(factShuffles == 0, s"expected no shuffle on the fact key, got $factShuffles")
+  }
+
+  test("KPI view plans have no Expand: distinct counts are plain aggregates") {
+    val views = Seq(tables.kpiNeighbourhoodMonth, tables.kpiNeighbourhoodMonthRaw,
+      tables.kpiPropertyTypeMonth, tables.kpiHostMonth)
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    // positive control: two masked countDistincts do plan an Expand
+    val control = tables.factListing.groupBy("file_year").agg(
+      countDistinct(when($"has_availability" === "t", $"host_id")),
+      countDistinct(when($"host_is_superhost" === "t", $"host_id")))
+    assert(plan(control).contains("Expand"), plan(control))
+    views.foreach(v => assert(!plan(v).contains("Expand"), plan(v)))
   }
 
   test("kpi variants + SQL serving layer (views registered)") {
