@@ -12,102 +12,167 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the graft extension operators.
   *
-  * These are tier-(b) custom expressions (SURVEY §7.3 preference order):
-  * full `doGenCode` implementations whose generated code is a single
-  * static kernel call (see [[Kernels]]), so they participate in
-  * whole-stage codegen and run JIT-compiled — unlike higher-order-
-  * function formulations, which Spark evaluates interpreted.
+  * Every scalar kernel in [[Kernels]] is declared once, as a
+  * [[ScalarKernel]] descriptor in [[GraftFunctions]], and runs through
+  * one of two generic expressions, [[UnaryKernelCall]] and
+  * [[BinaryKernelCall]]. These are tier-(b) custom expressions (SURVEY
+  * §7.3 preference order): full `doGenCode` implementations whose
+  * generated code is a single static kernel call, so they participate
+  * in whole-stage codegen and run JIT-compiled — unlike higher-order-
+  * function formulations, which Spark evaluates interpreted. The two
+  * aggregates, [[TopKByScore]] and [[SumLongArray]], follow them.
   */
 
-/** md5-family minhash signature (cross-engine-checkable; see Kernels). */
-case class Md5MinHashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-  require(numHashes > 0, "numHashes must be positive")
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftFunctions.requireStringArray(child, prettyName)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_md5_minhash_sig"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.md5MinhashSig(input.asInstanceOf[ArrayData], numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.md5MinhashSig($c, $numHashes)")
-  override protected def withNewChildInternal(newChild: Expression): Md5MinHashSig =
-    copy(child = newChild)
-}
-
-/** md5-family 60-bit simhash (cross-engine-checkable; see Kernels). */
-case class Md5SimHash60(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftFunctions.requireStringArray(child, prettyName)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_md5_simhash60"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.md5Simhash60(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.md5Simhash60($c)")
-  override protected def withNewChildInternal(newChild: Expression): Md5SimHash60 =
-    copy(child = newChild)
-}
-
-/** The 56-bit engine-portable hash behind [[graft.ops.Sampling.hashValue]]
-  * as ONE codegen'd kernel call (see Kernels.md5Low56) instead of the
-  * md5-hex → substring×7 → concat → conv string pipeline — bit-identical
-  * values, so every oracle stays valid, at a fraction of the per-row
-  * cost on the ~50 hash-based registry paths. */
-case class Md5Low56(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a string child, got ${child.dataType.sql}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_md5_low56"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.md5Low56(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.md5Low56($c)")
-  override protected def withNewChildInternal(newChild: Expression): Md5Low56 =
-    copy(child = newChild)
-}
-
-/** Karp–Rabin rolling-hash winnowing fingerprints over char k-grams
-  * (oracle-checkable; see Kernels.winnowRoll). */
-case class WinnowRoll(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  require(k > 0 && w > 0, "k and w must be positive")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
+/** An argument family a scalar kernel accepts. Inputs are checked, never
+  * cast: an array family matches its element type at any element
+  * nullability, and `orNull` also admits an untyped NULL literal
+  * (NullType), which the null-safe templates short-circuit without
+  * calling the kernel. */
+final case class ArgType(accepted: DataType, orNull: Boolean = false) {
+  def accepts(t: DataType): Boolean = (t, accepted) match {
+    case (ArrayType(got, _), ArrayType(want, _)) => got == want
+    case _ => t == accepted || (orNull && t == NullType)
   }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_winnow_roll"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.winnowRoll(input.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.winnowRoll($c, $k, $w)")
-  override protected def withNewChildInternal(newChild: Expression): WinnowRoll =
-    copy(child = newChild)
 }
 
-/** Sorted-distinct word n-gram shingles of a token array. */
-case class WordShingles(child: Expression, n: Int)
+object ArgType {
+  val string = ArgType(StringType)
+  val stringOrNull = ArgType(StringType, orNull = true)
+  val longOrNull = ArgType(LongType, orNull = true)
+  val strings = ArgType(ArrayType(StringType))
+  val doubles = ArgType(ArrayType(DoubleType))
+  val floats = ArgType(ArrayType(FloatType))
+}
+
+/** One graft scalar kernel, declared once: its SQL name, its [[Kernels]]
+  * method, its named arguments and their types, its result type, its
+  * int literal parameters (each with its least allowed value), and
+  * whether the kernel itself can return null for a non-null input. The
+  * Column API (`apply` on the two subclasses), the generic expressions
+  * and the `graft_*` SQL builders all read it. */
+sealed abstract class ScalarKernel(
+    val name: String,
+    val method: String,
+    val args: Seq[(String, ArgType)],
+    val dataType: DataType,
+    val params: Seq[(String, Int)],
+    val returnsNull: Boolean) extends Serializable {
+
+  /** The SQL signature a wrong-arity call names, e.g. `(arr, numHashes)`. */
+  private[functions] def signature: String =
+    (args.map(_._1) ++ params.map(_._1)).mkString("(", ", ", ")")
+
+  protected def build(inputs: Seq[Expression], values: Seq[Int]): Expression
+
+  private[functions] def checkParams(values: Seq[Int]): Unit = {
+    require(values.size == params.size,
+      s"$name expects ${params.size} int parameter(s), got ${values.size}")
+    params.zip(values).foreach { case ((p, least), v) =>
+      require(v >= least, if (least == 1) s"$p must be positive" else s"$p must be >= $least")
+    }
+  }
+
+  private[functions] def checkInputs(inputs: Seq[Expression]): TypeCheckResult =
+    args.zip(inputs).collectFirst {
+      case ((_, t), e) if !t.accepts(e.dataType) => TypeCheckResult.TypeCheckFailure(
+        s"$name expects ${t.accepted.catalogString}, got ${e.dataType.catalogString}")
+    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
+
+  /** The generated Java for one call, given the inputs' Java values: the
+    * text Spark's `defineCodeGen` emits, or, for a kernel that can
+    * return null, the assignment plus a re-check of its result. */
+  private[functions] def assign(ev: ExprCode, inputs: Seq[String], values: Seq[Int]): String = {
+    val call = s"graft.functions.Kernels.$method(${(inputs ++ values.map(_.toString)).mkString(", ")})"
+    if (!returnsNull) s"${ev.value} = $call;"
+    else s"""
+      ${ev.value} = $call;
+      ${ev.isNull} = (${ev.value} == null);"""
+  }
+
+  /** The `graft_*` SQL builder: the inputs, then the int parameters as
+    * integer literals. */
+  private[functions] def sqlBuilder: Seq[Expression] => Expression = exprs => {
+    if (exprs.size != args.size + params.size)
+      throw GraftFunctions.arityError(name, signature, exprs.size)
+    val (inputs, literals) = exprs.splitAt(args.size)
+    build(inputs, literals.zip(params).map { case (e, (p, _)) => GraftFunctions.intLit(e, p) })
+  }
+}
+
+/** A one-input kernel; `apply` is its Column function. */
+sealed abstract class UnaryKernel(
+    name: String, method: String, arg: (String, ArgType), dataType: DataType,
+    params: Seq[(String, Int)] = Nil, returnsNull: Boolean = false)
+    extends ScalarKernel(name, method, Seq(arg), dataType, params, returnsNull) {
+  /** The interpreted path: the same kernel, called directly. */
+  def call(input: Any, values: Seq[Int]): Any
+  def apply(c: Column, values: Int*): Column =
+    ColumnBridge.column(build(Seq(ColumnBridge.expression(c)), values))
+  protected def build(inputs: Seq[Expression], values: Seq[Int]): Expression =
+    UnaryKernelCall(this, inputs.head, values)
+}
+
+/** A two-input kernel; `apply` is its Column function. */
+sealed abstract class BinaryKernel(
+    name: String, method: String, args: Seq[(String, ArgType)], dataType: DataType,
+    params: Seq[(String, Int)] = Nil, returnsNull: Boolean = false)
+    extends ScalarKernel(name, method, args, dataType, params, returnsNull) {
+  /** The interpreted path: the same kernel, called directly. */
+  def call(left: Any, right: Any, values: Seq[Int]): Any
+  def apply(a: Column, b: Column, values: Int*): Column =
+    ColumnBridge.column(build(Seq(a, b).map(ColumnBridge.expression), values))
+  protected def build(inputs: Seq[Expression], values: Seq[Int]): Expression =
+    BinaryKernelCall(this, inputs(0), inputs(1), values)
+}
+
+/** One row-wise call of a [[UnaryKernel]] with its int parameters, on
+  * Spark's null-propagating UnaryExpression template: a null input gives
+  * null without a call, and the generated code is the kernel's single
+  * static call, `graft.functions.Kernels.<method>(input, <ints>)`.
+  * `prettyName` is the kernel's SQL name, and `toString` lists the input
+  * then the ints, so plans and automatic column names read as they
+  * would for a hand-written expression per kernel.
+  *
+  * Spark's `StaticInvoke` would give the same values, but it stores
+  * every argument in a mutable-state slot before the call: on a
+  * 74-column `normNulls` projection of 200k rows (`local[4]`, a fresh
+  * JVM per run) the generated source grew 4.4% (139,507 → 145,633
+  * bytes), the largest method's bytecode grew from 19,388 to 20,246
+  * bytes, and the warm pass slowed from 2.94/2.92 s to 3.57/3.70 s. */
+case class UnaryKernelCall(kernel: UnaryKernel, child: Expression, params: Seq[Int])
     extends UnaryExpression {
-  require(n > 0, "n must be positive")
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftFunctions.requireStringArray(child, prettyName)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_word_shingles"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.wordShingles(input.asInstanceOf[ArrayData], n)
+  kernel.checkParams(params)
+  override def checkInputDataTypes(): TypeCheckResult = kernel.checkInputs(Seq(child))
+  override def dataType: DataType = kernel.dataType
+  override def nullable: Boolean = kernel.returnsNull || child.nullable
+  override def prettyName: String = kernel.name
+  override protected def stringArgs: Iterator[Any] = Iterator(child) ++ params
+  override protected def nullSafeEval(input: Any): Any = kernel.call(input, params)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.wordShingles($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
+    nullSafeCodeGen(ctx, ev, c => kernel.assign(ev, Seq(c), params))
+  override protected def withNewChildInternal(newChild: Expression): UnaryKernelCall =
     copy(child = newChild)
 }
 
-/** Dot product of two array<double> (hot loop of every similarity op). */
+/** The two-input form of [[UnaryKernelCall]], on Spark's
+  * BinaryExpression template. */
+case class BinaryKernelCall(
+    kernel: BinaryKernel, left: Expression, right: Expression, params: Seq[Int])
+    extends BinaryExpression {
+  kernel.checkParams(params)
+  override def checkInputDataTypes(): TypeCheckResult = kernel.checkInputs(Seq(left, right))
+  override def dataType: DataType = kernel.dataType
+  override def nullable: Boolean = kernel.returnsNull || left.nullable || right.nullable
+  override def prettyName: String = kernel.name
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right) ++ params
+  override protected def nullSafeEval(a: Any, b: Any): Any = kernel.call(a, b, params)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => kernel.assign(ev, Seq(a, b), params))
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): BinaryKernelCall =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Native bounded top-k aggregate: keeps the k (score, key) pairs with
   * the highest scores (ties to the smaller key), returned as a sorted
   * array of structs — tier-(b) custom AGGREGATE, completing the scalar
@@ -213,25 +278,6 @@ case class TopKByScore(
     copy(scoreExpr = newChildren(0), keyExpr = newChildren(1))
 }
 
-/** Per-row fixed-point Gram contribution (see [[Kernels.gramUpperTriQ]]):
-  * array<float> vector → array<long> of the d(d+1)/2 quantized
-  * upper-triangle products. */
-case class GramUpperTriQ(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_gram_upper_q expects array<float>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_gram_upper_q"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.gramUpperTriQ(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.gramUpperTriQ($c)")
-  override protected def withNewChildInternal(newChild: Expression): GramUpperTriQ =
-    copy(child = newChild)
-}
-
 /** Elementwise sum of array<long> — the missing vector-accumulator
   * aggregate (Spark has no built-in elementwise array sum; the explode/
   * groupBy formulation shuffles d rows per input row). Partial-
@@ -319,251 +365,131 @@ case class SumLongArray(
     copy(child = newChildren(0))
 }
 
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    Seq(left, right).map(e => GraftFunctions.requireDoubleArray(e, prettyName))
-      .collectFirst { case f: TypeCheckResult.TypeCheckFailure => f }
-      .getOrElse(TypeCheckResult.TypeCheckSuccess)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.dot($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Symmetric max-abs int8 quantization of an array<float> vector. */
-case class QuantizeInt8(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_quantize_int8"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.quantizeInt8(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.quantizeInt8($c)")
-  override protected def withNewChildInternal(newChild: Expression): QuantizeInt8 =
-    copy(child = newChild)
-}
-
-/** |A ∩ B| of two sorted-distinct string arrays (merge count). */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    Seq(left, right).map(e => GraftFunctions.requireStringArray(e, prettyName))
-      .collectFirst { case f: TypeCheckResult.TypeCheckFailure => f }
-      .getOrElse(TypeCheckResult.TypeCheckSuccess)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_sorted_intersect_count"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.sortedIntersectCount($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Jaro-Winkler similarity of two strings over UTF-8 bytes, DuckDB-
-  * `jaro_winkler_similarity`-compatible (see [[Kernels.jaroWinkler]] for
-  * the exact contract incl. the empty-string and boost-threshold edges). */
-case class JaroWinkler(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    Seq(left, right).collectFirst {
-      // NullType is a literal NULL: nullSafeEval short-circuits it
-      case e if e.dataType != StringType && e.dataType != NullType =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects string inputs, got ${e.dataType.catalogString}")
-    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_jaro_winkler"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.jaroWinkler($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaroWinkler =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Positional gram-gram md5 hex digests ([[Kernels.posGramMd5]]):
-  * array<string>, one 32-char digest per gram start position. */
-case class PosGramMd5(child: Expression, gram: Int) extends UnaryExpression {
-  require(gram >= 2, "gram must be >= 2")
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftFunctions.requireStringArray(child, prettyName)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_pos_gram_md5"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.posGramMd5(input.asInstanceOf[ArrayData], gram)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.posGramMd5($c, $gram)")
-  override protected def withNewChildInternal(newChild: Expression): PosGramMd5 =
-    copy(child = newChild)
-}
-
-/** Per-row Poisson-bootstrap replica vector
-  * ([[Kernels.bootstrapRow]]): array<long> of length 2·replicas —
-  * [w_0..w_{n-1}, w_0·v..w_{n-1}·v]. */
-case class BootstrapRow(left: Expression, right: Expression, replicas: Int)
-    extends BinaryExpression {
-  require(replicas > 0, "replicas must be positive")
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != StringType && left.dataType != NullType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (string, bigint); id is ${left.dataType.catalogString}")
-    else if (right.dataType != LongType && right.dataType != NullType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (string, bigint); value is ${right.dataType.catalogString}")
-    else TypeCheckResult.TypeCheckSuccess
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_bootstrap_row"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.bootstrapRow(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[Long], replicas)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.Kernels.bootstrapRow($a, $b, $replicas)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BootstrapRow =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Canonical crawl URL ([[Kernels.canonicalizeUrl]], the
-  * graft.ops.Urls rule set). NULLABLE even for non-null input — a
-  * string without "://" or a path slash canonicalizes to NULL by
-  * contract — so codegen re-checks the kernel's result. */
-case class CanonicalUrl(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | NullType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_canonical_url"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.canonicalizeUrl(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Kernels.canonicalizeUrl($c);
-      ${ev.isNull} = (${ev.value} == null);""")
-  override protected def withNewChildInternal(newChild: Expression): CanonicalUrl =
-    copy(child = newChild)
-}
-
-/** The reference's multi-valued NULL_IF ('\\N','NULL','NUL','') as ONE
-  * kernel call ([[Kernels.nullIfSpelling]]) instead of a `CASE WHEN c
-  * IN (...)` per column: null for an exact spelling match, the input
-  * itself otherwise. NULLABLE even for non-null input, so codegen
-  * re-checks the kernel's result. */
-case class NullIfSpelling(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_null_if_spelling"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.nullIfSpelling(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Kernels.nullIfSpelling($c);
-      ${ev.isNull} = (${ev.value} == null);""")
-  override protected def withNewChildInternal(newChild: Expression): NullIfSpelling =
-    copy(child = newChild)
-}
-
-/** Per-document character-entropy sufficient statistics in one pass —
-  * struct(n_chars, n_distinct_chars, entropy_micro), null when the text
-  * has no `.`-matching characters (see Kernels.charEntropyStats for the
-  * bit-equality argument vs the explode-to-characters aggregate form). */
-case class CharEntropyStats(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | NullType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_chars", LongType, nullable = false),
-    StructField("n_distinct_chars", IntegerType, nullable = false),
-    StructField("entropy_micro", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_char_entropy"
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.charEntropyStats(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Kernels.charEntropyStats($c);
-      ${ev.isNull} = (${ev.value} == null);""")
-  override protected def withNewChildInternal(newChild: Expression): CharEntropyStats =
-    copy(child = newChild)
-}
-
-/** Column-API + SQL-registration surface for the native expressions. */
+/** Column-API + SQL-registration surface for the native expressions:
+  * each scalar kernel is one descriptor below, called as a Column
+  * function (`GraftFunctions.dot(a, b)`, `GraftFunctions.md5MinhashSig(toks, 64)`). */
 object GraftFunctions {
+  import ArgType._
 
-  private[functions] def requireStringArray(e: Expression, name: String): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$name expects array<string>, got ${other.catalogString}")
-    }
+  /** md5-family minhash signature (cross-engine-checkable; see Kernels). */
+  case object md5MinhashSig extends UnaryKernel("graft_md5_minhash_sig", "md5MinhashSig",
+      "arr" -> strings, ArrayType(LongType, containsNull = false), Seq("numHashes" -> 1)) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.md5MinhashSig(a.asInstanceOf[ArrayData], p(0))
+  }
 
-  private[functions] def requireDoubleArray(e: Expression, name: String): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$name expects array<double>, got ${other.catalogString}")
-    }
+  /** md5-family 60-bit simhash (cross-engine-checkable; see Kernels). */
+  case object md5Simhash60 extends UnaryKernel("graft_md5_simhash60", "md5Simhash60",
+      "arr" -> strings, LongType) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.md5Simhash60(a.asInstanceOf[ArrayData])
+  }
 
-  def md5MinhashSig(toks: Column, numHashes: Int): Column =
-    ColumnBridge.column(Md5MinHashSig(ColumnBridge.expression(toks), numHashes))
+  /** The 56-bit engine-portable hash behind [[graft.ops.Sampling.hashValue]]
+    * as one kernel call instead of the md5-hex → substring×7 → concat →
+    * conv string pipeline — bit-identical values, at a fraction of the
+    * per-row cost on the ~50 hash-based registry paths. */
+  case object md5Low56 extends UnaryKernel("graft_md5_low56", "md5Low56", "key" -> string, LongType) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.md5Low56(a.asInstanceOf[UTF8String])
+  }
 
-  def md5Simhash60(toks: Column): Column =
-    ColumnBridge.column(Md5SimHash60(ColumnBridge.expression(toks)))
+  /** Karp–Rabin rolling-hash winnowing fingerprints over char k-grams
+    * (oracle-checkable; see Kernels.winnowRoll). */
+  case object winnowRoll extends UnaryKernel("graft_winnow_roll", "winnowRoll",
+      "text" -> string, ArrayType(LongType, containsNull = false), Seq("k" -> 1, "w" -> 1)) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.winnowRoll(a.asInstanceOf[UTF8String], p(0), p(1))
+  }
 
-  def winnowRoll(text: Column, k: Int = 8, w: Int = 4): Column =
-    ColumnBridge.column(WinnowRoll(ColumnBridge.expression(text), k, w))
+  /** Sorted-distinct word n-gram shingles of a token array. */
+  case object wordShingles extends UnaryKernel("graft_word_shingles", "wordShingles",
+      "arr" -> strings, ArrayType(StringType, containsNull = false), Seq("n" -> 1)) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.wordShingles(a.asInstanceOf[ArrayData], p(0))
+  }
 
-  def wordShingles(toks: Column, n: Int): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(toks), n))
+  /** Per-row fixed-point Gram contribution (see [[Kernels.gramUpperTriQ]]):
+    * array<float> vector → array<long> of the d(d+1)/2 quantized
+    * upper-triangle products. */
+  case object gramUpperQ extends UnaryKernel("graft_gram_upper_q", "gramUpperTriQ",
+      "vec" -> floats, ArrayType(LongType, containsNull = false)) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.gramUpperTriQ(a.asInstanceOf[ArrayData])
+  }
 
-  def charEntropyStats(text: Column): Column =
-    ColumnBridge.column(CharEntropyStats(ColumnBridge.expression(text)))
+  /** Dot product of two array<double> (hot loop of every similarity op). */
+  case object dot extends BinaryKernel("graft_dot", "dot", Seq("a" -> doubles, "b" -> doubles), DoubleType) {
+    def call(a: Any, b: Any, p: Seq[Int]): Any =
+      Kernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  }
 
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    ColumnBridge.column(SortedIntersectCount(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  /** Symmetric max-abs int8 quantization of an array<float> vector. */
+  case object quantizeInt8 extends UnaryKernel("graft_quantize_int8", "quantizeInt8",
+      "vec" -> floats, ArrayType(IntegerType, containsNull = false)) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.quantizeInt8(a.asInstanceOf[ArrayData])
+  }
 
-  def dot(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProduct(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  /** |A ∩ B| of two sorted-distinct string arrays (merge count). */
+  case object sortedIntersectCount extends BinaryKernel("graft_sorted_intersect_count",
+      "sortedIntersectCount", Seq("a" -> strings, "b" -> strings), IntegerType) {
+    def call(a: Any, b: Any, p: Seq[Int]): Any =
+      Kernels.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  }
 
-  def quantizeInt8(vec: Column): Column =
-    ColumnBridge.column(QuantizeInt8(ColumnBridge.expression(vec)))
+  /** Jaro-Winkler similarity of two strings over UTF-8 bytes, DuckDB-
+    * `jaro_winkler_similarity`-compatible (see [[Kernels.jaroWinkler]] for
+    * the exact contract incl. the empty-string and boost-threshold edges). */
+  case object jaroWinkler extends BinaryKernel("graft_jaro_winkler", "jaroWinkler",
+      Seq("a" -> stringOrNull, "b" -> stringOrNull), DoubleType) {
+    def call(a: Any, b: Any, p: Seq[Int]): Any =
+      Kernels.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
+  }
 
-  def jaroWinkler(a: Column, b: Column): Column =
-    ColumnBridge.column(JaroWinkler(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  /** Positional gram-gram md5 hex digests ([[Kernels.posGramMd5]]):
+    * array<string>, one 32-char digest per gram start position. */
+  case object posGramMd5 extends UnaryKernel("graft_pos_gram_md5", "posGramMd5",
+      "tokens" -> strings, ArrayType(StringType, containsNull = false), Seq("gram" -> 2)) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.posGramMd5(a.asInstanceOf[ArrayData], p(0))
+  }
 
-  def canonicalUrl(url: Column): Column =
-    ColumnBridge.column(CanonicalUrl(ColumnBridge.expression(url)))
+  /** Per-row Poisson-bootstrap replica vector ([[Kernels.bootstrapRow]]):
+    * array<long> of length 2·replicas — [w_0..w_{n-1}, w_0·v..w_{n-1}·v]. */
+  case object bootstrapRow extends BinaryKernel("graft_bootstrap_row", "bootstrapRow",
+      Seq("id" -> stringOrNull, "value" -> longOrNull), ArrayType(LongType, containsNull = false),
+      Seq("replicas" -> 1)) {
+    def call(a: Any, b: Any, p: Seq[Int]): Any =
+      Kernels.bootstrapRow(a.asInstanceOf[UTF8String], b.asInstanceOf[Long], p(0))
+  }
 
-  def bootstrapRow(id: Column, v: Column, replicas: Int): Column =
-    ColumnBridge.column(BootstrapRow(
-      ColumnBridge.expression(id), ColumnBridge.expression(v), replicas))
+  /** Canonical crawl URL ([[Kernels.canonicalizeUrl]], the graft.ops.Urls
+    * rule set). Null even for a non-null input: a string without "://"
+    * or a path slash canonicalizes to null by contract. */
+  case object canonicalUrl extends UnaryKernel("graft_canonical_url", "canonicalizeUrl",
+      "url" -> stringOrNull, StringType, returnsNull = true) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.canonicalizeUrl(a.asInstanceOf[UTF8String])
+  }
 
-  def posGramMd5(tokens: Column, gram: Int): Column =
-    ColumnBridge.column(PosGramMd5(ColumnBridge.expression(tokens), gram))
+  /** The reference's multi-valued NULL_IF ('\\N','NULL','NUL','') as one
+    * kernel call ([[Kernels.nullIfSpelling]]) instead of a `CASE WHEN c
+    * IN (...)` per column: null for an exact spelling match, the input
+    * itself otherwise. */
+  case object nullIfSpelling extends UnaryKernel("graft_null_if_spelling", "nullIfSpelling",
+      "c" -> string, StringType, returnsNull = true) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.nullIfSpelling(a.asInstanceOf[UTF8String])
+  }
+
+  /** Per-document character-entropy sufficient statistics in one pass —
+    * struct(n_chars, n_distinct_chars, entropy_micro), null when the text
+    * has no `.`-matching characters (see Kernels.charEntropyStats for the
+    * bit-equality argument vs the explode-to-characters aggregate form). */
+  case object charEntropyStats extends UnaryKernel("graft_char_entropy", "charEntropyStats",
+      "text" -> stringOrNull, StructType(Seq(
+        StructField("n_chars", LongType, nullable = false),
+        StructField("n_distinct_chars", IntegerType, nullable = false),
+        StructField("entropy_micro", LongType, nullable = false))), returnsNull = true) {
+    def call(a: Any, p: Seq[Int]): Any = Kernels.charEntropyStats(a.asInstanceOf[UTF8String])
+  }
+
+  /** The scalar kernels registered as `graft_*` SQL functions; the other
+    * five (md5Low56, posGramMd5, bootstrapRow, nullIfSpelling,
+    * charEntropyStats) are Column-API only. */
+  private val sqlKernels: Seq[ScalarKernel] = Seq(wordShingles, sortedIntersectCount, dot,
+    quantizeInt8, md5MinhashSig, md5Simhash60, winnowRoll, jaroWinkler, gramUpperQ, canonicalUrl)
 
   /** Bounded top-k aggregate Column: array<struct<score,key>> of the k
     * highest-scored keys per group, partial-aggregable (see
@@ -573,69 +499,38 @@ object GraftFunctions {
       TopKByScore(ColumnBridge.expression(score),
         ColumnBridge.expression(key), k).toAggregateExpression())
 
-  /** Per-row fixed-point Gram contribution Column (array<float> →
-    * array<long>, see [[GramUpperTriQ]]). */
-  def gramUpperQ(vec: Column): Column =
-    ColumnBridge.column(GramUpperTriQ(ColumnBridge.expression(vec)))
-
   /** Elementwise exact array<long> sum aggregate Column (see
     * [[SumLongArray]]). */
   def sumLongArray(arr: Column): Column =
     ColumnBridge.column(
       SumLongArray(ColumnBridge.expression(arr)).toAggregateExpression())
 
-  private def intLit(e: Expression, what: String): Int = e match {
+  private[functions] def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal, got: $other")
   }
 
+  // a wrong argument count names the signature, not a raw MatchError
+  private[functions] def arityError(name: String, signature: String, got: Int) =
+    new IllegalArgumentException(s"$name expects $signature, got $got argument(s)")
+
   /** (name, info, builder) triples for every graft_* SQL function —
     * shared by session-level [[register]] and the
     * [[GraftSparkExtensions]] extensions injector. */
   def registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
-    def info(name: String) = new ExpressionInfo("graft.functions", name)
-    // applyOrElse: a bare partial function would throw a raw MatchError
-    // on a wrong argument count — surface the signature instead
-    def builder(name: String, signature: String)(
-        pf: PartialFunction[Seq[Expression], Expression]): Seq[Expression] => Expression =
-      args => pf.applyOrElse(args, (bad: Seq[Expression]) =>
-        throw new IllegalArgumentException(
-          s"$name expects $signature, got ${bad.size} argument(s)"))
+    def entry(name: String, builder: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo("graft.functions", name), builder)
+    def aggregate(name: String, signature: String)(
+        pf: PartialFunction[Seq[Expression], Expression]) =
+      entry(name, args => pf.applyOrElse(args, (bad: Seq[Expression]) =>
+        throw arityError(name, signature, bad.size)))
     Seq(
-      (FunctionIdentifier("graft_topk_by"), info("graft_topk_by"),
-        builder("graft_topk_by", "(score, key, k)") { case Seq(s, key, k) =>
-          TopKByScore(s, key, intLit(k, "k")).toAggregateExpression() }),
-      (FunctionIdentifier("graft_word_shingles"), info("graft_word_shingles"),
-        builder("graft_word_shingles", "(arr, n)") { case Seq(e, n) =>
-          WordShingles(e, intLit(n, "n")) }),
-      (FunctionIdentifier("graft_sorted_intersect_count"), info("graft_sorted_intersect_count"),
-        builder("graft_sorted_intersect_count", "(a, b)") { case Seq(a, b) =>
-          SortedIntersectCount(a, b) }),
-      (FunctionIdentifier("graft_dot"), info("graft_dot"),
-        builder("graft_dot", "(a, b)") { case Seq(a, b) => DotProduct(a, b) }),
-      (FunctionIdentifier("graft_quantize_int8"), info("graft_quantize_int8"),
-        builder("graft_quantize_int8", "(vec)") { case Seq(e) => QuantizeInt8(e) }),
-      (FunctionIdentifier("graft_md5_minhash_sig"), info("graft_md5_minhash_sig"),
-        builder("graft_md5_minhash_sig", "(arr, numHashes)") { case Seq(e, n) =>
-          Md5MinHashSig(e, intLit(n, "numHashes")) }),
-      (FunctionIdentifier("graft_md5_simhash60"), info("graft_md5_simhash60"),
-        builder("graft_md5_simhash60", "(arr)") { case Seq(e) => Md5SimHash60(e) }),
-      (FunctionIdentifier("graft_winnow_roll"), info("graft_winnow_roll"),
-        builder("graft_winnow_roll", "(text, k, w)") { case Seq(e, k, w) =>
-          WinnowRoll(e, intLit(k, "k"), intLit(w, "w")) }),
-      (FunctionIdentifier("graft_jaro_winkler"), info("graft_jaro_winkler"),
-        builder("graft_jaro_winkler", "(a, b)") { case Seq(a, b) =>
-          JaroWinkler(a, b) }),
-      (FunctionIdentifier("graft_gram_upper_q"), info("graft_gram_upper_q"),
-        builder("graft_gram_upper_q", "(vec)") { case Seq(e) =>
-          GramUpperTriQ(e) }),
-      (FunctionIdentifier("graft_sum_long_array"), info("graft_sum_long_array"),
-        builder("graft_sum_long_array", "(arr)") { case Seq(e) =>
-          SumLongArray(e).toAggregateExpression() }),
-      (FunctionIdentifier("graft_canonical_url"), info("graft_canonical_url"),
-        builder("graft_canonical_url", "(url)") { case Seq(e) =>
-          CanonicalUrl(e) }))
+      aggregate("graft_topk_by", "(score, key, k)") { case Seq(s, key, k) =>
+        TopKByScore(s, key, intLit(k, "k")).toAggregateExpression() },
+      aggregate("graft_sum_long_array", "(arr)") { case Seq(e) =>
+        SumLongArray(e).toAggregateExpression() }) ++
+      sqlKernels.map(k => entry(k.name, k.sqlBuilder))
   }
 
   /** Register `graft_*` as session SQL functions so `spark.sql` users get

@@ -3,7 +3,11 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Tight JIT-compiled kernels behind the graft native expressions.
+/** Tight JIT-compiled kernels behind the graft native expressions. Each
+  * scalar kernel here has one [[ScalarKernel]] descriptor in
+  * [[GraftFunctions]], which names the method, its argument and result
+  * types and its int parameters; the generic [[UnaryKernelCall]] and
+  * [[BinaryKernelCall]] expressions emit the static call.
   *
   * Rationale: Spark evaluates higher-order-function lambdas interpreted
   * (no whole-stage codegen inside `transform`/`aggregate`), so hash-heavy

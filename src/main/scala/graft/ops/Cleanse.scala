@@ -2,10 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.NullIfSpelling
+import graft.functions.GraftFunctions
 
 /** Scalar cleansing functions covering the reference's full scalar surface
   * (SURVEY §2.8, F1–F12). All are thin compositions of codegen'd builtins
@@ -39,11 +38,10 @@ object Cleanse {
   /** NULL-spelling normalization for CSV ingest — the multi-valued NULL_IF
     * ('\\N','NULL','NUL','') of workfile_design_data_warehouse.sql:38–44.
     * Spark's csv reader takes a single nullValue, so the rest normalize
-    * post-read. One compiled kernel call per string column
-    * ([[NullIfSpelling]]), the same values as
+    * post-read. One compiled kernel call per string column (the
+    * [[GraftFunctions.nullIfSpelling]] kernel), the same values as
     * `CASE WHEN c IN ('\\N','NULL','NUL','') THEN NULL ELSE c END`. */
-  def normNulls(c: Column): Column =
-    ColumnBridge.column(NullIfSpelling(ColumnBridge.expression(c)))
+  def normNulls(c: Column): Column = GraftFunctions.nullIfSpelling(c)
 
   /** F8 NULL->sentinel defaults ('OTHER'/'MISSING') —
     * workfile_design_data_warehouse.sql:473–476,525,537. */

@@ -34,9 +34,9 @@ object Dedup {
     * unigram sets from a bounded vocabulary make almost every document
     * pair look similar, while shingle overlap decays fast unless passages
     * genuinely repeat. Shingle assembly is a native codegen'd kernel
-    * (graft.functions.WordShingles) — this projection sits under every
-    * join side of the pair generators and is re-evaluated per side, so
-    * its constant factor matters. */
+    * (graft.functions.GraftFunctions.wordShingles) — this projection
+    * sits under every join side of the pair generators and is
+    * re-evaluated per side, so its constant factor matters. */
   def shingled(df: DataFrame, id: Column, text: Column, n: Int = 3,
                keep: Seq[Column] = Nil): DataFrame =
     df.select(id.as("doc_id") +:

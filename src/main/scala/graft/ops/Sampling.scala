@@ -37,13 +37,11 @@ object Sampling {
     * engine-specifically (Spark "1.0E10" vs DuckDB "10000000000.0") —
     * cast such keys to string yourself, canonically, first. */
   def hashValue(key: Column): Column = {
-    // one codegen'd kernel call (digest bytes 8..14 little-endian) —
-    // bit-identical to the original hex-pipeline formulation
-    // (md5 → substring at leByteOffsets → concat → conv), which
-    // Md5FamilySpec still pins the kernel against
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.Md5Low56(
-      ColumnBridge.expression(key.cast("string"))))
+    // one codegen'd kernel call (GraftFunctions.md5Low56, digest bytes
+    // 8..14 little-endian) — bit-identical to the original hex-pipeline
+    // formulation (md5 → substring at leByteOffsets → concat → conv),
+    // which Md5FamilySpec still pins the kernel against
+    graft.functions.GraftFunctions.md5Low56(key.cast("string"))
   }
 
   /** The original string-pipeline formulation of [[hashValue]] — kept

@@ -44,8 +44,8 @@ object Similarity {
       .filter(col(normOut) > 0.0)
 
   /** Dot product of two materialized array<double> ATTRIBUTES — the
-    * native codegen'd kernel (graft.functions.DotProduct). Bit-identical
-    * to the `aggregate(zip_with(...))` left-to-right fold, but the inner
+    * native codegen'd kernel (graft.functions.GraftFunctions.dot).
+    * Bit-identical to the `aggregate(zip_with(...))` left-to-right fold, but the inner
     * loop JIT-compiles instead of interpreting two lambda trees per
     * element — this sits under every scored candidate pair, and under
     * every corpus×centroid product in [[ivfTopK]]. */

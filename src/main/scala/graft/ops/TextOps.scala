@@ -184,7 +184,7 @@ object TextOps {
     * AND exactly recomputable by a SQL engine ([[rollingWinnowSqlCtes]]
     * replays the Horner fold per gram in DuckDB), so the whole
     * fingerprint selection is oracle-checkable. Native codegen'd kernel
-    * (graft.functions.WinnowRoll). */
+    * (graft.functions.GraftFunctions.winnowRoll). */
   def withFingerprintsRolling(df: org.apache.spark.sql.DataFrame, text: Column,
                               out: String, k: Int = 8, w: Int = 4): org.apache.spark.sql.DataFrame =
     df.withColumn(out, graft.functions.GraftFunctions.winnowRoll(text, k, w))
@@ -486,7 +486,7 @@ object TextOps {
     * map-side-combinable (doc, char) count, one per-doc re-aggregate —
     * no windows, no joins. */
   def charEntropy(df: DataFrame, id: Column, text: Column): DataFrame =
-    // one compiled pass per document (graft.functions.CharEntropyStats)
+    // one compiled pass per document (GraftFunctions.charEntropyStats)
     // instead of explode-to-characters + two aggregates: the explode
     // form shuffled one row per CHARACTER of the corpus through two
     // exchanges. Bit-identical sufficient statistics (same `.`-matched

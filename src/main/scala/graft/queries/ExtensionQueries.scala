@@ -561,8 +561,8 @@ object ExtensionQueries {
     SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= 0.3"""))
 
   /** Int8 embedding quantization (native codegen'd kernel,
-    * graft.functions.QuantizeInt8): symmetric max-abs scaling to
-    * [-127, 127] — 4× storage compression for ANN indexes. Output is
+    * graft.functions.GraftFunctions.quantizeInt8): symmetric max-abs
+    * scaling to [-127, 127] — 4× storage compression for ANN indexes. Output is
     * exploded per element so DuckDB value-checks every quantized
     * component (floor(x·127/max|x| + 0.5) is exact double arithmetic in
     * both engines). */
@@ -2979,8 +2979,8 @@ object ExtensionQueries {
     FROM cands WHERE levenshtein(pfx_a, pfx_b) <= 4"""))
 
   /** Entity resolution: blocked BEST-MATCH assignment on the part
-    * catalog via the native codegen [[graft.functions.JaroWinkler]]
-    * expression — the canonical record-linkage shape (Fellegi-Sunter
+    * catalog via the native codegen kernel
+    * [[graft.functions.GraftFunctions.jaroWinkler]] — the canonical record-linkage shape (Fellegi-Sunter
     * style candidate generation + fuzzy-score ranking). Blocking key is
     * (brand, size, first name token): candidates are an equi-join on the
     * block, never all-pairs, so pair volume is Σ|block|² with block

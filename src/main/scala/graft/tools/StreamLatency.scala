@@ -22,9 +22,9 @@ import graft.streaming.EventStream
   *     (watermarked state both sides)
   *
   * Usage: StreamLatency [rowsPerSec] [seconds] [triggerSec] [stateParts];
-  * prints one summary line per path. Numbers depend on the host, so they
-  * are recorded, never asserted. The two points of the
-  * `EventStream.statePartitionsForRate` rule:
+  * `stateParts` defaults to `EventStream.statePartitionsForRate` of the
+  * rate. Prints one summary line per path. Numbers depend on the host,
+  * so they are recorded, never asserted. The two points of the rule:
   *   `StreamLatency 10000 15 1 8`  — the rate-sized join under a 1 s trigger
   *   `StreamLatency 100000 60 6 32` — a high-rate join at full width
   */
@@ -33,13 +33,15 @@ object StreamLatency {
     val rate = args.headOption.map(_.toInt).getOrElse(50000)
     val runSec = args.lift(1).map(_.toInt).getOrElse(45)
     val trigSec = args.lift(2).map(_.toInt).getOrElse(1)
+    val spark = LocalSession()
     // state-store partition count: a streaming query bakes
     // spark.sql.shuffle.partitions into its state layout at first
     // start, and every stateful operator commits one state store per
     // partition per batch — at low rates that commit fan-out IS the
-    // per-batch floor, so sizing it down is the lever this tool measures
-    val stateParts = args.lift(3).map(_.toInt).getOrElse(32)
-    val spark = LocalSession()
+    // per-batch floor, so sizing it down is the lever this tool measures;
+    // without an explicit count, the rate-sized rule picks it
+    val stateParts = args.lift(3).map(_.toInt)
+      .getOrElse(EventStream.statePartitionsForRate(spark, rate))
     spark.conf.set("spark.sql.streaming.checkpointLocation",
       java.nio.file.Files.createTempDirectory("graft_latency").toString)
     spark.sparkContext.setLogLevel("ERROR")

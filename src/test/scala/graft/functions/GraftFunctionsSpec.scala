@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -27,6 +29,12 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(row.getAs[scala.collection.Seq[String]]("sh").contains("quick brown fox"))
     assert(row.getAs[Int]("ic") == 1)
     assert(row.getAs[Double]("dp") == 32.0)
+    // exactly the 10 registered scalar kernels and the 2 aggregates
+    assert(GraftFunctions.registrations.map(_._1.funcName).sorted == Seq(
+      "graft_canonical_url", "graft_dot", "graft_gram_upper_q", "graft_jaro_winkler",
+      "graft_md5_minhash_sig", "graft_md5_simhash60", "graft_quantize_int8",
+      "graft_sorted_intersect_count", "graft_sum_long_array", "graft_topk_by",
+      "graft_winnow_roll", "graft_word_shingles"))
   }
 
   test("graft_dot is bit-identical to the higher-order aggregate fold") {
@@ -73,6 +81,48 @@ class GraftFunctionsSpec extends SparkSpec {
     }
     assert(viaExpr.getAs[scala.collection.Seq[Long]]("sig") == interp.getAs[scala.collection.Seq[Long]]("sig"))
     assert(viaExpr.getAs[Long]("sim") == interp.getAs[Long]("sim"))
+
+    // every scalar kernel, over rows with a null input and inputs the
+    // null-returning kernels map to null; the repartition keeps the
+    // projection out of the optimizer's interpreted LocalRelation fold
+    val rows = Seq(
+      (Option("alpha beta gamma delta epsilon"), Option("HTTP://www.Example.com/a/./b/?utm_source=x#f"),
+        Option(7L), Option(Seq(0.1, -2.3, 7.77)), Option(Seq(0.5f, -1.25f, 2.0f))),
+      (None, None, None, None, None),
+      (Option("NULL"), Option("no scheme here"), Option(-3L), Option(Seq(1.0)), Option(Seq(3.0f))),
+      (Option("\n"), Option(""), Option(0L), Option(Seq.empty[Double]), Option(Seq.empty[Float])))
+    val kdf = rows.toDF("text", "url", "v", "d", "f").repartition(1)
+    val words = split(col("text"), " ")
+    val sorted = sort_array(array_distinct(words))
+    val kernels = Seq(
+      GraftFunctions.md5MinhashSig(words, 8), GraftFunctions.md5Simhash60(words),
+      GraftFunctions.md5Low56(col("text")), GraftFunctions.winnowRoll(col("text"), 3, 2),
+      GraftFunctions.wordShingles(words, 2), GraftFunctions.gramUpperQ(col("f")),
+      GraftFunctions.dot(col("d"), col("d")), GraftFunctions.quantizeInt8(col("f")),
+      GraftFunctions.sortedIntersectCount(sorted, sort_array(split(col("url"), "/"))),
+      GraftFunctions.jaroWinkler(col("text"), col("url")), GraftFunctions.posGramMd5(words, 2),
+      GraftFunctions.bootstrapRow(col("text"), col("v"), 4), GraftFunctions.canonicalUrl(col("url")),
+      GraftFunctions.nullIfSpelling(col("text")), GraftFunctions.charEntropyStats(col("text")))
+    def run(): (Seq[org.apache.spark.sql.Row], Int) = {
+      val q = kdf.select(kernels.zipWithIndex.map { case (k, i) => k.as(s"k$i") }: _*)
+      val out = q.collect().toSeq
+      (out, new AdaptiveSparkPlanHelper {}.collect(q.queryExecution.executedPlan) {
+        case w: WholeStageCodegenExec => w }.size)
+    }
+    val (compiled, compiledStages) =
+      Confs.withConf(spark, "spark.sql.codegen.factoryMode", "CODEGEN_ONLY")(run())
+    val (interpreted, interpretedStages) =
+      Confs.withConf(spark, "spark.sql.codegen.factoryMode", "NO_CODEGEN") {
+        Confs.withConf(spark, "spark.sql.codegen.wholeStage", "false")(run())
+      }
+    assert(compiledStages > 0, "the compiled run must go through whole-stage codegen")
+    assert(interpretedStages == 0, "the interpreted run must not")
+    assert(compiled == interpreted)
+    val nullRow = compiled(1)
+    assert((0 until kernels.size).forall(nullRow.isNullAt), s"null input must give null: $nullRow")
+    // the kernels that can return null do so for a non-null input
+    assert(compiled(2).isNullAt(12) && compiled(2).isNullAt(13) && compiled(3).isNullAt(14))
+    assert(!compiled(0).isNullAt(12) && !compiled(0).isNullAt(13) && !compiled(0).isNullAt(14))
   }
 
   test("type checking rejects wrong inputs") {
@@ -82,6 +132,24 @@ class GraftFunctionsSpec extends SparkSpec {
     }
     assert(ex.getMessage.toLowerCase.contains("array") ||
       ex.getMessage.contains("DATATYPE_MISMATCH"))
+    // one wrong input per argument family, each rejected at analysis
+    // with the function named
+    val typed = Seq((1L, "x", Seq(1.0), Seq(1.0f), 2)).toDF("id", "text", "d", "f", "i")
+    Seq(
+      "graft_winnow_roll" -> (() => GraftFunctions.winnowRoll(col("id"), 8, 4)),  // string
+      "graft_word_shingles" -> (() => GraftFunctions.wordShingles(col("d"), 2)),  // array<string>
+      "graft_dot" -> (() => GraftFunctions.dot(col("f"), col("f"))),              // array<double>
+      "graft_quantize_int8" -> (() => GraftFunctions.quantizeInt8(col("d"))),     // array<float>
+      "graft_bootstrap_row" -> (() => GraftFunctions.bootstrapRow(col("text"), col("i"), 4)) // (string, bigint)
+    ).foreach { case (name, c) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](typed.select(c()))
+      assert(e.getMessage.contains(name), s"$name: ${e.getMessage}")
+    }
+    // an untyped NULL literal stays accepted where it was
+    val nulls = typed.select(GraftFunctions.jaroWinkler(lit(null), col("text")),
+      GraftFunctions.bootstrapRow(lit(null), lit(null), 2), GraftFunctions.canonicalUrl(lit(null)),
+      GraftFunctions.charEntropyStats(lit(null))).head()
+    assert((0 until 4).forall(nulls.isNullAt))
   }
 
   test("quantize_int8: range, sign, max element hits ±127, dequant error bounded") {
