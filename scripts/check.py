@@ -59,7 +59,7 @@ def main(sf_dir: str, out_dir: str) -> int:
             failures += 1
             continue
         try:
-            sdf = duckdb.query(
+            sdf = con.execute(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
         except Exception as e:
             print(f"FAIL {name}: spark output missing: {e}")
@@ -138,7 +138,7 @@ def main(sf_dir: str, out_dir: str) -> int:
         name = os.path.basename(d.rstrip("/"))
         if name not in oracles:
             try:
-                n = duckdb.query(f"SELECT count(*) FROM '{d}*.parquet'").fetchone()[0]
+                n = con.execute(f"SELECT count(*) FROM '{d}*.parquet'").fetchone()[0]
                 print(f"ROWS {name}: {n} rows (no oracle)")
             except Exception as e:
                 print(f"FAIL {name}: unreadable: {e}")

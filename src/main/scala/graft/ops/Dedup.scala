@@ -1132,8 +1132,7 @@ object Dedup {
     * document in the synthetic corpus (max 100). */
   def suffixSpans(df: DataFrame, id: Column, text: Column,
                   rounds: Int = 6, minLcp: Int = 8,
-                  topN: Int = 20,
-                  bigCorpusThreshold: Long = 1L << 22): DataFrame = {
+                  topN: Int = 20): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"1..8 doubling rounds, got $rounds")
     require(minLcp >= 1 && topN >= 1, s"minLcp/topN must be positive")
     // Per-doc token arrays, hash-partitioned by doc and checkpointed
@@ -1148,21 +1147,15 @@ object Dedup {
       .repartition(col("doc"))
       .localCheckpoint(true)
     // token count from the materialized doc frame (one tiny agg; the
-    // exploded form would re-run tokenization just to count it)
+    // exploded form would re-run tokenization just to count it); it
+    // sizes the sparse rank packing below
     val nTok = docToks
       .agg(coalesce(sum(size(col("toks"))), lit(0L)).cast("long"))
       .head.getLong(0)
-    // SIZE-GATED materialization: every intermediate below that feeds
-    // a range repartition is evaluated TWICE by it (bound sampling +
-    // the shuffle). At test SF the per-job barrier floor dominates, so
-    // skipping the checkpoint and paying the cheap recompute wins; at
-    // 100x the recompute is a real second pass over the corpus and
-    // materialization wins (the 100x step measured 192s -> the gated
-    // form). Same results either way — purely a plan-shape knob.
-    val bigCorpus = nTok > bigCorpusThreshold
-    def gate(d: DataFrame): DataFrame =
-      if (bigCorpus) d.localCheckpoint(true) else d
-    val toks = gate(docToks
+    // Intermediates that feed a range repartition are evaluated twice
+    // by it (bound sampling + the shuffle) and are not checkpointed:
+    // the recompute is in-partition and cheaper than another barrier.
+    val toks = docToks
       .select(col("doc"), size(col("toks")).cast("long").as("dlen"),
         posexplode(col("toks")).as(Seq("pos", "tok")))
       .select(col("doc"), col("dlen"), col("pos").cast("long").as("pos"),
@@ -1173,7 +1166,7 @@ object Dedup {
         // equality (up to the md5-collision class both forms share);
         // the oracle applies the identical prefix cast.
         expr("CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT)")
-          .as("tk")))
+          .as("tk"))
     // rank_0: dense rank of the token (by md5 — engine-portable order).
     // globalDenseRankBy is one range shuffle + a broadcast per call —
     // no distinct frame, no join back. Dense-round rank tables are
@@ -1200,14 +1193,6 @@ object Dedup {
     val packB = 1L << bits
     val wDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc")).orderBy(col("pos"))
-    // the depth-2^preK rank table doubles as the big-corpus LCP
-    // PREFILTER below: rank equality at depth d ⟺ padded LCP ≥ d, so
-    // with d ≤ minLcp the filter drops only pairs the minLcp filter
-    // would drop anyway — before their token arrays ever move
-    val preK = math.min(
-      63 - java.lang.Long.numberOfLeadingZeros(math.max(minLcp, 1).toLong),
-      rounds - 1).toInt
-    var preTable: DataFrame = null
     for (k <- 1 to rounds) {
       val off = (1L << (k - 1)).toInt
       // rank at (doc, pos+2^(k-1)) = lead(r, 2^(k-1)) over the
@@ -1225,17 +1210,15 @@ object Dedup {
         // its key, so order by (r_final, doc, pos) ≡ order by
         // (r_prev, rb_prev, doc, pos). Keep both key columns and
         // skip the last densify's range shuffle entirely.
-        gate(paired.select(col("doc"), col("dlen"), col("pos"),
-          col("r"), col("rb")))
+        paired.select(col("doc"), col("dlen"), col("pos"),
+          col("r"), col("rb"))
       else if (k % 2 == 1)
-        // sparse round: a pure projection — at test SF not even
-        // materialized (the next densify's range shuffle re-evaluates
-        // the window chain from the last checkpoint, in-partition and
-        // cheap, once for bound sampling, once for the shuffle); at
-        // 100x the gate materializes it so the corpus-sized window
-        // runs once
-        gate(paired.select(col("doc"), col("dlen"), col("pos"),
-          (col("r") * packB + col("rb") + 1).as("r")))
+        // sparse round: a pure projection, not materialized (the next
+        // densify's range shuffle re-evaluates the window chain from
+        // the last checkpoint, in-partition and cheap, once for bound
+        // sampling, once for the shuffle)
+        paired.select(col("doc"), col("dlen"), col("pos"),
+          (col("r") * packB + col("rb") + 1).as("r"))
       else
         Scale.globalDenseRankBy(paired, Seq(col("r"), col("rb")),
             parts = 0)
@@ -1243,21 +1226,18 @@ object Dedup {
             col("dense_rn").as("r"))
           .repartition(col("doc"))
           .localCheckpoint(true)
-      if (k == preK && bigCorpus)
-        preTable = cur // already materialized (gate / densify ckpt)
     }
     // global suffix order; (r[, rb], doc, pos) is a total order
     val orderKeys =
       if (cur.columns.contains("rb"))
         Seq(col("r"), col("rb"), col("doc"), col("pos"))
       else Seq(col("r"), col("doc"), col("pos"))
-    // at test SF no outer checkpoint: globalRowNumberBy already
-    // materializes the range-partitioned frame internally, and both
-    // adjacency sides re-derive from it with one in-partition window
-    // + broadcast — cheaper than another barrier. At 100x the gate
-    // materializes so the corpus-sized numbering window runs once.
-    val sa = gate(Scale.globalRowNumberBy(cur, orderKeys)
-      .withColumnRenamed("global_rn", "srn"))
+    // no outer checkpoint: globalRowNumberBy already materializes the
+    // range-partitioned frame internally, and both adjacency sides
+    // re-derive from it with one in-partition window + broadcast —
+    // cheaper than another barrier
+    val sa = Scale.globalRowNumberBy(cur, orderKeys)
+      .withColumnRenamed("global_rn", "srn")
     val bAdj = sa.select((col("srn") - 1).as("srn"),
       col("doc").as("doc_b"), col("pos").as("pos_b"),
       col("dlen").as("dlen_b"))
@@ -1284,29 +1264,7 @@ object Dedup {
     val ta = docToks.select(col("doc").as("__da"), col("toks").as("__ta"))
     val tb = docToks.select(col("doc").as("__db"), col("toks").as("__tb"))
     val depthCap = (1L << (rounds + 1)) - 1
-    // big-corpus PREFILTER: the token-array joins are the one place
-    // the per-doc arrays travel with the n-row pair frame, and in a
-    // mostly-unduplicated corpus almost every adjacent pair fails the
-    // minLcp bar anyway. Two NARROW joins against the kept depth-2^preK
-    // rank table (long columns, table side doc-partitioned) keep only
-    // pairs whose ranks match — padded LCP ≥ 2^preK — before any
-    // array moves; dropped pairs have padded (hence clamped) LCP
-    // < 2^preK ≤ minLcp, so the output is identical. (The 100× step
-    // measured the unfiltered array joins at ~2× the whole r7 wall.)
-    val cand = if (preTable != null) {
-      val fa = preTable.select(col("doc").as("__fda"),
-        col("pos").as("__fpa"), col("r").as("__fra"))
-      val fb = preTable.select(col("doc").as("__fdb"),
-        col("pos").as("__fpb"), col("r").as("__frb"))
-      pairs
-        .join(fa, col("doc_a") === col("__fda")
-          && col("pos_a") === col("__fpa"))
-        .join(fb, col("doc_b") === col("__fdb")
-          && col("pos_b") === col("__fpb"))
-        .filter(col("__fra") === col("__frb"))
-        .drop("__fda", "__fpa", "__fra", "__fdb", "__fpb", "__frb")
-    } else pairs
-    val scored = cand
+    val scored = pairs
       .join(ta, col("doc_a") === col("__da"))
       .join(tb, col("doc_b") === col("__db"))
       .withColumn("__m", least(col("dlen_a") - col("pos_a"),

@@ -25,7 +25,9 @@ object Features {
     *
     * Scale shape: category statistics come from a `groupBy(cat)`
     * aggregate — partial (map-side) combinable, output bounded by the
-    * category cardinality — joined back to the rows; the global mean is
+    * category cardinality — broadcast back to the rows (so `cat` must
+    * have bounded cardinality: a user-id encode would need a shuffle
+    * join instead); the global mean is
     * a 1-row aggregate broadcast by crossJoin. NOT a window over the
     * category: a window shuffles the full fact table into
     * one-task-per-category partitions and a hot category becomes a
@@ -41,15 +43,11 @@ object Features {
     * imputation surprises). Output keeps all input columns and appends
     * `enc`. */
   def targetEncodeLoo(df: DataFrame, cat: String, target: String,
-                      priorWeight: Double,
-                      broadcastStats: Boolean = true): DataFrame = {
+                      priorWeight: Double): DataFrame = {
     require(priorWeight > 0, s"need priorWeight > 0, got $priorWeight")
     val valid = df.filter(col(cat).isNotNull && col(target).isNotNull)
-    val stats0 = valid.groupBy(col(cat))
-      .agg(sum(col(target)).as("__s"), count(lit(1)).as("__n"))
-    // broadcast only when the caller vouches the category cardinality is
-    // bounded; a high-cardinality encode (user ids) must shuffle-join
-    val stats = if (broadcastStats) broadcast(stats0) else stats0
+    val stats = broadcast(valid.groupBy(col(cat))
+      .agg(sum(col(target)).as("__s"), count(lit(1)).as("__n")))
     val global = valid.agg(
       (sum(col(target)).cast("double") / count(lit(1))).as("__g"))
     df.crossJoin(broadcast(global))

@@ -111,6 +111,27 @@ object Stats {
           .as("residual_milli"))
   }
 
+  /** DuckDB CTEs `stl_trended`, `stl_det`, `stl_seasonal` and `stl`
+    * replaying [[stlDecompose]] over the relation `daily(day, dow, y)`;
+    * `stl` holds its output columns. */
+  def stlDecomposeSql(daily: String): String =
+    s"""stl_trended AS (
+        SELECT day, dow, y,
+          CASE WHEN COUNT(*) OVER w = 7
+            THEN CAST(SUM(y) OVER w * 1000 // 7 AS BIGINT) END AS trend_milli
+        FROM $daily
+        WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+      stl_det AS (
+        SELECT *, y * 1000 - trend_milli AS detr_milli FROM stl_trended),
+      stl_seasonal AS (
+        SELECT dow, CAST(SUM(detr_milli) // COUNT(*) AS BIGINT)
+          AS seasonal_milli
+        FROM stl_det WHERE trend_milli IS NOT NULL GROUP BY 1),
+      stl AS (
+        SELECT day, dow, y, trend_milli, seasonal_milli,
+          y * 1000 - trend_milli - seasonal_milli AS residual_milli
+        FROM stl_det JOIN stl_seasonal USING (dow))"""
+
   /** CUSUM changepoint over a per-key counted series
     * `daily(event_type, day, cnt)`: per key, the cumulative deviation
     * S_t = Σ_{i≤t}(x_i − x̄) carried as the exact scaled integer

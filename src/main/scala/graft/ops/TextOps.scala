@@ -967,6 +967,9 @@ object TextOps {
     sb.toString
   }
 
+  /** Default hash buckets of the Naive Bayes unigram LMs. */
+  val NaiveBayesBuckets: Int = 1024
+
   /** Multinomial Naive Bayes language classifier over
     * `docs(doc_id, lang, text)` (text/lang non-null): docs with
     * doc_id % 5 ≠ 0 train per-class hashed-unigram LMs (`buckets` md5
@@ -979,7 +982,8 @@ object TextOps {
     * bit-deterministic. Scale shape: train counts bounded by C·B and
     * broadcast; test docs pre-aggregate to per-doc bucket counts so
     * the scored frame is docs×C, never tokens×C. */
-  def naiveBayesConfusion(docs: DataFrame, buckets: Int = 1024): DataFrame = {
+  def naiveBayesConfusion(docs: DataFrame,
+                          buckets: Int = NaiveBayesBuckets): DataFrame = {
     val base = docs.withColumn("is_train", col("doc_id") % 5 =!= 0)
     val toks = base.select(col("doc_id"), col("lang"), col("is_train"),
         explode(split(lower(col("text")), " ")).as("tok"))
@@ -1019,6 +1023,60 @@ object TextOps {
       .groupBy(col("lang"), col("pred"))
       .agg(count(lit(1)).as("n_docs"))
   }
+
+  /** DuckDB CTE chain recomputing [[naiveBayesConfusion]] at its
+    * default [[NaiveBayesBuckets]] exactly; `srcCte` is a parenthesized
+    * relation with (doc_id, lang, text). The last CTE, `__nb_conf`,
+    * holds the (lang, pred, n_docs) rows. */
+  def naiveBayesConfusionSql(srcCte: String): String =
+    s"""__nb_docs AS (
+        SELECT doc_id, lang, text, doc_id % 5 <> 0 AS is_train
+        FROM $srcCte),
+      __nb_toks AS (
+        SELECT doc_id, lang, is_train,
+          ${Sampling.hashBucketSql(
+            "unnest(string_split(lower(text), ' '))", NaiveBayesBuckets)} AS b
+        FROM __nb_docs),
+      __nb_cbc AS (
+        SELECT lang AS cls, b, CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM __nb_toks WHERE is_train GROUP BY 1, 2),
+      __nb_ctot AS (
+        SELECT lang AS cls, CAST(COUNT(*) AS BIGINT) AS n_tok
+        FROM __nb_toks WHERE is_train GROUP BY 1),
+      __nb_grid AS (
+        SELECT cls, n_tok, CAST(g.range AS BIGINT) AS b
+        FROM __nb_ctot CROSS JOIN range($NaiveBayesBuckets) g),
+      __nb_lp AS (
+        SELECT cls, b, CAST(ROUND(LN(
+            CAST(COALESCE(cnt, 0) + 1 AS DOUBLE)
+            / CAST(n_tok + $NaiveBayesBuckets AS DOUBLE)) * 1000000)
+            AS BIGINT) AS lp_micro
+        FROM __nb_grid LEFT JOIN __nb_cbc USING (cls, b)),
+      __nb_nd AS (
+        SELECT lang AS cls, CAST(COUNT(*) AS BIGINT) AS n_docs
+        FROM __nb_docs WHERE is_train GROUP BY 1),
+      __nb_prior AS (
+        SELECT cls, CAST(ROUND(LN(CAST(n_docs AS DOUBLE)
+          / CAST((SELECT SUM(n_docs) FROM __nb_nd) AS DOUBLE)) * 1000000)
+          AS BIGINT) AS prior_micro
+        FROM __nb_nd),
+      __nb_dbc AS (
+        SELECT doc_id, lang, b, CAST(COUNT(*) AS BIGINT) AS c
+        FROM __nb_toks WHERE NOT is_train GROUP BY 1, 2, 3),
+      __nb_scored AS (
+        SELECT doc_id, lang, cls,
+          CAST(SUM(c * lp_micro) AS BIGINT) + ANY_VALUE(prior_micro)
+            AS score
+        FROM __nb_dbc JOIN __nb_lp USING (b) JOIN __nb_prior USING (cls)
+        GROUP BY 1, 2, 3),
+      __nb_pred AS (
+        SELECT doc_id, lang, cls AS pred,
+          ROW_NUMBER() OVER (PARTITION BY doc_id
+            ORDER BY score DESC, cls) AS rn
+        FROM __nb_scored),
+      __nb_conf AS (
+        SELECT lang, pred, CAST(COUNT(*) AS BIGINT) AS n_docs
+        FROM __nb_pred WHERE rn = 1 GROUP BY 1, 2)"""
 
   /** ROUGE-1/ROUGE-2 multiset n-gram overlap between adjacent-id
     * document pairs (candidate doc_id vs reference doc_id+1) over

@@ -140,11 +140,16 @@ object Ingest {
   def rawCensusG02(spark: SparkSession, dir: String): DataFrame =
     sideFiles(spark, dir, "*G02*.csv")
 
+  /** The file patterns of the geography side files [[rawLga]] and
+    * [[rawSsc]] scan. */
+  val lgaGlob = "*LGA_2020*.csv"
+  val sscGlob = "*SSC*.csv"
+
   def rawLga(spark: SparkSession, dir: String): DataFrame =
-    sideFiles(spark, dir, "*LGA_2020*.csv")
+    sideFiles(spark, dir, lgaGlob)
 
   def rawSsc(spark: SparkSession, dir: String): DataFrame =
-    sideFiles(spark, dir, "*SSC*.csv")
+    sideFiles(spark, dir, sscGlob)
 
   /** Multi-valued NULL normalization applied to every string column
     * (design.sql:42 NULL_IF ('\\N','NULL','NUL','')). */

@@ -71,7 +71,7 @@ object Refresh {
 
   /** The geography side files [[Staging.location]] reads — the dims the
     * fact build actually joins ([[Ingest.rawSsc]]/[[Ingest.rawLga]]). */
-  private val dimGlobs = Seq("*SSC*.csv", "*LGA_2020*.csv")
+  private val dimGlobs = Seq(Ingest.sscGlob, Ingest.lgaGlob)
 
   /** Paths already processed by earlier ticks (empty on first run). */
   def processedFiles(spark: SparkSession, factDir: String): Set[String] = {

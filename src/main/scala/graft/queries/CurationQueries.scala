@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Landing, Tables}
 import graft.ops.{Dedup, Graph, Multimodal, Quality, Sampling, Scale, Similarity, Sketches, TextOps, Urls}
+import graft.streaming.EventStream
 
 /** Round-5 curation/profiling additions: an exactly-replayable
   * Count–Min sketch, a k-anonymity privacy audit, a GPT-2-style regex
@@ -377,50 +378,26 @@ object CurationQueries {
       SELECT exact_f2, cms_join_size, cms_join_size - exact_f2 AS overcount
       FROM est CROSS JOIN exact"""))
 
-  /** Typed events in two files split by event_id parity, read one
-    * file per trigger by the MapState and ListState queries. */
-  private def topTypeFixture(s: org.apache.spark.sql.SparkSession,
-                             d: String): String =
-    Landing.dir(s, d, "graft_stream_toptype") { t =>
-      val ev = Tables.events(s, d)
-        .filter(col("ts").isNotNull && col("event_type").isNotNull)
-        .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
-          col("user_id"), col("event_type"))
-      ev.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(t)
-      ev.filter(col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(t)
-    }
-
   /** MapState `transformWithState` parity: per-user favorite event type
     * (EventStream.topTypePerUser) — composite per-key state (a
     * type→count map in RocksDB, per-entry updates) fed TWO micro-batches
-    * (`maxFilesPerTrigger=1` over a two-file fixture split by event_id
-    * parity), so the argmax after batch 2 is only correct if the map
-    * carried across batches. Update-mode emissions are reduced to the
+    * ([[SeriesFixtures.typedEventStream]]: two files split by event_id
+    * parity, one file per trigger), so the argmax after batch 2 is only
+    * correct if the map carried across batches. Update-mode emissions are reduced to the
     * latest per user (n_total strictly increases), and the oracle
     * recomputes the same deterministic argmax (count desc, type asc)
     * from the batch table. */
   private val x_stream_tws_toptype = Q(
     "x_stream_tws_toptype",
-    (s, d) => {
-      import s.implicits._
-      val tmp = topTypeFixture(s, d)
-      graft.streaming.EventStream.withRocksDbState(s) {
-        val ev = s.readStream
-          .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
-          .option("maxFilesPerTrigger", "1") // force the cross-batch path
-          .parquet(tmp)
-          .as[graft.streaming.EventStream.TypedEvent]
-        graft.streaming.EventStream.drain(s, "x_stream_tws_toptype", "update")(
-            graft.streaming.EventStream.topTypePerUser(s, ev))
-          .groupBy(col("user_id"))
-          .agg(max(struct(col("n_total"), col("n_types"),
-            col("top_type"), col("top_cnt"))).as("m"))
-          .select(col("user_id"), col("m.n_total").as("n_total"),
-            col("m.n_types").as("n_types"), col("m.top_type").as("top_type"),
-            col("m.top_cnt").as("top_cnt"))
-      }
+    (s, d) => EventStream.withRocksDbState(s) {
+      EventStream.drain(s, "x_stream_tws_toptype", "update")(
+          EventStream.topTypePerUser(s, SeriesFixtures.typedEventStream(s, d)))
+        .groupBy(col("user_id"))
+        .agg(max(struct(col("n_total"), col("n_types"),
+          col("top_type"), col("top_cnt"))).as("m"))
+        .select(col("user_id"), col("m.n_total").as("n_total"),
+          col("m.n_types").as("n_types"), col("m.top_type").as("top_type"),
+          col("m.top_cnt").as("top_cnt"))
     },
     Some("""WITH ec AS (
       SELECT user_id, event_type, COUNT(*) AS c
@@ -445,22 +422,13 @@ object CurationQueries {
     * MapState query, so the list must merge across the state store. */
   private val x_stream_tws_recent = Q(
     "x_stream_tws_recent",
-    (s, d) => {
-      import s.implicits._
-      val tmp = topTypeFixture(s, d)
-      graft.streaming.EventStream.withRocksDbState(s) {
-        val ev = s.readStream
-          .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
-          .option("maxFilesPerTrigger", "1") // force the cross-batch path
-          .parquet(tmp)
-          .as[graft.streaming.EventStream.TypedEvent]
-        graft.streaming.EventStream.drain(s, "x_stream_tws_recent", "update")(
-            graft.streaming.EventStream.recentEventsPerUser(s, ev))
-          .groupBy(col("user_id"))
-          .agg(max(struct(col("n_seen"), col("n_kept"), col("recent"))).as("m"))
-          .select(col("user_id"), col("m.n_seen").as("n_seen"),
-            col("m.n_kept").as("n_kept"), col("m.recent").as("recent"))
-      }
+    (s, d) => EventStream.withRocksDbState(s) {
+      EventStream.drain(s, "x_stream_tws_recent", "update")(
+          EventStream.recentEventsPerUser(s, SeriesFixtures.typedEventStream(s, d)))
+        .groupBy(col("user_id"))
+        .agg(max(struct(col("n_seen"), col("n_kept"), col("recent"))).as("m"))
+        .select(col("user_id"), col("m.n_seen").as("n_seen"),
+          col("m.n_kept").as("n_kept"), col("m.recent").as("recent"))
     },
     Some("""WITH ev AS (
       SELECT event_id, date_trunc('second', ts) AS ts, user_id
@@ -529,54 +497,14 @@ object CurationQueries {
     * surface: Value/Map/List state + timers, each oracle-proven. */
   private val x_stream_tws_sessionize = Q(
     "x_stream_tws_sessionize",
-    (s, d) => {
-      import s.implicits._
-      val tmp = Landing.dir(s, d, "graft_stream_twssess") { t =>
-        Tables.events(s, d).filter(col("ts").isNotNull)
-          .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
-            col("user_id"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(t)
-      }
-      graft.streaming.EventStream.withRocksDbState(s) {
-        val ev = s.readStream
-          .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
-          .parquet(tmp)
-          .as[graft.streaming.EventStream.Event]
-        graft.streaming.EventStream.drain(s, "x_stream_tws_sessionize", "append")(
-            graft.streaming.EventStream.sessionizeTws(s, ev))
-          .select(col("user_id"), col("n_events"),
-            timestamp_millis(col("start_ms")).as("session_start"),
-            timestamp_millis(col("end_ms")).as("session_end"))
-      }
+    (s, d) => EventStream.withRocksDbState(s) {
+      EventStream.drain(s, "x_stream_tws_sessionize", "append")(
+          EventStream.sessionizeTws(s, SeriesFixtures.sessionStream(s, d)))
+        .select(col("user_id"), col("n_events"),
+          timestamp_millis(col("start_ms")).as("session_start"),
+          timestamp_millis(col("end_ms")).as("session_end"))
     },
-    Some("""WITH e AS (
-      SELECT user_id, event_id, date_trunc('second', ts) AS ts_s
-      FROM events WHERE ts IS NOT NULL),
-    flagged AS (
-      SELECT user_id, event_id, ts_s,
-        CASE WHEN LAG(ts_s) OVER w IS NULL
-               OR epoch(ts_s) - epoch(LAG(ts_s) OVER w) > 1800.0
-             THEN 1 ELSE 0 END AS is_new
-      FROM e
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)),
-    sessions AS (
-      SELECT user_id, ts_s,
-        SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM flagged),
-    agg AS (
-      SELECT user_id, session_id, count(*) AS n_events,
-        min(ts_s) AS session_start, max(ts_s) AS session_end
-      FROM sessions GROUP BY 1, 2),
-    ranked AS (
-      SELECT *, max(session_id) OVER (PARTITION BY user_id) AS last_sid
-      FROM agg),
-    mx AS (SELECT max(ts_s) AS max_ts FROM e)
-    SELECT user_id, n_events, session_start, session_end
-    FROM ranked, mx
-    WHERE session_id < last_sid
-       OR epoch(session_end) + 1800.0 < epoch(max_ts)"""))
+    Some(SeriesFixtures.streamSessionsSql))
 
   /** Data-drift monitor — the freshness/distribution check a scheduled
     * pipeline runs BEFORE publishing each increment (row-volume or

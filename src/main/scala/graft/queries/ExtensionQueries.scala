@@ -2288,15 +2288,6 @@ object ExtensionQueries {
     LEFT JOIN (SELECT user_id, count(*) AS n_completed FROM v2c2p GROUP BY 1) c
       ON a.user_id = c.user_id"""))
 
-  /** The events with a timestamp, as a µs parquet stream source for the
-    * hourly and stream-static parity queries. */
-  private def streamEventsFixture(s: org.apache.spark.sql.SparkSession,
-                                  d: String): String =
-    Landing.dir(s, d, "graft_stream_events") { t =>
-      Tables.events(s, d).filter(col("ts").isNotNull)
-        .write.mode("overwrite").parquet(t)
-    }
-
   /** Batch–stream PARITY, oracle-checked: the hourly aggregation runs as
     * an actual Structured Streaming query — file source → windowed
     * aggregation → Trigger.AvailableNow to completion — and the driver
@@ -2307,16 +2298,15 @@ object ExtensionQueries {
     * [[EventStream.chainedDailyRollup]]).
     * countDistinct is excluded: distinct aggregation is unsupported in
     * streaming (approx_count_distinct is its streaming stand-in).
-    * The landed copy only adapts the ns-timestamp fixture to a
-    * streamable µs file source (landed once per dataset — it is input
-    * PREP, and re-writing it per invocation would bill fixture IO to
-    * the streaming query under measurement); real deployments stream
-    * the landing directory itself. */
+    * The landed copy ([[SeriesFixtures.eventStream]]) only adapts the
+    * ns-timestamp fixture to a streamable µs file source (landed once
+    * per dataset — it is input PREP, and re-writing it per invocation
+    * would bill fixture IO to the streaming query under measurement);
+    * real deployments stream the landing directory itself. */
   private val x_stream_hourly_parity = Q(
     "x_stream_hourly_parity",
     (s, d) => {
-      val tmp = streamEventsFixture(s, d)
-      val agg = EventStream.readEvents(s, tmp, format = "parquet")
+      val agg = SeriesFixtures.eventStream(s, d)
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           min(col("value")).as("min_value"),
@@ -2345,12 +2335,11 @@ object ExtensionQueries {
   private val x_stream_static_join = Q(
     "x_stream_static_join_parity",
     (s, d) => {
-      val tmp = streamEventsFixture(s, d)
       val dim = Tables.events(s, d)
         .filter(col("user_id").isNotNull)
         .select(col("user_id")).distinct()
         .withColumn("cohort", pmod(col("user_id"), lit(7)).cast("int"))
-      val agg = EventStream.readEvents(s, tmp, format = "parquet")
+      val agg = SeriesFixtures.eventStream(s, d)
         .join(broadcast(dim), Seq("user_id"))
         .groupBy(col("cohort"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -2671,46 +2660,16 @@ object ExtensionQueries {
     GROUP BY 1, 2"""))
 
   /** Sessionization: 30-minute-gap sessions per user via running-sum
-    * window (the batch analog of mapGroupsWithState sessionization).
-    * Timestamps are second-truncated on both sides so ns-vs-us parquet
-    * precision cannot perturb the compare. */
+    * window ([[SeriesFixtures.sessionIslands]], the batch analog of
+    * mapGroupsWithState sessionization), one row per session. */
   private val x_events_sessionize = Q(
     "x_events_sessionize",
-    (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      // Total order (ts_s, event_id): same-second ties would otherwise
-      // make LAG/running-sum nondeterministic across engines.
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_s"), col("event_id"))
-      val gap = col("ts_s").cast("double") - lag(col("ts_s"), 1).over(w).cast("double")
-      val isNew = when(gap.isNull || gap > 1800.0, 1L).otherwise(0L)
-      // ts IS NOT NULL pinned on both sides: Spark windows order NULLS
-      // FIRST, DuckDB NULLS LAST — NULL timestamps would renumber every
-      // session in the partition differently across engines.
-      Tables.events(s, d)
-        .filter(col("ts").isNotNull)
-        .select(col("user_id"), col("event_id"), date_trunc("second", col("ts")).as("ts_s"))
-        .withColumn("session_id",
-          sum(isNew).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts_s")).as("session_start"),
-          max(col("ts_s")).as("session_end"))
-    },
-    Some("""WITH e AS (
-      SELECT user_id, event_id, date_trunc('second', ts) AS ts_s
-      FROM events WHERE ts IS NOT NULL),
-    flagged AS (
-      SELECT user_id, event_id, ts_s,
-        CASE WHEN LAG(ts_s) OVER w IS NULL
-               OR epoch(ts_s) - epoch(LAG(ts_s) OVER w) > 1800.0
-             THEN 1 ELSE 0 END AS is_new
-      FROM e
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)),
-    sessions AS (
-      SELECT user_id, ts_s,
-        CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM flagged)
+    (s, d) => SeriesFixtures.sessionIslands(s, d)
+      .groupBy(col("user_id"), col("session_id"))
+      .agg(count(lit(1)).as("n_events"),
+        min(col("ts_s")).as("session_start"),
+        max(col("ts_s")).as("session_end")),
+    Some(s"""WITH ${SeriesFixtures.sessionIslandsSql}
     SELECT user_id, session_id,
       count(*) AS n_events,
       min(ts_s) AS session_start,
@@ -2718,74 +2677,22 @@ object ExtensionQueries {
     FROM sessions
     GROUP BY 1, 2"""))
 
-  /** Second-truncated events in one file, shared by the fMGWS
-    * sessionizer and the transformWithState counter. */
-  private def sessionParityFixture(s: org.apache.spark.sql.SparkSession,
-                                   d: String): String =
-    Landing.dir(s, d, "graft_stream_sess") { t =>
-      Tables.events(s, d).filter(col("ts").isNotNull)
-        // second-truncated on both sides, same as x_events_sessionize
-        .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
-          col("user_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(t)
-    }
-
   /** Streaming-vs-batch SESSIONIZE parity on the custom-state path: the
     * flatMapGroupsWithState sessionizer (EventStream.sessionize — one
     * open session per user in the state store, event-time timeouts) run
-    * with Trigger.AvailableNow over the events fixture, oracle-compared
-    * against DuckDB's gaps-and-islands sessionization. The fixture is
-    * coalesced to ONE file so the run is exactly one data micro-batch
-    * (watermark still unset, so nothing times out mid-stream) followed
-    * by the no-data batch that fires event-time timeouts at the final
-    * watermark. Emission rule replayed by the oracle: a session closed
-    * by a later same-user event always emits; the user's LAST session
-    * emits iff its timeout timestamp passed the final watermark
-    * strictly — end + gap < max(ts) over the whole input (Spark times
-    * out state when timeoutTimestamp < watermark). */
+    * with Trigger.AvailableNow over the one-file
+    * [[SeriesFixtures.sessionStream]] (one data micro-batch, watermark
+    * still unset, so nothing times out mid-stream), oracle-compared
+    * against DuckDB's gaps-and-islands sessionization plus the final
+    * watermark's emission rule ([[SeriesFixtures.streamSessionsSql]]). */
   private val x_stream_sessionize_parity = Q(
     "x_stream_sessionize_parity",
-    (s, d) => {
-      import s.implicits._
-      val tmp = sessionParityFixture(s, d)
-      val ev = s.readStream
-        .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
-        .parquet(tmp)
-        .as[EventStream.Event]
-      EventStream.drain(s, "x_stream_sessionize_parity", "append")(
-          EventStream.sessionize(s, ev))
-        .select(col("user_id"), col("n_events"),
-          timestamp_millis(col("start_ms")).as("session_start"),
-          timestamp_millis(col("end_ms")).as("session_end"))
-    },
-    Some("""WITH e AS (
-      SELECT user_id, event_id, date_trunc('second', ts) AS ts_s
-      FROM events WHERE ts IS NOT NULL),
-    flagged AS (
-      SELECT user_id, event_id, ts_s,
-        CASE WHEN LAG(ts_s) OVER w IS NULL
-               OR epoch(ts_s) - epoch(LAG(ts_s) OVER w) > 1800.0
-             THEN 1 ELSE 0 END AS is_new
-      FROM e
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)),
-    sessions AS (
-      SELECT user_id, ts_s,
-        SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM flagged),
-    agg AS (
-      SELECT user_id, session_id, count(*) AS n_events,
-        min(ts_s) AS session_start, max(ts_s) AS session_end
-      FROM sessions GROUP BY 1, 2),
-    ranked AS (
-      SELECT *, max(session_id) OVER (PARTITION BY user_id) AS last_sid
-      FROM agg),
-    mx AS (SELECT max(ts_s) AS max_ts FROM e)
-    SELECT user_id, n_events, session_start, session_end
-    FROM ranked, mx
-    WHERE session_id < last_sid
-       OR epoch(session_end) + 1800.0 < epoch(max_ts)"""))
+    (s, d) => EventStream.drain(s, "x_stream_sessionize_parity", "append")(
+        EventStream.sessionize(s, SeriesFixtures.sessionStream(s, d)))
+      .select(col("user_id"), col("n_events"),
+        timestamp_millis(col("start_ms")).as("session_start"),
+        timestamp_millis(col("end_ms")).as("session_end")),
+    Some(SeriesFixtures.streamSessionsSql))
 
   /** transformWithState (Spark 4's arbitrary-state API, RocksDB-backed)
     * parity: the per-user lifetime counter run via AvailableNow over the
@@ -2796,19 +2703,11 @@ object ExtensionQueries {
     * their default provider. */
   private val x_stream_tws_counts = Q(
     "x_stream_tws_counts",
-    (s, d) => {
-      import s.implicits._
-      val tmp = sessionParityFixture(s, d)
-      EventStream.withRocksDbState(s) {
-        val ev = s.readStream
-          .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
-          .parquet(tmp)
-          .as[EventStream.Event]
-        EventStream.drain(s, "x_stream_tws_counts", "update")(
-            EventStream.runningUserCounts(s, ev))
-          .groupBy(col("user_id"))
-          .agg(max(col("n_events")).as("n_events"))
-      }
+    (s, d) => EventStream.withRocksDbState(s) {
+      EventStream.drain(s, "x_stream_tws_counts", "update")(
+          EventStream.runningUserCounts(s, SeriesFixtures.sessionStream(s, d)))
+        .groupBy(col("user_id"))
+        .agg(max(col("n_events")).as("n_events"))
     },
     Some("""SELECT user_id, COUNT(*) AS n_events
       FROM events WHERE ts IS NOT NULL
@@ -3556,22 +3455,11 @@ object ExtensionQueries {
   private val x_stream_join_parity = Q(
     "x_stream_join_parity",
     (s, d) => {
-      val base = Landing.dir(s, d, "graft_stream_join") { t =>
-        val ev = Tables.events(s, d).filter(col("ts").isNotNull)
-          .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
-            col("user_id"), col("event_type"))
-        ev.filter(col("event_type") === "click").drop("event_type")
-          .coalesce(1).write.mode("overwrite").parquet(t + "/clicks")
-        ev.filter(col("event_type") === "view").drop("event_type")
-          .coalesce(1).write.mode("overwrite").parquet(t + "/views")
-      }
-      def src(path: String) = s.readStream
-        .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
-        .parquet(path)
+      val (clicks, views) = SeriesFixtures.clickViewStreams(s, d)
       // 4 state partitions sized to the single-file fixture (see
       // EventStream.withStatePartitions — measured 3x on this query)
       EventStream.drain(s, "x_stream_join_parity", "append")(
-          EventStream.clickViewJoin(src(base + "/clicks"), src(base + "/views"),
+          EventStream.clickViewJoin(clicks, views,
             horizon = "24 hours", delay = "48 hours"))
         .select(col("click_id"), col("user_id"), col("click_ts"),
           col("view_id"), col("view_ts"))
@@ -3641,22 +3529,10 @@ object ExtensionQueries {
     * the delay is the knob that bounds state instead. */
   private val x_stream_dedup_parity = Q(
     "x_stream_dedup_parity",
-    (s, d) => {
-      val tmp = Landing.dir(s, d, "graft_stream_dedup") { t =>
-        val ev = Tables.events(s, d).filter(col("ts").isNotNull)
-          .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
-            col("user_id"))
-        ev.coalesce(1).write.mode("overwrite").parquet(t)
-        ev.coalesce(1).write.mode("append").parquet(t) // planted duplicates
-      }
-      val src = s.readStream
-        .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
-        .option("maxFilesPerTrigger", "1") // force the cross-batch path
-        .parquet(tmp)
-      EventStream.drain(s, "x_stream_dedup_parity", "append")(
-          EventStream.dedupEvents(src, delay = "60 days"))
-        .select(col("event_id"), col("ts"), col("user_id"))
-    },
+    (s, d) => EventStream.drain(s, "x_stream_dedup_parity", "append")(
+        EventStream.dedupEvents(SeriesFixtures.duplicatedEventStream(s, d),
+          delay = "60 days"))
+      .select(col("event_id"), col("ts"), col("user_id")),
     Some("""SELECT event_id, date_trunc('second', ts) AS ts, user_id
       FROM events WHERE ts IS NOT NULL"""))
 

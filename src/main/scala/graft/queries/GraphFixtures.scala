@@ -42,6 +42,25 @@ private[queries] object GraphFixtures {
       SELECT src, dst FROM trade
       UNION ALL SELECT dst, src FROM trade)"""
 
+  /** Every customer and supplier node, labelled by its nation:
+    * (node, label), node ids as in [[trade]]. */
+  def nationLabels(s: SparkSession, d: String): DataFrame =
+    Tables.customer(s, d)
+      .select((col("c_custkey") * 2).as("node"),
+        col("c_nationkey").cast("long").as("label"))
+      .unionByName(Tables.supplier(s, d)
+        .select((col("s_suppkey") * 2 + 1).as("node"),
+          col("s_nationkey").cast("long").as("label")))
+
+  /** CTE `labels (node, label)`: [[nationLabels]]. */
+  val nationLabelsSql: String =
+    """labels AS (
+      SELECT c_custkey * 2 AS node, CAST(c_nationkey AS BIGINT) AS label
+      FROM customer
+      UNION ALL
+      SELECT s_suppkey * 2 + 1 AS node, CAST(s_nationkey AS BIGINT)
+      FROM supplier)"""
+
   /** The co-purchase graph: parts appearing together in one order,
     * restricted to heavy line items (quantity ≥ 45) so the graph
     * stays sparse at any scale. Distinct undirected edges as canonical

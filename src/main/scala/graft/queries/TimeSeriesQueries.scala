@@ -152,8 +152,10 @@ object TimeSeriesQueries {
     * with start/end/count. Boundary semantics replayed exactly by the
     * oracle: Spark merges TOUCHING windows — an event landing exactly
     * at the previous session's end (gap == the gap duration) joins that
-    * session, so the oracle's island rule is `> 1800` (strict), the
-    * same convention as the manual `x_events_sessionize`. Caught
+    * session, so the oracle's island rule is `> 1800` (strict): the
+    * islands of the manual `x_events_sessionize`
+    * ([[SeriesFixtures.sessionIslandsSql]]; same-second ties land in
+    * one session whatever their order). Caught
     * empirically at the 10× scale step: a second-truncated pair exactly
     * 1800 s apart (user 511) merges in Spark. session_end = last event
     * + 30 min, also replayed. ts second-truncated + NOT NULL on both
@@ -171,25 +173,12 @@ object TimeSeriesQueries {
           col("w.end").as("session_end"),
           col("n_events"))
     },
-    Some("""WITH e AS (
-      SELECT user_id, date_trunc('second', ts) AS ts_s
-      FROM events WHERE ts IS NOT NULL),
-    flagged AS (
-      SELECT user_id, ts_s,
-        CASE WHEN LAG(ts_s) OVER w IS NULL
-               OR epoch(ts_s) - epoch(LAG(ts_s) OVER w) > 1800.0
-             THEN 1 ELSE 0 END AS is_new
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_s)),
-    sessions AS (
-      SELECT user_id, ts_s,
-        SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts_s
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      FROM flagged)
+    Some(s"""WITH ${SeriesFixtures.sessionIslandsSql}
     SELECT user_id,
       MIN(ts_s) AS session_start,
       MAX(ts_s) + INTERVAL 30 MINUTE AS session_end,
       COUNT(*) AS n_events
-    FROM sessions GROUP BY user_id, sid"""))
+    FROM sessions GROUP BY user_id, session_id"""))
 
   /** SLIDING time windows (1-hour window, 15-minute slide) — each
     * event belongs to exactly 4 overlapping windows; Spark's `window`

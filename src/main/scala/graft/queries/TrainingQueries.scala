@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Landing, Tables}
+import graft.core.Tables
 import graft.functions.GraftFunctions
 import graft.ops.{Dedup, Graph, Sampling, Scale, Similarity}
+import graft.streaming.EventStream
 
 /** Round-6 training-data-pipeline registry entries: duplicated-span
   * detection (the suffix-dedup output shape of Lee et al. 2021,
@@ -156,12 +157,7 @@ object TrainingQueries {
     (s, d) => {
       val sym = GraphFixtures.tradeSym(s, d)
         .localCheckpoint(true) // degree pass + neighbor-community pass
-      val labels = Tables.customer(s, d)
-        .select((col("c_custkey") * 2).as("node"),
-          col("c_nationkey").cast("long").as("label"))
-        .unionByName(Tables.supplier(s, d)
-          .select((col("s_suppkey") * 2 + 1).as("node"),
-            col("s_nationkey").cast("long").as("label")))
+      val labels = GraphFixtures.nationLabels(s, d)
         .localCheckpoint(true) // three broadcast consumers
       val deg = sym.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("k"))
@@ -214,12 +210,7 @@ object TrainingQueries {
         .crossJoin(broadcast(tot))
     },
     Some(s"""WITH ${GraphFixtures.tradeSymSql},
-      labels AS (
-        SELECT c_custkey * 2 AS node, CAST(c_nationkey AS BIGINT) AS label
-        FROM customer
-        UNION ALL
-        SELECT s_suppkey * 2 + 1 AS node, CAST(s_nationkey AS BIGINT)
-        FROM supplier),
+      ${GraphFixtures.nationLabelsSql},
       deg AS (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS k
         FROM trade_sym GROUP BY 1),
@@ -781,13 +772,7 @@ object TrainingQueries {
   private val x_ts_ewma = Q(
     "x_ts_ewma",
     (s, d) => {
-      val series = Tables.orders(s, d)
-        .filter(col("o_orderdate").isNotNull)
-        .select(col("o_orderpriority").as("priority"),
-          (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-            .cast("int").as("ym"))
-        .groupBy(col("priority"), col("ym"))
-        .agg(count(lit(1)).as("n"))
+      val series = SeriesFixtures.monthlyOrders(s, d)
       series.groupBy(col("priority"))
         .agg(sort_array(collect_list(struct(col("ym"), col("n")))).as("ser"))
         .select(col("priority"), explode(expr(
@@ -802,13 +787,7 @@ object TrainingQueries {
         .select(col("priority"), col("p.ym").as("ym"), col("p.n").as("n"),
           col("p.e").as("ewma_micro"))
     },
-    Some("""WITH RECURSIVE series AS (
-        SELECT o_orderpriority AS priority,
-          CAST(year(CAST(o_orderdate AS DATE)) * 100
-            + month(CAST(o_orderdate AS DATE)) AS INTEGER) AS ym,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM orders WHERE o_orderdate IS NOT NULL
-        GROUP BY 1, 2),
+    Some(s"""WITH RECURSIVE ${SeriesFixtures.monthlyOrdersSql},
       s AS (
         SELECT priority, ym, n,
           ROW_NUMBER() OVER (PARTITION BY priority ORDER BY ym) AS t
@@ -1211,53 +1190,10 @@ object TrainingQueries {
       Tables.documents(s, d)
         .filter(col("text").isNotNull && col("lang").isNotNull)
         .select(col("doc_id"), col("lang"), col("text"))),
-    Some(s"""WITH docs AS (
-        SELECT doc_id, lang, text, doc_id % 5 <> 0 AS is_train
-        FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
-      toks AS (
-        SELECT doc_id, lang, is_train,
-          ${Sampling.hashBucketSql(
-            "unnest(string_split(lower(text), ' '))", 1024)} AS b
-        FROM docs),
-      cbc AS (
-        SELECT lang AS cls, b, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM toks WHERE is_train GROUP BY 1, 2),
-      ctot AS (
-        SELECT lang AS cls, CAST(COUNT(*) AS BIGINT) AS n_tok
-        FROM toks WHERE is_train GROUP BY 1),
-      grid AS (
-        SELECT cls, n_tok, CAST(g.range AS BIGINT) AS b
-        FROM ctot CROSS JOIN range(1024) g),
-      lp AS (
-        SELECT cls, b, CAST(ROUND(LN(
-            CAST(COALESCE(cnt, 0) + 1 AS DOUBLE)
-            / CAST(n_tok + 1024 AS DOUBLE)) * 1000000) AS BIGINT) AS lp_micro
-        FROM grid LEFT JOIN cbc USING (cls, b)),
-      nd AS (
-        SELECT lang AS cls, CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM docs WHERE is_train GROUP BY 1),
-      prior AS (
-        SELECT cls, CAST(ROUND(LN(CAST(n_docs AS DOUBLE)
-          / CAST((SELECT SUM(n_docs) FROM nd) AS DOUBLE)) * 1000000)
-          AS BIGINT) AS prior_micro
-        FROM nd),
-      dbc AS (
-        SELECT doc_id, lang, b, CAST(COUNT(*) AS BIGINT) AS c
-        FROM toks WHERE NOT is_train GROUP BY 1, 2, 3),
-      scored AS (
-        SELECT doc_id, lang, cls,
-          CAST(SUM(c * lp_micro) AS BIGINT) + ANY_VALUE(prior_micro)
-            AS score
-        FROM dbc JOIN lp USING (b) JOIN prior USING (cls)
-        GROUP BY 1, 2, 3),
-      pred AS (
-        SELECT doc_id, lang, cls AS pred,
-          ROW_NUMBER() OVER (PARTITION BY doc_id
-            ORDER BY score DESC, cls) AS rn
-        FROM scored)
-      SELECT lang, pred, CAST(COUNT(*) AS BIGINT) AS n_docs
-      FROM pred WHERE rn = 1
-      GROUP BY 1, 2"""))
+    Some(s"""WITH ${graft.ops.TextOps.naiveBayesConfusionSql(
+        "(SELECT doc_id, lang, text FROM documents " +
+          "WHERE text IS NOT NULL AND lang IS NOT NULL)")}
+      SELECT lang, pred, n_docs FROM __nb_conf"""))
 
   // ---------------------------------------------------------------
   // x_eval_map_mrr
@@ -1814,13 +1750,7 @@ object TrainingQueries {
   private val x_ts_holt = Q(
     "x_ts_holt",
     (s, d) => {
-      val series = Tables.orders(s, d)
-        .filter(col("o_orderdate").isNotNull)
-        .select(col("o_orderpriority").as("priority"),
-          (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-            .cast("int").as("ym"))
-        .groupBy(col("priority"), col("ym"))
-        .agg(count(lit(1)).as("n"))
+      val series = SeriesFixtures.monthlyOrders(s, d)
       series.groupBy(col("priority"))
         .agg(sort_array(collect_list(struct(col("ym"), col("n")))).as("ser"))
         .select(col("priority"), explode(expr(
@@ -1843,13 +1773,7 @@ object TrainingQueries {
           col("p.l").as("level_micro"), col("p.b").as("trend_micro"),
           (col("p.l") + col("p.b")).as("forecast_micro"))
     },
-    Some("""WITH RECURSIVE series AS (
-        SELECT o_orderpriority AS priority,
-          CAST(year(CAST(o_orderdate AS DATE)) * 100
-            + month(CAST(o_orderdate AS DATE)) AS INTEGER) AS ym,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM orders WHERE o_orderdate IS NOT NULL
-        GROUP BY 1, 2),
+    Some(s"""WITH RECURSIVE ${SeriesFixtures.monthlyOrdersSql},
       s AS (
         SELECT priority, ym, n,
           ROW_NUMBER() OVER (PARTITION BY priority ORDER BY ym) AS t
@@ -1988,39 +1912,16 @@ object TrainingQueries {
     * NULL trend and are excluded from the seasonal fit, exactly as
     * the classical method prescribes.
     *
-    * Scale shape: the corpus collapses to one daily count aggregate;
-    * every window after runs on the calendar-bounded day frame. */
-  /** The shared daily frame the STL family decomposes. */
-  private def stlDaily(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.events(s, d).filter(col("ts").isNotNull)
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("y"))
-      .withColumn("dow", expr(
-        "CAST(datediff(day, DATE '1970-01-01') % 7 AS INT)"))
-
+    * Scale shape: the corpus collapses to one daily count aggregate
+    * ([[SeriesFixtures.dailyEvents]]); every window after runs on the
+    * calendar-bounded day frame. */
   private val x_ts_stl_decompose = Q(
     "x_ts_stl_decompose",
-    (s, d) => graft.ops.Stats.stlDecompose(stlDaily(s, d)),
-    Some("""WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS y,
-          CAST((CAST(ts AS DATE) - DATE '1970-01-01') % 7 AS INTEGER) AS dow
-        FROM events WHERE ts IS NOT NULL
-        GROUP BY 1, 3),
-      trended AS (
-        SELECT day, dow, y,
-          CASE WHEN COUNT(*) OVER w = 7
-            THEN CAST(SUM(y) OVER w * 1000 // 7 AS BIGINT) END AS trend_milli
-        FROM daily
-        WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-      det AS (
-        SELECT *, y * 1000 - trend_milli AS detr_milli FROM trended),
-      seasonal AS (
-        SELECT dow, CAST(SUM(detr_milli) // COUNT(*) AS BIGINT)
-          AS seasonal_milli
-        FROM det WHERE trend_milli IS NOT NULL GROUP BY 1)
-      SELECT day, dow, y, trend_milli, seasonal_milli,
-        y * 1000 - trend_milli - seasonal_milli AS residual_milli
-      FROM det JOIN seasonal USING (dow)"""))
+    (s, d) => graft.ops.Stats.stlDecompose(SeriesFixtures.dailyEvents(s, d)),
+    Some(s"""WITH ${SeriesFixtures.dailyEventsSql},
+      ${graft.ops.Stats.stlDecomposeSql("daily")}
+      SELECT day, dow, y, trend_milli, seasonal_milli, residual_milli
+      FROM stl"""))
 
   // ---------------------------------------------------------------
   // x_graph_modularity
@@ -2054,12 +1955,7 @@ object TrainingQueries {
     (s, d) => {
       val edges = GraphFixtures.trade(s, d)
         .localCheckpoint(true) // pair matrix + member count both read it
-      val labels = Tables.customer(s, d)
-        .select((col("c_custkey") * 2).as("node"),
-          col("c_nationkey").cast("long").as("label"))
-        .unionByName(Tables.supplier(s, d)
-          .select((col("s_suppkey") * 2 + 1).as("node"),
-            col("s_nationkey").cast("long").as("label")))
+      val labels = GraphFixtures.nationLabels(s, d)
       // directed-edge pair matrix; sym quantities derive exactly:
       // d_sym(c) = row_mass(c) + col_mass(c), intra_sym = 2 m(c,c),
       // S = 2 Σ m
@@ -2099,12 +1995,7 @@ object TrainingQueries {
       terms.crossJoin(broadcast(q))
     },
       Some(s"""WITH ${GraphFixtures.tradeSymSql},
-        labels AS (
-          SELECT c_custkey * 2 AS node, CAST(c_nationkey AS BIGINT) AS label
-          FROM customer
-          UNION ALL
-          SELECT s_suppkey * 2 + 1 AS node, CAST(s_nationkey AS BIGINT)
-          FROM supplier),
+        ${GraphFixtures.nationLabelsSql},
         joined AS (
           SELECT ls.label AS lsrc, ld.label AS ldst
           FROM trade_sym e
@@ -2351,59 +2242,15 @@ object TrainingQueries {
       val macroF1 = perClass.agg(round(avg(col("f1")), 6).as("macro_f1"))
       perClass.crossJoin(broadcast(acc)).crossJoin(broadcast(macroF1))
     },
-    Some(s"""WITH docs AS (
-        SELECT doc_id, lang, text, doc_id % 5 <> 0 AS is_train
-        FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
-      toks AS (
-        SELECT doc_id, lang, is_train,
-          ${Sampling.hashBucketSql(
-            "unnest(string_split(lower(text), ' '))", 1024)} AS b
-        FROM docs),
-      cbc AS (
-        SELECT lang AS cls, b, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM toks WHERE is_train GROUP BY 1, 2),
-      ctot AS (
-        SELECT lang AS cls, CAST(COUNT(*) AS BIGINT) AS n_tok
-        FROM toks WHERE is_train GROUP BY 1),
-      grid AS (
-        SELECT cls, n_tok, CAST(g.range AS BIGINT) AS b
-        FROM ctot CROSS JOIN range(1024) g),
-      lp AS (
-        SELECT cls, b, CAST(ROUND(LN(
-            CAST(COALESCE(cnt, 0) + 1 AS DOUBLE)
-            / CAST(n_tok + 1024 AS DOUBLE)) * 1000000) AS BIGINT) AS lp_micro
-        FROM grid LEFT JOIN cbc USING (cls, b)),
-      nd AS (
-        SELECT lang AS cls, CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM docs WHERE is_train GROUP BY 1),
-      prior AS (
-        SELECT cls, CAST(ROUND(LN(CAST(n_docs AS DOUBLE)
-          / CAST((SELECT SUM(n_docs) FROM nd) AS DOUBLE)) * 1000000)
-          AS BIGINT) AS prior_micro
-        FROM nd),
-      dbc AS (
-        SELECT doc_id, lang, b, CAST(COUNT(*) AS BIGINT) AS c
-        FROM toks WHERE NOT is_train GROUP BY 1, 2, 3),
-      scored AS (
-        SELECT doc_id, lang, cls,
-          CAST(SUM(c * lp_micro) AS BIGINT) + ANY_VALUE(prior_micro)
-            AS score
-        FROM dbc JOIN lp USING (b) JOIN prior USING (cls)
-        GROUP BY 1, 2, 3),
-      predicted AS (
-        SELECT doc_id, lang, cls AS pred,
-          ROW_NUMBER() OVER (PARTITION BY doc_id
-            ORDER BY score DESC, cls) AS rn
-        FROM scored),
-      conf AS (
-        SELECT lang, pred, CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM predicted WHERE rn = 1 GROUP BY 1, 2),
+    Some(s"""WITH ${graft.ops.TextOps.naiveBayesConfusionSql(
+        "(SELECT doc_id, lang, text FROM documents " +
+          "WHERE text IS NOT NULL AND lang IS NOT NULL)")},
       row_tot AS (SELECT lang AS cls, CAST(SUM(n_docs) AS BIGINT) AS row_n
-        FROM conf GROUP BY 1),
+        FROM __nb_conf GROUP BY 1),
       col_tot AS (SELECT pred AS cls, CAST(SUM(n_docs) AS BIGINT) AS col_n
-        FROM conf GROUP BY 1),
+        FROM __nb_conf GROUP BY 1),
       tp AS (SELECT lang AS cls, CAST(n_docs AS BIGINT) AS tp
-        FROM conf WHERE lang = pred),
+        FROM __nb_conf WHERE lang = pred),
       per_class AS (
         SELECT cls,
           CAST(COALESCE(tp, 0) AS BIGINT) AS tp,
@@ -2425,7 +2272,7 @@ object TrainingQueries {
         FROM per_class),
       acc AS (
         SELECT ROUND(CAST((SELECT SUM(tp) FROM rated) AS DOUBLE)
-          / CAST((SELECT SUM(n_docs) FROM conf) AS DOUBLE), 6) AS accuracy),
+          / CAST((SELECT SUM(n_docs) FROM __nb_conf) AS DOUBLE), 6) AS accuracy),
       mac AS (SELECT ROUND(AVG(f1), 6) AS macro_f1 FROM rated)
       SELECT cls, tp, fp, fn, precision, recall, f1, accuracy, macro_f1
       FROM rated CROSS JOIN acc CROSS JOIN mac"""))
@@ -2756,16 +2603,8 @@ object TrainingQueries {
     * fed each day — proof the first window layer really ran. */
   private val x_stream_chained_windows = Q(
     "x_stream_chained_windows",
-    (s, d) => {
-      val tmp = Landing.dir(s, d, "graft_stream_chain") { t =>
-        Tables.events(s, d).filter(col("ts").isNotNull)
-          .write.mode("overwrite").parquet(t)
-      }
-      import graft.streaming.EventStream
-      EventStream.drain(s, "x_stream_chained_windows", "append")(
-        EventStream.chainedDailyRollup(
-          EventStream.readEvents(s, tmp, format = "parquet")))
-    },
+    (s, d) => EventStream.drain(s, "x_stream_chained_windows", "append")(
+      EventStream.chainedDailyRollup(SeriesFixtures.eventStream(s, d))),
     Some("""WITH mx AS (
         SELECT MAX(ts) - INTERVAL 10 MINUTE AS wm FROM events
         WHERE ts IS NOT NULL)
@@ -2940,7 +2779,7 @@ object TrainingQueries {
   private val x_ts_seasonal_strength = Q(
     "x_ts_seasonal_strength",
     (s, d) => {
-      val comp = graft.ops.Stats.stlDecompose(stlDaily(s, d))
+      val comp = graft.ops.Stats.stlDecompose(SeriesFixtures.dailyEvents(s, d))
         .filter(col("trend_milli").isNotNull)
         .select(col("residual_milli").as("r"),
           (col("seasonal_milli") + col("residual_milli")).as("sr"),
@@ -2972,29 +2811,13 @@ object TrainingQueries {
         s"""(CAST(n AS DOUBLE) * CAST(s2_$c AS DOUBLE)
            - CAST(s_$c AS DOUBLE) * CAST(s_$c AS DOUBLE))
            / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))"""
-      s"""WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS y,
-          CAST((CAST(ts AS DATE) - DATE '1970-01-01') % 7 AS INTEGER) AS dow
-        FROM events WHERE ts IS NOT NULL
-        GROUP BY 1, 3),
-      trended AS (
-        SELECT day, dow, y,
-          CASE WHEN COUNT(*) OVER w = 7
-            THEN CAST(SUM(y) OVER w * 1000 // 7 AS BIGINT) END AS trend_milli
-        FROM daily
-        WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-      det AS (
-        SELECT *, y * 1000 - trend_milli AS detr_milli FROM trended),
-      seasonal AS (
-        SELECT dow, CAST(SUM(detr_milli) // COUNT(*) AS BIGINT)
-          AS seasonal_milli
-        FROM det WHERE trend_milli IS NOT NULL GROUP BY 1),
+      s"""WITH ${SeriesFixtures.dailyEventsSql},
+      ${graft.ops.Stats.stlDecomposeSql("daily")},
       comp AS (
-        SELECT y * 1000 - trend_milli - seasonal_milli AS r,
-          seasonal_milli + (y * 1000 - trend_milli - seasonal_milli) AS sr,
-          trend_milli + (y * 1000 - trend_milli - seasonal_milli) AS tr
-        FROM det JOIN seasonal USING (dow)
-        WHERE trend_milli IS NOT NULL),
+        SELECT residual_milli AS r,
+          seasonal_milli + residual_milli AS sr,
+          trend_milli + residual_milli AS tr
+        FROM stl WHERE trend_milli IS NOT NULL),
       sums AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
           CAST(SUM(r) AS BIGINT) AS s_r,
@@ -3082,13 +2905,7 @@ object TrainingQueries {
   private val x_ts_forecast_baselines = Q(
     "x_ts_forecast_baselines",
     (s, d) => {
-      val series = Tables.orders(s, d)
-        .filter(col("o_orderdate").isNotNull)
-        .select(col("o_orderpriority").as("priority"),
-          (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-            .cast("int").as("ym"))
-        .groupBy(col("priority"), col("ym"))
-        .agg(count(lit(1)).as("n"))
+      val series = SeriesFixtures.monthlyOrders(s, d)
       val w = Window.partitionBy(col("priority")).orderBy(col("ym"))
       val lagged = series
         .withColumn("l1", lag(col("n"), 1).over(w))
@@ -3115,13 +2932,7 @@ object TrainingQueries {
             |   / CAST(sad1 * 1000 DIV n_naive AS DOUBLE), 6) END"""
             .stripMargin).as("seasonal_vs_naive"))
     },
-    Some("""WITH series AS (
-        SELECT o_orderpriority AS priority,
-          CAST(year(CAST(o_orderdate AS DATE)) * 100
-            + month(CAST(o_orderdate AS DATE)) AS INTEGER) AS ym,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM orders WHERE o_orderdate IS NOT NULL
-        GROUP BY 1, 2),
+    Some(s"""WITH ${SeriesFixtures.monthlyOrdersSql},
       lagged AS (
         SELECT priority, n,
           LAG(n, 1) OVER w AS l1, LAG(n, 12) OVER w AS l12

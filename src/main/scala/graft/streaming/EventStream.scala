@@ -109,6 +109,28 @@ object EventStream {
       .option("maxFilesPerTrigger", "16") // bounded micro-batches on backfill
       .load(dir)
 
+  /** File-source stream of [[Event]] rows over a directory of parquet
+    * files, one file per micro-batch. */
+  def readEventRows(spark: SparkSession, dir: String): Dataset[Event] = {
+    import spark.implicits._
+    spark.readStream
+      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(dir)
+      .as[Event]
+  }
+
+  /** File-source stream of [[TypedEvent]] rows over a directory of
+    * parquet files, one file per micro-batch. */
+  def readTypedEvents(spark: SparkSession, dir: String): Dataset[TypedEvent] = {
+    import spark.implicits._
+    spark.readStream
+      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(dir)
+      .as[TypedEvent]
+  }
+
   /** CHAINED stateful window aggregations — two windowed aggs in ONE
     * streaming query (hourly counts re-windowed into a daily rollup),
     * the multiple-stateful-operator capability Spark gained in 3.4:

@@ -422,18 +422,4 @@ class DedupSpec extends SparkSpec {
         .collect().map(_.toSeq).toSeq
     assert(run(docs) == run(docs.repartition(13)))
   }
-
-  test("suffixSpans big-corpus path (gated ckpts + rank prefilter) is output-identical") {
-    // force the big-corpus plan shape — extra materializations plus
-    // the depth-2^preK rank prefilter before the token-array joins —
-    // on the small fixture and require bit-identical output to the
-    // default path (the prefilter may only drop pairs the minLcp
-    // filter drops anyway)
-    val docs = graft.core.Tables.documents(spark, sf001)
-    def run(threshold: Long) =
-      Dedup.suffixSpans(docs, col("doc_id"), col("text"), topN = 20,
-        bigCorpusThreshold = threshold)
-        .collect().map(_.toSeq).toSeq
-    assert(run(Long.MaxValue) == run(0L))
-  }
 }
