@@ -1,9 +1,13 @@
 #!/bin/bash
 # Local dev runner: graft.Verify against compiled classes without sbt startup.
-# Usage: scripts/run_verify.sh [sfDir] [outDir]
+# Usage: scripts/run_verify.sh [sfDir] [outDir] [query,names]
+# Runs the classes of the checkout this script sits in (after a plain
+# `sbt compile`); src/main/resources is on the classpath because
+# `sbt compile` does not copy it (the graftgen DataSourceRegister).
 set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 . "$(dirname "$0")/add_opens.sh"
 # compare-contract selftest: a loosened check.py rule fails HERE, not
 # at a future judge's reading (round-7 verdict ask #8)
@@ -12,5 +16,5 @@ python3 "$(dirname "$0")/check_selftest.py" > /dev/null \
 rm -rf "$OUT"
 exec java $ADD_OPENS -Xmx8g -XX:ReservedCodeCacheSize=1g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT" "${@:3}"

@@ -40,9 +40,16 @@ object Dedup {
   def shingled(df: DataFrame, id: Column, text: Column, n: Int = 3,
                keep: Seq[Column] = Nil): DataFrame =
     df.select(id.as("doc_id") +:
-      GraftFunctions.wordShingles(split(lower(text), " "), n).as("toks") +: keep: _*)
+      GraftFunctions.wordShingles(TextOps.tokens(text), n).as("toks") +: keep: _*)
 
   // ------------------------------------------------------------- exact
+
+  /** The content digest every exact-dedup and decontamination step keys
+    * on: md5 of the trimmed, lower-cased text. */
+  def contentDigest(text: Column): Column = md5(lower(trim(text)))
+
+  /** [[contentDigest]] of the DuckDB expression `textExpr`. */
+  def contentDigestSql(textExpr: String): String = s"md5(lower(trim($textExpr)))"
 
   /** Exact content dedup: hash-groupBy on a normalized text digest, keep
     * the smallest id per digest plus the duplicate count. One shuffle on
@@ -50,8 +57,7 @@ object Dedup {
     * bits → collisions negligible, and grouping on the digest rather
     * than the text keeps shuffle rows tiny). */
   def exactDedup(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val digest = md5(lower(trim(text)))
-    df.select(id.as("doc_id"), digest.as("text_digest"))
+    df.select(id.as("doc_id"), contentDigest(text).as("text_digest"))
       .groupBy(col("text_digest"))
       .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
   }
@@ -76,7 +82,7 @@ object Dedup {
                     keep: Seq[Column] = Nil): DataFrame = {
     val proj = df.select(id.as("doc_id") +: text.as("text") +: keep: _*)
     val outNames = proj.columns
-    proj.groupBy(md5(lower(trim(col("text")))).as("__dig"))
+    proj.groupBy(contentDigest(col("text")).as("__dig"))
       .agg(min_by(struct(outNames.map(col): _*), col("doc_id")).as("__r"),
         count(lit(1)).as("n_copies"))
       .select(outNames.map(n => col(s"__r.$n").as(n)) :+ col("n_copies"): _*)
@@ -100,8 +106,8 @@ object Dedup {
   def decontaminate(train: DataFrame, trainText: Column,
                     eval: DataFrame, evalText: Column): DataFrame = {
     val dig = Names.fresh("contam_digest", train.columns)
-    val evalDigests = eval.select(md5(lower(trim(evalText))).as(dig)).distinct()
-    train.withColumn(dig, md5(lower(trim(trainText))))
+    val evalDigests = eval.select(contentDigest(evalText).as(dig)).distinct()
+    train.withColumn(dig, contentDigest(trainText))
       .join(evalDigests, Seq(dig), "left_anti")
       .drop(dig)
   }
@@ -136,14 +142,14 @@ object Dedup {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graft.ColumnBridge
     val dig = Names.fresh("contam_digest", train.columns)
-    val evalDigests = eval.select(md5(lower(trim(evalText))).as(dig)).distinct()
+    val evalDigests = eval.select(contentDigest(evalText).as(dig)).distinct()
     val bloomBytes = evalDigests
       .agg(ColumnBridge.column(
         new BloomFilterAggregate(
           ColumnBridge.expression(xxhash64(col(dig))), expectedItems)
           .toAggregateExpression()).as("bf"))
       .head().getAs[Array[Byte]]("bf")
-    val marked = train.withColumn(dig, md5(lower(trim(trainText))))
+    val marked = train.withColumn(dig, contentDigest(trainText))
     if (bloomBytes == null) return marked.drop(dig) // empty eval set: nothing to remove
     val might = ColumnBridge.column(new BloomFilterMightContain(
       Literal.create(bloomBytes, org.apache.spark.sql.types.BinaryType),
@@ -174,7 +180,7 @@ object Dedup {
                                eval: DataFrame, evalText: Column,
                                n: Int = 13): DataFrame = {
     def grams(text: Column) =
-      GraftFunctions.wordShingles(split(lower(text), " "), n)
+      GraftFunctions.wordShingles(TextOps.tokens(text), n)
     val evalGrams = eval
       .select(explode(grams(evalText)).as("__g"))
       .select(md5(col("__g")).as("__gd")).distinct()
@@ -236,20 +242,47 @@ object Dedup {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
       .repartition(col("doc_a"))
-    cands
+    val verified = cands
       .join(keyed.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), "doc_a")
       .join(keyed.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), "doc_b")
       // size filter implied by the threshold: J(A,B) <= min/max sizes
       .filter(least(size(col("toks_a")), size(col("toks_b"))).cast("double")
         >= lit(minJaccard) * greatest(size(col("toks_a")), size(col("toks_b"))).cast("double"))
-      .select(col("doc_a"), col("doc_b"),
+    exactJaccard(verified.select(col("doc_a"), col("doc_b"), col("toks_a"), col("toks_b")),
+      minJaccard)
+  }
+
+  /** Exact Jaccard of each (doc_a, doc_b, carried…, toks_a, toks_b) pair,
+    * kept when ≥ `minJaccard`: |A∩B| / (|A|+|B|−|A∩B|) on integer
+    * sizes, so the double division is bit-stable across engines
+    * ([[jaccardSql]] is the DuckDB form). Every column but the two
+    * token sets is carried through. */
+  private def exactJaccard(pairs: DataFrame, minJaccard: Double): DataFrame = {
+    val carried = pairs.columns.filterNot(Set("toks_a", "toks_b")).toSeq.map(col)
+    pairs.select(carried ++ Seq(
         GraftFunctions.sortedIntersectCount(col("toks_a"), col("toks_b")).as("__i"),
-        (size(col("toks_a")) + size(col("toks_b"))).as("__t"))
-      .select(col("doc_a"), col("doc_b"),
+        (size(col("toks_a")) + size(col("toks_b"))).as("__t")): _*)
+      .select(carried :+
         round(col("__i").cast("double") / (col("__t") - col("__i")).cast("double"), 6)
-          .as("jaccard"))
+          .as("jaccard"): _*)
       .filter(col("jaccard") >= minJaccard)
   }
+
+  /** DuckDB form of the exact Jaccard of two shingle lists. */
+  def jaccardSql(a: String, b: String): String =
+    s"""ROUND(CAST(len(list_intersect($a, $b)) AS DOUBLE)
+          / CAST(len($a) + len($b) - len(list_intersect($a, $b)) AS DOUBLE), 6)"""
+
+  /** DuckDB replay of [[jaccardPairs]] over a `(doc_id, block…,
+    * shingles)` relation: every same-block pair verified directly (the
+    * prefix filter is lossless, so the pair set is the same). */
+  def jaccardPairsSql(docsCte: String, block: Seq[String], minJaccard: Double): String =
+    s"""SELECT doc_a, doc_b, jaccard FROM (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+          ${jaccardSql("a.shingles", "b.shingles")} AS jaccard
+        FROM $docsCte a JOIN $docsCte b
+          ON ${block.map(k => s"a.$k = b.$k AND ").mkString}a.doc_id < b.doc_id)
+      WHERE jaccard >= $minJaccard"""
 
   /** ASYMMETRIC near-dup: ordered pairs (a → b) with containment
     * C(a→b) = |shingles(a) ∩ shingles(b)| / |shingles(a)| ≥ `minC` —
@@ -300,6 +333,18 @@ object Dedup {
       .filter(col("containment") >= minC)
   }
 
+  /** DuckDB replay of [[containmentPairs]] over a `(doc_id, block…,
+    * shingles)` relation: every same-block ordered pair verified
+    * directly (the probe-side prefix filter is lossless). */
+  def containmentPairsSql(docsCte: String, block: Seq[String], minC: Double): String =
+    s"""SELECT doc_a, doc_b, containment FROM (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+          ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
+            / CAST(len(a.shingles) AS DOUBLE), 6) AS containment
+        FROM $docsCte a JOIN $docsCte b
+          ON ${block.map(k => s"a.$k = b.$k AND ").mkString}a.doc_id <> b.doc_id)
+      WHERE containment >= $minC"""
+
   // ------------------------------------- md5-family (oracle-checkable)
 
   /** (doc_id, toks, keep…, sig) for every non-empty token set: the
@@ -343,15 +388,10 @@ object Dedup {
         col("toks").as("toks_b")), "doc_b")
     val matching = size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
       b => b))
-    withSig.select(
-        col("doc_a"), col("doc_b"),
+    exactJaccard(withSig.select(col("doc_a"), col("doc_b"),
         round(matching.cast("double") / numHashes, 6).as("est_jaccard"),
-        GraftFunctions.sortedIntersectCount(col("toks_a"), col("toks_b")).as("__i"),
-        (size(col("toks_a")) + size(col("toks_b"))).as("__t"))
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"),
-        round(col("__i").cast("double") / (col("__t") - col("__i")).cast("double"), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+        col("toks_a"), col("toks_b")),
+      minJaccard)
   }
 
   /** md5-family MinHash+LSH near-duplicate candidate pairs over a
@@ -441,16 +481,18 @@ object Dedup {
     s"""CAST(list_sum([ (CAST(strpos('0123456789abcdef', (md5($expr))[i]) AS BIGINT) - 1)
           << (4 * (15 - i)) for i in range(1, 16) ]) AS BIGINT)"""
 
-  /** DuckDB CTE chain producing the 3-word-shingle table
-    * `$out(doc_id, shingles)` from a `(doc_id, text)` source —
-    * the SQL mirror of [[shingled]] (distinctness matters; order does
-    * not: every consumer is min/intersect/len). */
-  def shinglesSqlCte(srcCte: String, out: String): String =
+  /** DuckDB CTE producing the 3-word-shingle table
+    * `$out(doc_id, keep…, shingles)` from a `(doc_id, text, keep…)`
+    * source — the SQL mirror of [[shingled]] (distinctness matters;
+    * order does not: every consumer is min/intersect/len). */
+  def shinglesSqlCte(srcCte: String, out: String, keep: Seq[String] = Nil): String = {
+    val kept = keep.map(k => s" $k,").mkString
     s"""$out AS (
-      SELECT doc_id,
+      SELECT doc_id,$kept
         list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
                        for i in range(1, len(toks) - 1)]) AS shingles
-      FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM $srcCte))"""
+      FROM (SELECT doc_id,$kept ${TextOps.tokensSql("text")} AS toks FROM $srcCte))"""
+  }
 
   /** Full DuckDB query replaying [[minhashLshPairsMd5]] over a
     * `(doc_id, shingles)` CTE: rebuilds every signature with the same
@@ -487,9 +529,7 @@ object Dedup {
         ROUND(CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
                              for i in range(1, $numHashes + 1)]) AS DOUBLE)
           / CAST($numHashes AS DOUBLE), 6) AS est_jaccard,
-        ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-          / CAST(len(a.shingles) + len(b.shingles)
-                 - len(list_intersect(a.shingles, b.shingles)) AS DOUBLE), 6) AS jaccard
+        ${jaccardSql("a.shingles", "b.shingles")} AS jaccard
       FROM mh_cands c
       JOIN mh_sigs a ON c.doc_a = a.doc_id
       JOIN mh_sigs b ON c.doc_b = b.doc_id)
@@ -690,7 +730,7 @@ object Dedup {
   def positionalGrams(df: DataFrame, id: Column, text: Column,
                       gram: Int): DataFrame = {
     // stage the token array first (see the evaluation-cost rule above)
-    val tk = df.select(id.as("doc_id"), split(lower(text), " ").as("t"))
+    val tk = df.select(id.as("doc_id"), TextOps.tokens(text).as("t"))
       .filter(size(col("t")) >= gram)
     // one compiled pass per doc (Kernels.posGramMd5) — the
     // transform(sequence, md5 ∘ concat_ws ∘ slice) lambda form it
@@ -700,6 +740,19 @@ object Dedup {
         posexplode(graft.functions.GraftFunctions.posGramMd5(col("t"), gram)))
       .select(col("doc_id"), col("pos"), col("col").as("gd"))
   }
+
+  /** DuckDB CTE replaying [[positionalGrams]] over `srcCte` (columns
+    * doc_id, text): `$out(doc_id, pos, gd)`. Positions are 1-based, a
+    * uniform +1 shift of Spark's 0-based ones; every consumer uses only
+    * position differences or shift-invariant interval lengths. */
+  def positionalGramsSql(srcCte: String, out: String, gram: Int): String =
+    s"""$out AS (
+      SELECT doc_id, u.p AS pos, u.g AS gd FROM (
+        SELECT doc_id,
+          unnest([{'p': i, 'g': md5(array_to_string(t[i:i+${gram - 1}], ' '))}
+                  for i in range(1, len(t) - ${gram - 2})]) AS u
+        FROM (SELECT doc_id, ${TextOps.tokensSql("text")} AS t FROM $srcCte)
+        WHERE len(t) >= $gram))"""
 
   /** The original lambda-pipeline formulation of [[positionalGrams]]'s
     * digest array — kept as the executable cross-check the spec pins
@@ -782,14 +835,7 @@ object Dedup {
     * operator's six output columns. */
   def dupPassagesSql(srcCte: String, gram: Int = 8, minRun: Int = 3,
                      maxOcc: Int = 16): String = {
-    s"""__dp_tk AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS t FROM $srcCte),
-    __dp_pg AS (
-      SELECT doc_id, u.p AS pos, u.g AS gd FROM (
-        SELECT doc_id,
-          unnest([{'p': i, 'g': md5(array_to_string(t[i:i+${gram - 1}], ' '))}
-                  for i in range(1, len(t) - ${gram - 2})]) AS u
-        FROM __dp_tk WHERE len(t) >= $gram)),
+    s"""${positionalGramsSql(srcCte, "__dp_pg", gram)},
     __dp_seeds AS (
       SELECT gd FROM __dp_pg
       GROUP BY 1
@@ -876,14 +922,7 @@ object Dedup {
     * (columns doc_id, text); final CTE `__sr_out`. */
   def selfRepeatPassagesSql(srcCte: String, gram: Int = 8, minRun: Int = 3,
                             maxOcc: Int = 16): String = {
-    s"""__sr_tk AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS t FROM $srcCte),
-    __sr_pg AS (
-      SELECT doc_id, u.p AS pos, u.g AS gd FROM (
-        SELECT doc_id,
-          unnest([{'p': i, 'g': md5(array_to_string(t[i:i+${gram - 1}], ' '))}
-                  for i in range(1, len(t) - ${gram - 2})]) AS u
-        FROM __sr_tk WHERE len(t) >= $gram)),
+    s"""${positionalGramsSql(srcCte, "__sr_pg", gram)},
     __sr_seeds AS (
       SELECT doc_id, gd FROM __sr_pg
       GROUP BY 1, 2
@@ -944,14 +983,7 @@ object Dedup {
   /** DuckDB CTE chain replaying [[gramNovelty]] over `srcCte`
     * (columns doc_id, text); final CTE `__gn_out`. */
   def gramNoveltySql(srcCte: String, gram: Int = 8): String = {
-    s"""__gn_tk AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS t FROM $srcCte),
-    __gn_pg AS (
-      SELECT doc_id, u AS gd FROM (
-        SELECT doc_id,
-          unnest([md5(array_to_string(t[i:i+${gram - 1}], ' '))
-                  for i in range(1, len(t) - ${gram - 2})]) AS u
-        FROM __gn_tk WHERE len(t) >= $gram)),
+    s"""${positionalGramsSql(srcCte, "__gn_pg", gram)},
     __gn_freq AS (
       SELECT gd, COUNT(DISTINCT doc_id) AS nd FROM __gn_pg GROUP BY 1),
     __gn_out AS (
@@ -1025,7 +1057,7 @@ object Dedup {
       .agg(sum(col("span_len")).as("dup_tokens"),
         count(lit(1)).as("n_spans"))
     df.select(id.as("doc_id"),
-        size(split(lower(text), " ")).cast("long").as("n_tokens"))
+        TextOps.tokenCount(text).cast("long").as("n_tokens"))
       .join(spans, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"),
@@ -1041,14 +1073,7 @@ object Dedup {
     * bit-for-bit. */
   def exactSubstrCoverageSql(srcCte: String, gram: Int = 8,
                              minOcc: Int = 2): String = {
-    s"""__sc_tk AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS t FROM $srcCte),
-    __sc_pg AS (
-      SELECT doc_id, u.p AS pos, u.g AS gd FROM (
-        SELECT doc_id,
-          unnest([{'p': i, 'g': md5(array_to_string(t[i:i+${gram - 1}], ' '))}
-                  for i in range(1, len(t) - ${gram - 2})]) AS u
-        FROM __sc_tk WHERE len(t) >= $gram)),
+    s"""${positionalGramsSql(srcCte, "__sc_pg", gram)},
     __sc_seeds AS (
       SELECT gd FROM __sc_pg GROUP BY 1 HAVING COUNT(*) >= $minOcc),
     __sc_hits AS (
@@ -1072,12 +1097,12 @@ object Dedup {
         FROM __sc_isl GROUP BY 1, 2)
       GROUP BY 1),
     __sc_out AS (
-      SELECT s.doc_id, CAST(len(string_split(lower(s.text), ' ')) AS BIGINT)
+      SELECT s.doc_id, CAST(len(${TextOps.tokensSql("s.text")}) AS BIGINT)
           AS n_tokens,
         COALESCE(p.dup_tokens, 0) AS dup_tokens,
         COALESCE(p.n_spans, 0) AS n_spans,
         CAST(COALESCE(p.dup_tokens, 0) AS DOUBLE)
-          / CAST(len(string_split(lower(s.text), ' ')) AS DOUBLE) AS dup_frac
+          / CAST(len(${TextOps.tokensSql("s.text")}) AS DOUBLE) AS dup_frac
       FROM $srcCte s LEFT JOIN __sc_spans p ON p.doc_id = s.doc_id)"""
   }
 
@@ -1143,7 +1168,7 @@ object Dedup {
     // exploded rank-0 input below and both sides of the final LCP
     // join (multi-consumer rule).
     val docToks = df.filter(text.isNotNull)
-      .select(id.as("doc"), split(lower(text), " ").as("toks"))
+      .select(id.as("doc"), TextOps.tokens(text).as("toks"))
       .repartition(col("doc"))
       .localCheckpoint(true)
     // token count from the materialized doc frame (one tiny agg; the
@@ -1341,7 +1366,7 @@ object Dedup {
     s"""WITH __sa_toks AS (
       SELECT doc, CAST(len(t) AS BIGINT) AS dlen, CAST(u.i AS BIGINT) AS pos,
         CAST(('0x' || substring(md5(t[u.i + 1]), 1, 15)) AS BIGINT) AS tk
-      FROM (SELECT doc_id AS doc, string_split(lower(text), ' ') AS t
+      FROM (SELECT doc_id AS doc, ${TextOps.tokensSql("text")} AS t
             FROM $srcCte) d,
         unnest(range(0, len(t))) AS u(i)),
     __sa_r0 AS (

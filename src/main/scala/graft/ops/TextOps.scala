@@ -17,6 +17,9 @@ object TextOps {
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text))
 
+  /** [[tokens]] of the DuckDB expression `textExpr`, for the oracles. */
+  def tokensSql(textExpr: String): String = s"string_split(lower($textExpr), ' ')"
+
   /** BPE-ish subword count: alphabetic runs, digit runs, and any other
     * non-space symbol each count as one piece — a cheap deterministic
     * proxy for tokenizer cost used to budget training data. */
@@ -58,6 +61,32 @@ object TextOps {
       .drop(toks)
   }
 
+  /** DuckDB CTEs replaying [[withLangId]] over `srcCte` (a relation
+    * with a `text` column): `$out` holds every source column plus
+    * `lang_pred`. The marker lists and their CASE order come from
+    * [[langMarkers]], so the replay cannot drift from the Spark form. */
+  def langIdSql(srcCte: String, out: String): String = {
+    val score = langMarkers.map { case (lang, _) => s"__lid_$lang" }
+    val best = score.mkString("greatest(", ", ", ")")
+    val scoreCols = langMarkers.zip(score).map { case ((_, markers), s) =>
+      s"len(list_intersect(__lid_t, ${markers.mkString("['", "','", "']")})) AS $s"
+    }
+    val picks = langMarkers.zip(score).map { case ((lang, _), s) =>
+      s"WHEN $s = $best THEN '$lang'"
+    }
+    s"""__lid_toks AS (
+      SELECT *, list_distinct(${tokensSql("text")}) AS __lid_t FROM $srcCte),
+    __lid_scores AS (
+      SELECT *, ${scoreCols.mkString(", ")} FROM __lid_toks),
+    $out AS (
+      SELECT * EXCLUDE (__lid_t, ${score.mkString(", ")}),
+        CASE WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
+             WHEN $best = 0 THEN 'und'
+             ${picks.mkString("\n             ")}
+        END AS lang_pred
+      FROM __lid_scores)"""
+  }
+
   /** The quality formula over ALREADY-AVAILABLE token/distinct-token
     * expressions — single source of truth for both public forms (weights
     * and stoplist defined exactly once). */
@@ -84,7 +113,7 @@ object TextOps {
     * single source for every oracle that gates on quality (weights,
     * stoplist and rounding defined once on each engine's side). */
   def qualityScoreSql(textExpr: String): String = {
-    val toks = s"string_split(lower($textExpr), ' ')"
+    val toks = tokensSql(textExpr)
     s"""ROUND(0.4 * least(CAST(length($textExpr) AS DOUBLE) / 500.0, 1.0)
       + 0.3 * (CAST(len(list_distinct($toks)) AS DOUBLE)
                / CAST(len($toks) AS DOUBLE))
@@ -340,7 +369,7 @@ object TextOps {
     * `(doc_id, text)` source CTE; final relation is `$out`. */
   def gopherQualitySql(srcCte: String, out: String): String =
     s"""__gq_base AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks FROM $srcCte),
+      SELECT doc_id, ${tokensSql("text")} AS toks FROM $srcCte),
     __gq_wtf AS (
       SELECT doc_id, unnest(toks) AS w FROM __gq_base),
     __gq_wc AS (
@@ -374,7 +403,7 @@ object TextOps {
     * pinned to BIGINT (DuckDB SUM(INTEGER) is HUGEINT otherwise). */
   def unigramLogProbSql(srcCte: String): String =
     s"""toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+      SELECT doc_id, unnest(${tokensSql("text")}) AS term
       FROM $srcCte),
     tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
     vocab AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS cnt FROM tf GROUP BY 1),
@@ -445,7 +474,7 @@ object TextOps {
     * `bg_scored`. */
   def bigramLogProbSql(srcCte: String): String =
     s"""bg_base AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks
+      SELECT doc_id, ${tokensSql("text")} AS toks
       FROM $srcCte),
     bg_tf AS (
       SELECT doc_id, w1, w2, COUNT(*) AS tf FROM (
@@ -648,7 +677,7 @@ object TextOps {
     * parenthesized relation with a `text` column. */
   def bpePairStatsSql(srcCte: String, k: Int = 50): String =
     s"""WITH __bpe_toks AS (
-      SELECT unnest(string_split(lower(text), ' ')) AS w FROM $srcCte),
+      SELECT unnest(${tokensSql("text")}) AS w FROM $srcCte),
     __bpe_vocab AS (
       SELECT w, COUNT(*) AS cnt FROM __bpe_toks
       GROUP BY 1 HAVING len(w) >= 2),
@@ -725,8 +754,8 @@ object TextOps {
                   k1: Double = 1.2, b: Double = 0.75): String = {
     val termList = terms.map(t => s"'$t'").mkString(", ")
     s"""WITH __bm_docs AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks,
-        len(string_split(lower(text), ' ')) AS dl
+      SELECT doc_id, ${tokensSql("text")} AS toks,
+        len(${tokensSql("text")}) AS dl
       FROM $srcCte),
     __bm_stats AS (
       SELECT COUNT(*) AS n, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
@@ -788,10 +817,11 @@ object TextOps {
   /** DuckDB expression recomputing [[hashClfScore]] of `textExpr`. */
   def hashClfScoreSql(textExpr: String): String = {
     val k = HashClfBuckets
-    s"""CASE WHEN len(string_split(lower($textExpr), ' ')) > 0 THEN
-      ROUND(CAST(list_sum(list_transform(string_split(lower($textExpr), ' '),
+    val toks = tokensSql(textExpr)
+    s"""CASE WHEN len($toks) > 0 THEN
+      ROUND(CAST(list_sum(list_transform($toks,
           t -> ${Sampling.hashBucketSql("t", k)} - ${k / 2})) AS DOUBLE)
-        / (${k / 2}.0 * len(string_split(lower($textExpr), ' '))), 6) END"""
+        / (${k / 2}.0 * len($toks)), 6) END"""
   }
 
   /** Multi-merge BPE TRAINING (Sennrich et al. 2016) — `rounds`
@@ -917,7 +947,7 @@ object TextOps {
     val sb = new StringBuilder
     sb.append(s"""vocab AS (
       SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-        SELECT unnest(string_split(lower(text), ' ')) AS w FROM $srcCte)
+        SELECT unnest(${tokensSql("text")}) AS w FROM $srcCte)
       WHERE len(w) >= 1 GROUP BY 1),
     t1 AS MATERIALIZED (
       SELECT w, freq, CAST(u.i AS BIGINT) AS idx, substr(w, u.i, 1) AS tok
@@ -986,7 +1016,7 @@ object TextOps {
                           buckets: Int = NaiveBayesBuckets): DataFrame = {
     val base = docs.withColumn("is_train", col("doc_id") % 5 =!= 0)
     val toks = base.select(col("doc_id"), col("lang"), col("is_train"),
-        explode(split(lower(col("text")), " ")).as("tok"))
+        explode(tokens(col("text"))).as("tok"))
       .withColumn("b", Sampling.hashBucket(col("tok"), buckets))
     val train = toks.filter(col("is_train"))
     val cbc = train.groupBy(col("lang").as("cls"), col("b"))
@@ -1035,7 +1065,7 @@ object TextOps {
       __nb_toks AS (
         SELECT doc_id, lang, is_train,
           ${Sampling.hashBucketSql(
-            "unnest(string_split(lower(text), ' '))", NaiveBayesBuckets)} AS b
+            s"unnest(${tokensSql("text")})", NaiveBayesBuckets)} AS b
         FROM __nb_docs),
       __nb_cbc AS (
         SELECT lang AS cls, b, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1086,7 +1116,7 @@ object TextOps {
     * per-key width bounded by document length. */
   def rougeAdjacent(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"),
-      split(lower(col("text")), " ").as("t"))
+      tokens(col("text")).as("t"))
     val uni = base.select(col("doc_id"), lit(1).as("n"),
       explode(col("t")).as("g"))
     val bi = base.filter(size(col("t")) >= 2)

@@ -223,27 +223,12 @@ object CurationQueries {
   private val x_dedup_containment = Q(
     "x_dedup_containment",
     (s, d) => Dedup.containmentPairs(
-      Dedup.shingled(
-        Tables.documents(s, d)
-          .filter(col("text").isNotNull && col("lang").isNotNull
-            && size(split(lower(col("text")), " ")) >= 3),
+      Dedup.shingled(TextFixtures.containmentDocs(s, d),
         col("doc_id"), col("text"), keep = Seq(col("lang"))),
       block = col("lang"), minC = 0.8),
-    Some("""WITH docs AS (
-      SELECT doc_id, lang,
-             list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                            for i in range(1, len(toks) - 1)]) AS shingles
-      FROM (SELECT *, string_split(lower(text), ' ') AS toks
-            FROM documents
-            WHERE text IS NOT NULL AND lang IS NOT NULL)
-      WHERE len(toks) >= 3)
-    SELECT doc_a, doc_b, containment FROM (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-          / CAST(len(a.shingles) AS DOUBLE), 6) AS containment
-      FROM docs a JOIN docs b
-        ON a.lang = b.lang AND a.doc_id <> b.doc_id)
-    WHERE containment >= 0.8"""))
+    Some(s"""WITH ${TextFixtures.containmentDocsSql("gated")},
+    ${Dedup.shinglesSqlCte("gated", "docs", keep = Seq("lang"))}
+    ${Dedup.containmentPairsSql("docs", Seq("lang"), 0.8)}"""))
 
   /** Frame-level audio features (Multimodal.wavFrameFeatures) over the
     * REAL WAV decode path: 160-sample frame energy + zero-crossing
@@ -712,7 +697,7 @@ object CurationQueries {
         // second scan it saves — unlike the md5 gram pipelines
         val toks = Tables.documents(s, d).filter(col("text").isNotNull)
           .select(col("doc_id"),
-            explode(split(lower(col("text")), " ")).as("tok"))
+            explode(TextOps.tokens(col("text"))).as("tok"))
         val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
           .orderBy(col("cnt").desc, col("tok")).limit(500)
           .select(col("tok"), lit(1).as("in_vocab"))
@@ -724,8 +709,8 @@ object CurationQueries {
             col("n_oov").cast("double") / col("n_tokens").cast("double"))
       }
     },
-    Some("""WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+    Some(s"""WITH toks AS (
+      SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok
       FROM documents WHERE text IS NOT NULL),
     vocab AS (
       SELECT tok FROM (
@@ -826,9 +811,7 @@ object CurationQueries {
     "x_curation_pipeline_v2", {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val docs0 = Tables.documents(s, d)
-          .filter(col("text").isNotNull && col("lang").isNotNull
-            && size(split(lower(col("text")), " ")) >= 3)
+        val docs0 = TextFixtures.containmentDocs(s, d)
           .select(col("doc_id"), col("lang"), col("text"))
         val ent = TextOps.charEntropy(docs0, col("doc_id"), col("text"))
           .select(col("doc_id"), col("entropy_micro"))
@@ -874,10 +857,7 @@ object CurationQueries {
       }
     }, {
       val split = Sampling.splitLabelSql("doc_id", Seq("train" -> 90, "val" -> 10))
-      Some(s"""WITH docs0 AS (
-        SELECT doc_id, lang, text FROM documents
-        WHERE text IS NOT NULL AND lang IS NOT NULL
-          AND len(string_split(lower(text), ' ')) >= 3),
+      Some(s"""WITH ${TextFixtures.containmentDocsSql("docs0")},
       ${TextOps.charEntropySql("docs0")},
       ${TextOps.bigramLogProbSql("docs0")},
       gated AS (
@@ -886,19 +866,10 @@ object CurationQueries {
         JOIN ent_scored e USING (doc_id)
         JOIN bg_scored b USING (doc_id)
         WHERE e.entropy_micro >= 2700000 AND b.avg_bigram_logprob >= -3.5),
-      sh AS (
-        SELECT doc_id, lang,
-               list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                              for i in range(1, len(toks) - 1)]) AS shingles
-        FROM (SELECT *, string_split(lower(text), ' ') AS toks FROM gated)),
+      ${Dedup.shinglesSqlCte("gated", "sh", keep = Seq("lang"))},
       pairs AS (
-        SELECT doc_a, doc_b FROM (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / CAST(len(a.shingles) AS DOUBLE), 6) AS containment
-          FROM sh a JOIN sh b
-            ON a.lang = b.lang AND a.doc_id <> b.doc_id)
-        WHERE containment >= 0.8),
+        SELECT doc_a, doc_b
+        FROM (${Dedup.containmentPairsSql("sh", Seq("lang"), 0.8)})),
       dropped AS (
         SELECT DISTINCT p.doc_a AS doc_id
         FROM pairs p LEFT JOIN pairs r
@@ -908,7 +879,7 @@ object CurationQueries {
         SELECT g.* FROM gated g ANTI JOIN dropped USING (doc_id)),
       train AS (
         SELECT doc_id, lang,
-               CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
+               CAST(len(${TextOps.tokensSql("text")}) AS BIGINT) AS n_tokens
         FROM survivors WHERE $split = 'train')
       SELECT doc_id, lang, n_tokens, cum_tokens FROM (
         SELECT doc_id, lang, n_tokens,
@@ -1084,8 +1055,8 @@ object CurationQueries {
     Some(s"""WITH docs AS (
       SELECT doc_id, lower(text) AS t,
         substr(lower(text), 1, 2) AS bk_prefix2,
-        CAST(len(string_split(lower(text), ' ')) // 8 AS VARCHAR) AS bk_len,
-        string_split(lower(text), ' ')[1] AS w
+        CAST(len(${TextOps.tokensSql("text")}) // 8 AS VARCHAR) AS bk_len,
+        ${TextOps.tokensSql("text")}[1] AS w
       FROM documents WHERE text IS NOT NULL),
     ${graft.ops.Phonetic.soundexSqlCtes("docs", "w",
       keyCols = Seq("doc_id", "bk_prefix2", "bk_len"))},
@@ -1724,7 +1695,7 @@ object CurationQueries {
         .filter(col("text").isNotNull)
         .select(
           col("doc_id"),
-          size(split(lower(col("text")), " ")).as("n_words"),
+          TextOps.tokenCount(col("text")).as("n_words"),
           length(col("text")).as("n_chars"))
         .withColumn("difficulty",
           round(col("n_chars").cast("double") / col("n_words"), 6))
@@ -1739,9 +1710,9 @@ object CurationQueries {
         .select(col("doc_id"), col("n_words"), col("difficulty"), col("tier"),
           ((col("rank_in_tier") - 1) * 4 + col("tier")).cast("int").as("pos"))
     },
-    Some("""WITH d AS (
+    Some(s"""WITH d AS (
         SELECT doc_id,
-          CAST(len(string_split(lower(text), ' ')) AS INTEGER) AS n_words,
+          CAST(len(${TextOps.tokensSql("text")}) AS INTEGER) AS n_words,
           CAST(length(text) AS INTEGER) AS n_chars
         FROM documents WHERE text IS NOT NULL),
       scored AS (
@@ -1778,7 +1749,7 @@ object CurationQueries {
     (s, d) => {
       import graft.functions.GraftFunctions
       val terms = Tables.documents(s, d).select(col("doc_id"),
-        explode(array_distinct(split(lower(col("text")), " "))).as("term"))
+        explode(array_distinct(TextOps.tokens(col("text")))).as("term"))
       terms.groupBy(col("term"))
         .agg(count(lit(1)).as("df"),
           GraftFunctions.topKBy(
@@ -1787,8 +1758,8 @@ object CurationQueries {
           expr("array_join(transform(nn, x -> cast(x.key as bigint)), ',')")
             .as("postings_csv"))
     },
-    Some("""WITH t0 AS (
-        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+    Some(s"""WITH t0 AS (
+        SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS term
         FROM documents),
       t AS (SELECT DISTINCT doc_id, term FROM t0),
       g AS (
@@ -1811,7 +1782,7 @@ object CurationQueries {
     "x_text_pmi_collocations",
     (s, d) => {
       val toks = Tables.documents(s, d)
-        .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
       val uni = toks.select(explode(col("t")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("cw"))
       val totals = uni.agg(sum(col("cw")).as("n_uni")).crossJoin(
@@ -1835,8 +1806,8 @@ object CurationQueries {
                 * (col("cb").cast("double") / col("n_uni")))) * 1e6)
             .cast("long").as("pmi_micro"))
     },
-    Some("""WITH toks AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents),
+    Some(s"""WITH toks AS (
+        SELECT doc_id, ${TextOps.tokensSql("text")} AS t FROM documents),
       tok AS (
         SELECT doc_id, generate_subscripts(t, 1) AS i, unnest(t) AS w
         FROM toks),

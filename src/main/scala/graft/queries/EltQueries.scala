@@ -659,9 +659,7 @@ object EltQueries {
       Tables.documents(s, d)
         .filter(col("text").isNotNull && col("lang").isNotNull),
       TextOps.hashClfScore(col("text")), col("lang") === "en"),
-    Some(s"""WITH src AS (
-      SELECT ${TextOps.hashClfScoreSql("text")} AS s, lang = 'en' AS y
-      FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
+    Some(s"""WITH ${TextFixtures.englishScoresSql("src")},
     ${Features.binaryAucSql("src")}
     SELECT n_pos, n_neg, tied_pairs, auc, gini FROM __auc_out"""))
 
@@ -676,9 +674,7 @@ object EltQueries {
       Tables.documents(s, d)
         .filter(col("text").isNotNull && col("lang").isNotNull),
       TextOps.hashClfScore(col("text")), col("lang") === "en"),
-    Some(s"""WITH src AS (
-      SELECT ${TextOps.hashClfScoreSql("text")} AS s, lang = 'en' AS y
-      FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
+    Some(s"""WITH ${TextFixtures.englishScoresSql("src")},
     ${Features.calibrationBinsSql("src")}
     SELECT bin, n, n_pos, emp_micro, conf_micro, gap_micro, ece_micro
     FROM __cal_out"""))
@@ -739,9 +735,7 @@ object EltQueries {
         .select(col("bin"), col("n"), col("n_pos"), col("emp_micro"),
           col("iso_micro"))
     },
-    Some(s"""WITH src AS (
-      SELECT ${TextOps.hashClfScoreSql("text")} AS s, lang = 'en' AS y
-      FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
+    Some(s"""WITH ${TextFixtures.englishScoresSql("src")},
     rows_p AS (
       SELECT CAST(ROUND((s + CAST('1.0' AS DOUBLE)) / CAST('2.0' AS DOUBLE)
           * 1000000) AS BIGINT) AS p_micro, y

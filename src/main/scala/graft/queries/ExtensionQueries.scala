@@ -30,7 +30,7 @@ object ExtensionQueries {
     (s, d) => Dedup.exactDedup(
       Tables.documents(s, d).filter(col("text").isNotNull),
       col("doc_id"), col("text")),
-    Some("""SELECT md5(lower(trim(text))) AS text_digest,
+    Some(s"""SELECT ${Dedup.contentDigestSql("text")} AS text_digest,
       min(doc_id) AS keep_doc_id, count(*) AS n_copies
     FROM documents WHERE text IS NOT NULL
     GROUP BY 1"""))
@@ -44,41 +44,21 @@ object ExtensionQueries {
   private val x_dedup_jaccard_collapsed = Q(
     "x_dedup_jaccard_collapsed",
     (s, d) => {
-      val reps = Dedup.collapseExact(
-        Tables.documents(s, d)
-          .filter(col("text").isNotNull && col("lang").isNotNull
-            && col("n_chars").isNotNull
-            && size(split(lower(col("text")), " ")) >= 3),
-        col("doc_id"), col("text"),
-        keep = Seq(col("lang"), (col("n_chars") / lit(50)).cast("long").as("lb")))
+      val reps = Dedup.collapseExact(TextFixtures.blockedDocs(s, d),
+        col("doc_id"), col("text"), keep = Seq(col("lang"), col("lb")))
       Dedup.jaccardPairs(
         Dedup.shingled(reps, col("doc_id"), col("text"),
           keep = Seq(col("lang"), col("lb"))),
         block = struct(col("lang"), col("lb")),
         minJaccard = 0.5)
     },
-    Some("""WITH base AS (
-      SELECT doc_id, text, lang, CAST(n_chars // 50 AS BIGINT) AS lb
-      FROM documents
-      WHERE text IS NOT NULL AND lang IS NOT NULL AND n_chars IS NOT NULL
-        AND len(string_split(lower(text), ' ')) >= 3),
+    Some(s"""WITH ${TextFixtures.blockedDocsSql("base")},
     reps AS (
       SELECT arg_min(doc_id, doc_id) AS doc_id, arg_min(text, doc_id) AS text,
              arg_min(lang, doc_id) AS lang, arg_min(lb, doc_id) AS lb
-      FROM base GROUP BY md5(lower(trim(text)))),
-    docs AS (
-      SELECT doc_id, lang, lb,
-             list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                            for i in range(1, len(toks) - 1)]) AS shingles
-      FROM (SELECT *, string_split(lower(text), ' ') AS toks FROM reps)),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-          / CAST(len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)) AS DOUBLE),
-          6) AS jaccard
-      FROM docs a JOIN docs b
-        ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.5"""))
+      FROM base GROUP BY ${Dedup.contentDigestSql("text")}),
+    ${Dedup.shinglesSqlCte("reps", "docs", keep = Seq("lang", "lb"))}
+    ${Dedup.jaccardPairsSql("docs", Seq("lang", "lb"), 0.5)}"""))
 
   /** Production-shaped dedup pipeline: collapse exact duplicates FIRST
     * (one digest shuffle; smallest id is the representative), then
@@ -100,46 +80,9 @@ object ExtensionQueries {
     Some(s"""WITH mh_reps AS (
       SELECT arg_min(doc_id, doc_id) AS doc_id, arg_min(text, doc_id) AS text
       FROM documents WHERE text IS NOT NULL
-      GROUP BY md5(lower(trim(text)))),
+      GROUP BY ${Dedup.contentDigestSql("text")}),
     ${Dedup.shinglesSqlCte("mh_reps", "mh_docs")},
     ${Dedup.minhashLshPairsMd5Sql("mh_docs")}"""))
-
-  /** Shared Spark side of the blocked exact-Jaccard pair generator —
-    * also the edge list of [[x_dedup_clusters]]. lang/n_chars IS NOT
-    * NULL on BOTH sides: Spark's struct-key join treats NULL fields as
-    * equal while the oracle's a.lang = b.lang drops them — pin one
-    * semantics so the engines cannot diverge. */
-  private def jaccardPairsDf(s: org.apache.spark.sql.SparkSession, d: String) =
-    Dedup.jaccardPairs(
-      Dedup.shingled(
-        Tables.documents(s, d)
-          .filter(col("text").isNotNull && col("lang").isNotNull
-            && col("n_chars").isNotNull
-            && size(split(lower(col("text")), " ")) >= 3),
-        col("doc_id"), col("text"),
-        keep = Seq(col("lang"), (col("n_chars") / lit(50)).cast("long").as("lb"))),
-      block = struct(col("lang"), col("lb")),
-      minJaccard = 0.5)
-
-  /** Shared oracle CTEs producing the same (doc_a, doc_b, jaccard)
-    * pair list in DuckDB (thresholded at 0.5). */
-  private val jaccardPairsSqlCtes = """docs AS (
-      SELECT doc_id, lang, CAST(n_chars // 50 AS BIGINT) AS lb,
-             list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                            for i in range(1, len(toks) - 1)]) AS shingles
-      FROM (SELECT *, string_split(lower(text), ' ') AS toks
-            FROM documents
-            WHERE text IS NOT NULL AND lang IS NOT NULL AND n_chars IS NOT NULL)
-      WHERE len(toks) >= 3),
-    pairs AS (
-      SELECT doc_a, doc_b, jaccard FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-          ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / CAST(len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)) AS DOUBLE),
-            6) AS jaccard
-        FROM docs a JOIN docs b
-          ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id)
-      WHERE jaccard >= 0.5)"""
 
   /** Exact blocked shingle-Jaccard near-dup pairs (block = lang x length
     * bucket) — the oracle-checkable ground truth the LSH variants
@@ -147,8 +90,8 @@ object ExtensionQueries {
     * vocabulary unigram sets make every pair look alike. */
   private val x_dedup_jaccard = Q(
     "x_dedup_jaccard",
-    (s, d) => jaccardPairsDf(s, d),
-    Some(s"""WITH $jaccardPairsSqlCtes
+    (s, d) => TextFixtures.blockedJaccardPairs(s, d),
+    Some(s"""WITH ${TextFixtures.blockedJaccardPairsSql}
     SELECT doc_a, doc_b, jaccard FROM pairs"""))
 
   /** Near-dup CLUSTERS: connected components over the exact-Jaccard
@@ -160,9 +103,9 @@ object ExtensionQueries {
     * independently via a DuckDB RECURSIVE transitive closure. */
   private val x_dedup_clusters = Q(
     "x_dedup_clusters",
-    (s, d) => Dedup.connectedComponents(jaccardPairsDf(s, d), "doc_a", "doc_b")
+    (s, d) => Dedup.connectedComponents(TextFixtures.blockedJaccardPairs(s, d), "doc_a", "doc_b")
       .select(col("node").as("doc_id"), col("cluster_id")),
-    Some(s"""WITH RECURSIVE $jaccardPairsSqlCtes,
+    Some(s"""WITH RECURSIVE ${TextFixtures.blockedJaccardPairsSql},
     ${Dedup.connectedComponentsSql("pairs", "doc_a", "doc_b")}
     SELECT node AS doc_id, cluster_id FROM __cc_out"""))
 
@@ -175,15 +118,11 @@ object ExtensionQueries {
   private val x_dedup_cluster_sizes = Q(
     "x_dedup_cluster_sizes",
     (s, d) => {
-      val cc = Dedup.connectedComponents(jaccardPairsDf(s, d), "doc_a", "doc_b")
+      val cc = Dedup.connectedComponents(TextFixtures.blockedJaccardPairs(s, d), "doc_a", "doc_b")
       val sized = cc.groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("cluster_size"))
         .agg(count(lit(1)).as("n_clusters"))
-      val nDocs = Tables.documents(s, d)
-        .filter(col("text").isNotNull && col("lang").isNotNull
-          && col("n_chars").isNotNull
-          && size(split(lower(col("text")), " ")) >= 3)
-        .agg(count(lit(1)).as("n_docs"))
+      val nDocs = TextFixtures.blockedDocs(s, d).agg(count(lit(1)).as("n_docs"))
       val nClustered = cc.agg(count(lit(1)).as("n_in"))
       val singletons = nDocs.crossJoin(nClustered)
         .select(lit(1L).as("cluster_size"),
@@ -193,7 +132,7 @@ object ExtensionQueries {
         .groupBy(col("cluster_size"))
         .agg(sum(col("n_clusters")).cast("long").as("n_clusters"))
     },
-    Some(s"""WITH RECURSIVE $jaccardPairsSqlCtes,
+    Some(s"""WITH RECURSIVE ${TextFixtures.blockedJaccardPairsSql},
     ${Dedup.connectedComponentsSql("pairs", "doc_a", "doc_b")},
     sized AS (
       SELECT sz AS cluster_size, COUNT(*) AS n_clusters FROM (
@@ -219,13 +158,10 @@ object ExtensionQueries {
     "x_dedup_survivors",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val member = Tables.documents(s, d)
-        .filter(col("text").isNotNull && col("lang").isNotNull
-          && col("n_chars").isNotNull
-          && size(split(lower(col("text")), " ")) >= 3)
+      val member = TextFixtures.blockedDocs(s, d)
         .select(col("doc_id"), TextOps.qualityScore(col("text")).as("q"))
         .join(
-          Dedup.connectedComponents(jaccardPairsDf(s, d), "doc_a", "doc_b")
+          Dedup.connectedComponents(TextFixtures.blockedJaccardPairs(s, d), "doc_a", "doc_b")
             .select(col("node").as("doc_id"), col("cluster_id")),
           Seq("doc_id"), "left")
         .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
@@ -238,15 +174,12 @@ object ExtensionQueries {
         .select(col("cluster_id"), col("doc_id").as("keep_doc_id"),
           col("q").as("keep_quality"), col("n_members"))
     },
-    Some(s"""WITH RECURSIVE $jaccardPairsSqlCtes,
+    Some(s"""WITH RECURSIVE ${TextFixtures.blockedJaccardPairsSql},
     ${Dedup.connectedComponentsSql("pairs", "doc_a", "doc_b")},
     member AS (
       SELECT b.doc_id, COALESCE(c.cluster_id, b.doc_id) AS cluster_id,
         ${TextOps.qualityScoreSql("text")} AS q
-      FROM (SELECT doc_id, text FROM documents
-            WHERE text IS NOT NULL AND lang IS NOT NULL
-              AND n_chars IS NOT NULL
-              AND len(string_split(lower(text), ' ')) >= 3) b
+      FROM blocked b
       LEFT JOIN __cc_out c ON c.node = b.doc_id)
     SELECT cluster_id, doc_id AS keep_doc_id, q AS keep_quality, n_members
     FROM (SELECT *,
@@ -937,9 +870,9 @@ object ExtensionQueries {
         col("n_subwords"), col("n_distinct_tokens"), col("quality_score")),
     Some(s"""SELECT doc_id,
       length(text) AS n_chars_calc,
-      len(string_split(lower(text), ' ')) AS n_tokens,
+      len(${TextOps.tokensSql("text")}) AS n_tokens,
       len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_subwords,
-      len(list_distinct(string_split(lower(text), ' '))) AS n_distinct_tokens,
+      len(list_distinct(${TextOps.tokensSql("text")})) AS n_distinct_tokens,
       ${TextOps.qualityScoreSql("text")} AS quality_score
     FROM documents WHERE text IS NOT NULL"""))
 
@@ -951,25 +884,9 @@ object ExtensionQueries {
         Tables.documents(s, d).filter(col("text").isNotNull),
         col("text"), "lang_pred")
       .select(col("doc_id"), col("lang"), col("lang_pred")),
-    Some("""WITH t AS (
-      SELECT doc_id, lang, text,
-             list_distinct(string_split(lower(text), ' ')) AS toks
-      FROM documents WHERE text IS NOT NULL),
-    s AS (
-      SELECT doc_id, lang, text,
-        len(list_intersect(toks, ['the','a','of','and','is'])) AS s_en,
-        len(list_intersect(toks, ['der','die','das','und','ist'])) AS s_de,
-        len(list_intersect(toks, ['el','los','y','es','una'])) AS s_es,
-        len(list_intersect(toks, ['le','la','et','les','est'])) AS s_fr
-      FROM t)
-    SELECT doc_id, lang,
-      CASE WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-           WHEN greatest(s_en, s_de, s_es, s_fr) = 0 THEN 'und'
-           WHEN s_en = greatest(s_en, s_de, s_es, s_fr) THEN 'en'
-           WHEN s_de = greatest(s_en, s_de, s_es, s_fr) THEN 'de'
-           WHEN s_es = greatest(s_en, s_de, s_es, s_fr) THEN 'es'
-           ELSE 'fr' END AS lang_pred
-    FROM s"""))
+    Some(s"""WITH ${TextOps.langIdSql(
+        "(SELECT doc_id, lang, text FROM documents WHERE text IS NOT NULL)", "pred")}
+    SELECT doc_id, lang, lang_pred FROM pred"""))
 
   /** Deterministic train/val/test split + hash-Bernoulli sampling over
     * the corpus (graft.ops.Sampling): assignment is a pure expression
@@ -1028,10 +945,10 @@ object ExtensionQueries {
         SELECT arg_min(doc_id, doc_id) AS doc_id, arg_min(lang, doc_id) AS lang,
                arg_min(text, doc_id) AS text, count(*) AS n_copies
         FROM scored WHERE quality_score >= 0.5
-        GROUP BY md5(lower(trim(text)))),
+        GROUP BY ${Dedup.contentDigestSql("text")}),
       train AS (
         SELECT doc_id, lang, n_copies,
-               len(string_split(lower(text), ' ')) AS n_tokens
+               len(${TextOps.tokensSql("text")}) AS n_tokens
         FROM reps WHERE $split = 'train')
       SELECT doc_id, lang, n_copies, n_tokens,
         $shardSql AS pack_shard, $binSql AS pack_bin
@@ -1160,13 +1077,24 @@ object ExtensionQueries {
       val (shardSql, binSql) =
         Packing.packSequencesSql("doc_id", "n_tokens", maxTokens = 512, shards = 8)
       Some(s"""WITH t AS (
-        SELECT doc_id, len(string_split(lower(text), ' ')) AS n_tokens
+        SELECT doc_id, len(${TextOps.tokensSql("text")}) AS n_tokens
         FROM documents WHERE text IS NOT NULL)
       SELECT doc_id, n_tokens,
         $shardSql AS pack_shard,
         $binSql AS pack_bin
       FROM t""")
     })
+
+  /** The oracle of both decontamination rows: the training rows (outside
+    * the 5% eval split) whose content digest no eval row shares. */
+  private val decontaminateSql = s"""WITH docs AS (
+      SELECT doc_id, lang, text, ${Dedup.contentDigestSql("text")} AS dig
+      FROM documents WHERE text IS NOT NULL),
+    ev AS (SELECT DISTINCT dig FROM docs
+           WHERE ${Sampling.hashSamplePredicateSql("doc_id", 50)})
+    SELECT doc_id, lang FROM docs
+    WHERE NOT ${Sampling.hashSamplePredicateSql("doc_id", 50)}
+      AND dig NOT IN (SELECT dig FROM ev)"""
 
   /** Benchmark decontamination (Dedup.decontaminate ∘ Sampling): carve
     * a deterministic 5% eval split, then ANTI-join the remaining
@@ -1184,14 +1112,7 @@ object ExtensionQueries {
         docs.filter(inEval), col("text"))
         .select(col("doc_id"), col("lang"))
     },
-    Some(s"""WITH docs AS (
-      SELECT doc_id, lang, text, md5(lower(trim(text))) AS dig
-      FROM documents WHERE text IS NOT NULL),
-    ev AS (SELECT DISTINCT dig FROM docs
-           WHERE ${Sampling.hashSamplePredicateSql("doc_id", 50)})
-    SELECT doc_id, lang FROM docs
-    WHERE NOT ${Sampling.hashSamplePredicateSql("doc_id", 50)}
-      AND dig NOT IN (SELECT dig FROM ev)"""))
+    Some(decontaminateSql))
 
   /** Bloom-prefiltered decontamination (Dedup.decontaminateBloom): the
     * 100 TB-shape variant of x_decontaminate — a Bloom filter over the
@@ -1212,14 +1133,7 @@ object ExtensionQueries {
         docs.filter(inEval), col("text"))
         .select(col("doc_id"), col("lang"))
     },
-    Some(s"""WITH docs AS (
-      SELECT doc_id, lang, text, md5(lower(trim(text))) AS dig
-      FROM documents WHERE text IS NOT NULL),
-    ev AS (SELECT DISTINCT dig FROM docs
-           WHERE ${Sampling.hashSamplePredicateSql("doc_id", 50)})
-    SELECT doc_id, lang FROM docs
-    WHERE NOT ${Sampling.hashSamplePredicateSql("doc_id", 50)}
-      AND dig NOT IN (SELECT dig FROM ev)"""))
+    Some(decontaminateSql))
 
   /** Sliding token-window chunking (TextOps.chunk): 64-token chunks
     * overlapping by 16 — the embedding/context prep step. Pure explode
@@ -1258,7 +1172,7 @@ object ExtensionQueries {
       import org.apache.spark.sql.expressions.Window
       val toks = Tables.documents(s, d)
         .filter(col("text").isNotNull && col("lang").isNotNull)
-        .select(col("lang"), explode(split(lower(col("text")), " ")).as("tok"))
+        .select(col("lang"), explode(TextOps.tokens(col("text"))).as("tok"))
         .filter(length(col("tok")) >= 3)
       val counts = toks.groupBy(col("lang"), col("tok"))
         .agg(count(lit(1)).as("n_docs_term"))
@@ -1267,8 +1181,8 @@ object ExtensionQueries {
             .orderBy(col("n_docs_term").desc, col("tok"))))
         .filter(col("rank") <= 5)
     },
-    Some("""WITH toks AS (
-      SELECT lang, unnest(string_split(lower(text), ' ')) AS tok
+    Some(s"""WITH toks AS (
+      SELECT lang, unnest(${TextOps.tokensSql("text")}) AS tok
       FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
     counts AS (
       SELECT lang, tok, count(*) AS n_docs_term
@@ -1290,10 +1204,10 @@ object ExtensionQueries {
         Tables.documents(s, d).filter(col("text").isNotNull),
         col("doc_id"), col("text"), k = 3)
       .withColumnRenamed("__id", "doc_id"),
-    Some("""WITH docs AS (
+    Some(s"""WITH docs AS (
       SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
     toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+      SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS term
       FROM docs),
     tf AS (
       SELECT doc_id, term, COUNT(*) AS tf FROM toks
@@ -1344,11 +1258,11 @@ object ExtensionQueries {
         docs.filter(col("doc_id") % 20 =!= 0), col("doc_id"), col("text"),
         docs.filter(col("doc_id") % 20 === 0), col("text"), n = 4)
     },
-    Some("""WITH tr AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS t
+    Some(s"""WITH tr AS (
+      SELECT doc_id, ${TextOps.tokensSql("text")} AS t
       FROM documents WHERE text IS NOT NULL AND doc_id % 20 != 0),
     ev AS (
-      SELECT string_split(lower(text), ' ') AS t
+      SELECT ${TextOps.tokensSql("text")} AS t
       FROM documents WHERE text IS NOT NULL AND doc_id % 20 = 0),
     evg AS (
       SELECT DISTINCT unnest([array_to_string(t[i:i+3], ' ')
@@ -3500,7 +3414,7 @@ object ExtensionQueries {
         TextOps.hashClfScore(col("text")).as("clf_score"))
       .withColumn("clf_pass", col("clf_score") > 0),
     Some(s"""SELECT doc_id,
-        CAST(len(string_split(lower(text), ' ')) AS INTEGER) AS n_tokens,
+        CAST(len(${TextOps.tokensSql("text")}) AS INTEGER) AS n_tokens,
         ${TextOps.hashClfScoreSql("text")} AS clf_score,
         ${TextOps.hashClfScoreSql("text")} > 0 AS clf_pass
       FROM documents WHERE text IS NOT NULL"""))
@@ -3696,26 +3610,9 @@ object ExtensionQueries {
             round(lit(2.0) * col("precision_micro") * col("recall_micro") /
               (col("precision_micro") + col("recall_micro"))).cast("long")))
     },
-    Some(s"""WITH t AS (
-      SELECT lang, text,
-             list_distinct(string_split(lower(text), ' ')) AS toks
-      FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
-    sc AS (
-      SELECT lang, text,
-        len(list_intersect(toks, ['the','a','of','and','is'])) AS s_en,
-        len(list_intersect(toks, ['der','die','das','und','ist'])) AS s_de,
-        len(list_intersect(toks, ['el','los','y','es','una'])) AS s_es,
-        len(list_intersect(toks, ['le','la','et','les','est'])) AS s_fr
-      FROM t),
-    pred AS (
-      SELECT lang,
-        CASE WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-             WHEN greatest(s_en, s_de, s_es, s_fr) = 0 THEN 'und'
-             WHEN s_en = greatest(s_en, s_de, s_es, s_fr) THEN 'en'
-             WHEN s_de = greatest(s_en, s_de, s_es, s_fr) THEN 'de'
-             WHEN s_es = greatest(s_en, s_de, s_es, s_fr) THEN 'es'
-             ELSE 'fr' END AS lang_pred
-      FROM sc),
+    Some(s"""WITH ${TextOps.langIdSql(
+        "(SELECT lang, text FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL)",
+        "pred")},
     cm AS (SELECT lang, lang_pred, COUNT(*) AS n FROM pred GROUP BY 1, 2),
     bt AS (SELECT lang AS cls, CAST(SUM(n) AS BIGINT) AS n_true
            FROM cm GROUP BY 1),
@@ -3907,16 +3804,12 @@ object ExtensionQueries {
   private val x_split_cluster_aware = Q(
     "x_split_cluster_aware",
     (s, d) => {
-      val universe = Tables.documents(s, d)
-        .filter(col("text").isNotNull && col("lang").isNotNull
-          && col("n_chars").isNotNull
-          && size(split(lower(col("text")), " ")) >= 3)
-        .select(col("doc_id"))
+      val universe = TextFixtures.blockedDocs(s, d).select(col("doc_id"))
       // ONE materialization of the jaccard pair pipeline for its THREE
       // consumers here (the CC input + both crossing-audit joins) — the
       // multi-consumer checkpoint rule; un-pinned, the blocked
       // similarity join re-executed per consumer
-      val pairsPinned = jaccardPairsDf(s, d)
+      val pairsPinned = TextFixtures.blockedJaccardPairs(s, d)
         .select(col("doc_a"), col("doc_b"))
         .localCheckpoint(true)
       val cc = Dedup.connectedComponents(pairsPinned, "doc_a", "doc_b")
@@ -3948,7 +3841,7 @@ object ExtensionQueries {
         .unionByName(crossing("cluster_aware", "b_ca"))
         .unionByName(crossing("naive", "b_nv"))
     },
-    Some(s"""WITH RECURSIVE $jaccardPairsSqlCtes,
+    Some(s"""WITH RECURSIVE ${TextFixtures.blockedJaccardPairsSql},
     ${Dedup.connectedComponentsSql("pairs", "doc_a", "doc_b")},
     labeled AS (
       SELECT d.doc_id, COALESCE(cc.cluster_id, d.doc_id) AS cluster_id,

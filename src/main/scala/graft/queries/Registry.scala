@@ -13,11 +13,21 @@ final case class Q(
     oracle: Option[String])
 
 object Registry {
-  def all: Seq[Q] =
+  def all: Seq[Q] = unique(
     ReferenceQueries.all ++ ExtensionQueries.all ++ RelationalQueries.all ++
       EltQueries.all ++ TimeSeriesQueries.all ++ LayoutQueries.all ++
       CurationQueries.all ++ GeoQueries.all ++ TrainingQueries.all ++
-      StatsQueries.all ++ PipelineOracleQueries.all
+      StatsQueries.all ++ PipelineOracleQueries.all)
+
+  /** `qs`, failing on a repeated query name: the name-keyed maps below
+    * would otherwise keep one of the two queries and drop the other
+    * without a word. */
+  private[queries] def unique(qs: Seq[Q]): Seq[Q] = {
+    val repeated = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(repeated.isEmpty,
+      s"duplicate registry query names: ${repeated.toSeq.sorted.mkString(", ")}")
+    qs
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> withSessionDefaults(q.fn)).toMap

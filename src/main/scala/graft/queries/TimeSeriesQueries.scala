@@ -291,53 +291,6 @@ object TimeSeriesQueries {
       END, 6) AS value_interp
     FROM n"""))
 
-  /** Bounded-window EWMA (α = 0.25, 16-tap) per user series — the
-    * exponential smoother monitoring and trend features use, in its
-    * streaming-safe truncated form (the infinite-history recursion
-    * e_t = αx_t + (1−α)e_{t−1} is not expressible as a window
-    * aggregate; truncating at 16 taps bounds the error by 0.75¹⁶ ≈ 1%
-    * of the weight mass and keeps the frame ROWS-bounded). Weights
-    * 0.75^lag are exactly representable doubles (3^lag · 2^(−2lag),
-    * lag ≤ 15), so the weight vector and its sum are bit-identical
-    * across engines; the value dot product runs through the same
-    * left-to-right fold on both sides ([[graft.ops.Similarity.dot]] vs
-    * list_inner_product — the proven-equivalent pair). Scale shape:
-    * one per-user window with a 16-row frame, no unbounded state. */
-  private val x_ts_ewma = Q(
-    "x_ts_ewma",
-    (s, d) => {
-      val e = Tables.events(s, d)
-        .filter(col("ts").isNotNull && col("value").isNotNull)
-        .select(col("user_id"), col("event_id"),
-          date_trunc("second", col("ts")).as("ts_s"), col("value"))
-      val wF = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_s"), col("event_id")).rowsBetween(-15, 0)
-      e.withColumn("xs", collect_list(col("value")).over(wF))
-        .withColumn("ws", transform(sequence(lit(1), size(col("xs"))),
-          p => pow(lit(0.75), size(col("xs")) - p)))
-        .select(col("user_id"), col("event_id"), col("ts_s"), col("value"),
-          round(graft.ops.Similarity.dot(col("xs"), col("ws")) /
-            aggregate(col("ws"), lit(0.0), (a, b) => a + b), 6).as("ewma"))
-    },
-    Some("""WITH e AS (
-      SELECT user_id, event_id, date_trunc('second', ts) AS ts_s, value
-      FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-    l AS (
-      SELECT user_id, event_id, ts_s, value,
-        list(value) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-          ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) AS xs
-      FROM e),
-    w AS (
-      SELECT user_id, event_id, ts_s, value, xs,
-        list_transform(range(1, len(xs) + 1),
-          p -> power(CAST(0.75 AS DOUBLE), len(xs) - p)) AS ws
-      FROM l)
-    SELECT user_id, event_id, ts_s, value,
-      ROUND(list_inner_product(xs, ws) /
-        list_reduce(list_prepend(CAST(0 AS DOUBLE), ws), (a, b) -> a + b), 6)
-        AS ewma
-    FROM w"""))
-
   /** Interval-union coverage (gaps-and-islands over overlapping
     * intervals): each event claims [t, t+60s); per user, the UNION of
     * those intervals — total covered seconds and island count — the
@@ -547,7 +500,6 @@ object TimeSeriesQueries {
     x_ts_interpolate,
     x_ts_session_window,
     x_ts_sliding_window,
-    x_ts_ewma,
     x_ts_interval_union,
     x_ts_lttb,
     x_ts_matrix_profile,

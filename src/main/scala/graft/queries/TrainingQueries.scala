@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.functions.GraftFunctions
-import graft.ops.{Dedup, Graph, Sampling, Scale, Similarity}
+import graft.ops.{Dedup, Graph, Sampling, Scale, Similarity, TextOps}
 import graft.streaming.EventStream
 
 /** Round-6 training-data-pipeline registry entries: duplicated-span
@@ -50,7 +50,7 @@ object TrainingQueries {
       val L = 16
       val toks = Tables.documents(s, d)
         .filter(col("text").isNotNull)
-        .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
         .filter(size(col("t")) >= L)
       val grams = toks
         .select(col("doc_id"), posexplode(expr(
@@ -83,9 +83,9 @@ object TrainingQueries {
           col("n_grams"))
     },
     Some(s"""WITH d AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS t
+        SELECT doc_id, ${TextOps.tokensSql("text")} AS t
         FROM documents
-        WHERE text IS NOT NULL AND len(string_split(lower(text), ' ')) >= 16),
+        WHERE text IS NOT NULL AND len(${TextOps.tokensSql("text")}) >= 16),
       g AS (
         SELECT doc_id, CAST(u.i AS BIGINT) AS pos,
           ${Sampling.hashValueSql("array_to_string(t[u.i + 1: u.i + 16], ' ')")} AS h
@@ -286,7 +286,7 @@ object TrainingQueries {
       val B = 1024
       val toks = Tables.documents(s, d).filter(col("text").isNotNull)
         .select(col("doc_id"), col("lang"),
-          explode(split(lower(col("text")), " ")).as("tok"))
+          explode(TextOps.tokens(col("text"))).as("tok"))
         .withColumn("b", Sampling.hashBucket(col("tok"), B))
       val raw = toks.groupBy(col("b")).agg(count(lit(1)).as("cr"))
       val tgt = toks.filter(col("lang") === "en")
@@ -312,7 +312,7 @@ object TrainingQueries {
           col("weight_micro"), col("rank"))
     },
     Some(s"""WITH toks AS (
-        SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS tok
+        SELECT doc_id, lang, unnest(${TextOps.tokensSql("text")}) AS tok
         FROM documents WHERE text IS NOT NULL),
       tb AS (SELECT doc_id, lang, ${Sampling.hashBucketSql("tok", 1024)} AS b
         FROM toks),
@@ -837,7 +837,7 @@ object TrainingQueries {
     (s, d) => {
       import graft.ops.Graph
       val toks = Tables.documents(s, d).filter(col("text").isNotNull)
-        .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
         .filter(size(col("t")) >= 2)
       val pairs = toks.select(explode(expr(
           "transform(sequence(0, size(t) - 2)," +
@@ -856,9 +856,9 @@ object TrainingQueries {
           col("rank"))
     },
     Some(s"""WITH toks AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS t
+        SELECT doc_id, ${TextOps.tokensSql("text")} AS t
         FROM documents
-        WHERE text IS NOT NULL AND len(string_split(lower(text), ' ')) >= 2),
+        WHERE text IS NOT NULL AND len(${TextOps.tokensSql("text")}) >= 2),
       bi AS (
         SELECT t[u.i + 1] AS a, t[u.i + 2] AS b
         FROM toks, unnest(range(0, len(t) - 1)) AS u(i)),
@@ -986,7 +986,7 @@ object TrainingQueries {
     (s, d) => {
       val tf = Tables.documents(s, d).filter(col("text").isNotNull)
         .select(col("lang"),
-          explode(split(lower(col("text")), " ")).as("tok"))
+          explode(TextOps.tokens(col("text"))).as("tok"))
         .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("f"))
       tf.groupBy(col("lang"))
         .agg(count(lit(1)).as("d_types"),
@@ -998,9 +998,9 @@ object TrainingQueries {
         .select(col("lang"), col("n_tokens"), col("d_types"), col("f1"),
           col("f2"), col("chao1_milli"))
     },
-    Some("""WITH tf AS (
+    Some(s"""WITH tf AS (
         SELECT lang, tok, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT lang, unnest(string_split(lower(text), ' ')) AS tok
+        FROM (SELECT lang, unnest(${TextOps.tokensSql("text")}) AS tok
               FROM documents WHERE text IS NOT NULL)
         GROUP BY 1, 2),
       per AS (
@@ -1136,7 +1136,7 @@ object TrainingQueries {
       val pieces = TextOps.bpeSegments(docs, col("text"), rounds = 8)
         .groupBy(col("w")).agg(count(lit(1)).as("n_pieces"))
       val words = docs.select(col("doc_id"), col("lang"),
-        explode(split(lower(col("text")), " ")).as("w"))
+        explode(TextOps.tokens(col("text"))).as("w"))
       words.join(broadcast(pieces), "w")
         .groupBy(col("lang"))
         .agg(countDistinct(col("doc_id")).as("n_docs"),
@@ -1152,7 +1152,7 @@ object TrainingQueries {
       seg AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n_pieces
         FROM t9 GROUP BY 1),
       words AS (
-        SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS w
+        SELECT doc_id, lang, unnest(${TextOps.tokensSql("text")}) AS w
         FROM documents WHERE text IS NOT NULL)
       SELECT lang, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
         CAST(COUNT(*) AS BIGINT) AS n_words,
@@ -1321,7 +1321,7 @@ object TrainingQueries {
       Tables.documents(s, d).filter(col("text").isNotNull)
         .select(col("doc_id"), col("text"))),
     Some(s"""WITH docs AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS t
+        SELECT doc_id, ${TextOps.tokensSql("text")} AS t
         FROM documents WHERE text IS NOT NULL),
       uni AS (
         SELECT doc_id, 1 AS n, unnest(t) AS g FROM docs),
@@ -1504,7 +1504,7 @@ object TrainingQueries {
     "x_text_kneser_ney",
     (s, d) => {
       val docs = Tables.documents(s, d).filter(col("text").isNotNull)
-        .select(split(lower(col("text")), " ").as("t"))
+        .select(TextOps.tokens(col("text")).as("t"))
         .filter(size(col("t")) >= 2)
       val bi = docs.select(explode(expr(
         "transform(sequence(1, size(t) - 1), i -> named_struct(" +
@@ -1534,8 +1534,8 @@ object TrainingQueries {
         .select(col("w1"), col("w2"), col("c12"), col("c1"), col("n1fw"),
           col("n1bw"), col("p_kn_micro"), col("rank"))
     },
-    Some("""WITH docs AS (
-        SELECT string_split(lower(text), ' ') AS t
+    Some(s"""WITH docs AS (
+        SELECT ${TextOps.tokensSql("text")} AS t
         FROM documents WHERE text IS NOT NULL),
       bi AS (
         SELECT t[i] AS w1, t[i + 1] AS w2
@@ -1589,7 +1589,7 @@ object TrainingQueries {
     "x_text_heaps_law",
     (s, d) => {
       val toks = Tables.documents(s, d).filter(col("text").isNotNull)
-        .select(col("doc_id"), explode(split(lower(col("text")), " "))
+        .select(col("doc_id"), explode(TextOps.tokens(col("text")))
           .as("tok"))
       val maxDoc = toks.agg(max(col("doc_id")).as("max_doc"))
       val bucketed = toks.crossJoin(broadcast(maxDoc))
@@ -1620,8 +1620,8 @@ object TrainingQueries {
           |AS BIGINT)""".stripMargin).as("beta_micro"))
       curve.crossJoin(broadcast(fit))
     },
-    Some("""WITH toks AS (
-        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+    Some(s"""WITH toks AS (
+        SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok
         FROM documents WHERE text IS NOT NULL),
       mx AS (SELECT MAX(doc_id) AS max_doc FROM toks),
       b AS (
@@ -1676,7 +1676,7 @@ object TrainingQueries {
     "x_dedup_cdc_chunking",
     (s, d) => {
       val toks = Tables.documents(s, d).filter(col("text").isNotNull)
-        .select(col("doc_id"), posexplode(split(lower(col("text")), " "))
+        .select(col("doc_id"), posexplode(TextOps.tokens(col("text")))
           .as(Seq("pos0", "tok")))
         .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("tok"))
         .withColumn("bnd",
@@ -1700,7 +1700,7 @@ object TrainingQueries {
           expr("n_dup_chunks * 1000 DIV n_chunks"))
     },
     Some(s"""WITH docs AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS t
+        SELECT doc_id, ${TextOps.tokensSql("text")} AS t
         FROM documents WHERE text IS NOT NULL),
       toks AS (
         SELECT doc_id, CAST(i AS BIGINT) AS pos, t[i] AS tok,
@@ -1809,7 +1809,7 @@ object TrainingQueries {
     "x_text_zipf_fit",
     (s, d) => {
       val freqs = Tables.documents(s, d).filter(col("text").isNotNull)
-        .select(explode(split(lower(col("text")), " ")).as("tok"))
+        .select(explode(TextOps.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("tok")).limit(1000)
       val pts = freqs.withColumn("rank", row_number().over(
@@ -1851,9 +1851,9 @@ object TrainingQueries {
           col("ln_r_micro"), col("ln_c_micro"))
         .crossJoin(broadcast(fit))
     },
-    Some("""WITH freqs AS (
+    Some(s"""WITH freqs AS (
         SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-          SELECT unnest(string_split(lower(text), ' ')) AS tok
+          SELECT unnest(${TextOps.tokensSql("text")}) AS tok
           FROM documents WHERE text IS NOT NULL)
         GROUP BY 1 ORDER BY cnt DESC, tok LIMIT 1000),
       pts AS (
@@ -2048,7 +2048,7 @@ object TrainingQueries {
       val toks = Tables.documents(s, d)
         .filter(col("text").isNotNull && col("lang").isNotNull)
         .select((col("lang") === "en").as("is_p"),
-          explode(split(lower(col("text")), " ")).as("tok"))
+          explode(TextOps.tokens(col("text"))).as("tok"))
         .select(col("is_p"), Sampling.hashBucket(col("tok"), B).as("b"))
       val counts = toks.groupBy(col("b")).agg(
         sum(when(col("is_p"), 1L).otherwise(0L)).as("cp0"),
@@ -2080,7 +2080,7 @@ object TrainingQueries {
     Some(s"""WITH toks AS (
         SELECT lang = 'en' AS is_p,
           ${Sampling.hashBucketSql(
-            "unnest(string_split(lower(text), ' '))", 1024)} AS b
+            s"unnest(${TextOps.tokensSql("text")})", 1024)} AS b
         FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
       counts AS (
         SELECT b,
@@ -2634,7 +2634,7 @@ object TrainingQueries {
     "x_text_burstiness",
     (s, d) => {
       val perDoc = Tables.documents(s, d).filter(col("text").isNotNull)
-        .select(col("doc_id"), explode(split(lower(col("text")), " "))
+        .select(col("doc_id"), explode(TextOps.tokens(col("text")))
           .as("term"))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("c"))
       val nDocs = Tables.documents(s, d).filter(col("text").isNotNull)
@@ -2655,9 +2655,9 @@ object TrainingQueries {
         .select(col("rank"), col("term"), col("df"), col("tf"),
           col("vmr_micro"))
     },
-    Some("""WITH per_doc AS (
+    Some(s"""WITH per_doc AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c FROM (
-          SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+          SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS term
           FROM documents WHERE text IS NOT NULL)
         GROUP BY 1, 2),
       nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs_total
